@@ -17,6 +17,7 @@ SQL re-implementing each query's relational logic over those tables.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,7 +70,9 @@ def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (id(spark), sf_dir, "parsed")
     if key not in _PARSED_CACHE:
         assembled = assemble_document_text(_extraction_corpus(spark, sf_dir))
-        _PARSED_CACHE[key] = parse_documents(salted_repartition(assembled, 32)).persist()
+        # two parse tasks per core, as in plans/segmentation.py
+        width = spark.sparkContext.defaultParallelism * 2
+        _PARSED_CACHE[key] = parse_documents(salted_repartition(assembled, width)).persist()
     return _PARSED_CACHE[key]
 
 
@@ -98,7 +101,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # independently, with only the markdown parse shared via the kernel.
 # The driver compares at sf0.01; all numeric keys are cast to BIGINT on both
 # sides to make the dtype comparison width-stable.
-_GOLDEN = "/root/repo/golden/sf0.01"
+_GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden", "sf0.01")
 
 
 def _q_extract_spans(spark, sf_dir):

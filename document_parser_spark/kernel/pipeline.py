@@ -1,9 +1,12 @@
 """Per-document parse pipeline (pure Python, no Spark).
 
-``parse_document`` is the single workhorse composed into the vectorized
-Arrow UDF (operators/extract.py) AND used directly as the golden oracle in
-tests — one shared kernel guarantees Spark-vs-oracle span-sequence equality
-by construction (SURVEY.md §5.2 item 1).
+One parse route: ``parse_document_columns`` holds the only markdown/HTML
+dispatch and builds every table in the columnar form the Arrow batch
+builder (operators/extract.py) consumes.  ``parse_document`` is its dict
+view (``structure.columns_to_dicts`` per table) — the golden oracle used in
+tests and by scripts/build_golden.py.  One shared kernel guarantees
+Spark-vs-oracle span-sequence equality by construction (SURVEY.md §5.2
+item 1).
 
 Stage order parity with the reference flagship
 (/root/reference/use_marker_converter.py:600-648):
@@ -19,13 +22,12 @@ from typing import Any, Dict, List, Optional, Tuple
 
 from .normalize import normalize_scripts
 from .scanner import scan_markdown
-from .structure import extract_table_auto
+from .structure import columns_to_dicts, extract_tables
 
 
-def parse_document(text: str, source: str = "markdown") -> Dict[str, Any]:
-    """Full per-document parse: interleaved spans + structured tables.
-
-    Returns ``{"spans": [...], "tables": [...], "markdown": normalized}``.
+def parse_document_columns(text: str, source: str = "markdown") -> Dict[str, Any]:
+    """Full per-document parse: ``{"spans", "tables", "markdown"}`` with
+    each table's cells as parallel column lists.
 
     Dispatch: documents that open with a structural HTML tag go through the
     DOM kernel (kernel.html — north-rule HTML main-content extraction with
@@ -35,43 +37,18 @@ def parse_document(text: str, source: str = "markdown") -> Dict[str, Any]:
     from .html import looks_like_html, parse_html_document
 
     if looks_like_html(text):
-        return parse_html_document(text, source="html")
+        return parse_html_document(text)
     markdown = normalize_scripts(text)
     spans, raw_tables = scan_markdown(markdown)
-    tables = [
-        extract_table_auto(raw, table_index=idx, source=source, title=raw.get("title", ""))
-        for idx, raw in enumerate(raw_tables)
-    ]
-    for raw, table in zip(raw_tables, tables):
-        table["line_start"] = raw["line_start"]
-        table["line_end"] = raw["line_end"]
-    return {"spans": spans, "tables": tables, "markdown": markdown}
+    return {"spans": spans, "tables": extract_tables(raw_tables, source), "markdown": markdown}
 
 
-def parse_document_columns(text: str, source: str = "markdown") -> Dict[str, Any]:
-    """Columnar twin of ``parse_document`` for the Arrow batch builder:
-    identical decision semantics (the HTML/markdown dispatch, scan, and
-    structure machinery are the very same functions), but each table carries
-    ``cells_cols``/``header_cells_cols`` parallel lists instead of per-cell
-    dicts — the per-cell dict literal was ~25% of parse time and the Arrow
-    conversion re-walked every dict again.  HTML documents take the same
-    columnar structure twin via ``parse_html_document(columns=True)``
-    (equality-gated in tests/test_columnar_arrow.py)."""
-    from .html import looks_like_html, parse_html_document
-    from .structure import extract_table_auto_columns
-
-    if looks_like_html(text):
-        return parse_html_document(text, source="html", columns=True)
-    markdown = normalize_scripts(text)
-    spans, raw_tables = scan_markdown(markdown)
-    tables = [
-        extract_table_auto_columns(raw, table_index=idx, source=source, title=raw.get("title", ""))
-        for idx, raw in enumerate(raw_tables)
-    ]
-    for raw, table in zip(raw_tables, tables):
-        table["line_start"] = raw["line_start"]
-        table["line_end"] = raw["line_end"]
-    return {"spans": spans, "tables": tables, "markdown": markdown}
+def parse_document(text: str, source: str = "markdown") -> Dict[str, Any]:
+    """Dict view of ``parse_document_columns``: the same parse with each
+    table's cells as per-cell dicts (``header_cells`` / ``cells``)."""
+    parsed = parse_document_columns(text, source)
+    parsed["tables"] = [columns_to_dicts(t) for t in parsed["tables"]]
+    return parsed
 
 
 # --- H7: merged-cell span inference (sink-side) -----------------------------

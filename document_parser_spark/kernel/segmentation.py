@@ -30,7 +30,7 @@ from .scanner import (
     repeated_boilerplate_lines,
     scan_markdown,
 )
-from .structure import extract_table_auto
+from .structure import columns_to_dicts, extract_tables
 
 #: lines a title lookback can reach above a table begin
 _LOOKBACK = 5
@@ -145,15 +145,10 @@ def parse_document_segmented(
         source = "html"  # parity with parse_document's dispatch
     segments, repeated = segment_document(text, target_chars)
     spans: List[Dict[str, Any]] = []
-    tables: List[Dict[str, Any]] = []
+    raw_tables: List[Dict[str, Any]] = []
     for line_offset, seg_text in segments:
         seg_spans, seg_raw = scan_segment(seg_text, line_offset, repeated)
         spans.extend(seg_spans)
-        for raw in seg_raw:
-            t = extract_table_auto(
-                raw, table_index=len(tables), source=source, title=raw.get("title", "")
-            )
-            t["line_start"] = raw["line_start"]
-            t["line_end"] = raw["line_end"]
-            tables.append(t)
+        raw_tables.extend(seg_raw)
+    tables = [columns_to_dicts(t) for t in extract_tables(raw_tables, source)]
     return {"spans": spans, "tables": tables}

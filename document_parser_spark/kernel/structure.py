@@ -12,6 +12,15 @@ Reference-parity semantics (/root/reference/use_marker_converter.py):
 Each function is a pure function of one raw table, so the whole chain runs
 inside the per-document Arrow UDF — one Python call per *batch of documents*,
 never per row.
+
+Tables are built in ONE form, columnar: the ``extract_*_columns`` functions
+return cells as parallel lists (``cells_cols`` / ``header_cells_cols``), the
+shape the Arrow batch builder (operators/extract.py) consumes with no
+per-cell Python.  ``extract_tables`` is the single per-document entry (auto
+dispatch + line stamps).  The per-cell dict form the oracles compare is a
+view derived by ``columns_to_dicts`` (``extract_vertical`` /
+``extract_horizontal`` / ``extract_table_auto``), so the reference-parity
+decision logic lives exactly once.
 """
 
 from __future__ import annotations
@@ -155,12 +164,12 @@ def detect_column_groups(column_headers: List[Dict[str, Any]]) -> List[Dict[str,
 
 
 def extract_vertical_columns(raw: Dict[str, Any], table_index: int, source: str = "markdown", title: str = "") -> Dict[str, Any]:
-    """Columnar twin of ``extract_vertical``: identical decision semantics,
-    but cells come back as parallel column lists (``cells_cols`` /
-    ``header_cells_cols``) instead of one dict per cell — the shape the
-    Arrow batch builder (operators/extract.py) consumes directly.  The dict
-    form is DERIVED from this one (``extract_vertical`` wraps it), so the
-    parity surface lives exactly once."""
+    """Key-value table: the header row is demoted to data; synthetic column
+    names ``Key``/``Value`` (2 cols) or ``Column {i}``.  Cells come back as
+    parallel column lists; ``extract_vertical`` is the dict view.
+
+    Parity: use_marker_converter.py:368-431.
+    """
     data = [raw["headers"]] + raw["rows"]
     ncols = len(raw["headers"])
     names = ["Key", "Value"] if ncols == 2 else [f"Column {i}" for i in range(ncols)]
@@ -204,73 +213,49 @@ def extract_vertical_columns(raw: Dict[str, Any], table_index: int, source: str 
 
 
 def columns_to_dicts(table: Dict[str, Any]) -> Dict[str, Any]:
-    """Zip a columnar table (``*_cols`` fields) into the canonical dict-form
-    record — byte-identical to what the pre-columnar extractors built (the
-    reference-parity and golden oracles consume this form)."""
-    c_row, c_col, c_hdr, c_lvl, c_text, c_num = table.pop("cells_cols")
-    table["cells"] = [
-        {
-            "row": r,
-            "col": c,
-            "header": h,
-            "header_levels": lv,
-            "text": x,
-            "is_numeric": b,
-        }
-        for r, c, h, lv, x, b in zip(c_row, c_col, c_hdr, c_lvl, c_text, c_num)
-    ]
-    h_row, h_col, h_text = table.pop("header_cells_cols")
-    table["header_cells"] = [
-        {"header_row": r, "col": c, "text": x, "is_header": True}
-        for r, c, x in zip(h_row, h_col, h_text)
-    ]
-    # restore canonical key order (cells last, as the dict extractors emitted)
-    table["cells"] = table.pop("cells")
-    return table
+    """The dict view of a columnar table: ``header_cells_cols`` and
+    ``cells_cols`` become per-cell ``header_cells``/``cells`` dicts in their
+    place, every other key keeps its position — the canonical record the
+    reference-parity and golden oracles consume."""
+    out: Dict[str, Any] = {}
+    for key, value in table.items():
+        if key == "header_cells_cols":
+            out["header_cells"] = [
+                {"header_row": r, "col": c, "text": x, "is_header": True}
+                for r, c, x in zip(*value)
+            ]
+        elif key == "cells_cols":
+            out["cells"] = [
+                {
+                    "row": r,
+                    "col": c,
+                    "header": h,
+                    "header_levels": lv,
+                    "text": x,
+                    "is_numeric": b,
+                }
+                for r, c, h, lv, x, b in zip(*value)
+            ]
+        else:
+            out[key] = value
+    return out
 
 
 def extract_vertical(raw: Dict[str, Any], table_index: int, source: str = "markdown", title: str = "") -> Dict[str, Any]:
-    """Key-value table: the header row is demoted to data; synthetic column
-    names ``Key``/``Value`` (2 cols) or ``Column {i}``.
-
-    Parity: use_marker_converter.py:368-431.
-    """
+    """Dict view of ``extract_vertical_columns``."""
     return columns_to_dicts(extract_vertical_columns(raw, table_index, source, title))
 
 
-def dicts_to_columns(table: Dict[str, Any]) -> Dict[str, Any]:
-    """Inverse of ``columns_to_dicts`` — lift a dict-form table (e.g. from
-    an external ingest adapter that emits reference-shaped dicts) into the
-    columnar shape the Arrow batch builder consumes.  The in-tree kernels
-    (markdown AND html) emit columns natively via extract_*_columns; this
-    stays as the seam for dict-form sources, round-trip-gated in
-    tests/test_columnar_arrow.py."""
-    cells = table.pop("cells")
-    table["cells_cols"] = (
-        [c["row"] for c in cells],
-        [c["col"] for c in cells],
-        [c["header"] for c in cells],
-        [c["header_levels"] for c in cells],
-        [c["text"] for c in cells],
-        [c["is_numeric"] for c in cells],
-    )
-    header_cells = table.pop("header_cells")
-    table["header_cells_cols"] = (
-        [c["header_row"] for c in header_cells],
-        [c["col"] for c in header_cells],
-        [c["text"] for c in header_cells],
-    )
-    return table
-
-
 def extract_horizontal_columns(raw: Dict[str, Any], table_index: int, source: str = "markdown", title: str = "") -> Dict[str, Any]:
-    """Columnar twin of ``extract_horizontal`` — same header machinery, but
-    the per-cell output is parallel column lists built with C-speed
+    """Standard table: multi-row header detection, hierarchy, groups, data
+    cells tagged with full_path/levels/is_numeric, separate header cells.
+    The per-cell output is parallel column lists built with C-speed
     ``extend`` over precomputed per-row slices (the per-cell dict literal
-    was ~25% of whole-document parse time; the Arrow batch builder consumes
-    these columns with no per-cell Python at all).  The dict form is derived
-    (``extract_horizontal`` wraps this), so the reference-parity decision
-    logic lives exactly once."""
+    was ~25% of whole-document parse time); ``extract_horizontal`` is the
+    dict view.
+
+    Parity: use_marker_converter.py:516-580.
+    """
     all_rows = [raw["headers"]] + raw["rows"]
     hrc = detect_header_rows(all_rows)
     column_headers = build_header_hierarchy(all_rows, hrc)
@@ -347,23 +332,31 @@ def extract_horizontal_columns(raw: Dict[str, Any], table_index: int, source: st
 
 
 def extract_horizontal(raw: Dict[str, Any], table_index: int, source: str = "markdown", title: str = "") -> Dict[str, Any]:
-    """Standard table: multi-row header detection, hierarchy, groups, data
-    cells tagged with full_path/levels/is_numeric, separate header_cells.
-
-    Parity: use_marker_converter.py:516-580.
-    """
+    """Dict view of ``extract_horizontal_columns``."""
     return columns_to_dicts(extract_horizontal_columns(raw, table_index, source, title))
 
 
 def extract_table_auto_columns(raw: Dict[str, Any], table_index: int, source: str = "markdown", title: str = "") -> Dict[str, Any]:
-    """Columnar dispatch twin of ``extract_table_auto``."""
+    """Dispatch H1 → H5 or H6.  Parity: use_marker_converter.py:583-597."""
     if detect_table_structure(raw["headers"], raw["rows"]) == "vertical":
         return extract_vertical_columns(raw, table_index, source, title)
     return extract_horizontal_columns(raw, table_index, source, title)
 
 
 def extract_table_auto(raw: Dict[str, Any], table_index: int, source: str = "markdown", title: str = "") -> Dict[str, Any]:
-    """Dispatch H1 → H5 or H6.  Parity: use_marker_converter.py:583-597."""
-    if detect_table_structure(raw["headers"], raw["rows"]) == "vertical":
-        return extract_vertical(raw, table_index, source, title)
-    return extract_horizontal(raw, table_index, source, title)
+    """Dict view of ``extract_table_auto_columns``."""
+    return columns_to_dicts(extract_table_auto_columns(raw, table_index, source, title))
+
+
+def extract_tables(raw_tables: List[Dict[str, Any]], source: str) -> List[Dict[str, Any]]:
+    """One document's scanned tables (scan_markdown / scan_html order) as
+    columnar tables: the auto dispatch per table, indexed in document order,
+    stamped with the table's ``line_start``/``line_end``.  Every parse route
+    (whole document, segmented, Spark) builds its tables here."""
+    tables = []
+    for idx, raw in enumerate(raw_tables):
+        table = extract_table_auto_columns(raw, idx, source, raw.get("title", ""))
+        table["line_start"] = raw["line_start"]
+        table["line_end"] = raw["line_end"]
+        tables.append(table)
+    return tables

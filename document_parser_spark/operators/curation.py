@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import STOPWORDS, language_best_struct, words
+from .text import STOPWORDS, java_words, language_best_struct, words
 
 
 def gopher_gate(
@@ -449,8 +449,6 @@ def chunk_documents(
         raise ValueError("max_words and stride must be >= 1")
     key = (max_words, stride)
     if key not in _CHUNK_UDFS:
-        import re as _re
-
         from pyspark.sql.types import (
             ArrayType,
             LongType,
@@ -459,7 +457,6 @@ def chunk_documents(
             StructType,
         )
 
-        ws_rx = _re.compile("[ \t\n\x0b\f\r]+")
         mw, st = max_words, stride
 
         @F.pandas_udf(
@@ -477,7 +474,7 @@ def chunk_documents(
         def chunk_udf(texts: pd.Series) -> pd.Series:
             out = []
             for t in texts:
-                ws = [x for x in ws_rx.split((t or "").strip(" ")) if x]
+                ws = java_words(t)
                 n = len(ws)
                 rows = []
                 for i, s in enumerate(range(0, n, st)):

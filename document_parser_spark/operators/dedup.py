@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import word_shingles, words
+from .text import java_words, word_shingles, words
 
 DEFAULT_BANDS = 8
 # 60-bit SimHash: 15 md5 hex chars is the widest prefix that converts to a
@@ -562,11 +562,9 @@ def simhash_arrow(df: DataFrame, text_col: str = "text") -> DataFrame:
     global _SIMHASH_UDF
     if _SIMHASH_UDF is None:
         import hashlib
-        import re as _re
 
         from pyspark.sql.types import LongType
 
-        rx = _re.compile("[ \t\n\x0b\f\r]+")  # Java \s+, as in word_shingles
         arange = np.arange(SIMHASH_BITS, dtype=np.int64)
 
         @F.pandas_udf(LongType())
@@ -582,7 +580,7 @@ def simhash_arrow(df: DataFrame, text_col: str = "text") -> DataFrame:
 
             out = np.zeros(len(texts), dtype=np.int64)
             for i, t in enumerate(texts):
-                ws = [w for w in rx.split((t or "").strip(" ")) if w]
+                ws = java_words(t)
                 if not ws:
                     out[i] = -1
                     continue

@@ -8,15 +8,16 @@ Spark-first design (SURVEY.md §3.1 "Spark shape"):
     (doc_id, text, n_chars, media_refs)
       │  salted_repartition()                     -- plans/partitioning.py
       ▼
-    withColumn("parsed", PARSE_RESULT struct)     -- ONE iterator pandas UDF
+    parse_documents(): spans, tables, error       -- ONE mapInArrow pass
       ▼
     spans_table / tables_table / cells_table      -- native explode/select
 
-The single Arrow UDF wraps the pure kernel (document_parser_spark.kernel),
-so distributed output is span-sequence-equal to the golden oracle by
-construction.  Everything before and after the UDF is whole-stage-codegen'd
-Column algebra; the UDF is kept last-before-write per SURVEY.md §4.3 so
-Catalyst can prune/push around it.
+The single Arrow pass wraps the pure kernel's columnar parse
+(kernel.pipeline.parse_document_columns), whose dict view
+kernel.parse_document is the golden oracle, so distributed output is
+span-sequence-equal to the oracle by construction.  Everything before and
+after the UDF is whole-stage-codegen'd Column algebra; the UDF is kept
+last-before-write per SURVEY.md §4.3 so Catalyst can prune/push around it.
 
 Reference lifecycle being re-expressed: use_marker_converter.py:600-648.
 """
@@ -25,13 +26,12 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernel import parse_document
+from ..kernel.pipeline import parse_document_columns
 from ..schemas import PARSE_RESULT
 
 
@@ -52,52 +52,26 @@ def assemble_document_text(df: DataFrame, spans_col: str = "spans") -> DataFrame
     ).withColumn("n_chars", F.length("text"))
 
 
-@F.pandas_udf(PARSE_RESULT)
-def parse_document_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """text → {spans, tables, error} as a classic pandas UDF — kept for
-    column-level composition; the pipeline path is ``parse_documents`` below
-    (mapInArrow: direct pyarrow construction skips the pandas element-wise
-    coercion, measured ~2.2× faster end-to-end on the bench corpus)."""
-    for texts in batches:
-        spans_col, tables_col, error_col = [], [], []
-        for text in texts:
-            spans, tables, err = _parse_one(text)
-            spans_col.append(spans)
-            tables_col.append(tables)
-            error_col.append(err)
-        yield pd.DataFrame({"spans": spans_col, "tables": tables_col, "error": error_col})
+def captured_error(exc: Exception, offset: int = 0):
+    """(spans, tables, error) for a document whose parse raised: one
+    ``kind='error'`` span carrying the message, no tables.  Errors are
+    captured per document, never thrown (north_rule lineage; SURVEY.md
+    §4.3)."""
+    message = f"{type(exc).__name__}: {exc}"
+    return (
+        [{"kind": "error", "text": message, "media_ref": None, "offset": offset}],
+        [],
+        message,
+    )
 
 
 def _parse_one(text):
-    """Errors are captured per document, never thrown (north_rule lineage;
-    SURVEY.md §4.3)."""
-    try:
-        parsed = parse_document(text if text is not None else "")
-        return parsed["spans"], parsed["tables"], None
-    except Exception as exc:  # pragma: no cover - defensive
-        message = f"{type(exc).__name__}: {exc}"
-        return (
-            [{"kind": "error", "text": message, "media_ref": None, "offset": 0}],
-            [],
-            message,
-        )
-
-
-def _parse_one_columns(text):
-    """Columnar twin of ``_parse_one`` — same captured-error contract, table
-    cells as parallel column lists (kernel.pipeline.parse_document_columns)."""
-    from document_parser_spark.kernel.pipeline import parse_document_columns
-
+    """(spans, columnar tables, error) for one document."""
     try:
         parsed = parse_document_columns(text if text is not None else "")
         return parsed["spans"], parsed["tables"], None
     except Exception as exc:  # pragma: no cover - defensive
-        message = f"{type(exc).__name__}: {exc}"
-        return (
-            [{"kind": "error", "text": message, "media_ref": None, "offset": 0}],
-            [],
-            message,
-        )
+        return captured_error(exc)
 
 
 def _build_parse_arrays(results, spans_type, tables_type):
@@ -106,8 +80,8 @@ def _build_parse_arrays(results, spans_type, tables_type):
     into pyarrow buffers; the only per-CELL Python left is the
     header_levels flatten (1-2 strings each).  One final ``.cast`` per
     top-level array reconciles int widths/nullability with the exact
-    to_arrow_type schema (equality-gated against the dict path in
-    tests/test_columnar_arrow.py)."""
+    to_arrow_type schema (equality-gated against ``pa.array`` over
+    kernel.parse_document output in tests/test_columnar_arrow.py)."""
     s_kind, s_text, s_ref, s_off = [], [], [], []
     s_offsets = [0]
     t_offsets = [0]
@@ -243,16 +217,15 @@ def _build_parse_arrays(results, spans_type, tables_type):
     return spans_arr, tables_arr, error_arr
 
 
-def parse_documents(df: DataFrame, text_col: str = "text", columnar: bool = True) -> DataFrame:
+def parse_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach parsed ``spans``, ``tables``, ``error`` columns; all other
     input columns pass through untouched (the big ``text`` column is
     consumed and dropped).
 
-    Implementation: ``mapInArrow``.  Default path: the COLUMNAR kernel twin
-    (cells as parallel lists) + direct offset-based Arrow assembly — the
-    per-cell dict literal and the dict→Arrow re-walk were ~50% of
-    executor-side parse time.  ``columnar=False`` keeps the dict-kernel
-    path (used by the equality gate in tests/test_columnar_arrow.py)."""
+    Implementation: ``mapInArrow`` over the columnar kernel (cells as
+    parallel lists) + direct offset-based Arrow assembly — the per-cell
+    dict literal and a dict→Arrow re-walk were ~50% of executor-side parse
+    time."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     keep = [c for c in df.columns if c not in (text_col, "spans", "tables", "error")]
@@ -265,22 +238,12 @@ def parse_documents(df: DataFrame, text_col: str = "text", columnar: bool = True
     def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             texts = batch.column(n_keep).to_pylist()
-            passthrough = [batch.column(i) for i in range(n_keep)]
-            if columnar:
-                results = [_parse_one_columns(t) for t in texts]
-                spans_arr, tables_arr, error_arr = _build_parse_arrays(
-                    results, spans_type, tables_type
-                )
-                arrays = passthrough + [spans_arr, tables_arr, error_arr]
-            else:
-                results = [_parse_one(t) for t in texts]
-                arrays = passthrough + [
-                    pa.array([r[0] for r in results], type=spans_type),
-                    pa.array([r[1] for r in results], type=tables_type),
-                    pa.array([r[2] for r in results], type=pa.string()),
-                ]
+            arrays = _build_parse_arrays(
+                [_parse_one(t) for t in texts], spans_type, tables_type
+            )
             yield pa.RecordBatch.from_arrays(
-                arrays, names=keep + ["spans", "tables", "error"]
+                [batch.column(i) for i in range(n_keep)] + list(arrays),
+                names=keep + ["spans", "tables", "error"],
             )
 
     out_schema = T.StructType(

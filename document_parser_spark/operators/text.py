@@ -10,6 +10,8 @@ double divisions of identical integers (bit-identical across engines).
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -32,6 +34,18 @@ BPE_ISH_TOKEN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 def words(col: Column) -> Column:
     """Whitespace word split with empty-string guard (split of '' yields [''])."""
     return F.filter(F.split(F.trim(col), _WORD_SPLIT), lambda w: w != "")
+
+
+# Java-regex \s as an explicit class: Python's \s is unicode-wide (NBSP
+# etc.) while Spark's and DuckDB's are ASCII — the Arrow UDFs must split
+# EXACTLY like words()/the SQL oracles do.
+_JAVA_WS_RX = re.compile("[ \t\n\x0b\f\r]+")
+
+
+def java_words(text: str | None) -> list[str]:
+    """The Python twin of ``words`` for the Arrow UDFs: ``text`` split on
+    Java-regex whitespace runs, empty pieces dropped (None reads as "")."""
+    return [w for w in _JAVA_WS_RX.split(text or "") if w]
 
 
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -168,11 +182,7 @@ def language_words_arrow(col: Column) -> Column:
     the Column form on every corpus — equality-gated in
     tests/test_curate_run.py; the Column twin stays the oracled
     ``language_id`` query's form."""
-    global _LANG_WORDS_UDF, _JAVA_WS_RX
-    if _JAVA_WS_RX is None:
-        import re as _re
-
-        _JAVA_WS_RX = _re.compile("[ \t\n\x0b\f\r]+")
+    global _LANG_WORDS_UDF
     if _LANG_WORDS_UDF is None:
         from collections import Counter
 
@@ -196,7 +206,6 @@ def language_words_arrow(col: Column) -> Column:
                 StructField("n_words", LongType()),
             ]
         )
-        split = _JAVA_WS_RX.split
         get = word_langs.get
         nlang = len(langs)
 
@@ -204,8 +213,7 @@ def language_words_arrow(col: Column) -> Column:
         def lang_udf(texts: pd.Series) -> pd.DataFrame:
             hits_col, lang_col, n_col = [], [], []
             for t in texts:
-                counts = Counter(split((t or "").lower()))
-                counts.pop("", None)
+                counts = Counter(java_words((t or "").lower()))
                 per_lang = [0] * nlang
                 for w, c in counts.items():
                     lis = get(w)
@@ -353,11 +361,7 @@ def _bigram_counts_arrow(col: Column) -> Column:
     with their occurrence counts, one linear pass (byte-identical Java-\\s
     split twin; bigram text joined by a single space exactly like
     word_shingles(k=2)).  Empty array when the doc has < 2 words."""
-    global _BIGRAM_COUNTS_UDF, _JAVA_WS_RX
-    if _JAVA_WS_RX is None:
-        import re as _re
-
-        _JAVA_WS_RX = _re.compile("[ \t\n\x0b\f\r]+")
+    global _BIGRAM_COUNTS_UDF
     if _BIGRAM_COUNTS_UDF is None:
         from collections import Counter
 
@@ -379,7 +383,7 @@ def _bigram_counts_arrow(col: Column) -> Column:
         def bigram_counts_udf(texts: pd.Series) -> pd.Series:
             out = []
             for t in texts:
-                ws = [w for w in _JAVA_WS_RX.split((t or "").strip(" ")) if w]
+                ws = java_words(t)
                 if len(ws) < 2:
                     out.append([])
                     continue
@@ -522,11 +526,7 @@ def _clf_score_arrow(col: Column) -> Column:
     feature→weight cache (Zipfian token streams repeat heavily — the simhash
     batch-cache precedent).  md5 of the UTF-8 bytes matches Spark/DuckDB
     ``md5()`` exactly."""
-    global _CLF_UDF, _JAVA_WS_RX
-    if _JAVA_WS_RX is None:
-        import re as _re
-
-        _JAVA_WS_RX = _re.compile("[ \t\n\x0b\f\r]+")
+    global _CLF_UDF
     if _CLF_UDF is None:
         import hashlib
 
@@ -548,7 +548,7 @@ def _clf_score_arrow(col: Column) -> Column:
 
             out = []
             for t in texts:
-                ws = [x for x in _JAVA_WS_RX.split((t or "").strip(" ")) if x]
+                ws = java_words(t)
                 s = 0
                 for x in ws:
                     s += wgt(x)
@@ -601,11 +601,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     byte-identical Java-\\s twin used by word_shingles; the exploded shape
     stays as ``repetition_stats_column_twin`` with an equality gate in
     tests/test_dedup.py."""
-    global _REP_STATS_UDF, _JAVA_WS_RX
-    if _JAVA_WS_RX is None:
-        import re as _re
-
-        _JAVA_WS_RX = _re.compile("[ \t\n\x0b\f\r]+")
+    global _REP_STATS_UDF
     if _REP_STATS_UDF is None:
         from collections import Counter
 
@@ -623,7 +619,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         def rep_udf(texts: pd.Series) -> pd.DataFrame:
             rows = []
             for t in texts:
-                ws = [w for w in _JAVA_WS_RX.split((t or "").strip(" ")) if w]
+                ws = java_words(t)
                 if not ws:
                     rows.append((0, 0, 0, 0, 0))
                     continue
@@ -705,9 +701,6 @@ def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-# Java-regex \s equivalent as an explicit class: Python's \s is
-# unicode-wide (NBSP etc.) while Spark's and DuckDB's are ASCII — the
-# shingle UDF must split EXACTLY like words()/the SQL oracles do.
 def tfidf_topk(
     df: DataFrame,
     text_col: str = "text",
@@ -764,7 +757,6 @@ def tfidf_topk(
     )
 
 
-_JAVA_WS_RX = None
 _SHINGLE_UDFS: dict = {}
 
 
@@ -780,11 +772,6 @@ def word_shingles(col: Column, k: int = 3) -> Column:
     docs).  The UDF is one linear pass per doc; outputs are byte-identical
     (ASCII-whitespace split, exactly Spark's ``split(trim(x), '\\s+')``) —
     tests/test_dedup.py asserts equality against the Column twin."""
-    global _JAVA_WS_RX
-    if _JAVA_WS_RX is None:
-        import re as _re
-
-        _JAVA_WS_RX = _re.compile("[ \t\n\x0b\f\r]+")
     if k not in _SHINGLE_UDFS:
         from pyspark.sql.types import ArrayType, StringType
 
@@ -793,7 +780,7 @@ def word_shingles(col: Column, k: int = 3) -> Column:
             def shingle_udf(texts: pd.Series) -> pd.Series:
                 out = []
                 for t in texts:
-                    ws = [w for w in _JAVA_WS_RX.split((t or "").strip(" ")) if w]
+                    ws = java_words(t)
                     if len(ws) < kk:
                         out.append([])
                     else:

@@ -72,33 +72,26 @@ def _segment_udf(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
 def _parse_segment_udf(
     batches: Iterator[Tuple[pd.Series, pd.Series, pd.Series]]
 ) -> Iterator[pd.DataFrame]:
+    from ..kernel.html import looks_like_html
     from ..kernel.segmentation import scan_segment
-    from ..kernel.structure import extract_table_auto
+    from ..kernel.structure import columns_to_dicts, extract_tables
+    from ..operators.extract import captured_error
 
     for seg_texts, offsets, repeated in batches:
         spans_col, tables_col, err_col = [], [], []
         for seg_text, off, rep in zip(seg_texts, offsets, repeated):
+            off = int(off)
             try:
-                from ..kernel.html import looks_like_html
-
-                spans, raws = scan_segment(seg_text, int(off), list(rep))
-                src = "html" if int(off) == 0 and looks_like_html(seg_text) else "markdown"
-                tables = []
-                for raw in raws:  # local indices; re-indexed globally later
-                    t = extract_table_auto(raw, table_index=0, source=src, title=raw.get("title", ""))
-                    t["line_start"] = raw["line_start"]
-                    t["line_end"] = raw["line_end"]
-                    tables.append(t)
-                spans_col.append(spans)
-                tables_col.append(tables)
-                err_col.append(None)
+                spans, raws = scan_segment(seg_text, off, list(rep))
+                src = "html" if off == 0 and looks_like_html(seg_text) else "markdown"
+                # segment-local indices; re-indexed globally after reassembly
+                tables = [columns_to_dicts(t) for t in extract_tables(raws, src)]
+                err = None
             except Exception as exc:  # pragma: no cover - defensive
-                message = f"{type(exc).__name__}: {exc}"
-                spans_col.append(
-                    [{"kind": "error", "text": message, "media_ref": None, "offset": int(off)}]
-                )
-                tables_col.append([])
-                err_col.append(message)
+                spans, tables, err = captured_error(exc, offset=off)
+            spans_col.append(spans)
+            tables_col.append(tables)
+            err_col.append(err)
         yield pd.DataFrame({"spans": spans_col, "tables": tables_col, "error": err_col})
 
 

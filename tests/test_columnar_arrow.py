@@ -1,25 +1,21 @@
 """Equality gate for the columnar Arrow parse path (operators/extract.py).
 
-The columnar kernel twin (structure.extract_*_columns + the offset-based
-Arrow batch builder) must produce BYTE-IDENTICAL Arrow arrays to the dict
-kernel + pa.array(list-of-dicts) path, on every corpus shape we ship:
-synthetic markdown, synthetic HTML (native columnar twin via
-parse_html_document(columns=True)), the fixture corpus, and the degenerate edges (empty
-string, None, no tables, error capture)."""
+The columnar kernel (structure.extract_*_columns via
+pipeline.parse_document_columns) + the offset-based Arrow batch builder must
+produce BYTE-IDENTICAL Arrow arrays to ``pa.array`` over the dict view
+(kernel.parse_document), on every corpus shape we ship: synthetic markdown,
+synthetic HTML, the fixture corpus, and the degenerate edges (empty string,
+None, no tables)."""
 
 import pyarrow as pa
-import pytest
 
+from document_parser_spark import kernel
 from document_parser_spark.corpus import (
     fixture_documents,
     synthesize_doc,
     synthesize_html_doc,
 )
-from document_parser_spark.operators.extract import (
-    _build_parse_arrays,
-    _parse_one,
-    _parse_one_columns,
-)
+from document_parser_spark.operators.extract import _build_parse_arrays, _parse_one
 from document_parser_spark.schemas import PARSE_RESULT
 
 
@@ -34,16 +30,16 @@ def _types():
 
 def _assert_paths_equal(texts):
     spans_type, tables_type = _types()
-    res_d = [_parse_one(t) for t in texts]
-    sd = pa.array([r[0] for r in res_d], type=spans_type)
-    td = pa.array([r[1] for r in res_d], type=tables_type)
-    ed = pa.array([r[2] for r in res_d], type=pa.string())
+    dicts = [kernel.parse_document(t if t is not None else "") for t in texts]
+    sd = pa.array([d["spans"] for d in dicts], type=spans_type)
+    td = pa.array([d["tables"] for d in dicts], type=tables_type)
+    ed = pa.array([None] * len(texts), type=pa.string())
     sc, tc, ec = _build_parse_arrays(
-        [_parse_one_columns(t) for t in texts], spans_type, tables_type
+        [_parse_one(t) for t in texts], spans_type, tables_type
     )
     assert sc.type.equals(sd.type) and tc.type.equals(td.type)
-    assert sc.equals(sd), "spans arrays diverge between dict and columnar paths"
-    assert tc.equals(td), "tables arrays diverge between dict and columnar paths"
+    assert sc.equals(sd), "spans arrays diverge between the Arrow builder and the dict view"
+    assert tc.equals(td), "tables arrays diverge between the Arrow builder and the dict view"
     assert ec.equals(ed)
 
 
@@ -73,38 +69,3 @@ def test_columnar_equals_dict_on_edges():
             "Title line\n\n| k | v |\n|---|---|\n| x | 1 |\n| y | 2 |\n\ntail",
         ]
     )
-
-
-def test_dicts_to_columns_inverts_columns_to_dicts():
-    """The external-dict-source seam: lifting the dict form of a table must
-    reproduce exactly what the columnar extractor emits natively, on both
-    dispatch branches (horizontal + vertical)."""
-    from document_parser_spark.kernel.structure import (
-        dicts_to_columns,
-        extract_table_auto,
-        extract_table_auto_columns,
-    )
-
-    raws = [
-        {"headers": ["A", "B"], "rows": [["1", "2"], ["3", "4"]], "title": ""},
-        {"headers": ["Key", "Val"], "rows": [["alpha", "x"], ["beta", "y"]], "title": ""},
-    ]
-    for raw in raws:
-        native = extract_table_auto_columns(raw, table_index=0)
-        lifted = dicts_to_columns(extract_table_auto(raw, table_index=0))
-        assert lifted == native
-
-
-def test_spark_roundtrip_matches_dict_path(spark):
-    """parse_documents default (columnar) vs columnar=False through a real
-    mapInArrow roundtrip — same collected rows."""
-    from document_parser_spark.operators.extract import parse_documents
-
-    rows = [(str(i), synthesize_doc(i)["text"]) for i in range(60)] + [
-        ("h0", synthesize_html_doc(0)["text"]),
-        ("e0", ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    got_col = parse_documents(df).orderBy("doc_id").collect()
-    got_dict = parse_documents(df, columnar=False).orderBy("doc_id").collect()
-    assert got_col == got_dict

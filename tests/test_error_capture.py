@@ -9,7 +9,7 @@ from document_parser_spark.operators import extract
 
 def test_parse_one_captures_exceptions():
     with mock.patch.object(
-        extract, "parse_document", side_effect=ValueError("boom at offset 7")
+        extract, "parse_document_columns", side_effect=ValueError("boom at offset 7")
     ):
         spans, tables, err = extract._parse_one("| a |\n|---|\n| 1 |")
     assert err == "ValueError: boom at offset 7"

@@ -5,7 +5,7 @@ BASELINE.json, plus partition-independence (SURVEY.md §5.2 item 5)."""
 import pytest
 
 from document_parser_spark import kernel
-from document_parser_spark.corpus import fixture_documents
+from document_parser_spark.corpus import fixture_documents, synthesize_doc, synthesize_html_doc
 from document_parser_spark.operators.extract import (
     assemble_document_text,
     cells_output,
@@ -47,6 +47,23 @@ def test_structured_tables_equality(parsed_rows):
         oracle = kernel.parse_document(doc["text"])["tables"]
         got = parsed_rows[doc["doc_id"]]["tables"]
         assert got == oracle, doc["doc_id"]
+
+
+def test_synthetic_docs_equal_kernel(spark):
+    """Synthetic markdown, an HTML page and the empty document through a
+    real mapInArrow roundtrip: spans and tables equal the kernel's dict
+    view, no errors."""
+    docs = {str(i): synthesize_doc(i)["text"] for i in range(60)}
+    docs["h0"] = synthesize_html_doc(0)["text"]
+    docs["e0"] = ""
+    df = spark.createDataFrame(list(docs.items()), "doc_id string, text string")
+    got = {r["doc_id"]: r.asDict(recursive=True) for r in parse_documents(df).collect()}
+    assert set(got) == set(docs)
+    for doc_id, text in docs.items():
+        oracle = kernel.parse_document(text)
+        assert got[doc_id]["error"] is None, doc_id
+        assert got[doc_id]["spans"] == oracle["spans"], doc_id
+        assert got[doc_id]["tables"] == oracle["tables"], doc_id
 
 
 def test_partition_independence(spark):

@@ -26,8 +26,9 @@ def test_exact_profile_bounds_and_determinism(spark):
         assert r["n_docs"] == n
         assert mn <= r["chars_p25"] <= r["chars_p50"] <= r["chars_p90"] <= mx
         assert r["top_lang_docs"] >= 1
-    # deterministic: a second evaluation is row-identical
-    assert prof == corpus_profile(docs).collect()
+    # deterministic: a second evaluation yields the same rows (row order is
+    # not part of the result — corpus_profile ends in no orderBy)
+    assert sorted(prof) == sorted(corpus_profile(docs).collect())
 
 
 def test_rank_selection_matches_python_reference(spark):

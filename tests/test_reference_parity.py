@@ -1,10 +1,22 @@
 """Byte-level parity of the kernel against the reference's own pure functions.
 
-The reference functions are AST-extracted from /root/reference (see
-conftest.load_reference_functions) and run side-by-side with the kernel over
-the fixture corpus — the strongest possible oracle short of running the full
-reference program.
+The reference's answers come from one of two sources, chosen by the
+``reference`` fixture:
+
+  * live — when the reference checkout (``conftest.REFERENCE_DIR``) is on
+    disk, its functions are AST-extracted (conftest.load_reference_functions)
+    and run side-by-side with the kernel over the fixture corpus, the
+    strongest possible oracle short of running the full reference program;
+  * frozen — otherwise, the recorded answers in
+    ``tests/parity_vectors/reference_parity.json`` (provenance inside the
+    file; ``scripts/freeze_parity_vectors.py`` rewrites it).
+
+Every test runs either way.  A call the frozen vectors do not cover fails
+with the call named, so an input that drifts can never pass by omission.
 """
+
+import json
+import os
 
 import pytest
 
@@ -12,12 +24,20 @@ from document_parser_spark import kernel
 from document_parser_spark.corpus import FIXTURE_CLASSES, fixture_documents
 from tests.conftest import load_reference_functions
 
-pytestmark = pytest.mark.usefixtures("reference_available")
+VECTORS_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "parity_vectors", "reference_parity.json"
+)
 
 
-@pytest.fixture(scope="module")
-def ref_umc():
-    return load_reference_functions(
+def call_key(args) -> str:
+    """Canonical text of one call's arguments (tuples and lists coincide,
+    so live arguments and JSON-loaded ones key identically)."""
+    return json.dumps(list(args), ensure_ascii=False, sort_keys=True)
+
+
+def live_reference() -> dict:
+    """Reference answers computed by the reference's own functions."""
+    umc = load_reference_functions(
         "use_marker_converter.py",
         [
             "normalize_superscript_subscript",
@@ -37,22 +57,65 @@ def ref_umc():
             "extract_table_auto",
         ],
     )
-
-
-@pytest.fixture(scope="module")
-def ref_search():
-    return load_reference_functions(
+    search = load_reference_functions(
         "table_search.py", ["SearchMode", "SearchResult", "UnifiedTableSearchEngine"]
     )
-
-
-@pytest.fixture(scope="module")
-def ref_main():
-    return load_reference_functions(
+    main = load_reference_functions(
         "main.py",
         ["clean_cell_text", "parse_markdown_tables", "_split_markdown_row",
          "_parse_single_markdown_table"],
     )
+    engine = search["UnifiedTableSearchEngine"]([])
+    modes = {m.value: m for m in search["SearchMode"]}
+
+    def match_text(q, t, mode, cs):
+        r = engine._match_text(q, t, modes[mode], cs)
+        return {"matched": r["matched"], "score": r["score"]}
+
+    return {
+        "normalize": umc["normalize_superscript_subscript"],
+        "clean_cell": umc["clean_cell_text"],
+        "clean_cell_basic": main["clean_cell_text"],
+        "is_numeric": umc["is_numeric_cell"],
+        "contains_units": umc["contains_units"],
+        "scan_tables": umc["parse_markdown_tables_with_context"],
+        "extract_table_auto": lambda table_data, idx, title: umc["extract_table_auto"](
+            table_data, idx, source="markdown", title=title
+        ),
+        "match_text": match_text,
+        "fuzzy_score": engine._fuzzy_match_score,
+        # main.py records empty tables too (no rows-guard)
+        "main_tables": lambda md: [
+            t for t in main["parse_markdown_tables"](md) if t and t["rows"]
+        ],
+    }
+
+
+def frozen_reference(path: str = VECTORS_PATH) -> dict:
+    """Reference answers looked up in the frozen vectors."""
+    with open(path, encoding="utf-8") as f:
+        calls = json.load(f)["calls"]
+
+    def lookup(name, answers):
+        def answer(*args):
+            key = call_key(args)
+            if key not in answers:
+                raise AssertionError(
+                    f"{name}{key[:120]} is not in the frozen parity vectors"
+                )
+            return answers[key]
+
+        return answer
+
+    return {
+        name: lookup(name, {call_key(args): out for args, out in recorded})
+        for name, recorded in calls.items()
+    }
+
+
+@pytest.fixture(scope="module")
+def reference(reference_available):
+    return live_reference() if reference_available else frozen_reference()
 
 
 ALL_MAPPED = (
@@ -76,11 +139,11 @@ NORMALIZE_SAMPLES = [
 ]
 
 
-def test_normalize_scripts_parity(ref_umc):
+def test_normalize_scripts_parity(reference):
     for sample in NORMALIZE_SAMPLES + list(FIXTURE_CLASSES.values()):
-        assert kernel.normalize_scripts(sample) == ref_umc[
-            "normalize_superscript_subscript"
-        ](sample), repr(sample[:80])
+        assert kernel.normalize_scripts(sample) == reference["normalize"](sample), repr(
+            sample[:80]
+        )
 
 
 CELL_SAMPLES = [
@@ -96,14 +159,14 @@ CELL_SAMPLES = [
 ]
 
 
-def test_clean_cell_parity(ref_umc):
+def test_clean_cell_parity(reference):
     for sample in CELL_SAMPLES:
-        assert kernel.clean_cell(sample) == ref_umc["clean_cell_text"](sample), repr(sample)
+        assert kernel.clean_cell(sample) == reference["clean_cell"](sample), repr(sample)
 
 
-def test_clean_cell_basic_parity(ref_main):
+def test_clean_cell_basic_parity(reference):
     for sample in CELL_SAMPLES:
-        assert kernel.clean_cell_basic(sample) == ref_main["clean_cell_text"](sample), repr(sample)
+        assert kernel.clean_cell_basic(sample) == reference["clean_cell_basic"](sample), repr(sample)
 
 
 NUMERIC_SAMPLES = [
@@ -113,13 +176,13 @@ NUMERIC_SAMPLES = [
 ]
 
 
-def test_numeric_and_units_parity(ref_umc):
+def test_numeric_and_units_parity(reference):
     for sample in NUMERIC_SAMPLES:
-        assert kernel.is_numeric_cell(sample) == ref_umc["is_numeric_cell"](sample), repr(sample)
-        assert kernel.contains_units(sample) == ref_umc["contains_units"](sample), repr(sample)
+        assert kernel.is_numeric_cell(sample) == reference["is_numeric"](sample), repr(sample)
+        assert kernel.contains_units(sample) == reference["contains_units"](sample), repr(sample)
     unit_samples = ["(mg/kg)", "(x ppm)", "5 kg", "mL/kg", "kilometer", "gram", "°C", "(°F)", "mol", "(3 M)"]
     for sample in unit_samples:
-        assert kernel.contains_units(sample) == ref_umc["contains_units"](sample), repr(sample)
+        assert kernel.contains_units(sample) == reference["contains_units"](sample), repr(sample)
 
 
 def _normalized_docs():
@@ -128,23 +191,21 @@ def _normalized_docs():
     return [(d["doc_id"], kernel.normalize_scripts(d["text"])) for d in fixture_documents()]
 
 
-def test_scanner_parity_on_corpus(ref_umc):
+def test_scanner_parity_on_corpus(reference):
     for doc_id, md in _normalized_docs():
-        ref_tables = ref_umc["parse_markdown_tables_with_context"](md)
+        ref_tables = reference["scan_tables"](md)
         _, mine = kernel.scan_markdown(md)
         assert len(mine) == len(ref_tables), doc_id
         for a, b in zip(mine, ref_tables):
             assert a == b, (doc_id, a.get("line_start"), b.get("line_start"))
 
 
-def test_structure_parity_on_corpus(ref_umc):
+def test_structure_parity_on_corpus(reference):
     checked = 0
     for doc_id, md in _normalized_docs():
-        for idx, raw in enumerate(ref_umc["parse_markdown_tables_with_context"](md)):
+        for idx, raw in enumerate(reference["scan_tables"](md)):
             table_data = {"headers": raw["headers"], "rows": raw["rows"]}
-            expected = ref_umc["extract_table_auto"](
-                table_data, idx, source="markdown", title=raw["title"]
-            )
+            expected = reference["extract_table_auto"](table_data, idx, raw["title"])
             got = kernel.extract_table_auto(
                 table_data, idx, source="markdown", title=raw["title"]
             )
@@ -170,36 +231,30 @@ MATCH_CASES = [
 ]
 
 
-def test_match_text_parity(ref_search):
-    engine_cls = ref_search["UnifiedTableSearchEngine"]
-    engine = engine_cls([])
-    ref_modes = {m.value: m for m in ref_search["SearchMode"]}
+def test_match_text_parity(reference):
     for q, t in MATCH_CASES:
         for mode in kernel.SearchMode:
             for cs in (False, True):
-                expected = engine._match_text(q, t, ref_modes[mode.value], cs)
+                expected = reference["match_text"](q, t, mode.value, cs)
                 matched, score = kernel.match_text(q, t, mode, cs)
                 assert matched == expected["matched"], (q, t, mode, cs)
                 assert score == pytest.approx(expected["score"]), (q, t, mode, cs)
 
 
-def test_fuzzy_similarity_parity(ref_search):
-    engine = ref_search["UnifiedTableSearchEngine"]([])
+def test_fuzzy_similarity_parity(reference):
     for q, t in MATCH_CASES:
         if q and t:
             assert kernel.levenshtein_similarity(q, t) == pytest.approx(
-                engine._fuzzy_match_score(q, t)
+                reference["fuzzy_score"](q, t)
             ), (q, t)
 
 
-def test_main_scanner_single_header_dialect(ref_main):
+def test_main_scanner_single_header_dialect(reference):
     """main.py's scanner records empty tables too (no rows-guard); our
     scanner follows the flagship variant — verify the shared block parsing
     agrees on the block-splitting level."""
     for _, md in _normalized_docs():
-        ref_tables = [
-            t for t in ref_main["parse_markdown_tables"](md) if t and t["rows"]
-        ]
+        ref_tables = reference["main_tables"](md)
         _, mine = kernel.scan_markdown(md)
         got = [{"headers": t["headers"], "rows": t["rows"]} for t in mine]
         # main.py does not normalize scripts inside _split_markdown_row; on
