@@ -1,19 +1,26 @@
 """The table-query surface Q1–Q7 (SURVEY.md §2.12) as pure DataFrame algebra
 over the denormalized cells table — no UDFs anywhere.
 
-Reference: /root/reference/table_search.py.  The reference's full-scan +
-nested-rescan shape (O(matches × cells), table_search.py:222-228, 363-367)
-becomes hash joins here; its ``seen_rows`` dedup becomes dropDuplicates;
-its sort-then-slice becomes TakeOrderedAndProject (SURVEY.md §4.1).
+Reference: the reference's table_search.py, which rescans every
+cell for each match (O(matches × cells), table_search.py:222-228, 363-367).
+Here the two row-shaped queries are single passes instead: one range
+exchange by (doc_id, table_index, row) co-locates each table row, the key or
+first hit is found within the row (a window for Q2, an aggregate for Q4),
+and the same exchange serves the final ordering — one Exchange, no join.
+Ranging by the full row key, not by doc_id alone, spreads a heavy-tail
+document over many tasks.  The reference's sort-then-slice becomes
+TakeOrderedAndProject (SURVEY.md §4.1).
 
 Every function takes the cells/tables DataFrames produced by
 operators.extract — callers should ``.cache()`` them once per session, which
 is the Spark twin of the reference's ``_build_index`` (table_search.py:51-98).
+The row passes rely on cells_output's invariant of one cell per
+(doc_id, table_index, row, col).
 
 All results carry ``doc_id``: the reference is single-document, the engine is
 corpus-wide; within one doc the semantics match the reference exactly
-(golden tests in tests/test_search_spark.py exec the reference engine as the
-oracle)."""
+(tests/test_search_spark.py checks them against the reference engine's
+answers)."""
 
 from __future__ import annotations
 
@@ -28,6 +35,18 @@ from ..kernel import SearchMode
 #: Stable result ordering: corpus extension of table_search.py:445 /
 #: cell-index insertion order.
 _POSITION = ("doc_id", "table_index", "row", "col")
+_ROW = _POSITION[:3]
+
+
+def _rows_of(cells: DataFrame, table_type: str, table_title: Optional[str]) -> DataFrame:
+    """The cells of ``table_type`` tables whose title matches, range-
+    partitioned by row: the one exchange of a row-shaped query, which both
+    groups each row and orders the result."""
+    return (
+        cells.filter(F.col("table_type") == table_type)
+        .filter(title_filter(F.col("table_title"), table_title))
+        .repartitionByRange(*_ROW)
+    )
 
 
 def search_by_key_value(
@@ -40,38 +59,33 @@ def search_by_key_value(
     """Q2: match keys in col 0 of VERTICAL tables, emit each same-row value
     cell with {key, key_column, value_column} context.
 
-    Parity: table_search.py:173-252.  The nested per-match rescan becomes one
-    equi self-join on (doc_id, table_index, row); the matched-key side is
-    small after filtering, so Catalyst/AQE picks broadcast-hash."""
+    Parity: table_search.py:173-252.  The nested per-match rescan becomes a
+    window over each row: the row's key cell, when it matches, is attached
+    to every cell of the row, and the value cells (col > 0) of keyed rows
+    are kept."""
     matched, score = match_score(F.col("text"), key_query, mode, case_sensitive)
-    keys = (
-        cells.filter(F.col("table_type") == "vertical")
-        .filter(title_filter(F.col("table_title"), table_title))
-        .filter(F.col("col") == 0)
-        .filter(matched)
-        .select(
-            "doc_id",
-            "table_index",
-            "row",
-            F.col("text").alias("key"),
-            F.col("header").alias("key_column"),
-            score.alias("match_score"),
-        )
+    key = F.struct(
+        F.col("text").alias("key"),
+        F.col("header").alias("key_column"),
+        score.alias("match_score"),
     )
-    values = cells.filter(F.col("col") > 0).select(
-        "doc_id", "table_index", "table_source", "table_title", "table_type",
-        "row", "col", "header", "header_levels", F.col("text").alias("cell_text"),
-    )
+    row_key = F.max(F.when((F.col("col") == 0) & matched, key)).over(Window.partitionBy(*_ROW))
     return (
-        F.broadcast(keys)
-        .join(values, on=["doc_id", "table_index", "row"], how="inner")
+        _rows_of(cells, "vertical", table_title)
+        .withColumn("_key", row_key)
+        .filter((F.col("col") > 0) & F.col("_key").isNotNull())
         .select(
             "doc_id", "table_index", "table_source", "table_title",
             F.lit("vertical").alias("table_type"),
-            "row", "col", "header", "header_levels", "cell_text",
-            "match_score",
+            "row", "col", "header", "header_levels",
+            F.col("text").alias("cell_text"),
+            F.col("_key.match_score").alias("match_score"),
             F.lit("key_value").alias("match_type"),
-            F.struct("key", "key_column", F.col("header").alias("value_column")).alias("context"),
+            F.struct(
+                F.col("_key.key").alias("key"),
+                F.col("_key.key_column").alias("key_column"),
+                F.col("header").alias("value_column"),
+            ).alias("context"),
         )
         .orderBy(*_POSITION)
     )
@@ -79,12 +93,12 @@ def search_by_key_value(
 
 def _column_match(column_name: str):
     """F6: header equality OR name ∈ header_levels OR case-insensitive
-    substring against any level.  Parity: table_search.py:286-296."""
+    substring against any level.  Parity: table_search.py:286-296.
+    Membership implies the substring test, and the two agree on null
+    levels, so one ``exists`` evaluates both."""
     lowered = column_name.lower()
-    return (
-        (F.col("header") == column_name)
-        | F.exists("header_levels", lambda lvl: lvl == F.lit(column_name))
-        | F.exists("header_levels", lambda lvl: F.lower(lvl).contains(lowered))
+    return (F.col("header") == column_name) | F.exists(
+        "header_levels", lambda lvl: F.lower(lvl).contains(lowered)
     )
 
 
@@ -124,43 +138,37 @@ def get_row_by_column_value(
     mode: SearchMode = SearchMode.CONTAINS,
     case_sensitive: bool = False,
 ) -> DataFrame:
-    """Q4: Q3, deduped to one hit per row (first matching cell by col order —
-    the reference's ``seen_rows`` insertion semantics), then the whole row
-    assembled as an ordered header→text map.
+    """Q4: Q3's hits, one per row (the first matching cell by col order —
+    the reference's ``seen_rows`` insertion semantics), each with its whole
+    row assembled as an ordered header→text map.
 
-    Parity: table_search.py:325-388.  dedup = row_number window; row fetch =
-    semi-join back to cells; assembly = map_from_entries(sort by col)."""
-    hits = search_by_column(cells, column_name, value_query, table_title, mode, case_sensitive)
-    first_per_row = Window.partitionBy("doc_id", "table_index", "row").orderBy("col")
-    matched_rows = (
-        hits.withColumn("_rn", F.row_number().over(first_per_row))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "doc_id", "table_index", "table_title", "table_type", "row",
-            F.col("header").alias("matched_column"),
-            F.col("cell_text").alias("matched_value"),
-            "match_score",
-        )
+    Parity: table_search.py:325-388.  One aggregate per row computes both:
+    the hit is ``min_by`` over col of the matching cells, and the row map is
+    ``map_from_entries`` over the row's cells sorted by col.  Rows without a
+    hit are dropped."""
+    matched, score = match_score(F.col("text"), value_query, mode, case_sensitive)
+    hit = F.struct(
+        "table_title",
+        "table_type",
+        F.col("header").alias("matched_column"),
+        F.col("text").alias("matched_value"),
+        score.alias("match_score"),
     )
-    # Semi-join FIRST so only matched rows are ever aggregated (the reference
-    # rescans all cells per match, table_search.py:363-367 — J2 anti-pattern).
-    row_keys = matched_rows.select("doc_id", "table_index", "row")
-    row_maps = (
-        cells.join(F.broadcast(row_keys), on=["doc_id", "table_index", "row"], how="left_semi")
-        .groupBy("doc_id", "table_index", "row")
+    return (
+        _rows_of(cells, "horizontal", table_title)
+        .groupBy(*_ROW)
         .agg(
+            F.min_by(hit, F.when(_column_match(column_name) & matched, F.col("col"))).alias("_hit"),
             F.map_from_entries(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("col", "header", "text"))),
                     lambda s: F.struct(s.header.alias("key"), s.text.alias("value")),
                 )
-            ).alias("row_data")
+            ).alias("row_data"),
         )
-    )
-    return (
-        F.broadcast(matched_rows)
-        .join(row_maps, on=["doc_id", "table_index", "row"], how="inner")
-        .orderBy(*("doc_id", "table_index", "row"))
+        .filter(F.col("_hit").isNotNull())
+        .select(*_ROW, "_hit.*", "row_data")
+        .orderBy(*_ROW)
     )
 
 

@@ -1,17 +1,25 @@
 """Freeze the reference-parity answers into tests/parity_vectors/.
 
-tests/test_reference_parity.py compares the kernel against the reference's
-own functions.  This script runs those tests once against a recording
-oracle and writes every (call, answer) pair they asked for to
-``tests/parity_vectors/reference_parity.json``, so the same tests run when
-the reference checkout is absent.
+Two sets of tests compare this package against the reference's own code,
+and each gets a file of recorded answers, so the same tests run when the
+reference checkout is absent:
+
+  * ``kernel`` — tests/test_reference_parity.py compares the kernel against
+    the reference's functions.  Those tests run once against a recording
+    oracle, and every (call, answer) pair they asked for goes to
+    ``tests/parity_vectors/reference_parity.json``.
+  * ``search`` — tests/test_search_spark.py compares the search operators
+    against the reference's search engine, and tests/test_presentation.py
+    the result formatters against its printers.  Every parity case's
+    per-document answers and every printer output go to
+    ``tests/parity_vectors/search_parity.json``.
 
 The answers come from the live reference when it is on disk.  Without it
-they come from the kernel itself, which is only sound at a commit whose
-kernel has been verified equal to the reference; say which commit in
-``--provenance``.
+they come from this package itself (the kernel; the Spark search operators
+and the formatters), which is only sound at a commit whose code has been
+verified equal to the reference; say which commit in ``--provenance``.
 
-Usage: python scripts/freeze_parity_vectors.py [--provenance TEXT]
+Usage: python scripts/freeze_parity_vectors.py [--only kernel|search] [--provenance TEXT]
 """
 
 from __future__ import annotations
@@ -26,7 +34,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from document_parser_spark import kernel  # noqa: E402
+from tests import test_presentation as presentation  # noqa: E402
 from tests import test_reference_parity as parity  # noqa: E402
+from tests import test_search_spark as search  # noqa: E402
 from tests.conftest import REFERENCE_DIR  # noqa: E402
 
 
@@ -75,22 +85,26 @@ def record(answers: dict) -> dict:
     return {name: list(recorded.values()) for name, recorded in calls.items()}
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--provenance", default="", help="where the answers come from")
-    args = ap.parse_args()
+def search_answers() -> tuple:
+    """The Spark search operators' and the formatters' answers, in the shape
+    of ``search.live_reference()`` and ``presentation.live_printed()``."""
+    from document_parser_spark.sources.session import get_spark
 
-    live = os.path.isdir(REFERENCE_DIR)
-    sha = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"], cwd=REPO, capture_output=True, text=True
-    ).stdout.strip()
-    source = "live reference" if live else f"kernel at commit {sha}"
+    spark = get_spark(app_name="freeze-parity", cpus=os.cpu_count() or 4)
+    frames = search.fixture_frames(spark)
+
+    def answer(method, case):
+        return search.spark_answer(frames, method, case)
+
+    return answer, {name: presentation.formatted(name) for name in presentation.PRINTS}
+
+
+def dumps(obj) -> str:
+    return json.dumps(obj, ensure_ascii=False, separators=(",", ":"))
+
+
+def freeze_kernel(live: bool, provenance: dict) -> None:
     calls = record(parity.live_reference() if live else kernel_answers())
-    provenance = {"answers_from": source, "note": args.provenance}
-
-    def dumps(obj) -> str:
-        return json.dumps(obj, ensure_ascii=False, separators=(",", ":"))
-
     # one recorded call per line, so a changed answer diffs as one line
     blocks = [
         f"{dumps(name)}:[\n" + ",\n".join(dumps(c) for c in recorded) + "\n]"
@@ -101,7 +115,45 @@ def main() -> None:
         f.write('{"provenance":' + dumps(provenance) + ',\n"calls":{\n')
         f.write(",\n".join(blocks) + "\n}}\n")
     n = sum(len(v) for v in calls.values())
-    print(f"{parity.VECTORS_PATH}: {n} calls from {source}")
+    print(f"{parity.VECTORS_PATH}: {n} calls from {provenance['answers_from']}")
+
+
+def freeze_search(live: bool, provenance: dict) -> None:
+    if live:
+        answer, printed = search.live_reference(), presentation.live_printed()
+    else:
+        answer, printed = search_answers()
+    # one parity case (all documents' answers) per line
+    cases = [
+        f"{dumps(search.case_key(method, case))}:{dumps(answer(method, case))}"
+        for method, case in search.PARITY_CALLS
+    ]
+    with open(search.VECTORS_PATH, "w", encoding="utf-8") as f:
+        f.write('{"provenance":' + dumps(provenance) + ',\n"search":{\n')
+        f.write(",\n".join(cases) + "\n},\n")
+        f.write('"printers":' + json.dumps(printed, ensure_ascii=False, indent=0) + "}\n")
+    print(f"{search.VECTORS_PATH}: {len(cases)} cases, {len(printed)} printer outputs "
+          f"from {provenance['answers_from']}")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--only", choices=("kernel", "search"),
+                    help="rewrite one set of vectors (default: both)")
+    ap.add_argument("--provenance", default="", help="where the answers come from")
+    args = ap.parse_args()
+
+    live = os.path.isdir(REFERENCE_DIR)
+    sha = subprocess.run(
+        ["git", "rev-parse", "--short", "HEAD"], cwd=REPO, capture_output=True, text=True
+    ).stdout.strip()
+    if args.only in (None, "kernel"):
+        source = "live reference" if live else f"kernel at commit {sha}"
+        freeze_kernel(live, {"answers_from": source, "note": args.provenance})
+    if args.only in (None, "search"):
+        source = "live reference" if live else (
+            f"search operators and formatters at commit {sha}")
+        freeze_search(live, {"answers_from": source, "note": args.provenance})
 
 
 if __name__ == "__main__":

@@ -67,11 +67,34 @@ def test_semi_join_shape(spark):
     assert "LeftSemi" in plan
 
 
-def test_search_key_value_broadcasts_matched_keys(spark):
+def test_search_operators_single_exchange(spark):
+    """Every search operator over the cached cells/tables plans at most ONE
+    Exchange above the cache scan, and the row-shaped ones plan no join:
+    key_value and row_by_value range-partition by row once, and that one
+    exchange both groups each row and orders the result.  (The top-k's
+    TakeOrderedAndProject: test_search_anywhere_topk_is_take_ordered.)"""
     parsed = parse_documents(assemble_document_text(fixture_input_df(spark)))
-    cells = cells_output(tables_output(parsed))
-    plan = plan_of(search.search_by_key_value(cells, "Pathology"))
-    assert "BroadcastHashJoin" in plan
+    tables = tables_output(parsed).cache()
+    cells = cells_output(tables).cache()
+    queries = {
+        "key_value": search.search_by_key_value(cells, "Pathology"),
+        "by_column": search.search_by_column(cells, "Group Number", "2"),
+        "row_by_value": search.get_row_by_column_value(cells, "Group Number", "2"),
+        "anywhere": search.search_anywhere(cells, "mg/kg"),
+        "anywhere_topk": search.search_anywhere(cells, "mg/kg", max_results=10),
+        "table_by_title": search.get_table_by_title(tables, "Experimental"),
+        "list_tables": search.list_all_tables(tables),
+    }
+    try:
+        for name, q in queries.items():
+            plan = plan_of(q)
+            above_cache = plan[: plan.index("InMemoryTableScan")]
+            assert above_cache.count("Exchange") <= 1, (name, plan)
+            if name in ("key_value", "by_column", "row_by_value"):
+                assert "Join" not in plan, (name, plan)
+    finally:
+        tables.unpersist()
+        cells.unpersist()
 
 
 def test_search_anywhere_topk_is_take_ordered(spark):

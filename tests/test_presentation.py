@@ -1,18 +1,22 @@
 """Presentation parity: format_search_results / format_row_results must be
 BYTE-EQUAL to the reference's print functions on the same inputs (the last
-user-visible surface of a migration)."""
+user-visible surface of a migration).
+
+The reference's printed text comes from its live print functions when the
+reference checkout (``conftest.REFERENCE_DIR``) is on disk, and otherwise
+from the frozen ``"printers"`` block of
+``tests/parity_vectors/search_parity.json``
+(``scripts/freeze_parity_vectors.py`` rewrites it)."""
 
 import contextlib
 import io
+import json
 
 import pytest
 
 from document_parser_spark.presentation import format_row_results, format_search_results
 from tests.conftest import load_reference_functions
-
-REF = load_reference_functions(
-    "table_search.py", ["SearchResult", "print_search_results", "print_row_results"]
-)
+from tests.test_search_spark import VECTORS_PATH
 
 
 def _capture(fn, *args, **kwargs) -> str:
@@ -67,25 +71,54 @@ _ROW_ROWS = [
 ]
 
 
-def test_search_results_byte_parity():
-    ref_results = [REF["SearchResult"](**{**r, "match_score": float(r["match_score"])})
-                   for r in _SEARCH_ROWS]
-    expected = _capture(REF["print_search_results"], ref_results)
-    assert format_search_results(_SEARCH_ROWS) == expected
+#: name -> (search or row printer, rows, extra positional arguments)
+PRINTS = {
+    "search_results": ("search", _SEARCH_ROWS, ()),
+    "search_results_truncated": ("search", [_SEARCH_ROWS[0]] * 25, (20,)),
+    "row_results": ("row", _ROW_ROWS, ()),
+}
 
 
-def test_search_results_truncation_parity():
-    rows = [_SEARCH_ROWS[0]] * 25
-    ref_results = [REF["SearchResult"](**r) for r in rows]
-    expected = _capture(REF["print_search_results"], ref_results, 20)
-    got = format_search_results(rows, max_display=20)
-    assert got == expected
+def live_printed() -> dict:
+    """The reference printers' stdout for every ``PRINTS`` input."""
+    ref = load_reference_functions(
+        "table_search.py", ["SearchResult", "print_search_results", "print_row_results"]
+    )
+    out = {}
+    for name, (kind, rows, args) in PRINTS.items():
+        if kind == "search":
+            results = [ref["SearchResult"](**r) for r in rows]
+            out[name] = _capture(ref["print_search_results"], results, *args)
+        else:
+            out[name] = _capture(ref["print_row_results"], [dict(r) for r in rows], *args)
+    return out
+
+
+def formatted(name: str) -> str:
+    kind, rows, args = PRINTS[name]
+    return (format_search_results if kind == "search" else format_row_results)(rows, *args)
+
+
+@pytest.fixture(scope="module")
+def printed(reference_available):
+    if reference_available:
+        return live_printed()
+    with open(VECTORS_PATH, encoding="utf-8") as f:
+        return json.load(f)["printers"]
+
+
+def test_search_results_byte_parity(printed):
+    assert formatted("search_results") == printed["search_results"]
+
+
+def test_search_results_truncation_parity(printed):
+    got = formatted("search_results_truncated")
+    assert got == printed["search_results_truncated"]
     assert "... and 5 more results" in got
 
 
-def test_row_results_byte_parity():
-    expected = _capture(REF["print_row_results"], [dict(r) for r in _ROW_ROWS])
-    assert format_row_results(_ROW_ROWS) == expected
+def test_row_results_byte_parity(printed):
+    assert formatted("row_results") == printed["row_results"]
 
 
 def test_engine_rows_format(spark):
