@@ -929,7 +929,7 @@ def _q_dedup_clusters(spark, sf_dir):
 
 # Same pair derivation as _SQL_MINHASH_PAIRS, then min-reachable-label per
 # node via a recursive CTE — the exact fixpoint the Spark large-star/
-# small-star loop (and its propagation twin) converges to.
+# small-star loop converges to.
 _SQL_DEDUP_CLUSTERS = rf"""
 WITH RECURSIVE w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
 sh AS (
@@ -1059,13 +1059,13 @@ FROM rk GROUP BY cluster_id ORDER BY cluster_id
 
 
 def _q_simhash(spark, sf_dir):
-    # Arrow fast path (zero-shuffle, per-doc fingerprint); the column twin
-    # dedup.simhash is equality-gated against it in tests/test_dedup.py
+    # Arrow fast path (zero-shuffle, per-doc fingerprint); the column form
+    # in tests/twins.py is equality-gated against it in tests/test_dedup.py
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return dedup.simhash_arrow(d)
 
 
-# 60-bit mirror of operators/dedup.py simhash: 15 md5 hex chars → signed-safe
+# 60-bit mirror of operators/dedup.py simhash_arrow: 15 md5 hex chars → signed-safe
 # BIGINT word hash, one ± sum per bit.
 _SQL_SIMHASH = rf"""
 WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),

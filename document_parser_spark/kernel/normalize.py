@@ -16,6 +16,7 @@ no replacement output contains a mapped code point).
 from __future__ import annotations
 
 import re
+from functools import lru_cache
 
 # Code-point → "^x"/"_x" marker table.  Source/target strings are index-aligned;
 # the pair set matches use_marker_converter.py:25-49 exactly (checked by
@@ -69,9 +70,6 @@ def normalize_scripts(text: str) -> str:
             return text
         return _SCRIPT_PAIR_RX.sub(r"^\1, ^\2", text)
     return _SCRIPT_PAIR_RX.sub(r"^\1, ^\2", text.translate(_SCRIPT_TRANSLATION))
-
-
-from functools import lru_cache
 
 
 @lru_cache(maxsize=1 << 17)

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import re
 from enum import Enum
+from functools import lru_cache
 
 UNIT_PATTERNS = (
     # units inside parentheses, e.g. "(mg/kg)" — use_marker_converter.py:254
@@ -33,7 +34,8 @@ _FLOAT_WORDS = frozenset(
 )
 
 
-def _is_numeric_cell_uncached(text: str) -> bool:
+@lru_cache(maxsize=1 << 17)
+def is_numeric_cell(text: str) -> bool:
     """Mostly-numeric test: float-parses after stripping ``,$%``, or more than
     half the non-space characters are digits.  Parity: use_marker_converter.py:229-248.
 
@@ -55,14 +57,6 @@ def _is_numeric_cell_uncached(text: str) -> bool:
             pass
     width = len(text.replace(" ", ""))
     return width > 0 and digits / width > 0.5
-
-
-try:
-    from functools import lru_cache
-
-    is_numeric_cell = lru_cache(maxsize=1 << 17)(_is_numeric_cell_uncached)
-except Exception:  # pragma: no cover
-    is_numeric_cell = _is_numeric_cell_uncached
 
 
 def contains_units(text: str) -> bool:

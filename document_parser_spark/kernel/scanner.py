@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import re
 from collections import Counter
+from functools import lru_cache
 from typing import Any, Dict, List, Optional, Tuple
 
 from .normalize import normalize_scripts
@@ -82,9 +83,6 @@ def is_separator_row(stripped: str) -> bool:
     """Separator check used by the begin-marker — use_marker_converter.py:86
     (only requires pipes at both ends plus any ``-``)."""
     return stripped.startswith("|") and stripped.endswith("|") and "-" in stripped
-
-
-from functools import lru_cache
 
 
 @lru_cache(maxsize=1 << 17)

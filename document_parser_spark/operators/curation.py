@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import STOPWORDS, java_words, language_best_struct, words
+from .text import STOPWORDS, java_words, language_words_arrow, words
 
 
 def gopher_gate(
@@ -190,11 +190,9 @@ def curate_corpus(
     t = F.col(text_col)
     n_chars = F.length(t)
     n_punct = F.regexp_count(t, F.lit(r"[!-/:-@\[-`{-~]"))  # not regexp_replace: r04 measured 27x
-    # r06: score language through the byte-equal Arrow twin (the
+    # r06: score language through the byte-equal Arrow pass (the
     # interpreted HOF aggregate measured 6x slower, r04); its struct also
     # carries the word count, so the text is lowered/split once per row.
-    from .text import language_words_arrow
-
     staged = (
         canonical.withColumn("_best", language_words_arrow(t))
         .withColumn("n_words", F.col("_best.n_words"))
@@ -280,7 +278,6 @@ def repeated_ngram_spans(
     text_col: str = "text",
     window_k: int = 10,
     min_docs: int = 2,
-    persist_windows: bool = False,
 ) -> DataFrame:
     """Corpus-internal verbatim-passage detection (the exact-substring dedup
     germ, Lee et al. "Deduplicating Training Data Makes Language Models
@@ -293,15 +290,11 @@ def repeated_ngram_spans(
     Scale shape: shingle explode → groupBy(window-md5) distinct-doc count
     (map-side combined) → equi join back on the hash — no pair join, no
     cross product.  The window frame feeds BOTH the count and the join
-    side, so without caching the explode subtree runs twice; measured at
-    sf0.1 the re-derivation is a wash warm (1.6 s both ways — same verdict
-    as the ngram `persist_words` A/B), so ``persist_windows`` is opt-in for
-    corpus-scale runs where re-reading the text twice is real money.  The
-    join side's physical strategy is left to AQE: broadcast when the
-    repeated-hash set is small, shuffle hash join when a viral corpus makes
-    it huge.  md5 window hashing keeps the DuckDB oracle exact."""
-    from pyspark import StorageLevel
-
+    side, so the explode subtree runs twice; caching it was measured at
+    sf0.1 and is a wash warm (1.6 s both ways — the same verdict as the
+    ngram (doc, word) persist A/B), so it is not cached.  The join side's
+    physical strategy is left to AQE: broadcast when the repeated-hash set
+    is small, shuffle hash join when a viral corpus makes it huge.  md5 window hashing keeps the DuckDB oracle exact."""
     from .text import word_shingles
 
     # r06: hash the window stream ONCE per doc into an array column; the
@@ -322,8 +315,6 @@ def repeated_ngram_spans(
         (F.col("pos0") + 1).cast("long").alias("pos"),
         "window_md5",
     )
-    if persist_windows:
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     rep = (
         warr.select("doc_id", F.explode(F.array_distinct("warr")).alias("window_md5"))
         .groupBy("window_md5")
@@ -344,7 +335,6 @@ def quality_language_gate(
     clf_min: int | None = None,
     min_words: int = 5,
     min_chars: int = 20,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Map-only keep/drop gate shared by the batch curation pipeline
     (plans/curate.py) and its streaming twin (streaming/curate_stream.py):
@@ -357,12 +347,12 @@ def quality_language_gate(
     tests/test_streaming_curate.py).  Adds ``n_words`` (long) and
     ``lang_pred`` to the surviving rows.
 
-    ``use_arrow`` (default): language+word-count via the one-pass Arrow
-    twin ``text.language_words_arrow`` — measured r04 at 16 cores over 45k
+    Language+word-count come from the one-pass Arrow
+    ``text.language_words_arrow`` — measured r04 at 16 cores over 45k
     ~850-word docs, the interpreted higher-order aggregate adds +11.2 s
-    where the Arrow pass adds +1.8 s (6×, word count included).
-    ``use_arrow=False`` keeps the pure-Column form; the two are
-    equality-gated in tests/test_curate_run.py.
+    where the Arrow pass adds +1.8 s (6×, word count included).  The
+    pure-Column form is kept in tests/twins.py and equality-gated in
+    tests/test_curate_run.py.
 
     The punct count is ``regexp_count`` of the punct class, NOT
     ``length(regexp_replace(non-punct, ''))`` — the identical integer, but
@@ -372,32 +362,15 @@ def quality_language_gate(
     t = F.col(text_col)
     n_chars = F.length(t)
     n_punct = F.regexp_count(t, F.lit(r"[!-/:-@\[-`{-~]"))
-    if use_arrow:
-        from .text import language_words_arrow
-
-        staged = (
-            df.withColumn("_lw", language_words_arrow(t))
-            .withColumn("n_words", F.col("_lw.n_words"))
-            .withColumn(
-                "lang_pred",
-                F.when(F.col("_lw.hits") > 0, F.col("_lw.lang")).otherwise(
-                    F.lit("und")
-                ),
-            )
-            .drop("_lw")
+    staged = (
+        df.withColumn("_lw", language_words_arrow(t))
+        .withColumn("n_words", F.col("_lw.n_words"))
+        .withColumn(
+            "lang_pred",
+            F.when(F.col("_lw.hits") > 0, F.col("_lw.lang")).otherwise(F.lit("und")),
         )
-    else:
-        staged = (
-            df.withColumn("n_words", F.size(words(t)).cast("long"))
-            .withColumn("_best", language_best_struct(t))
-            .withColumn(
-                "lang_pred",
-                F.when(F.col("_best.hits") > 0, F.col("_best.lang")).otherwise(
-                    F.lit("und")
-                ),
-            )
-            .drop("_best")
-        )
+        .drop("_lw")
+    )
     quality_ok = (
         (F.col("n_words") >= min_words)
         & (n_chars >= min_chars)
@@ -438,11 +411,12 @@ def chunk_documents(
     arithmetic — oracle-exact.
 
     Scale shape: map-only — one Arrow pass builds the chunk array per doc
-    (a pure-Column ``transform(sequence(...), slice(...))`` twin exists for
-    cross-checking, but HOF ``slice`` re-evaluates the word split per chunk:
-    O(n²/stride) per doc — the word_shingles precedent) and ``explode``
-    flattens it; no shuffle, no join, and chunk rows inherit the input
-    partitioning (downstream shard packing does its own keyed cumsum)."""
+    (the pure-Column ``transform(sequence(...), slice(...))`` form in
+    tests/twins.py is the cross-check, but HOF ``slice`` re-evaluates the
+    word split per chunk: O(n²/stride) per doc — the word_shingles
+    precedent) and ``explode`` flattens it; no shuffle, no join, and chunk
+    rows inherit the input partitioning (downstream shard packing does its
+    own keyed cumsum)."""
     if stride is None:
         stride = max_words
     if stride < 1 or max_words < 1:
@@ -498,39 +472,6 @@ def chunk_documents(
             "c.n_words",
             "c.chunk_text",
         )
-    )
-
-
-def chunk_documents_column_twin(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_words: int = 64,
-    stride: int | None = None,
-) -> DataFrame:
-    """Pure-Column twin of ``chunk_documents`` (equality cross-check only:
-    the HOF slice re-evaluates the word split per chunk — quadratic on
-    pathological docs)."""
-    from .text import words
-
-    if stride is None:
-        stride = max_words
-    w = words(F.col(text_col))
-    n = F.size(w)
-    starts = F.when(
-        n >= 1, F.sequence(F.lit(0), n - 1, F.lit(stride))
-    ).otherwise(F.array().cast("array<int>"))
-    chunks = F.transform(
-        starts,
-        lambda s: F.struct(
-            F.floor(s / stride).cast("long").alias("chunk_id"),
-            s.cast("long").alias("first_word"),
-            F.least(F.lit(max_words), n - s).cast("long").alias("n_words"),
-            F.array_join(F.slice(w, s + 1, max_words), " ").alias("chunk_text"),
-        ),
-    )
-    return (
-        docs.select("doc_id", F.explode(chunks).alias("c"))
-        .select("doc_id", "c.chunk_id", "c.first_word", "c.n_words", "c.chunk_text")
     )
 
 

@@ -15,12 +15,14 @@ Engine-design notes (100 TB shape):
 
 from __future__ import annotations
 
+import hashlib
 from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from .text import java_words, word_shingles, words
 
@@ -135,69 +137,44 @@ def _verify_jaccard(
     text_col: str,
     shingle_k: int,
     threshold_pct: int,
-    verify: str = "array",
 ) -> DataFrame:
     """Exact shingle-set Jaccard over candidate pairs only:
     ``100·|A∩B| ≥ t·|A∪B|`` in integer arithmetic.  ``docs`` only needs the
     documents that can appear in ``cand`` — callers doing incremental work
-    semi-join it down first so the shingle explode never re-reads the
-    whole corpus.
+    semi-join it down first so the shingle pass never re-reads the whole
+    corpus.
 
-    ``verify="array"`` (r06, same rewrite as ngram_jaccard_pairs): the
-    intersection is a codegen ``array_intersect`` over one-row-per-doc
-    distinct-shingle arrays joined to the candidate pairs (AQE broadcasts
-    the doc table when it fits, so candidates are not shuffled for the
-    verify), with the threshold rewritten to reference the intersect once:
-    100·I ≥ t·(na+nb−I) ⟺ (100+t)·I ≥ t·(na+nb).  ``verify="explode"``
-    keeps the exploded candidate×shingle join + groupBy as the
-    cross-checking twin (equality test in tests/test_dedup.py)."""
-    if verify == "array":
-        toks = docs.select(
-            "doc_id",
-            F.array_distinct(word_shingles(F.col(text_col), shingle_k)).alias("sh"),
-        ).withColumn("n_sh", F.size("sh").cast("long"))
-        ta = toks.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("sh").alias("sh_a"),
-            F.col("n_sh").alias("n_a"),
-        )
-        tb = toks.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("sh").alias("sh_b"),
-            F.col("n_sh").alias("n_b"),
-        )
-        return (
-            cand.join(ta, "doc_a")
-            .join(tb, "doc_b")
-            .withColumn(
-                "n_inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-            )
-            .filter(
-                F.lit(100 + threshold_pct) * F.col("n_inter")
-                >= F.lit(threshold_pct) * (F.col("n_a") + F.col("n_b"))
-            )
-            .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            .select("doc_a", "doc_b", "n_inter", "n_union")
-        )
-    if verify != "explode":
-        raise ValueError(f"unknown verify {verify!r}; 'array' or 'explode'")
-    dsh = _doc_shingles(docs, text_col, shingle_k).distinct()
-    sizes = dsh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = dsh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = dsh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        cand.join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
+    r06 (same rewrite as ngram_jaccard_pairs): the intersection is a
+    codegen ``array_intersect`` over one-row-per-doc distinct-shingle arrays
+    joined to the candidate pairs (AQE broadcasts the doc table when it
+    fits, so candidates are not shuffled for the verify), with the
+    threshold rewritten to reference the intersect once:
+    100·I ≥ t·(na+nb−I) ⟺ (100+t)·I ≥ t·(na+nb).  The exploded
+    candidate×shingle join + groupBy it replaced is kept in tests/twins.py
+    (equality test in tests/test_dedup.py)."""
+    toks = docs.select(
+        "doc_id",
+        F.array_distinct(word_shingles(F.col(text_col), shingle_k)).alias("sh"),
+    ).withColumn("n_sh", F.size("sh").cast("long"))
+    ta = toks.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("sh").alias("sh_a"),
+        F.col("n_sh").alias("n_a"),
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    tb = toks.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("sh").alias("sh_b"),
+        F.col("n_sh").alias("n_b"),
+    )
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        cand.join(ta, "doc_a")
+        .join(tb, "doc_b")
+        .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("long"))
+        .filter(
+            F.lit(100 + threshold_pct) * F.col("n_inter")
+            >= F.lit(threshold_pct) * (F.col("n_a") + F.col("n_b"))
+        )
         .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        .filter(F.lit(100) * F.col("n_inter") >= F.lit(threshold_pct) * F.col("n_union"))
         .select("doc_a", "doc_b", "n_inter", "n_union")
     )
 
@@ -361,8 +338,7 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     Beyond"): each round hooks whole trees onto component minima, so
     convergence is O(log n) ROUNDS regardless of graph diameter — a
     10^6-node chain converges in ~20 rounds where per-hop min-label
-    propagation (kept as ``duplicate_clusters_propagation`` for
-    cross-checking) needs 10^6.  Every round is two groupBy(min)+join
+    propagation needs 10^6.  Every round is two groupBy(min)+join
     shuffles; convergence = edge-set fixpoint, checked with limit(1) counts
     so the driver moves no data.
 
@@ -430,68 +406,6 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
-def duplicate_clusters_propagation(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Per-hop min-label propagation twin of ``duplicate_clusters`` — one
-    round per graph-diameter hop.  Kept as the cross-check implementation
-    (tests assert both produce identical labelings); the star variant is the
-    default because diameter-bounded rounds don't survive adversarial
-    chains."""
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-        .persist()
-    )
-    # localCheckpoint per round (same reason as the star variant): the label
-    # frame's plan nests once per round, and 20 un-truncated rounds of
-    # join+agg lineage exhaust driver heap during analysis before the
-    # convergence guard can fire
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-
-    changed = 0
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("label").alias("n_label"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce("n_label", F.col("label"))).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
-        # the oracle (recursive-CTE fixpoint) and any dedup consumer need the
-        # CONVERGED labeling; returning a partial one silently mislabels
-        # components with diameter > max_iter
-        raise RuntimeError(
-            f"duplicate_clusters did not converge within max_iter={max_iter} "
-            "rounds (component diameter exceeds the bound); raise max_iter or "
-            "switch to the large-star/small-star variant"
-        )
-    out = labels.select("doc_id", F.col("label").alias("cluster_id"))
-    return out
-
-
 def canonical_keep(
     clusters: DataFrame,
     docs: DataFrame,
@@ -538,100 +452,56 @@ def canonical_keep(
     )
 
 
-def _word_hash60(word: Column) -> Column:
-    """First 60 bits of md5 as a long — same in DuckDB via
-    ``('0x' || substr(md5(w),1,15))::BIGINT``."""
-    return F.conv(F.substring(F.md5(word), 1, 15), 16, 10).cast("long")
+_SIMHASH_SHIFTS = np.arange(SIMHASH_BITS, dtype=np.int64)
 
 
-_SIMHASH_UDF = None
+@F.pandas_udf(LongType())
+def _simhash_udf(texts: pd.Series) -> pd.Series:
+    cache: dict[str, int] = {}
+
+    def h(w: str) -> int:
+        v = cache.get(w)
+        if v is None:
+            v = int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
+            cache[w] = v
+        return v
+
+    out = np.zeros(len(texts), dtype=np.int64)
+    for i, t in enumerate(texts):
+        ws = java_words(t)
+        if not ws:
+            out[i] = -1
+            continue
+        c = Counter(ws)
+        hs = np.fromiter((h(w) for w in c), dtype=np.int64, count=len(c))
+        cnts = np.fromiter(c.values(), dtype=np.int64, count=len(c))
+        s = (((hs[:, None] >> _SIMHASH_SHIFTS) & 1) * cnts[:, None]).sum(axis=0)
+        tot = int(cnts.sum())
+        out[i] = int(((2 * s > tot).astype(np.int64) << _SIMHASH_SHIFTS).sum())
+    return pd.Series(out)
 
 
 def simhash_arrow(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Arrow-batched simhash twin: the whole fingerprint is a per-document
-    computation, so ONE map-only pandas_udf pass (zero shuffles) replaces the
-    column path's explode → groupBy(doc,word) → 60-column aggregate (two
-    shuffles).  Word hashes are md5-prefix int64s cached across each batch's
-    shared vocabulary; the bit math is the same branch-free
-    2·sum(cnt·bit) > sum(cnt) as ``simhash``.  Measured at sf0.1×32 cores:
-    0.58 s vs 1.55 s, fingerprints byte-identical corpus-wide
-    (tests/test_dedup.py asserts equality incl. empty/whitespace-only docs).
-    Docs with no words are dropped — exactly the column path, whose explode
-    emits no row for them (the UDF signals them with -1, below any real
-    60-bit fingerprint)."""
-    global _SIMHASH_UDF
-    if _SIMHASH_UDF is None:
-        import hashlib
-
-        from pyspark.sql.types import LongType
-
-        arange = np.arange(SIMHASH_BITS, dtype=np.int64)
-
-        @F.pandas_udf(LongType())
-        def _udf(texts: pd.Series) -> pd.Series:
-            cache: dict[str, int] = {}
-
-            def h(w: str) -> int:
-                v = cache.get(w)
-                if v is None:
-                    v = int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
-                    cache[w] = v
-                return v
-
-            out = np.zeros(len(texts), dtype=np.int64)
-            for i, t in enumerate(texts):
-                ws = java_words(t)
-                if not ws:
-                    out[i] = -1
-                    continue
-                c = Counter(ws)
-                hs = np.fromiter((h(w) for w in c), dtype=np.int64, count=len(c))
-                cnts = np.fromiter(c.values(), dtype=np.int64, count=len(c))
-                s = (((hs[:, None] >> arange) & 1) * cnts[:, None]).sum(axis=0)
-                tot = int(cnts.sum())
-                out[i] = int(((2 * s > tot).astype(np.int64) << arange).sum())
-            return pd.Series(out)
-
-        _SIMHASH_UDF = _udf
-    return df.select(
-        "doc_id", _SIMHASH_UDF(F.col(text_col)).alias("simhash")
-    ).filter(F.col("simhash") >= 0)
-
-
-def simhash(df: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS) -> DataFrame:
     """Frequency-weighted SimHash over word hashes: bit i of the fingerprint
-    is 1 iff the count-weighted ±1 sum over words at bit i is positive.
-    Everything is integer arithmetic → exact SQL oracle.
+    is 1 iff the count-weighted ±1 sum over words at bit i is positive, with
+    the word hash the first 60 bits of md5 (``('0x' ||
+    substr(md5(w),1,15))::BIGINT`` in DuckDB).  Everything is integer
+    arithmetic → exact SQL oracle.
 
-    Plan shape: the per-bit sums are ``bits`` aggregate COLUMNS in one
-    groupBy(doc_id) — all partial-aggregated map-side — instead of a
-    bits× row explode + two shuffles (the round-1 shape; a 16× row blow-up
-    on the (doc, word) stream is real money at corpus scale).  The ±1 sum is
-    branch-free: sum(±cnt) > 0  ⟺  2·sum(cnt·bit) > sum(cnt), so each
-    aggregate is a multiply instead of a CASE (measured 2.6 s → 1.8 s at
-    sf0.1×60 bits; fingerprints byte-identical)."""
-    word_counts = (
-        df.select("doc_id", F.explode(words(F.col(text_col))).alias("w"))
-        .groupBy("doc_id", "w")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("h", _word_hash60(F.col("w")))
-    )
-    bit_sums = word_counts.groupBy("doc_id").agg(
-        *[
-            F.sum(F.col("cnt") * F.expr(f"shiftright(h, {b}) & 1")).alias(f"s{b}")
-            for b in range(bits)
-        ],
-        F.sum("cnt").alias("tot"),
-    )
-    fingerprint = None
-    for b in range(bits):
-        term = F.when(
-            2 * F.col(f"s{b}") > F.col("tot"), F.lit(1 << b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        fingerprint = term if fingerprint is None else fingerprint + term
-    # NO terminal sort here: simhash feeds the near-pair chunk join — callers
-    # that need ordered output sort at their own terminal
-    return bit_sums.select("doc_id", fingerprint.alias("simhash"))
+    The whole fingerprint is a per-document computation, so ONE map-only
+    pandas_udf pass (zero shuffles) replaces the explode → groupBy(doc,word)
+    → 60-column aggregate (two shuffles) of the Column form kept in
+    tests/twins.py.  Word hashes are md5-prefix int64s cached across each
+    batch's shared vocabulary; the ±1 sum is branch-free:
+    sum(±cnt) > 0 ⟺ 2·sum(cnt·bit) > sum(cnt).  Measured at sf0.1×32
+    cores: 0.58 s vs 1.55 s, fingerprints byte-identical corpus-wide
+    (tests/test_dedup.py asserts equality incl. empty/whitespace-only docs).
+    Docs with no words are dropped — exactly the explode form, which emits
+    no row for them (the UDF signals them with -1, below any real 60-bit
+    fingerprint)."""
+    return df.select(
+        "doc_id", _simhash_udf(F.col(text_col)).alias("simhash")
+    ).filter(F.col("simhash") >= 0)
 
 
 def simhash_candidate_pairs(
@@ -704,12 +574,12 @@ def _ngram_frames(
     text_col: str,
     block_cols: tuple,
     threshold_pct: int,
-    persist_words: bool,
     ngram_n: int,
 ):
     """Shared candidate machinery for the ngram-Jaccard family: returns
-    (dw, sizes, cand) where dw is the distinct (doc, token) frame and cand
-    the prefix-filtered candidate pairs.  See ngram_jaccard_pairs."""
+    (toks, cand) where toks holds one row per doc with its DISTINCT token
+    array ``ws`` and cand the prefix-filtered candidate pairs.  See
+    ngram_jaccard_pairs."""
     tok = (
         words(F.col(text_col))
         if ngram_n <= 1
@@ -722,13 +592,6 @@ def _ngram_frames(
     # the candidate stage at the 50k-doc tier was those re-derivations.
     toks = df.select("doc_id", *block_cols, F.array_distinct(tok).alias("ws"))
     dw = toks.select("doc_id", *block_cols, F.explode("ws").alias("w"))
-    if persist_words:
-        from pyspark import StorageLevel
-
-        dw = dw.persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = toks.select("doc_id", F.size("ws").cast("long").alias("n_words")).filter(
-        F.col("n_words") > 0
-    )
 
     # Prefix selection: global (per-block) df order, rarest first.  Instead
     # of a per-doc row_number window over the (token ⋈ dfreq) frame, ONE
@@ -808,7 +671,7 @@ def _ngram_frames(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return dw, sizes, cand
+    return toks, cand
 
 
 def ngram_candidate_pairs(
@@ -821,8 +684,7 @@ def ngram_candidate_pairs(
     """The (doc_a, doc_b) candidate frame ngram_jaccard_pairs verifies —
     exposed so growth studies can measure candidate volume from the
     executed join instead of inferring it."""
-    _, _, cand = _ngram_frames(df, text_col, block_cols, threshold_pct, False, ngram_n)
-    return cand
+    return _ngram_frames(df, text_col, block_cols, threshold_pct, ngram_n)[1]
 
 
 def ngram_jaccard_pairs(
@@ -830,9 +692,7 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     block_cols: tuple = ("lang", "source"),
     threshold_pct: int = 80,
-    persist_words: bool = False,
     ngram_n: int = 1,
-    verify: str = "array",
 ) -> DataFrame:
     """Blocked n-gram Jaccard with PREFIX + LENGTH + POSITIONAL filtering:
     results are EXACTLY the pairs with ``100·|A∩B| ≥ t·|A∪B|`` (integer
@@ -857,15 +717,13 @@ def ngram_jaccard_pairs(
     the exhaustive join has at corpus scale; the exact-Jaccard verify then
     touches candidate pairs only.
 
-    The distinct (doc, word) frame feeds FOUR consumers (sizes, dfreq, both
-    verify sides).  ``persist_words`` caches it for the query's lifetime —
-    MEASURED tradeoff (sf0.1, local[32], steady-state): persisting costs
-    7.5-8.4 s vs 4.5-5.1 s re-deriving, because the exploded frame is LARGER
-    than the source parquet and its materialization is a barrier, while the
-    re-derivations run as parallel cheap scans.  So the default is False at
-    job scale; at corpus scale (where re-reading 100 TB ×4 dominates) set it
-    True — or better, write the tokenized frame once per curation run and
-    feed it to every dedup operator.
+    The one-row-per-doc token table feeds the candidate stage AND both
+    verify sides.  Caching its exploded (doc, word) frame was MEASURED and
+    lost (sf0.1, local[32], steady-state: 7.5-8.4 s persisted vs 4.5-5.1 s
+    re-derived) — the exploded frame is LARGER than the source parquet and
+    its materialization is a barrier, while the re-derivations run as
+    parallel cheap scans.  At corpus scale, write the tokenized frame once
+    per curation run and feed it to every dedup operator instead.
 
     Oversize-doc note: the prefix-rank window partitions by doc_id over the
     doc's DISTINCT tokens, so a pathological 100 MB document puts its ~10⁶
@@ -874,85 +732,49 @@ def ngram_jaccard_pairs(
     docs should length-gate them upstream (the curation gate) or segment
     them first (plans/segmentation.py); a book-length doc is not a sane
     near-dup unit anyway."""
-    dw, sizes, cand = _ngram_frames(
-        df, text_col, block_cols, threshold_pct, persist_words, ngram_n
-    )
+    toks, cand = _ngram_frames(df, text_col, block_cols, threshold_pct, ngram_n)
 
-    if verify == "array":
-        # r06 verify: one row per doc carrying its DISTINCT token set as an
-        # array; |A∩B| is a codegen ``array_intersect`` on the joined pair
-        # row.  Replaces the exploded candidate×token join + groupBy (the
-        # explode multiplied every candidate by ~|doc| tokens: ~3·10⁸
-        # shuffled rows at the 50k-doc tier, 35-50 s of the query) with two
-        # joins against the 1-row-per-doc token table — small enough that
-        # AQE broadcasts it, so the candidate frame is never shuffled for
-        # the verify at all.  Counts are identical by construction (both
-        # count the same distinct-token intersection); equality-gated
-        # against the explode twin in tests/test_dedup.py.  n_a/n_b come
-        # from the SAME arrays, which also drops the two ``sizes`` joins.
-        tok = (
-            words(F.col(text_col))
-            if ngram_n <= 1
-            else word_shingles(F.col(text_col), ngram_n)
-        )
-        toks = df.select(
-            "doc_id", F.array_distinct(tok).alias("ws")
-        ).withColumn("n_words", F.size("ws").cast("long"))
-        ta = toks.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("ws").alias("ws_a"),
-            F.col("n_words").alias("n_a"),
-        )
-        tb = toks.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("ws").alias("ws_b"),
-            F.col("n_words").alias("n_b"),
-        )
-        # Filter rewritten to reference the (interpreted, per-row-HashSet)
-        # intersect ONCE: 100·I ≥ t·(na+nb−I) ⟺ (100+t)·I ≥ t·(na+nb), all
-        # int64-exact — predicate pushdown substitutes the alias into the
-        # filter, so every extra reference re-evaluates array_intersect.
-        # No terminal orderBy: the driver canonicalizes (rows sorted) before
-        # hashing, and a range sort here SAMPLES its child — re-executing
-        # the whole verify subtree a second time (guide §2.4; measured 2.1×
-        # on the 50k-doc tier, OPTIMIZATION_r06.md).
-        out = (
-            cand.join(ta, "doc_a")
-            .join(tb, "doc_b")
-            .withColumn(
-                "n_inter", F.size(F.array_intersect("ws_a", "ws_b")).cast("long")
-            )
-            .filter(
-                F.lit(100 + threshold_pct) * F.col("n_inter")
-                >= F.lit(threshold_pct) * (F.col("n_a") + F.col("n_b"))
-            )
-            .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        )
-        return out.select("doc_a", "doc_b", "n_inter", "n_union")
-    if verify != "explode":
-        raise ValueError(f"unknown verify {verify!r}; 'array' or 'explode'")
-
-    # Exact verify over candidates only (block equality already implied) —
-    # the pre-r06 explode twin, kept for cross-checking.
-    a = dw.select(F.col("doc_id").alias("doc_a"), "w")
-    b = dw.select(F.col("doc_id").alias("doc_b"), "w")
-    inter = (
-        cand.join(a, "doc_a")
-        .join(b, ["doc_b", "w"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
+    # r06 verify: one row per doc carrying its DISTINCT token set as an
+    # array; |A∩B| is a codegen ``array_intersect`` on the joined pair row.
+    # Replaces the exploded candidate×token join + groupBy (the explode
+    # multiplied every candidate by ~|doc| tokens: ~3·10⁸ shuffled rows at
+    # the 50k-doc tier, 35-50 s of the query) with two joins against the
+    # 1-row-per-doc token table — small enough that AQE broadcasts it, so
+    # the candidate frame is never shuffled for the verify at all.  Counts
+    # are identical by construction (both count the same distinct-token
+    # intersection); equality-gated against the explode form (tests/twins.py)
+    # in tests/test_dedup.py.  n_a/n_b come from the SAME arrays, so no
+    # per-doc size table is joined.
+    sized = toks.select("doc_id", "ws", F.size("ws").cast("long").alias("n_words"))
+    ta = sized.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("ws").alias("ws_a"),
+        F.col("n_words").alias("n_a"),
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_words").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_words").alias("n_b"))
-    # No broadcast hint: sizes is one row per doc (not broadcastable at
-    # corpus scale); AQE upgrades the join to broadcast when it IS small.
-    out = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+    tb = sized.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("ws").alias("ws_b"),
+        F.col("n_words").alias("n_b"),
+    )
+    # Filter rewritten to reference the (interpreted, per-row-HashSet)
+    # intersect ONCE: 100·I ≥ t·(na+nb−I) ⟺ (100+t)·I ≥ t·(na+nb), all
+    # int64-exact — predicate pushdown substitutes the alias into the
+    # filter, so every extra reference re-evaluates array_intersect.
+    # No terminal orderBy: the driver canonicalizes (rows sorted) before
+    # hashing, and a range sort here SAMPLES its child — re-executing the
+    # whole verify subtree a second time (guide §2.4; measured 2.1× on the
+    # 50k-doc tier, OPTIMIZATION_r06.md).
+    return (
+        cand.join(ta, "doc_a")
+        .join(tb, "doc_b")
+        .withColumn("n_inter", F.size(F.array_intersect("ws_a", "ws_b")).cast("long"))
+        .filter(
+            F.lit(100 + threshold_pct) * F.col("n_inter")
+            >= F.lit(threshold_pct) * (F.col("n_a") + F.col("n_b"))
+        )
         .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        .filter(F.lit(100) * F.col("n_inter") >= F.lit(threshold_pct) * F.col("n_union"))
+        .select("doc_a", "doc_b", "n_inter", "n_union")
     )
-    return out.select("doc_a", "doc_b", "n_inter", "n_union").orderBy("doc_a", "doc_b")
 
 
 def containment_pairs(

@@ -22,7 +22,8 @@ Paths:
     LSH 0.78 at similar fractions).  At rest the 64 B sketch column is the
     only thing the full-corpus pass reads.
   * ``cosine_near_dup_pairs``  — embedding near-dup for the dedup family:
-    banded-LSH candidates + exact integer cosine threshold.  Never all-pairs.
+    sign-sketch hamming candidates + exact integer cosine threshold, in one
+    cogrouped Arrow pass over block pairs.
 
   * ``ivf_sketch_topk``        — the IVF→sketch→exact composition for
     corpora that actually cluster: probe nprobe/nlist of the corpus,
@@ -242,31 +243,6 @@ def probe_dim(df: DataFrame, vec_col: str = "embedding") -> int:
     return int(row.hi)
 
 
-def _band_buckets_col(
-    vec: Column, dim: int, bands: int = BANDS, rows_per_band: int = ROWS_PER_BAND
-) -> Column:
-    """array<struct<band:int, bucket:long>> — one bucket id per band.
-    Projection p = Σᵢ floor(vecᵢ·1e8)·signs(p)ᵢ is exact int64; bucket bit j
-    of band b is (projection(b·r+j) > 0)."""
-    def proj(p: int) -> Column:
-        signs = F.array(*[F.lit(s) for s in plane_signs(p, dim)])
-        return F.aggregate(
-            F.zip_with(vec, signs, lambda x, s: _int_val(x) * s.cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    structs = []
-    for b in range(bands):
-        bucket = F.lit(0).cast("long")
-        for j in range(rows_per_band):
-            bucket = bucket + F.when(
-                proj(b * rows_per_band + j) > 0, F.lit(1 << j).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        structs.append(F.struct(F.lit(b).alias("band"), bucket.alias("bucket")))
-    return F.array(*structs)
-
-
 def _band_buckets_udf(dim: int, bands: int, rows_per_band: int):
     """Arrow-batched bucket computation: ONE int64 matmul per batch instead
     of bands·rows_per_band interpreted per-element lambdas per row (the
@@ -274,8 +250,8 @@ def _band_buckets_udf(dim: int, bands: int, rows_per_band: int):
 
     Exactness is preserved: np.floor(float64(v)·1e8)→int64 matches Spark's
     floor(double)·cast(long) bit-for-bit, and integer matmul is
-    order-independent — so buckets equal ``_band_buckets_col`` and the
-    DuckDB mirror exactly."""
+    order-independent — so buckets equal the pure-Column projection form
+    (tests/twins.py) and the DuckDB mirror exactly."""
     planes = bands * rows_per_band
     signs = np.array(
         [plane_signs(p, dim) for p in range(planes)], dtype=np.int64
@@ -304,8 +280,8 @@ def lsh_band_buckets(
     rows_per_band: int = ROWS_PER_BAND,
 ) -> DataFrame:
     """(id, band, bucket) — exploded band buckets, ready for the bucket join.
-    Buckets come from the Arrow/numpy path; ``_band_buckets_col`` is the
-    pure-Column twin kept for cross-checking (tests assert equality)."""
+    Buckets come from the Arrow/numpy path; tests/twins.py keeps the
+    pure-Column form for cross-checking (tests assert equality)."""
     udf = _band_buckets_udf(dim, bands, rows_per_band)
     return df.select(
         F.col(id_col).alias("id"),
@@ -916,26 +892,6 @@ def sketch_near_dup_max_hamming(
     return int(planes * (f + 0.5) / 2)
 
 
-def _verify_pairs_exact(
-    cand: DataFrame,
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Shared near-dup tail: fetch float vectors for CANDIDATE rows only,
-    exact integer-cosine score, keep pairs ≥ threshold."""
-    va = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
-    vb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cosine_exact_arrow(F.col("vec_a"), F.col("vec_b")).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-        .orderBy("id_a", "id_b")
-    )
-
-
 def near_dup_blocks(parallelism: int) -> int:
     """Block count for the cogrouped pair pass: the smallest B whose
     B(B+1)/2 equal-sized block-pair groups are ≥ 8× the session parallelism,
@@ -964,7 +920,7 @@ def _near_dup_pairs_grouped_arrow(
     pair work — sketching, the n²/2 hamming evaluations, the exact integer
     cosine verify — happens in numpy inside ``applyInPandas``, so no pair
     row is ever materialized in the JVM and no candidate pair ever crosses
-    the Python boundary (the r05 join twin materialized every pair in the
+    the Python boundary (the r05 equi-join form materialized every pair in the
     SMJ and shipped ~5% of n²/2 candidate rows with BOTH float vectors
     through Arrow for the verify — measured 74.7 s at n=20k vs 4-6 s for
     this pass, OPTIMIZATION_r06.md).
@@ -972,13 +928,15 @@ def _near_dup_pairs_grouped_arrow(
     Hamming via GEMM: h(a,b) = |a| + |b| − 2·(bits_a · bits_b) with the
     512 sketch bits unpacked to float32 — dot products ≤ 512 are exact in
     float32, so the cutoff comparison is integer-exact, identical to the
-    XOR+POPCNT twin (equality-gated in tests/test_similarity.py).  The
+    XOR+POPCNT join form kept in tests/twins.py (equality-gated in
+    tests/test_similarity.py).  The
     exact verify reuses the ``cosine_exact_arrow`` arithmetic verbatim:
     int64 floor-scaled dot/norms, one IEEE double divide.
 
     Each row lands in block ``xxhash64(id) % B``; the lo side is replicated
     to block-pairs (b, b..B-1), the hi side to (0..b, b) — every unordered
-    pair meets in exactly one group (same enumeration as the join twin).
+    pair meets in exactly one group (same enumeration as
+    ``sketch_near_dup_candidates``).
     An explicit ``repartition(n, pk)`` pins the exchange width: without it
     AQE coalesces the small-byte/huge-compute shuffle to ~2 partitions
     (64 MB advisory) and the pair pass runs nearly serial — the single
@@ -1103,63 +1061,33 @@ def cosine_near_dup_pairs(
     threshold: float = 0.45,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "sketch",
     blocks: int | None = None,
     planes: int = SKETCH_PLANES,
     max_hamming: int | None = None,
-    bands: int = BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
-    impl: str = "arrow",
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: sketch-hamming candidates
-    (default) or banded-LSH candidates, exact integer cosine verify.
+    """Embedding-cosine near-duplicate pairs: sketch-hamming candidates,
+    exact integer cosine verify.
 
-    ``method="sketch"`` (VERDICT r04 item 4): candidates are pairs whose
-    512-bit sign-sketch hamming distance ≤ ``max_hamming`` (derived from the
-    cosine threshold by ``sketch_near_dup_max_hamming`` unless given).
-    ``impl`` picks the execution of the SAME pair definition:
+    Candidates are pairs whose 512-bit sign-sketch hamming distance ≤
+    ``max_hamming`` (derived from the cosine threshold by
+    ``sketch_near_dup_max_hamming`` unless given; VERDICT r04 item 4).  The
+    pair definition runs as one cogrouped numpy pass over block-pair groups
+    (r06) — sketching, hamming (GEMM) and the exact verify all happen
+    in-place; no pair row is materialized JVM-side and no candidate crosses
+    the Python boundary.  See ``_near_dup_pairs_grouped_arrow``.
+    ``blocks=None`` derives the block count from the session parallelism
+    (``near_dup_blocks``).
 
-      * ``"arrow"`` (default, r06): one cogrouped numpy pass over block-pair
-        groups — sketching, hamming (GEMM) and the exact verify all happen
-        in-place; no pair row is materialized JVM-side and no candidate
-        crosses the Python boundary.  See ``_near_dup_pairs_grouped_arrow``.
-        ``blocks=None`` derives the block count from the session parallelism
-        (``near_dup_blocks``).
-      * ``"join"`` — the r05 twin kept for cross-checking: BLOCK-PAIR
-        equi-join in whole-stage codegen (n·B sketch rows of ~72 B through
-        the shuffle, n²/2 XOR+POPCNT ops over B(B+1)/2 join groups), then
-        float vectors re-joined for candidates only.  Equality-gated to the
-        arrow path in tests/test_similarity.py.
-
-    ``method="lsh"`` keeps the banded-LSH candidate generator as a second
-    cross-checking twin (b=8/r=4 → ~40% candidate fraction on isotropic
-    data; candidates bounded by bucket population per band)."""
-    if method == "lsh":
-        dim = probe_dim(embeddings, vec_col)
-        bb = lsh_band_buckets(embeddings, dim, id_col, vec_col, bands, rows_per_band)
-        a = bb.select(F.col("id").alias("id_a"), "band", "bucket")
-        b = bb.select(F.col("id").alias("id_b"), "band", "bucket")
-        cand = (
-            a.join(b, on=["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        return _verify_pairs_exact(cand, embeddings, threshold, id_col, vec_col)
-    if method != "sketch":
-        raise ValueError(f"unknown near-dup method {method!r}; 'sketch' or 'lsh'")
+    tests/twins.py rebuilds the r05 block-pair equi-join (over
+    ``sketch_near_dup_candidates``) and the banded-LSH candidate generator
+    (over ``lsh_band_buckets``, ~40% candidate fraction on isotropic data)
+    as cross-checks; tests/test_similarity.py gates the pair set against
+    both."""
     if max_hamming is None:
         max_hamming = sketch_near_dup_max_hamming(threshold, planes)
-    if impl == "arrow":
-        return _near_dup_pairs_grouped_arrow(
-            embeddings, threshold, id_col, vec_col, blocks, planes, max_hamming
-        )
-    if impl != "join":
-        raise ValueError(f"unknown near-dup impl {impl!r}; 'arrow' or 'join'")
-    cand = sketch_near_dup_candidates(
-        embeddings, threshold, id_col, vec_col, blocks or 8, planes, max_hamming
+    return _near_dup_pairs_grouped_arrow(
+        embeddings, threshold, id_col, vec_col, blocks, planes, max_hamming
     )
-    return _verify_pairs_exact(cand, embeddings, threshold, id_col, vec_col)
 
 
 def sketch_near_dup_candidates(

@@ -2,19 +2,31 @@
 (doc_id, text, …) — the training-data-pipeline layer: token counting,
 quality scoring, language ID, fingerprinting.
 
-All pure Column algebra (whole-stage codegen; no Python in the hot path).
-Counts and ratios are emitted as exact integers wherever possible so the
+Column algebra (whole-stage codegen) wherever a Column form is cheap; the
+per-document token passes an interpreted higher-order lambda would make
+slow run as one Arrow pandas_udf each (their Column forms are kept in
+tests/twins.py for cross-checking).  Counts and ratios are emitted as exact integers wherever possible so the
 DuckDB oracle comparison is hash-stable; ratios derived from them are
 double divisions of identical integers (bit-identical across engines).
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
+from collections import Counter
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 # Frozen stopword lists for the n-gram/stopword language heuristic.  These are
 # deliberately tiny — the heuristic's value is its shape (per-language hit
@@ -131,109 +143,57 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def language_best_struct(text_col: Column) -> Column:
-    """ONE pass over the word array: a struct accumulator counts stopword
-    hits for every language simultaneously; the aggregate's ``finish`` lambda
-    does the argmax, so the word split is evaluated exactly once per row
-    (round 1 inlined the split into 4 per-language structs — ~4× the regex
-    work, VERDICT.md What's-wrong #6).
-
-    Returns struct<hits:int, lang:string> — max hits, ties broken by language
-    code DESCENDING (struct max compares field-by-field)."""
-    w = words(F.lower(text_col))
-    langs = sorted(STOPWORDS)
-    zero = F.struct(*[F.lit(0).alias(lang) for lang in langs])
-
-    def merge(acc: Column, x: Column) -> Column:
-        return F.struct(
-            *[
-                (acc[lang] + F.when(x.isin(*STOPWORDS[lang]), 1).otherwise(0)).alias(lang)
-                for lang in langs
-            ]
-        )
-
-    def finish(acc: Column) -> Column:
-        return F.array_max(
-            F.array(
-                *[
-                    F.struct(acc[lang].alias("hits"), F.lit(lang).alias("lang"))
-                    for lang in langs
-                ]
-            )
-        )
-
-    return F.aggregate(w, zero, merge, finish)
+_LANGS = sorted(STOPWORDS)
+# word → indices of the languages whose stopword list holds it
+_WORD_LANGS = {
+    w: [li for li, lang in enumerate(_LANGS) if w in STOPWORDS[lang]]
+    for ws in STOPWORDS.values()
+    for w in ws
+}
 
 
-_LANG_WORDS_UDF = None
+@F.pandas_udf(
+    StructType(
+        [
+            StructField("hits", IntegerType()),
+            StructField("lang", StringType()),
+            StructField("n_words", LongType()),
+        ]
+    )
+)
+def language_words_arrow(texts: pd.Series) -> pd.DataFrame:
+    """Stopword-hit language argmax PLUS the word count, in one Arrow pass:
+    struct<hits:int, lang:string, n_words:long>.
 
-
-def language_words_arrow(col: Column) -> Column:
-    """Arrow-batched twin of ``language_best_struct`` PLUS the word count,
-    in one pass: struct<hits:int, lang:string, n_words:long>.
-
-    Measured r04 (16 cores, 45k ~850-word docs): the interpreted
-    higher-order aggregate adds +11.2 s to the stage, this twin +1.8 s with
-    the word count included.  It lowers the text once (C-speed), splits on
-    the Java-``\\s`` class, folds the split through a ``Counter`` so each
-    DISTINCT word pays ONE dict probe against a word→language-indices
-    table, and argmaxes with the identical (hits, lang) struct-max
+    Measured r04 (16 cores, 45k ~850-word docs): an interpreted
+    higher-order aggregate over the word array adds +11.2 s to the stage,
+    this pass +1.8 s with the word count included.  It lowers the text once
+    (C-speed), splits on the Java-``\\s`` class, folds the split through a
+    ``Counter`` so each DISTINCT word pays ONE dict probe against a
+    word→language-indices table, and argmaxes with a (hits, lang) struct-max
     tie-break (greatest hits, then greatest language code).  Byte-equal to
-    the Column form on every corpus — equality-gated in
-    tests/test_curate_run.py; the Column twin stays the oracled
-    ``language_id`` query's form."""
-    global _LANG_WORDS_UDF
-    if _LANG_WORDS_UDF is None:
-        from collections import Counter
-
-        from pyspark.sql.types import (
-            IntegerType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        langs = sorted(STOPWORDS)
-        word_langs: dict = {}
-        for li, lang in enumerate(langs):
-            for sw in STOPWORDS[lang]:
-                word_langs.setdefault(sw, []).append(li)
-        out_type = StructType(
-            [
-                StructField("hits", IntegerType()),
-                StructField("lang", StringType()),
-                StructField("n_words", LongType()),
-            ]
-        )
-        get = word_langs.get
-        nlang = len(langs)
-
-        @F.pandas_udf(out_type)
-        def lang_udf(texts: pd.Series) -> pd.DataFrame:
-            hits_col, lang_col, n_col = [], [], []
-            for t in texts:
-                counts = Counter(java_words((t or "").lower()))
-                per_lang = [0] * nlang
-                for w, c in counts.items():
-                    lis = get(w)
-                    if lis is not None:
-                        for li in lis:
-                            per_lang[li] += c
-                best_hits, best_lang = max(zip(per_lang, langs))
-                hits_col.append(best_hits)
-                lang_col.append(best_lang)
-                n_col.append(sum(counts.values()))
-            return pd.DataFrame(
-                {
-                    "hits": pd.Series(hits_col, dtype="int32"),
-                    "lang": lang_col,
-                    "n_words": pd.Series(n_col, dtype="int64"),
-                }
-            )
-
-        _LANG_WORDS_UDF = lang_udf
-    return _LANG_WORDS_UDF(col)
+    the Column-aggregate form in tests/twins.py — equality-gated in
+    tests/test_curate_run.py."""
+    hits_col, lang_col, n_col = [], [], []
+    for t in texts:
+        counts = Counter(java_words((t or "").lower()))
+        per_lang = [0] * len(_LANGS)
+        for w, c in counts.items():
+            lis = _WORD_LANGS.get(w)
+            if lis is not None:
+                for li in lis:
+                    per_lang[li] += c
+        best_hits, best_lang = max(zip(per_lang, _LANGS))
+        hits_col.append(best_hits)
+        lang_col.append(best_lang)
+        n_col.append(sum(counts.values()))
+    return pd.DataFrame(
+        {
+            "hits": pd.Series(hits_col, dtype="int32"),
+            "lang": lang_col,
+            "n_words": pd.Series(n_col, dtype="int64"),
+        }
+    )
 
 
 def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -241,28 +201,12 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     (max hits; ties broken by language code DESCENDING; 'und' when no hits).
     The SQL mirror is ``ORDER BY hits DESC, lang DESC LIMIT 1`` per doc.
 
-    r06: scores through ``language_words_arrow`` (the byte-equal Arrow
-    twin — the interpreted higher-order aggregate measured +11.2 s vs
-    +1.8 s over 45k docs at 16 cores, r04) instead of the Column
-    aggregate; ``language_id_column_twin`` keeps the HOF form for
+    r06: scores through ``language_words_arrow`` (the interpreted
+    higher-order aggregate measured +11.2 s vs +1.8 s over 45k docs at 16
+    cores, r04); the HOF form is kept in tests/twins.py for
     cross-checking."""
     return (
         df.withColumn("_best", language_words_arrow(F.col(text_col)))
-        .select(
-            "doc_id",
-            F.when(F.col("_best.hits") > 0, F.col("_best.lang"))
-            .otherwise(F.lit("und"))
-            .alias("lang_pred"),
-            F.col("_best.hits").cast("long").alias("lang_hits"),
-        )
-    )
-
-
-def language_id_column_twin(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """The interpreted higher-order-aggregate form — kept ONLY as the
-    equality cross-check for the Arrow scoring pass."""
-    return (
-        df.withColumn("_best", language_best_struct(F.col(text_col)))
         .select(
             "doc_id",
             F.when(F.col("_best.hits") > 0, F.col("_best.lang"))
@@ -328,8 +272,8 @@ def bigram_novelty(
     # the broadcast probe + per-doc rollup) read that map-only stream, and
     # every output falls out of the ONE rollup (n_bigrams = Σcnt,
     # n_distinct = row count at the distinct grain), so there is no second
-    # rollup and no doc_id join.  The exploded-join formulation stays as
-    # ``bigram_novelty_exploded_twin`` (equality test in tests/test_dedup.py).
+    # rollup and no doc_id join.  The exploded-join formulation is kept in
+    # tests/twins.py (equality test in tests/test_dedup.py).
     per = df.select(
         "doc_id", F.explode(_bigram_counts_arrow(F.col(text_col))).alias("bc")
     ).select("doc_id", F.col("bc.bg").alias("bigram"), F.col("bc.cnt").alias("cnt"))
@@ -353,81 +297,22 @@ def bigram_novelty(
     )
 
 
-_BIGRAM_COUNTS_UDF = None
-
-
-def _bigram_counts_arrow(col: Column) -> Column:
+@F.pandas_udf(
+    ArrayType(StructType([StructField("bg", StringType()), StructField("cnt", LongType())]))
+)
+def _bigram_counts_arrow(texts: pd.Series) -> pd.Series:
     """array<struct<bg:string, cnt:long>> — the doc's DISTINCT word bigrams
     with their occurrence counts, one linear pass (byte-identical Java-\\s
-    split twin; bigram text joined by a single space exactly like
+    split; bigram text joined by a single space exactly like
     word_shingles(k=2)).  Empty array when the doc has < 2 words."""
-    global _BIGRAM_COUNTS_UDF
-    if _BIGRAM_COUNTS_UDF is None:
-        from collections import Counter
-
-        from pyspark.sql.types import (
-            ArrayType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        out_type = ArrayType(
-            StructType(
-                [StructField("bg", StringType()), StructField("cnt", LongType())]
-            )
-        )
-
-        @F.pandas_udf(out_type)
-        def bigram_counts_udf(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                ws = java_words(t)
-                if len(ws) < 2:
-                    out.append([])
-                    continue
-                c = Counter(
-                    a + " " + b for a, b in zip(ws, ws[1:])
-                )
-                out.append(list(c.items()))
-            return pd.Series(out)
-
-        _BIGRAM_COUNTS_UDF = bigram_counts_udf
-    return _BIGRAM_COUNTS_UDF(col)
-
-
-def bigram_novelty_exploded_twin(
-    df: DataFrame, text_col: str = "text", common_df: int = 3
-) -> DataFrame:
-    """The exploded-stream formulation (explode → (doc, bigram) groupBy →
-    common set → probe → rollup) — kept ONLY as the equality cross-check
-    for the Arrow-counted pass."""
-    per = (
-        df.select(
-            "doc_id", F.explode(word_shingles(F.col(text_col), 2)).alias("bigram")
-        )
-        .groupBy("doc_id", "bigram")
-        .agg(F.count("*").alias("cnt"))
-    )
-    common = (
-        per.groupBy("bigram")
-        .agg(F.count("*").alias("dfreq"))
-        .filter(F.col("dfreq") >= common_df)
-        .select("bigram", F.lit(1).alias("_common"))
-    )
-    probed = per.join(F.broadcast(common), "bigram", "left")
-    return (
-        probed.groupBy("doc_id")
-        .agg(
-            F.sum("cnt").alias("n_bigrams"),
-            F.count("*").alias("n_distinct"),
-            F.sum(F.when(F.col("_common") == 1, F.col("cnt")).otherwise(0)).alias(
-                "n_common"
-            ),
-            F.count(F.when(F.col("_common") == 1, 1)).alias("n_common_distinct"),
-        )
-    )
+    out = []
+    for t in texts:
+        ws = java_words(t)
+        if len(ws) < 2:
+            out.append([])
+            continue
+        out.append(list(Counter(a + " " + b for a, b in zip(ws, ws[1:])).items()))
+    return pd.Series(out)
 
 
 #: Hashing-trick classifier dials (frozen — part of the oracle surface).
@@ -438,34 +323,8 @@ _CLF_B = 97
 _CLF_M = 21
 _CLF_HALF = 10  # (M-1)/2 → weights centered on 0
 
-_CLF_UDF = None
 
-
-def _clf_bucket(x: Column) -> Column:
-    """Feature string → bucket id: first 8 md5 hex chars (32 bits, signed-
-    int64-portable per the repo-wide cap) mod CLF_N_BUCKETS."""
-    return (
-        F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("long") % CLF_N_BUCKETS
-    )
-
-
-def _clf_weight_of_bucket(b: Column) -> Column:
-    return (b * F.lit(_CLF_A).cast("long") + _CLF_B) % _CLF_M - _CLF_HALF
-
-
-def synthetic_weight_table(spark, n_buckets: int = CLF_N_BUCKETS) -> DataFrame:
-    """The deterministic default weight table as a (bucket, weight) frame —
-    what a TRAINED fastText-style model would be loaded as.  2^18 rows ≈ 2 MB:
-    broadcast-sized at any corpus scale."""
-    return spark.range(n_buckets).select(
-        F.col("id").alias("bucket"),
-        _clf_weight_of_bucket(F.col("id")).cast("long").alias("weight"),
-    )
-
-
-def hash_classifier_score(
-    df: DataFrame, text_col: str = "text", weights: DataFrame | None = None
-) -> DataFrame:
+def hash_classifier_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """fastText-style hashing-trick linear classifier score per document —
     the architecture of the public LLM-pipeline quality filters (Joulin et
     al. 2016 "Bag of Tricks for Efficient Text Classification"; hashed
@@ -476,116 +335,68 @@ def hash_classifier_score(
     All integer arithmetic (weights are ints in [-10, 10]), so the DuckDB
     oracle is hash-exact.
 
-    Two plan shapes:
-
-    - ``weights=None`` (default): the weight is a closed-form integer mix of
-      the bucket id (the deterministic stand-in for a trained model), so the
-      WHOLE score folds into one Arrow map pass — zero shuffle, zero join;
-      the scale shape a 100 TB curation scan wants.  A pure-Column twin
-      (``hash_classifier_score_column_twin``) is equality-gated in tests.
-    - ``weights=`` a (bucket, weight) frame: explode features → broadcast
-      hash join on bucket → one per-doc sum.  The weight table is ≤ 2 MB at
-      2^18 buckets — always broadcast, so the only shuffle is the final
-      doc_id aggregation.  This is the production seam for real trained
-      weights; with the synthetic table it is equality-tested against the
-      closed form.
-
-    Docs with zero words score 0 on the map path and DROP on the join path
-    (no feature rows) — the contract query consumes the ≥1-bigram grain
-    where both agree."""
+    The weight is a closed-form integer mix of the bucket id (the
+    deterministic stand-in for a trained model), so the WHOLE score folds
+    into one Arrow map pass — zero shuffle, zero join; the scale shape a
+    100 TB curation scan wants.  A pure-Column twin in tests/twins.py is
+    equality-gated in tests/test_dedup.py.  Docs with zero words score 0."""
     t = F.col(text_col)
     n = F.size(words(t))
     n_feats = F.when(n >= 1, n * 2 - 1).otherwise(F.lit(0)).cast("long")
-    if weights is None:
-        return df.select(
-            "doc_id",
-            _clf_score_arrow(t).alias("clf_score"),
-            n_feats.alias("n_feats"),
-        ).withColumn("clf_ok", F.col("clf_score") >= 0)
-    feats = df.select(
-        "doc_id",
-        F.explode(
-            F.concat(words(t), word_shingles(t, 2))
-        ).alias("f"),
-    )
-    scored = feats.select("doc_id", _clf_bucket(F.col("f")).alias("bucket")).join(
-        F.broadcast(weights), "bucket", "left"
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.sum(F.coalesce("weight", F.lit(0))).cast("long").alias("clf_score"),
-            F.count("*").alias("n_feats"),
-        )
-        .withColumn("clf_ok", F.col("clf_score") >= 0)
-    )
-
-
-def _clf_score_arrow(col: Column) -> Column:
-    """Arrow-batched score: one linear pass per doc with a batch-level
-    feature→weight cache (Zipfian token streams repeat heavily — the simhash
-    batch-cache precedent).  md5 of the UTF-8 bytes matches Spark/DuckDB
-    ``md5()`` exactly."""
-    global _CLF_UDF
-    if _CLF_UDF is None:
-        import hashlib
-
-        from pyspark.sql.types import LongType
-
-        nb, a, b, m, half = CLF_N_BUCKETS, _CLF_A, _CLF_B, _CLF_M, _CLF_HALF
-
-        @F.pandas_udf(LongType())
-        def clf_udf(texts: pd.Series) -> pd.Series:
-            cache: dict = {}
-
-            def wgt(f):
-                v = cache.get(f)
-                if v is None:
-                    h = int(hashlib.md5(f.encode("utf-8")).hexdigest()[:8], 16) % nb
-                    v = (h * a + b) % m - half
-                    cache[f] = v
-                return v
-
-            out = []
-            for t in texts:
-                ws = java_words(t)
-                s = 0
-                for x in ws:
-                    s += wgt(x)
-                for i in range(len(ws) - 1):
-                    s += wgt(ws[i] + " " + ws[i + 1])
-                out.append(s)
-            return pd.Series(out, dtype="int64")
-
-        _CLF_UDF = clf_udf
-    return _CLF_UDF(col)
-
-
-def hash_classifier_score_column_twin(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Pure-Column closed-form twin (codegen md5 + higher-order aggregate) —
-    kept as the equality cross-check for the Arrow path, per the repo
-    convention (interpreted HOF lambdas cost ~µs/element; the Arrow pass is
-    the shipped default)."""
-    t = F.col(text_col)
-    w = words(t)
-    n = F.size(w)
-    feats = F.concat(w, word_shingles_column_twin(t, 2))
-    score = F.aggregate(
-        F.transform(feats, lambda x: _clf_weight_of_bucket(_clf_bucket(x))),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    n_feats = F.when(n >= 1, n * 2 - 1).otherwise(F.lit(0)).cast("long")
     return df.select(
         "doc_id",
-        score.alias("clf_score"),
+        _clf_score_arrow(t).alias("clf_score"),
         n_feats.alias("n_feats"),
     ).withColumn("clf_ok", F.col("clf_score") >= 0)
 
 
-_REP_STATS_UDF = None
+@F.pandas_udf(LongType())
+def _clf_score_arrow(texts: pd.Series) -> pd.Series:
+    """Arrow-batched score: one linear pass per doc with a batch-level
+    feature→weight cache (Zipfian token streams repeat heavily — the simhash
+    batch-cache precedent).  md5 of the UTF-8 bytes matches Spark/DuckDB
+    ``md5()`` exactly."""
+    cache: dict = {}
+
+    def wgt(f):
+        v = cache.get(f)
+        if v is None:
+            h = int(hashlib.md5(f.encode("utf-8")).hexdigest()[:8], 16) % CLF_N_BUCKETS
+            v = (h * _CLF_A + _CLF_B) % _CLF_M - _CLF_HALF
+            cache[f] = v
+        return v
+
+    out = []
+    for t in texts:
+        ws = java_words(t)
+        s = 0
+        for x in ws:
+            s += wgt(x)
+        for i in range(len(ws) - 1):
+            s += wgt(ws[i] + " " + ws[i + 1])
+        out.append(s)
+    return pd.Series(out, dtype="int64")
+
+
+_REP_FIELDS = ["n_words", "n_distinct_words", "top_word_count", "n_bigrams", "top_bigram_count"]
+
+
+@F.pandas_udf(StructType([StructField(f, LongType()) for f in _REP_FIELDS]))
+def _rep_stats_udf(texts: pd.Series) -> pd.DataFrame:
+    rows = []
+    for t in texts:
+        ws = java_words(t)
+        if not ws:
+            rows.append((0, 0, 0, 0, 0))
+            continue
+        wc = Counter(ws)
+        if len(ws) > 1:
+            bc = Counter(zip(ws, ws[1:]))
+            nb, tb = len(ws) - 1, max(bc.values())
+        else:
+            nb, tb = 0, 0
+        rows.append((len(ws), len(wc), max(wc.values()), nb, tb))
+    return pd.DataFrame(rows, columns=_REP_FIELDS)
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -596,86 +407,13 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     r06: every output is derivable from the doc's own token stream, so the
     whole operator is ONE Arrow map pass (per-doc Counter — the pinned
     "per-document computations beat explode+groupBy" lesson): zero
-    shuffles, no joins, where the explode twin paid two exploded
+    shuffles, no joins, where the explode form paid two exploded
     two-level aggregations plus two left joins.  The split is the
-    byte-identical Java-\\s twin used by word_shingles; the exploded shape
-    stays as ``repetition_stats_column_twin`` with an equality gate in
+    byte-identical Java-\\s one used by word_shingles; the exploded shape
+    is kept in tests/twins.py with an equality gate in
     tests/test_dedup.py."""
-    global _REP_STATS_UDF
-    if _REP_STATS_UDF is None:
-        from collections import Counter
-
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        fields = [
-            "n_words",
-            "n_distinct_words",
-            "top_word_count",
-            "n_bigrams",
-            "top_bigram_count",
-        ]
-
-        @F.pandas_udf(StructType([StructField(f, LongType()) for f in fields]))
-        def rep_udf(texts: pd.Series) -> pd.DataFrame:
-            rows = []
-            for t in texts:
-                ws = java_words(t)
-                if not ws:
-                    rows.append((0, 0, 0, 0, 0))
-                    continue
-                wc = Counter(ws)
-                if len(ws) > 1:
-                    bc = Counter(zip(ws, ws[1:]))
-                    nb, tb = len(ws) - 1, max(bc.values())
-                else:
-                    nb, tb = 0, 0
-                rows.append((len(ws), len(wc), max(wc.values()), nb, tb))
-            return pd.DataFrame(rows, columns=fields)
-
-        _REP_STATS_UDF = rep_udf
-    return df.select("doc_id", _REP_STATS_UDF(F.col(text_col)).alias("_r")).select(
+    return df.select("doc_id", _rep_stats_udf(F.col(text_col)).alias("_r")).select(
         "doc_id", "_r.*"
-    )
-
-
-def repetition_stats_column_twin(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """The exploded two-level-aggregation formulation — kept ONLY as the
-    equality cross-check for the Arrow pass (zero-shuffle map pass above)."""
-    t = F.col(text_col)
-    unigrams = (
-        df.select("doc_id", F.explode(words(t)).alias("w"))
-        .groupBy("doc_id", "w")
-        .agg(F.count("*").alias("cnt"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").alias("n_words"),
-            F.count("*").alias("n_distinct_words"),
-            F.max("cnt").alias("top_word_count"),
-        )
-    )
-    bigrams = (
-        df.select("doc_id", F.explode(word_shingles(t, 2)).alias("bg"))
-        .groupBy("doc_id", "bg")
-        .agg(F.count("*").alias("cnt"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").alias("n_bigrams"),
-            F.max("cnt").alias("top_bigram_count"),
-        )
-    )
-    zero = F.lit(0).cast("long")
-    return (
-        df.select("doc_id")
-        .join(unigrams, "doc_id", "left")
-        .join(bigrams, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_words", zero).alias("n_words"),
-            F.coalesce("n_distinct_words", zero).alias("n_distinct_words"),
-            F.coalesce("top_word_count", zero).alias("top_word_count"),
-            F.coalesce("n_bigrams", zero).alias("n_bigrams"),
-            F.coalesce("top_bigram_count", zero).alias("top_bigram_count"),
-        )
     )
 
 
@@ -771,9 +509,9 @@ def word_shingles(col: Column, k: int = 3) -> Column:
     document.  Harmless at 200 words, a stall at 50k (pathological web
     docs).  The UDF is one linear pass per doc; outputs are byte-identical
     (ASCII-whitespace split, exactly Spark's ``split(trim(x), '\\s+')``) —
-    tests/test_dedup.py asserts equality against the Column twin."""
+    tests/test_dedup.py asserts equality against the Column form kept in
+    tests/twins.py."""
     if k not in _SHINGLE_UDFS:
-        from pyspark.sql.types import ArrayType, StringType
 
         def make(kk: int):
             @F.pandas_udf(ArrayType(StringType()))
@@ -793,17 +531,3 @@ def word_shingles(col: Column, k: int = 3) -> Column:
 
         _SHINGLE_UDFS[k] = make(k)
     return _SHINGLE_UDFS[k](col)
-
-
-def word_shingles_column_twin(col: Column, k: int = 3) -> Column:
-    """The pure-Column formulation — O(words²), kept ONLY as the equality
-    cross-check for the Arrow path (and for plans that must stay UDF-free
-    on provably small text)."""
-    w = words(col)
-    n = F.size(w)
-    return F.when(n < k, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.array_join(F.slice(w, i + 1, k), " "),
-        )
-    )

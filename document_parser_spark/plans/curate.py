@@ -245,10 +245,9 @@ def run_curation_checkpointed(
     ``max_buckets_this_run`` simulates a crash for resume tests.
 
     ``clf_min`` arms the hashing-trick classifier gate (keep iff score ≥
-    clf_min).  It is OFF by default: without trained weights the synthetic
-    stand-in scores are content-hash noise, and gating on them silently
-    halves the corpus — arm it only when production weights back the
-    score (the text.hash_classifier_score weight-table seam)."""
+    clf_min).  It is OFF by default: text.hash_classifier_score weighs
+    features with a closed-form stand-in for a trained model, so its scores
+    are content-hash noise and gating on them silently halves the corpus."""
     from ..operators.curation import chunk_documents, quality_language_gate
 
     chunks_dir = os.path.join(out_dir, "chunks")

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schemas import PARSE_RESULT, SPANS, TABLE
+from ..schemas import SPANS, TABLE
 
 #: docs above this size take the segmented path
 THRESHOLD_CHARS = 1 << 21
@@ -98,7 +98,6 @@ def _parse_segment_udf(
 def parse_documents_segmented(
     df: DataFrame,
     threshold_chars: int = THRESHOLD_CHARS,
-    segment_partitions: int | None = None,
 ) -> DataFrame:
     """(doc_id, text, …) → (doc_id, spans, tables, error); oversize docs are
     scanned segment-parallel.  Column set matches parse_documents minus the
@@ -117,15 +116,14 @@ def parse_documents_segmented(
         F.col("s.seg_text").alias("seg_text"),
         F.col("s.repeated").alias("repeated"),
     )
-    if segment_partitions is None:
-        # ALWAYS redistribute by default: the exploded segments otherwise
-        # stay in the partition that held their parent doc, so a 100 MB doc's
-        # ~200 segments parse SERIALLY in one task — measured max/median
-        # task ratio 89 on a 20 MB giant before this default (r04); the
-        # whole point of segmentation is that they fan out.  Pass 0 to skip.
-        segment_partitions = big.sparkSession.sparkContext.defaultParallelism * 2
-    if segment_partitions:
-        segs = segs.repartition(segment_partitions, "doc_id", "seg")
+    # ALWAYS redistribute: the exploded segments otherwise stay in the
+    # partition that held their parent doc, so a 100 MB doc's ~200 segments
+    # parse SERIALLY in one task — measured max/median task ratio 89 on a
+    # 20 MB giant before this repartition (r04); the whole point of
+    # segmentation is that they fan out.
+    segs = segs.repartition(
+        big.sparkSession.sparkContext.defaultParallelism * 2, "doc_id", "seg"
+    )
 
     parsed = segs.withColumn(
         "p", _parse_segment_udf("seg_text", "line_offset", "repeated")

@@ -35,8 +35,9 @@ def main() -> None:
     )
     parser.add_argument(
         "--clf-min", type=int, default=None,
-        help="arm the classifier gate (keep iff score >= CLF_MIN); needs "
-        "trained weights to be meaningful — see plans/curate.py",
+        help="arm the classifier gate (keep iff score >= CLF_MIN); the "
+        "built-in weights are a closed-form stand-in for a trained model, so "
+        "the scores are content-hash noise — see plans/curate.py",
     )
     parser.add_argument(
         "--election-method", choices=("groupby", "window"), default="groupby",

@@ -5,7 +5,13 @@ import types
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+#: the checkout these tests run from, resolved from this file so any copy
+#: of the repo tests its own code
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+#: scratch directory for test outputs (git-ignored)
+TMP = os.path.join(ROOT, ".tmp")
+
+sys.path.insert(0, ROOT)
 
 REFERENCE_DIR = "/root/reference"
 

@@ -7,9 +7,8 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import TMP
 from document_parser_spark.sources.catalog import TableCatalog, iceberg_available
-
-TMP = "/root/repo/.tmp"
 
 
 @pytest.fixture()

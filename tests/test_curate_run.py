@@ -5,6 +5,7 @@ bucket-level crash-resume."""
 import pyspark.sql.functions as F
 import pytest
 
+import twins
 from document_parser_spark.operators.curation import (
     chunk_documents,
     quality_language_gate,
@@ -204,13 +205,13 @@ def test_gate_arrow_equals_column(spark):
     cols = ["doc_id", "n_words", "lang_pred"]
     a = sorted(
         tuple(r)
-        for r in quality_language_gate(corpus, keep_langs=("en", "und", "de", "fr", "es"), use_arrow=True)
+        for r in quality_language_gate(corpus, keep_langs=("en", "und", "de", "fr", "es"))
         .select(*cols)
         .collect()
     )
     b = sorted(
         tuple(r)
-        for r in quality_language_gate(corpus, keep_langs=("en", "und", "de", "fr", "es"), use_arrow=False)
+        for r in twins.quality_language_gate(corpus, keep_langs=("en", "und", "de", "fr", "es"))
         .select(*cols)
         .collect()
     )
@@ -223,7 +224,7 @@ def test_gate_arrow_equals_column(spark):
 
     la = sorted(tuple(r) for r in text_ops.language_id(corpus).collect())
     lb = sorted(
-        tuple(r) for r in text_ops.language_id_column_twin(corpus).collect()
+        tuple(r) for r in twins.language_id(corpus).collect()
     )
     assert la == lb
 

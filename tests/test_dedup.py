@@ -7,6 +7,7 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
+import twins
 from document_parser_spark.operators import dedup
 
 DOCS = [
@@ -53,19 +54,16 @@ def test_prefix_filter_equals_exhaustive(docs, threshold):
 def test_array_verify_equals_explode_twin(docs, ngram_n):
     """r06: the array_intersect verify (one row per doc, broadcastable token
     table, single-reference filter) must return EXACTLY the exploded
-    candidate×token join's rows — same pairs, same n_inter/n_union."""
+    candidate×token join's rows (tests/twins.py) — same pairs, same
+    n_inter/n_union."""
     key = lambda rows: sorted(
         (r["doc_a"], r["doc_b"], r["n_inter"], r["n_union"]) for r in rows
     )
     arr = key(
-        dedup.ngram_jaccard_pairs(
-            docs, threshold_pct=50, ngram_n=ngram_n, verify="array"
-        ).collect()
+        dedup.ngram_jaccard_pairs(docs, threshold_pct=50, ngram_n=ngram_n).collect()
     )
     exp = key(
-        dedup.ngram_jaccard_pairs(
-            docs, threshold_pct=50, ngram_n=ngram_n, verify="explode"
-        ).collect()
+        twins.ngram_jaccard_pairs(docs, threshold_pct=50, ngram_n=ngram_n).collect()
     )
     assert arr == exp
 
@@ -81,14 +79,14 @@ def test_repetition_stats_arrow_equals_column_twin(spark):
     )
     key = lambda df: sorted(tuple(r) for r in df.collect())
     assert key(text_ops.repetition_stats(d)) == key(
-        text_ops.repetition_stats_column_twin(d)
+        twins.repetition_stats(d)
     )
     edges = spark.createDataFrame(
         [(1, ""), (2, None), (3, "one"), (4, "a a b"), (5, "  x \t y\ny  x x  ")],
         "doc_id long, text string",
     )
     assert key(text_ops.repetition_stats(edges)) == key(
-        text_ops.repetition_stats_column_twin(edges)
+        twins.repetition_stats(edges)
     )
 
 
@@ -103,14 +101,14 @@ def test_bigram_novelty_arrow_equals_exploded_twin(spark):
     )
     key = lambda df: sorted(tuple(r) for r in df.collect())
     assert key(text_ops.bigram_novelty(d, common_df=3)) == key(
-        text_ops.bigram_novelty_exploded_twin(d, common_df=3)
+        twins.bigram_novelty(d, common_df=3)
     )
     edges = spark.createDataFrame(
         [(1, ""), (2, None), (3, "one"), (4, "a b a b a"), (5, " x  y\tx y ")],
         "doc_id long, text string",
     )
     assert key(text_ops.bigram_novelty(edges, common_df=2)) == key(
-        text_ops.bigram_novelty_exploded_twin(edges, common_df=2)
+        twins.bigram_novelty(edges, common_df=2)
     )
 
 
@@ -125,8 +123,8 @@ def test_minhash_verify_array_equals_explode_twin(spark):
     )
     cand = dedup.minhash_candidate_pairs(dedup.minhash_signatures(d, shingle_k=5))
     key = lambda df: sorted(tuple(r) for r in df.collect())
-    arr = key(dedup._verify_jaccard(cand, d, "text", 5, 50, verify="array"))
-    exp = key(dedup._verify_jaccard(cand, d, "text", 5, 50, verify="explode"))
+    arr = key(dedup._verify_jaccard(cand, d, "text", 5, 50))
+    exp = key(twins.verify_jaccard(cand, d, "text", 5, 50))
     assert arr == exp and len(arr) > 0
 
 
@@ -198,57 +196,17 @@ def test_simhash_arrow_equals_column_twin(spark):
         ],
         "doc_id long, text string",
     )
-    col = {r["doc_id"]: r["simhash"] for r in dedup.simhash(df).collect()}
+    col = {r["doc_id"]: r["simhash"] for r in twins.simhash(df).collect()}
     arr = {r["doc_id"]: r["simhash"] for r in dedup.simhash_arrow(df).collect()}
     assert col == arr
     assert 3 not in arr and 4 not in arr  # wordless docs dropped by BOTH paths
     assert set(arr) == {1, 2, 5, 6}
 
 
-def test_duplicate_clusters_star_equals_propagation(spark):
-    """The large/small-star default and the min-label-propagation twin must
-    produce identical labelings on a multi-component graph with shared-node
-    merges (1-2-3 joins 3-7, star center 20, plus an isolated pair)."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 3), (20, 21), (20, 22), (20, 23), (40, 41)],
-        "doc_a long, doc_b long",
-    )
-    star = {r["doc_id"]: r["cluster_id"] for r in dedup.duplicate_clusters(pairs).collect()}
-    prop = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters_propagation(pairs).collect()
-    }
-    assert star == prop
-    assert star[7] == 1 and star[23] == 20 and star[41] == 40
-
-
-def test_duplicate_clusters_deep_chain_beyond_diameter_bound(spark):
-    """A 64-node chain (diameter 63) exceeds propagation's max_iter=20
-    per-hop budget but the alternating star rounds converge in O(log n):
-    the star variant labels the whole chain with the global min while the
-    propagation twin raises its convergence guard."""
-    import pytest as _pytest
-
-    chain = [(i, i + 1) for i in range(1, 64)]
-    pairs = spark.createDataFrame(chain, "doc_a long, doc_b long")
-    got = {r["doc_id"]: r["cluster_id"] for r in dedup.duplicate_clusters(pairs).collect()}
-    assert got == {i: 1 for i in range(1, 65)}
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.duplicate_clusters_propagation(pairs).collect()
-
-
-def test_duplicate_clusters_random_graph_vs_reference(spark):
-    """Seeded random graph: star labeling must equal a pure-Python
-    union-find ground truth AND the propagation twin (diameter stays inside
-    propagation's round budget at this size)."""
-    import random
-
-    rng = random.Random(42)
-    nodes = list(range(100))
-    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(60)]
-    edges = [(a, b) for a, b in edges if a != b]
-
-    parent = {n: n for n in nodes}
+def _union_find_labels(edges):
+    """Pure-Python ground truth: every node of an edge list labeled with the
+    minimum node of its connected component."""
+    parent = {n: n for e in edges for n in e}
 
     def find(x):
         while parent[x] != x:
@@ -260,17 +218,43 @@ def test_duplicate_clusters_random_graph_vs_reference(spark):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    in_graph = {n for e in edges for n in e}
-    truth = {n: find(n) for n in in_graph}
+    return {n: find(n) for n in parent}
+
+
+def test_duplicate_clusters_star_equals_propagation(spark):
+    """The large/small-star labeling must equal the pure-Python union-find
+    ground truth on a multi-component graph with shared-node merges (1-2-3
+    joins 3-7, star center 20, plus an isolated pair)."""
+    edges = [(1, 2), (2, 3), (7, 3), (20, 21), (20, 22), (20, 23), (40, 41)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    star = {r["doc_id"]: r["cluster_id"] for r in dedup.duplicate_clusters(pairs).collect()}
+    assert star == _union_find_labels(edges)
+    assert star[7] == 1 and star[23] == 20 and star[41] == 40
+
+
+def test_duplicate_clusters_deep_chain_beyond_diameter_bound(spark):
+    """A 64-node chain (diameter 63) would need 63 per-hop label-propagation
+    rounds, but the alternating star rounds converge in O(log n): the star
+    variant labels the whole chain with the global min."""
+    chain = [(i, i + 1) for i in range(1, 64)]
+    pairs = spark.createDataFrame(chain, "doc_a long, doc_b long")
+    got = {r["doc_id"]: r["cluster_id"] for r in dedup.duplicate_clusters(pairs).collect()}
+    assert got == {i: 1 for i in range(1, 65)}
+
+
+def test_duplicate_clusters_random_graph_vs_reference(spark):
+    """Seeded random graph: star labeling must equal a pure-Python
+    union-find ground truth."""
+    import random
+
+    rng = random.Random(42)
+    nodes = list(range(100))
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(60)]
+    edges = [(a, b) for a, b in edges if a != b]
 
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     star = {r["doc_id"]: r["cluster_id"] for r in dedup.duplicate_clusters(pairs).collect()}
-    prop = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters_propagation(pairs).collect()
-    }
-    assert star == truth
-    assert prop == truth
+    assert star == _union_find_labels(edges)
 
 
 def test_pack_shards_budget_property(spark):
@@ -341,11 +325,7 @@ def test_pack_shards_two_level_equals_single_window(spark):
 def test_word_shingles_arrow_equals_column_twin(spark):
     """The linear Arrow shingle path must equal the O(n²) Column formulation
     byte-for-byte (incl. tabs/CRLF/unicode-ish whitespace edge docs)."""
-    from document_parser_spark.operators.text import (
-        word_shingles,
-        word_shingles_column_twin,
-    )
-    from pyspark.sql import functions as F
+    from document_parser_spark.operators.text import word_shingles
 
     rows = [
         (1, "one two three four five"),
@@ -357,7 +337,7 @@ def test_word_shingles_arrow_equals_column_twin(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r["s"] for r in df.select("doc_id", word_shingles(F.col("text"), 3).alias("s")).collect()}
-    want = {r["doc_id"]: r["s"] for r in df.select("doc_id", word_shingles_column_twin(F.col("text"), 3).alias("s")).collect()}
+    want = {r["doc_id"]: r["s"] for r in df.select("doc_id", twins.word_shingles(F.col("text"), 3).alias("s")).collect()}
     assert got == want
     assert got[5] == ["a b c d"][0:0] + ["a b c d"] if False else got[5] == want[5]
     assert len(got[6]) == 2998
@@ -420,11 +400,10 @@ def test_minhash_incremental_equals_filtered_full(spark):
 
 
 def test_duplicate_clusters_empty_and_self_pair_edges(spark):
-    """Empty pair frames converge immediately to empty output in BOTH
-    implementations; a pure self-pair labels itself."""
+    """Empty pair frames converge immediately to empty output; a pure
+    self-pair labels itself."""
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
     assert dedup.duplicate_clusters(empty).collect() == []
-    assert dedup.duplicate_clusters_propagation(empty).collect() == []
     one = spark.createDataFrame([(7, 7)], "doc_a long, doc_b long")
     got = [(r["doc_id"], r["cluster_id"]) for r in dedup.duplicate_clusters(one).collect()]
     assert got == [(7, 7)]
@@ -528,10 +507,7 @@ def test_bigram_novelty_counts(spark):
 def test_chunk_documents_overlap_and_twin(spark):
     """Chunk geometry (overlap, tail truncation, empty-doc drop) is exact,
     and the Arrow pass equals the pure-Column twin across stride configs."""
-    from document_parser_spark.operators.curation import (
-        chunk_documents,
-        chunk_documents_column_twin,
-    )
+    from document_parser_spark.operators.curation import chunk_documents
 
     df = spark.createDataFrame(
         [
@@ -561,17 +537,14 @@ def test_chunk_documents_overlap_and_twin(spark):
         )
         b = sorted(
             tuple(r)
-            for r in chunk_documents_column_twin(
-                df, max_words=mw, stride=st
-            ).collect()
+            for r in twins.chunk_documents(df, max_words=mw, stride=st).collect()
         )
         assert a == b, (mw, st)
 
 
 def test_hash_classifier_paths_agree(spark):
-    """Arrow map pass == pure-Column twin == broadcast weight-table join
-    (join path drops zero-feature docs by construction), and the score is
-    the hand-computed md5-bucket arithmetic."""
+    """Arrow map pass == pure-Column twin, and the score is the
+    hand-computed md5-bucket arithmetic."""
     import hashlib
 
     from document_parser_spark.operators import text as T
@@ -579,7 +552,7 @@ def test_hash_classifier_paths_agree(spark):
     df = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog"),
-            (2, ""),                        # no words: map score 0, join drops
+            (2, ""),                        # no words: score 0
             (3, "one"),                     # single unigram feature
             (4, "  spaced   out   words  "),
             (5, "naïve café résumé naïve café"),  # UTF-8 md5 agreement
@@ -592,16 +565,9 @@ def test_hash_classifier_paths_agree(spark):
     }
     twin = {
         r["doc_id"]: (r["clf_score"], r["n_feats"], r["clf_ok"])
-        for r in T.hash_classifier_score_column_twin(df).collect()
+        for r in twins.hash_classifier_score(df).collect()
     }
     assert arrow == twin
-    joined = {
-        r["doc_id"]: (r["clf_score"], r["n_feats"], r["clf_ok"])
-        for r in T.hash_classifier_score(
-            df, weights=T.synthetic_weight_table(spark)
-        ).collect()
-    }
-    assert joined == {k: v for k, v in arrow.items() if k != 2}
     assert arrow[2] == (0, 0, True)
     h = int(hashlib.md5(b"one").hexdigest()[:8], 16) % T.CLF_N_BUCKETS
     assert arrow[3] == ((h * 2654435761 + 97) % 21 - 10, 1, arrow[3][0] >= 0)

@@ -5,9 +5,11 @@ One JVM per master, so each level runs in its own subprocess."""
 import subprocess
 import sys
 
+from conftest import ROOT
+
 _SCRIPT = r"""
 import hashlib, json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])
 from pyspark.sql import SparkSession
 from document_parser_spark.operators.extract import assemble_document_text, parse_documents
 from document_parser_spark.plans.partitioning import salted_repartition
@@ -31,7 +33,7 @@ spark.stop()
 
 def _run(master: str) -> str:
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT, master],
+        [sys.executable, "-c", _SCRIPT, master, ROOT],
         capture_output=True, text=True, timeout=240, check=True,
     )
     line = [ln for ln in proc.stdout.splitlines() if ln.startswith("HASH:")]

@@ -235,7 +235,7 @@ def test_candidate_generation_has_no_midstream_sort(spark):
         minhash_candidate_pairs,
         minhash_signatures,
         ngram_jaccard_pairs,
-        simhash,
+        simhash_arrow,
         simhash_near_pairs,
     )
 
@@ -250,7 +250,7 @@ def test_candidate_generation_has_no_midstream_sort(spark):
     # terminal orderBy.  (Spark renders range shuffles as
     # 'Exchange rangepartitioning(...)'.)
     for q in (
-        simhash_near_pairs(simhash(d), max_hamming=1),
+        simhash_near_pairs(simhash_arrow(d), max_hamming=1),
         ngram_jaccard_pairs(d, threshold_pct=50),
         similarity.cosine_near_dup_pairs(e, threshold=0.45),
     ):
@@ -274,21 +274,6 @@ def test_gopher_gate_single_pass_no_join(spark):
     assert plan.count("Generate explode") == 1, plan
 
 
-def test_ngram_jaccard_persist_words_opt_in(spark):
-    """persist_words=True routes all four (doc,word) consumers through the
-    cache (for the corpus-scale write-once pattern); the measured-default
-    False re-derives — see operators/dedup.py for the sf0.1 A/B numbers."""
-    from document_parser_spark.operators.dedup import ngram_jaccard_pairs
-
-    d = load_table(spark, SF, "documents").select("doc_id", "lang", "source", "text")
-    cached = plan_of(ngram_jaccard_pairs(d, threshold_pct=50, persist_words=True))
-    # ≥4 cache-scan nodes = the four consumers read the persisted frame
-    assert cached.count("InMemoryTableScan") >= 4, cached
-    spark.catalog.clearCache()
-    default = plan_of(ngram_jaccard_pairs(d, threshold_pct=50))
-    assert "InMemoryTableScan" not in default, default
-
-
 def test_containment_pairs_equi_join_shaped(spark):
     """Containment must stay blocked on the window hash: equi joins only —
     no cartesian/nested-loop pair generation — with a map-side partial agg
@@ -306,25 +291,16 @@ def test_containment_pairs_equi_join_shaped(spark):
 
 
 def test_hash_classifier_default_is_map_only(spark):
-    """The default (closed-form-weights) classifier score is ONE Arrow map
-    pass: no Exchange, no join anywhere in the plan — the zero-shuffle shape
-    the docstring promises for a 100 TB curation scan.  The weight-table
-    variant is allowed exactly one broadcast hash join plus the per-doc
-    aggregation shuffle, and its weight side must be broadcast, not shuffled."""
-    from document_parser_spark.operators.text import (
-        hash_classifier_score,
-        synthetic_weight_table,
-    )
+    """The (closed-form-weights) classifier score is ONE Arrow map pass: no
+    Exchange, no join anywhere in the plan — the zero-shuffle shape the
+    docstring promises for a 100 TB curation scan."""
+    from document_parser_spark.operators.text import hash_classifier_score
 
     d = load_table(spark, SF, "documents").select("doc_id", "text")
     plan = plan_of(hash_classifier_score(d))
     assert "Exchange" not in plan, plan
     assert "Join" not in plan, plan
     assert "ArrowEvalPython" in plan, plan
-
-    joined = plan_of(hash_classifier_score(d, weights=synthetic_weight_table(spark)))
-    assert "BroadcastHashJoin" in joined, joined
-    assert "SortMergeJoin" not in joined and "CartesianProduct" not in joined, joined
 
 
 def test_bigram_novelty_no_expand(spark):

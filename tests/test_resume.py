@@ -8,11 +8,10 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import TMP
 from document_parser_spark.corpus import synthesize_corpus, to_input_rows
 from document_parser_spark.plans.resume import run_extraction_checkpointed
 from document_parser_spark.schemas import DOCUMENTS_INPUT
-
-TMP = "/root/repo/.tmp"
 
 
 @pytest.fixture()

@@ -5,6 +5,7 @@ a subset-recall approximation of the exact path."""
 import pytest
 from pyspark.sql import functions as F
 
+import twins
 from document_parser_spark.operators import similarity
 from document_parser_spark.sources.session import load_table
 
@@ -62,7 +63,7 @@ def test_numpy_buckets_equal_column_buckets(spark, emb):
     col_path = emb.select(
         F.col("vec_id").alias("id"),
         F.explode(
-            similarity._band_buckets_col(F.col("embedding"), dim)
+            twins.band_buckets(F.col("embedding"), dim)
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bucket")
     slow = {(r["id"], r["band"]): r["bucket"] for r in col_path.collect()}
@@ -91,9 +92,7 @@ def test_near_dup_sketch_blocking_invariant_and_beats_lsh(spark, emb):
             emb, threshold=0.3, blocks=4, max_hamming=512
         ).collect()
     )
-    lsh = pairs(
-        similarity.cosine_near_dup_pairs(emb, threshold=0.3, method="lsh").collect()
-    )
+    lsh = pairs(twins.cosine_near_dup_pairs_lsh(emb, threshold=0.3).collect())
     # both generators under-approximate the truth; at the same verify
     # threshold the sketch cutoff must catch at least as many true pairs in
     # aggregate as the ~40%-fraction band join it replaced
@@ -106,12 +105,8 @@ def test_near_dup_arrow_impl_equals_join_twin(spark, emb):
     exact verify) must return EXACTLY the join twin's rows — ids AND the
     double cos_sim values, bit-for-bit (same floor/int64/IEEE arithmetic)."""
     key = lambda rows: sorted((r["id_a"], r["id_b"], r["cos_sim"]) for r in rows)
-    arrow = key(
-        similarity.cosine_near_dup_pairs(emb, threshold=0.3, impl="arrow").collect()
-    )
-    join = key(
-        similarity.cosine_near_dup_pairs(emb, threshold=0.3, impl="join").collect()
-    )
+    arrow = key(similarity.cosine_near_dup_pairs(emb, threshold=0.3).collect())
+    join = key(twins.cosine_near_dup_pairs_join(emb, threshold=0.3).collect())
     assert arrow == join and len(arrow) > 0
 
 

@@ -5,6 +5,7 @@ import uuid
 
 import pytest
 
+from conftest import TMP
 from document_parser_spark.corpus import fixture_documents
 from document_parser_spark.kernel.normalize import split_script_runs
 from document_parser_spark.operators.extract import (
@@ -15,8 +16,6 @@ from document_parser_spark.operators.extract import (
 )
 from document_parser_spark.sources.data import fixture_input_df, markdown_files_df
 from document_parser_spark.sources import sinks
-
-TMP = "/root/repo/.tmp"
 
 
 @pytest.fixture(scope="module")

@@ -8,6 +8,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
+from conftest import TMP
 from document_parser_spark.operators import similarity
 from document_parser_spark.plans.ann_index import (
     load_ann_index,
@@ -17,7 +18,6 @@ from document_parser_spark.sources.session import load_table
 from document_parser_spark.streaming.ann_index_stream import stream_index_rows
 
 SF = "/root/testdata/sf0.001"
-TMP = "/root/repo/.tmp"
 _SCHEMA = "vec_id long, embedding array<float>"
 
 

@@ -6,13 +6,13 @@ import shutil
 import uuid
 from datetime import datetime
 
+from conftest import TMP
 from document_parser_spark.operators.curation import (
     chunk_documents,
     quality_language_gate,
 )
 from document_parser_spark.streaming.curate_stream import stream_curate
 
-TMP = "/root/repo/.tmp"
 _SCHEMA = "doc_id long, ingest_ts timestamp, text string"
 
 

@@ -8,13 +8,13 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from document_parser_spark.operators import dedup
+from conftest import TMP
+import twins
 from document_parser_spark.streaming.dedup_stream import (
     stream_exact_dedup,
     stream_simhash,
 )
 
-TMP = "/root/repo/.tmp"
 _SCHEMA = "doc_id long, ingest_ts timestamp, text string"
 
 
@@ -91,7 +91,7 @@ def test_stream_simhash_equals_batch(spark):
             for r in spark.sql(f"SELECT * FROM {name}").collect()
         }
         batch_df = spark.createDataFrame(docs, _SCHEMA).select("doc_id", "text")
-        batch = {r["doc_id"]: r["simhash"] for r in dedup.simhash(batch_df).collect()}
+        batch = {r["doc_id"]: r["simhash"] for r in twins.simhash(batch_df).collect()}
         assert streamed == batch
         assert 3 not in streamed
     finally:

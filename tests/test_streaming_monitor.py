@@ -7,10 +7,10 @@ from datetime import datetime
 
 import pyspark.sql.types as T
 
+from conftest import TMP
 from document_parser_spark.schemas import PARSE_RESULT
 from document_parser_spark.streaming.extract_stream import span_rate_monitor
 
-TMP = "/root/repo/.tmp"
 
 _SCHEMA = T.StructType(
     [

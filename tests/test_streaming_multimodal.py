@@ -6,6 +6,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import TMP
 from document_parser_spark import kernel
 from document_parser_spark.corpus import fixture_documents
 from document_parser_spark.operators.extract import resolve_media
@@ -16,8 +17,6 @@ from document_parser_spark.operators.multimodal import (
 from document_parser_spark.schemas import DOCUMENTS_INPUT
 from document_parser_spark.sources.data import fixture_input_df
 from document_parser_spark.streaming.extract_stream import stream_extract
-
-TMP = "/root/repo/.tmp"
 
 
 def test_stream_extract_matches_batch_oracle(spark):

@@ -7,7 +7,8 @@ import uuid
 
 import pytest
 
-TMP = "/root/repo/.tmp"
+from conftest import TMP
+
 
 _SCHEMA = "user_id long, ts timestamp"
 

@@ -4,11 +4,11 @@ heuristics into the same searchable cells surface as markdown tables."""
 import shutil
 import uuid
 
+from conftest import TMP
 from document_parser_spark.operators.extract import cells_output
 from document_parser_spark.operators.search import search_by_column, search_by_key_value
 from document_parser_spark.sources.tabular import tables_from_delimited
 
-TMP = "/root/repo/.tmp"
 
 _HORIZONTAL = """Group Number,Dose Level,Number of Animals
 1,0,12
