@@ -1853,12 +1853,12 @@ def _q_ann_sketch(spark, sf_dir):
     VERDICT r04 items 3+7: the newest ANN surfaces land under the driver
     hash without exceeding the 50-row window).
 
-      * branch 'flat'       — ``ann_topk`` default route → ``sketch_topk``:
+      * branch 'flat'       — ``sketch_topk``:
         the measured scale path on this corpus (recall@10 = 1.0 at a 10%
         exactly-scored fraction at sf0.1, where IVF and banded LSH cap at
         ~0.56-0.78 — the embeddings are isotropic; partition membership is
         nearly independent of cosine neighborhoods);
-      * branch 'ivf_sketch' — ``ann_topk(method='ivf_sketch')``: the
+      * branch 'ivf_sketch' — ``ivf_sketch_topk``: the
         IVF→sketch→exact composition (the clustered-corpus scale path);
         recall here inherits the isotropic probe ceiling, but its PROBE →
         hamming-rank → bounded exact-rerank semantics are what the hash
@@ -1880,10 +1880,10 @@ def _q_ann_sketch(spark, sf_dir):
     _assert_oracle_corpus_size(e)
     q = e.filter(F.col("vec_id") < 5)
     cols = ["query_id", "vec_id", "cos_sim", "rank"]
-    flat = similarity.ann_topk(e, q, k=10, method="sketch").select(
+    flat = similarity.sketch_topk(e, q, k=10).select(
         F.lit("flat").alias("branch"), *cols
     )
-    comp = similarity.ann_topk(e, q, k=10, method="ivf_sketch").select(
+    comp = similarity.ivf_sketch_topk(e, q, k=10).select(
         F.lit("ivf_sketch").alias("branch"), *cols
     )
     # dial+corpus-keyed dir: a layout change lands in a fresh path instead
@@ -2372,8 +2372,8 @@ def _q_ann_baselines(spark, sf_dir):
     cos, rank) grain; both remain attested under the one hash).  Branch
     'brute' is the correctness baseline every ANN variant is recalled
     against; branch 'lsh' is the bucketed probe path (clustered-corpus
-    opt-in — see similarity.ann_topk for why sketch rerank is the default
-    scale path on this corpus)."""
+    path — see the operators/similarity.py module docstring for why sketch
+    rerank is the scale path on this corpus)."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
     cols = ["query_id", "vec_id", "cos_sim", "rank"]

@@ -5,10 +5,10 @@ Default (driver contract): run the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric", "value", "unit": "sec", "queries": {...}, "sf": ...}.
 
---scaling: additionally run the extraction job at local[8] and local[32]
-(N vs 4N cores — this sandbox's proxy for N vs 4N executors) in separate
-subprocesses (clean JVM per master) and report throughput at both plus
-scaling efficiency  eff = T_N / (4 · T_4N)  =  thr_4N / (4 · thr_N).
+--scaling: additionally run the extraction job at local[nproc/4] and
+local[nproc] (N vs 4N cores — this sandbox's proxy for N vs 4N executors) in
+separate subprocesses (clean JVM per master) and report throughput at both
+plus scaling efficiency  eff = T_N / (4 · T_4N)  =  thr_4N / (4 · thr_N).
 """
 
 from __future__ import annotations
@@ -293,9 +293,9 @@ def run_queries(spark, sf_dir: str, repeats: int = 3) -> tuple:
     nlist = similarity.ivf_nlist(n)
     extras["ann_ivf_probed_fraction"] = round(similarity.ivf_nprobe(nlist) / nlist, 3)
     extras["ann_sketch_scored_fraction"] = similarity.RERANK_FRAC_PCT / 100
-    # the shipped default: ann_topk() routes to sketch rerank (the measured
-    # winner on this corpus); IVF/LSH numbers above are the opt-in
-    # clustered-corpus paths, not the scale story
+    # the scale path: sketch rerank (the measured winner on this corpus);
+    # IVF/LSH numbers above are the clustered-corpus paths, not the scale
+    # story
     extras["ann_primary"] = "ann_sketch (ann_topk default; recall/fraction above)"
     return times, extras, stats
 
@@ -372,7 +372,15 @@ def _mp_work(rng) -> int:
     return sum(len(parse_document(synthesize_doc(i)["text"])["spans"]) for i in rng)
 
 
-def _curate_once(cpus: int, docs: int, single_scan: bool = False) -> dict:
+def _scaling_tiers() -> tuple[int, int, int]:
+    """(nproc, low, high) for the N vs 4N scaling studies on THIS box: high
+    is every core the process may run on, low a quarter of them — fixed
+    tiers oversubscribe a smaller box and measure the scheduler instead."""
+    nproc = len(os.sched_getaffinity(0))
+    return nproc, max(nproc // 4, 1), nproc
+
+
+def _curate_once(cpus: int, docs: int) -> dict:
     """One in-process run of the curation pipeline (plans/curate.py) over
     the deterministic synthetic corpus — the subprocess unit of
     ``curate_scaling_study`` (one master per JVM, like scaling_study).
@@ -405,7 +413,6 @@ def _curate_once(cpus: int, docs: int, single_scan: bool = False) -> dict:
             num_buckets=64,
             max_words=512,
             stride=384,
-            single_scan=single_scan,
         )
     finally:
         shutil.rmtree(out, ignore_errors=True)
@@ -417,20 +424,15 @@ def _curate_once(cpus: int, docs: int, single_scan: bool = False) -> dict:
         "docs_per_sec": round(docs / wall, 1),
         "docs_kept": stats["docs_kept"],
         "chunks_out": stats["chunks_out"],
-        "single_scan": single_scan,
     }
 
 
-def curate_scaling_study(
-    low: int = 4, high: int = 16, repeats: int = 2, docs: int = 50_000
-) -> dict:
+def curate_scaling_study(repeats: int = 2, docs: int = 50_000) -> dict:
     """North-rule scaling evidence for the curation job: same synthetic
     input, N vs 4N cores, separate JVMs, alternating best-of to shrug off
     co-tenant noise (single one-shot spark-submit pairs measured 0.32–0.74
-    on this box purely by load window — see BASELINE.md).  Also A/Bs the
-    two-scan census (the shipped default) against the cached-canonical
-    single-scan shape at the high core count — the cache LOSES hard at
-    200k docs (164 s vs 27.5 s, BASELINE.md r04)."""
+    on this box purely by load window — see BASELINE.md)."""
+    nproc, low, high = _scaling_tiers()
     best: dict = {low: None, high: None}
     for _ in range(repeats):
         for cpus in (low, high):
@@ -444,15 +446,8 @@ def curate_scaling_study(
             if best[cpus] is None or r["wall_sec"] < best[cpus]["wall_sec"]:
                 best[cpus] = r
     factor = high / low
-    _kill_leftovers()
-    single_scan = json.loads(
-        subprocess.run(
-            [sys.executable, __file__, "--curate-internal", "--cpus", str(high),
-             "--docs", str(docs), "--single-scan"],
-            capture_output=True, text=True, check=True,
-        ).stdout.strip().splitlines()[-1]
-    )
     return {
+        "nproc": nproc,
         "cores_low": low,
         "cores_high": high,
         "docs": docs,
@@ -462,22 +457,18 @@ def curate_scaling_study(
         "scaling_efficiency": round(
             best[high]["docs_per_sec"] / (best[low]["docs_per_sec"] * factor), 3
         ),
-        "two_scan_wall_sec": best[high]["wall_sec"],
-        "single_scan_wall_sec": single_scan["wall_sec"],
+        "wall_sec_high": best[high]["wall_sec"],
     }
 
 
-def scaling_study(
-    sf_dir: str, low: int = 4, high: int = 16, repeats: int = 3
-) -> dict:
-    # Default pair (4, 16): a true 4× inside this box's linear regime.  The
-    # (8, 32) pair saturates the HARDWARE itself (the multiprocessing control
-    # scales 8→32 at only ~0.55 with zero framework overhead) — see
-    # BASELINE.md "Measured results".
+def scaling_study(sf_dir: str, repeats: int = 3) -> dict:
     """Same job, same input, two parallelism levels (N and 4N cores — this
     sandbox's proxy for N vs 4N executors), separate JVMs, alternating
     best-of-N to shrug off co-tenant noise, plus a no-Spark multiprocessing
-    control that measures the hardware's own ceiling."""
+    control that measures the hardware's own ceiling (on a 32-core box the
+    control itself scales 8→32 at only ~0.55 — BASELINE.md "Measured
+    results")."""
+    nproc, low, high = _scaling_tiers()
     best = {low: 0.0, high: 0.0}
     for _ in range(repeats):
         for cpus in (low, high):
@@ -494,6 +485,7 @@ def scaling_study(
     ctl_low = _mp_control(ctl_docs, low)
     ctl_high = _mp_control(ctl_docs, high)
     return {
+        "nproc": nproc,
         "cores_low": low,
         "cores_high": high,
         "docs_per_sec_low": round(best[low], 1),
@@ -669,13 +661,13 @@ def _query_subset_once(cpus: int, sf_dir: str, n_docs: int) -> float:
 
 
 def query_scaling_study(
-    sf_dir: str, low: int = 4, high: int = 16, repeats: int = 1,
-    n_docs: int = QUERY_SCALING_DOCS,
+    sf_dir: str, repeats: int = 1, n_docs: int = QUERY_SCALING_DOCS
 ) -> dict:
     """The scaling criterion applied to the QUERY surface: the same
     shuffle-heavy dedup/fingerprint queries at N and 4N cores over a corpus
     big enough to feed 4N cores, separate JVMs, best-of-N interleaved.
     eff = T_low / (factor · T_high)."""
+    nproc, low, high = _scaling_tiers()
     best = {low: float("inf"), high: float("inf")}
     for _ in range(repeats):
         for cpus in (low, high):
@@ -691,6 +683,7 @@ def query_scaling_study(
     return {
         "queries": SCALING_QUERY_SUBSET,
         "n_docs": n_docs,
+        "nproc": nproc,
         "cores_low": low,
         "cores_high": high,
         "sec_low": round(best[low], 2),
@@ -884,7 +877,6 @@ def main() -> None:
     ap.add_argument("--internal-json", action="store_true")
     ap.add_argument("--curate-internal", action="store_true")
     ap.add_argument("--curate-scaling", action="store_true")
-    ap.add_argument("--single-scan", action="store_true")
     ap.add_argument("--docs", type=int, default=None)
     ap.add_argument(
         "--repeats",
@@ -898,9 +890,7 @@ def main() -> None:
         print(json.dumps({"subset_sec": _query_subset_once(args.cpus, args.sf_dir, args.docs or 0)}))
         return
     if args.curate_internal:
-        print(json.dumps(_curate_once(
-            args.cpus, args.docs or 50_000, single_scan=args.single_scan
-        )))
+        print(json.dumps(_curate_once(args.cpus, args.docs or 50_000)))
         return
     if args.curate_scaling:
         print(json.dumps(
@@ -981,13 +971,15 @@ def main() -> None:
     else:
         # Carry the last measured scaling block forward (marked as such) so
         # a default run neither clobbers the sidecar's scaling record nor
-        # ships a BENCH artifact with no north-rule scaling numbers at all.
+        # ships a BENCH artifact with no north-rule scaling numbers at all —
+        # but only a block measured on a box with this run's core count: a
+        # block from another box is not this box's scaling.
         try:
             with open(sidecar_path) as fh:
                 prior_scaling = json.load(fh).get("scaling")
         except (OSError, ValueError):
             prior_scaling = None
-        if prior_scaling:
+        if prior_scaling and prior_scaling.get("nproc") == _scaling_tiers()[0]:
             prior_scaling.setdefault("from_prior_scaling_run", True)
             payload["scaling"] = prior_scaling
             sidecar["scaling"] = prior_scaling

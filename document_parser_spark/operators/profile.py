@@ -14,9 +14,9 @@ map-side-combined aggregates (the election ranks the already-aggregated
 (group, lang) grain — the skew-proof aggregate-then-rank shape, never a
 corpus-sized window).  The exact quantiles are the one honest sort: a
 row_number over (group), i.e. one range-sort shuffle of (group, value,
-doc_id) triples — at 100 TB swap in ``percentile_approx`` (t-digest
-sketch, mergeable map-side) via ``approx=True``; that twin is NOT
-oracle-comparable by construction and is pytest-gated for sanity only."""
+doc_id) triples.  A t-digest sketch would combine map-side, but its
+interpolation differs across engines, so it could never be
+oracle-compared — the profile ships the exact form only."""
 
 from __future__ import annotations
 
@@ -33,7 +33,6 @@ def corpus_profile(
     lang_col: str = "lang",
     id_col: str = "doc_id",
     quantiles: tuple = DEFAULT_QUANTILES,
-    approx: bool = False,
 ) -> DataFrame:
     """One profile row per ``group_col``: (group, n_docs, chars_sum,
     n_langs, chars_p{q}..., top_lang, top_lang_docs)."""
@@ -42,34 +41,24 @@ def corpus_profile(
         F.sum(value_col).cast("long").alias("chars_sum"),
         F.countDistinct(lang_col).alias("n_langs"),
     )
-    if approx:
-        quant = docs.groupBy(group_col).agg(
-            *[
-                F.percentile_approx(value_col, q / 100.0)
-                .cast("long")
-                .alias(f"chars_p{q}")
-                for q in quantiles
-            ]
-        )
-    else:
-        w = Window.partitionBy(group_col).orderBy(F.asc(value_col), F.asc(id_col))
-        wp = Window.partitionBy(group_col)
-        ranked = (
-            docs.select(group_col, id_col, value_col)
-            .withColumn("_rn", F.row_number().over(w))
-            .withColumn("_n", F.count("*").over(wp))
-        )
-        quant = ranked.groupBy(group_col).agg(
-            *[
-                F.max(
-                    F.when(
-                        F.col("_rn") == F.expr(f"(_n * {q} + 99) div 100"),
-                        F.col(value_col),
-                    )
-                ).alias(f"chars_p{q}")
-                for q in quantiles
-            ]
-        )
+    w = Window.partitionBy(group_col).orderBy(F.asc(value_col), F.asc(id_col))
+    wp = Window.partitionBy(group_col)
+    ranked = (
+        docs.select(group_col, id_col, value_col)
+        .withColumn("_rn", F.row_number().over(w))
+        .withColumn("_n", F.count("*").over(wp))
+    )
+    quant = ranked.groupBy(group_col).agg(
+        *[
+            F.max(
+                F.when(
+                    F.col("_rn") == F.expr(f"(_n * {q} + 99) div 100"),
+                    F.col(value_col),
+                )
+            ).alias(f"chars_p{q}")
+            for q in quantiles
+        ]
+    )
     lang_counts = docs.groupBy(group_col, lang_col).agg(F.count("*").alias("_c"))
     wr = Window.partitionBy(group_col).orderBy(F.desc("_c"), F.asc(lang_col))
     top = (

@@ -32,12 +32,9 @@ Paths:
     and the exact scoring (rerank_frac of the probed set, ~1.3% of the
     corpus at defaults).  On THIS sandbox's isotropic embeddings any
     partition pruning caps recall at ~0.5-0.6 (measured, BASELINE.md), so
-    the flat ``sketch_topk`` stays the default; on clustered data (pytest:
+    the flat ``sketch_topk`` stays the scale path; on clustered data (pytest:
     tests/test_similarity.py clustered-corpus case) the hybrid holds
     recall ≥0.9 at an exact-scored fraction below either parent.
-  * ``ann_topk``               — the single entry-point facade: routes to
-    ``sketch_topk`` by default (the measured winner), with ``method=`` for
-    the specialized paths.
   * ``sketch_topk_from_index`` / ``ivf_sketch_topk_from_index`` — the same
     queries against the PERSISTED index table (plans/ann_index.py builds
     it; build-once / query-many): the corpus pass scans only the stored
@@ -832,46 +829,6 @@ def _ivf_sketch_from_side(
         .select("query_id", "vec_id", _hamming_words(words).alias("hamming"))
     )
     return _topm_exact_rerank(scored, embeddings, queries, k, m, id_col, vec_col)
-
-
-#: ``ann_topk`` dispatch table — public so callers can enumerate methods.
-ANN_METHODS = {
-    "sketch": sketch_topk,
-    "ivf": ivf_topk,
-    "lsh": lsh_bucketed_topk,
-    "brute": brute_force_topk,
-    "ivf_sketch": ivf_sketch_topk,
-}
-
-
-def ann_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    method: str = "sketch",
-    **kwargs,
-) -> DataFrame:
-    """Single ANN entry point (VERDICT r03 item 2).  Default routes to
-    ``sketch_topk`` — the measured winner on this corpus and the honest
-    100 TB design (sketch-column-only scan, recall@10 0.995 at a 10%
-    exactly-scored fraction; BASELINE.md sweep).  Opt-in methods:
-
-      * ``ivf`` / ``lsh``    — space-partitioning paths for corpora that
-        actually cluster (on isotropic data they cap at recall ~0.5-0.78;
-        measured dead end — do not retune probe dials);
-      * ``ivf_sketch``       — the composed sub-linear pipeline for
-        clustered corpora (probe, then sketch-rank only probed lists);
-      * ``brute``            — exact linear-scan baseline.
-
-    All methods return the same (query_id, vec_id, cos_sim, rank) schema.
-    """
-    try:
-        fn = ANN_METHODS[method]
-    except KeyError:
-        raise ValueError(
-            f"unknown ANN method {method!r}; one of {sorted(ANN_METHODS)}"
-        ) from None
-    return fn(embeddings, queries, k=k, **kwargs)
 
 
 def sketch_near_dup_max_hamming(

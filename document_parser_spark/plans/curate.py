@@ -21,7 +21,7 @@ import os
 import time
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .resume import completed_buckets, write_metrics, write_partitioned
@@ -138,73 +138,48 @@ def curation_metrics(
     )
 
 
-def election_frames(
-    todo: DataFrame, single_scan: bool = False, method: str = "groupby"
-) -> tuple[DataFrame, DataFrame]:
+def election_frames(todo: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(canonical, per_bucket_in) for a bucketed (doc_id, text, bucket)
     frame — the exact election + census shapes ``run_curation_checkpointed``
     executes, exposed so the plan gate (tests/test_plans.py) audits the real
-    pipeline frames.  ``canonical`` keeps a ``_copies`` column (the md5
-    group size) for the single-scan census variant; callers drop it.
+    pipeline frames.
 
-    ``method="groupby"`` (default, SKEW-PROOF): ONE aggregate per md5 —
-    ``min(doc_id), first(text), count(*)``.  ``first(text)`` is EXACT here
-    because every row in an md5 group carries the identical text (the md5
-    IS the equality key), and it participates in partial aggregation: each
-    input partition emits at most one (md5, id, text, count) row per
-    distinct text it holds, so a viral boilerplate duplicated millions of
-    times crosses the wire as ``num_input_partitions`` rows instead of
-    every copy — same single scan and single shuffle as the window form,
-    but the reduce side never materializes a duplicate group.  (A
-    groupBy+equi-join formulation was measured and rejected: two scans +
-    three shuffles cost 3.5× the window on an unskewed 50k corpus.)
+    canonical: ONE aggregate per md5 — ``min(doc_id), first(text)``.
+    ``first(text)`` is EXACT here because every row in an md5 group carries
+    the identical text (the md5 IS the equality key), and it participates
+    in partial aggregation: each input partition emits at most one
+    (md5, id, text) row per distinct text it holds, so a viral boilerplate
+    duplicated millions of times crosses the wire as
+    ``num_input_partitions`` rows instead of every copy, and the reduce side
+    never materializes a duplicate group.  Two other shapes were measured
+    and rejected: a window over md5 (its slowest task grows with the
+    largest duplicate group — planted-skew A/B in BASELINE.md r04; kept as
+    ``tests/twins.canonical_window``) and a groupBy+equi-join re-attach (two
+    scans + three shuffles, 3.5× the window on an unskewed 50k corpus).
 
-    ``method="window"`` (the r04 original, kept as the equality-gated
-    twin): ONE window over md5(text) — a single corpus shuffle, but it
-    moves EVERY copy's full text into its duplicate-group's single
-    partition, so the slowest task grows with the largest duplicate
-    group: measured planted-skew A/B in BASELINE.md r04.
-
-    per_bucket_in: the default two-scan census pre-aggregates at the
-    (bucket, md5) grain so no distinct aggregate (and hence no Expand)
-    appears, then rolls up to one row per bucket; ``single_scan=True``
-    derives it from the (persisted, measured-loser — BASELINE.md r04)
-    canonical instead."""
-    if method == "groupby":
-        canonical = (
-            todo.groupBy(F.md5("text").alias("_md5"))
-            .agg(
-                F.min("doc_id").alias("doc_id"),
-                F.first("text").alias("text"),
-                F.first("bucket").alias("bucket"),
-                F.count("*").alias("_copies"),
-            )
-            .drop("_md5")
+    per_bucket_in: a second, column-pruned scan pre-aggregated at the
+    (bucket, md5) grain — so no distinct aggregate (and hence no Expand)
+    appears — rolled up to one row per bucket.  Deriving it from a cached
+    canonical instead LOSES at scale (164 s vs 27.5 s at 200k docs × 16
+    cores, BASELINE.md r04)."""
+    canonical = (
+        todo.groupBy(F.md5("text").alias("_md5"))
+        .agg(
+            F.min("doc_id").alias("doc_id"),
+            F.first("text").alias("text"),
+            F.first("bucket").alias("bucket"),
         )
-    else:
-        w = Window.partitionBy(F.md5("text"))
-        canonical = (
-            todo.withColumn("_canon", F.min("doc_id").over(w))
-            .withColumn("_copies", F.count("*").over(w))
-            .filter(F.col("doc_id") == F.col("_canon"))
-            .drop("_canon")
-        )
-    if single_scan:
-        per_bucket_in = canonical.groupBy("bucket").agg(
+        .drop("_md5")
+    )
+    per_bucket_in = (
+        todo.groupBy("bucket", F.md5("text").alias("_md5"))
+        .agg(F.count("*").alias("_copies"))
+        .groupBy("bucket")
+        .agg(
             F.sum("_copies").alias("docs_in"),
             F.count("*").alias("docs_canonical"),
         )
-    else:
-        # Expand-free: (bucket, md5) grain first, then plain counts
-        per_bucket_in = (
-            todo.groupBy("bucket", F.md5("text").alias("_md5"))
-            .agg(F.count("*").alias("_copies"))
-            .groupBy("bucket")
-            .agg(
-                F.sum("_copies").alias("docs_in"),
-                F.count("*").alias("docs_canonical"),
-            )
-        )
+    )
     return canonical, per_bucket_in
 
 
@@ -219,8 +194,6 @@ def run_curation_checkpointed(
     max_words: int = 512,
     stride: int | None = None,
     clf_min: int | None = None,
-    single_scan: bool = False,
-    election_method: str = "groupby",
 ) -> dict:
     """Run the curation pipeline over ``docs`` (doc_id, text) with bucket-
     level checkpoint-resume.  Returns observability counters.
@@ -228,20 +201,19 @@ def run_curation_checkpointed(
     Stage shapes (the 100 TB audit): canonical election is ONE map-side-
     combined aggregate per md5(text) (min doc_id, first text — exact, the
     md5 is the equality key) — one shuffle, skew-proof under viral
-    duplicate groups (``election_method="window"`` keeps the window twin;
-    measured planted-skew A/B in BASELINE.md r04); the gate is a
+    duplicate groups (see ``election_frames``); the gate is a
     map-only projection (quality heuristics + the zero-shuffle Arrow
     classifier + language argmax, no joins); chunking is one Arrow pass +
     explode; the only other shuffles are the chunk write's cluster-by-bucket
     and the two tiny per-bucket metric aggregations.  The input is scanned
-    twice (election window + the map-side-aggregated input census) and
-    nothing corpus-sized is cached pre-gate: the ``single_scan=True``
-    variant (cache the elected canonical, derive the census from it) was
-    measured and LOSES at scale — at 200k docs × 16 cores the corpus-sized
-    cache thrashes executor memory to 164 s where the cache-free shape
-    runs 27.5 s (BASELINE.md r04) — the repo's recurring
-    persist-vs-re-derive lesson, and at 100 TB caching the corpus per run
-    is infeasible anyway while a second column-pruned scan is cheap.
+    twice (election aggregate + the map-side-aggregated input census) and
+    nothing corpus-sized is cached pre-gate: caching the elected canonical
+    to derive the census from it was measured and LOSES at scale — at 200k
+    docs × 16 cores the corpus-sized cache thrashes executor memory to
+    164 s where the cache-free shape runs 27.5 s (BASELINE.md r04) — the
+    repo's recurring persist-vs-re-derive lesson, and at 100 TB caching the
+    corpus per run is infeasible anyway while a second column-pruned scan
+    is cheap.
     ``max_buckets_this_run`` simulates a crash for resume tests.
 
     ``clf_min`` arms the hashing-trick classifier gate (keep iff score ≥
@@ -266,28 +238,12 @@ def run_curation_checkpointed(
         )[:max_buckets_this_run]
         todo = todo.filter(F.col("bucket").isin(remaining))
 
-    # canonical election: global because every md5 group is bucket-local.
-    # Default is the skew-proof groupBy+join form (see election_frames);
-    # the election also counts the group's copies so the single_scan
-    # variant can derive the census from a cached canonical — measured to
-    # LOSE (164 s vs 27.5 s at 200k docs × 16 cores, BASELINE.md r04):
-    # the default is the cache-free shape, census via a second map-side-
-    # aggregated input scan.
-    canonical, per_bucket_in = election_frames(
-        todo, single_scan=single_scan, method=election_method
-    )
-    if single_scan:
-        canonical = canonical.persist(StorageLevel.MEMORY_AND_DISK)
-        per_bucket_in = canonical.groupBy("bucket").agg(
-            F.sum("_copies").alias("docs_in"),
-            F.count("*").alias("docs_canonical"),
-        )
+    # canonical election: global because every md5 group is bucket-local
+    canonical, per_bucket_in = election_frames(todo)
 
     # map-only gate: heuristics + classifier + language, one projection each
     # (shared with the streaming twin — see operators.curation)
-    gated = quality_language_gate(
-        canonical.drop("_copies"), keep_langs=keep_langs, clf_min=clf_min
-    )
+    gated = quality_language_gate(canonical, keep_langs=keep_langs, clf_min=clf_min)
     survivors = gated.select("doc_id", "text", "bucket", "n_words").persist(
         StorageLevel.MEMORY_AND_DISK
     )  # consumed twice: the chunk write and the metrics rollup
@@ -308,8 +264,6 @@ def run_curation_checkpointed(
     )
     write_metrics(metrics, metrics_dir)
     survivors.unpersist()
-    if single_scan:
-        canonical.unpersist()
 
     # stats from the WRITTEN manifest (this run's rows: just-done ∪ resumed),
     # not the live `metrics` frame — aggregating that would re-execute the

@@ -2,14 +2,17 @@
 
 Normal documents flow through the regular one-UDF parse; documents above
 ``threshold_chars`` are split into safe segments (kernel/segmentation.py),
-the segments are scanned IN PARALLEL across the cluster, and the doc is
-reassembled with pure Column algebra:
+the segments are scanned IN PARALLEL across the cluster by one
+``mapInArrow`` pass on the same Arrow builder ``parse_documents`` uses, and
+the doc is reassembled by ONE per-doc aggregate:
 
-  * spans: collect_list(struct(seg, spans)) → array_sort → flatten
-    (struct sort is by leading field, so segment order is preserved);
-  * tables: explode → global re-index by line_start window →
-    ``withField("index", …)`` → sort_array(collect_list) (TABLE's leading
-    field IS the index, so sort_array restores document order).
+  * ``array_sort(collect_list(struct(seg, spans, tables)))`` — the struct
+    sorts by its leading field, so segments come back in document order;
+  * spans: flatten the sorted segments' spans;
+  * tables: flatten the sorted segments' tables and re-index them with
+    ``transform((t, i) -> t.withField("index", i))`` — segments are
+    disjoint line ranges in order, so flattened order IS ``line_start``
+    order.
 
 Output schema and values are identical to operators.extract.parse_documents
 — asserted in tests/test_segmentation.py.
@@ -17,14 +20,20 @@ Output schema and values are identical to operators.extract.parse_documents
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
-from ..schemas import SPANS, TABLE
+from ..kernel.html import looks_like_html
+from ..kernel.segmentation import scan_segment, segment_document
+from ..kernel.structure import extract_tables
+from ..operators.extract import _build_parse_arrays, captured_error, parse_documents
+from ..schemas import PARSE_RESULT
 
 #: docs above this size take the segmented path
 THRESHOLD_CHARS = 1 << 21
@@ -40,19 +49,9 @@ _SEGMENT_ROWS = T.StructType(
     ]
 )
 
-_SEGMENT_PARSE = T.StructType(
-    [
-        T.StructField("spans", SPANS, False),
-        T.StructField("tables", T.ArrayType(TABLE), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
 
 @F.pandas_udf(T.ArrayType(_SEGMENT_ROWS))
 def _segment_udf(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    from ..kernel.segmentation import segment_document
-
     for batch in texts:
         out = []
         for text in batch:
@@ -68,31 +67,15 @@ def _segment_udf(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield pd.Series(out)
 
 
-@F.pandas_udf(_SEGMENT_PARSE)
-def _parse_segment_udf(
-    batches: Iterator[Tuple[pd.Series, pd.Series, pd.Series]]
-) -> Iterator[pd.DataFrame]:
-    from ..kernel.html import looks_like_html
-    from ..kernel.segmentation import scan_segment
-    from ..kernel.structure import columns_to_dicts, extract_tables
-    from ..operators.extract import captured_error
-
-    for seg_texts, offsets, repeated in batches:
-        spans_col, tables_col, err_col = [], [], []
-        for seg_text, off, rep in zip(seg_texts, offsets, repeated):
-            off = int(off)
-            try:
-                spans, raws = scan_segment(seg_text, off, list(rep))
-                src = "html" if off == 0 and looks_like_html(seg_text) else "markdown"
-                # segment-local indices; re-indexed globally after reassembly
-                tables = [columns_to_dicts(t) for t in extract_tables(raws, src)]
-                err = None
-            except Exception as exc:  # pragma: no cover - defensive
-                spans, tables, err = captured_error(exc, offset=off)
-            spans_col.append(spans)
-            tables_col.append(tables)
-            err_col.append(err)
-        yield pd.DataFrame({"spans": spans_col, "tables": tables_col, "error": err_col})
+def _parse_segment(line_offset, seg_text, repeated):
+    """(spans, columnar tables, error) for one segment; table indices are
+    segment-local until reassembly re-indexes them."""
+    try:
+        spans, raws = scan_segment(seg_text, line_offset, repeated)
+        src = "html" if line_offset == 0 and looks_like_html(seg_text) else "markdown"
+        return spans, extract_tables(raws, src), None
+    except Exception as exc:  # pragma: no cover - defensive
+        return captured_error(exc, offset=line_offset)
 
 
 def parse_documents_segmented(
@@ -102,8 +85,6 @@ def parse_documents_segmented(
     """(doc_id, text, …) → (doc_id, spans, tables, error); oversize docs are
     scanned segment-parallel.  Column set matches parse_documents minus the
     pass-through input columns."""
-    from ..operators.extract import parse_documents
-
     normal = parse_documents(
         df.filter(F.length("text") <= threshold_chars).select("doc_id", "text")
     ).select("doc_id", "spans", "tables", "error")
@@ -125,45 +106,41 @@ def parse_documents_segmented(
         big.sparkSession.sparkContext.defaultParallelism * 2, "doc_id", "seg"
     )
 
-    parsed = segs.withColumn(
-        "p", _parse_segment_udf("seg_text", "line_offset", "repeated")
-    ).select("doc_id", "seg", "p.spans", "p.tables", "p.error")
-    # persist: BOTH reassembly branches (spans collect_list, tables
-    # explode+window) consume `parsed`, and the final join makes a third
-    # pass — without this the segment parse re-executes per consumer
-    # (measured: 21.7 s → 9.5 s full pipeline on a 20 MB doc).  Serialized
-    # level per the resume-path precedent (nested span rows are several×
-    # larger deserialized).  Not unpersisted here: the consumer is lazy and
-    # the frame is bounded (segments of oversize docs only).
-    from pyspark import StorageLevel
+    spans_type = to_arrow_type(PARSE_RESULT["spans"].dataType)
+    tables_type = to_arrow_type(PARSE_RESULT["tables"].dataType)
 
-    parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-
-    spans_df = parsed.groupBy("doc_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seg", "spans"))),
-                lambda s: s.spans,
+    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            results = [
+                _parse_segment(*args)
+                for args in zip(*(batch.column(i).to_pylist() for i in (2, 3, 4)))
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), batch.column(1)]
+                + list(_build_parse_arrays(results, spans_type, tables_type)),
+                names=["doc_id", "seg", "spans", "tables", "error"],
             )
-        ).alias("spans"),
-        F.max("error").alias("error"),
-    )
 
-    w = Window.partitionBy("doc_id").orderBy("line_start")
-    exploded = parsed.select("doc_id", F.explode("tables").alias("t")).select(
-        "doc_id", "t", F.col("t.line_start").alias("line_start")
+    parsed = segs.mapInArrow(
+        op,
+        schema=T.StructType(
+            [segs.schema["doc_id"], segs.schema["seg"]] + PARSE_RESULT.fields
+        ),
     )
-    reindexed = exploded.withColumn(
-        "t2", F.col("t").withField("index", (F.row_number().over(w) - 1).cast("int"))
-    )
-    tables_df = reindexed.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("t2")).alias("tables")
-    )
-
-    big_out = spans_df.join(tables_df, on="doc_id", how="left").select(
-        "doc_id",
-        "spans",
-        F.coalesce(F.col("tables"), F.array().cast(f"array<{TABLE.simpleString()}>")).alias("tables"),
-        "error",
+    big_out = (
+        parsed.groupBy("doc_id")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("seg", "spans", "tables"))).alias("_segs"),
+            F.max("error").alias("error"),
+        )
+        .select(
+            "doc_id",
+            F.flatten(F.transform("_segs", lambda s: s.spans)).alias("spans"),
+            F.transform(
+                F.flatten(F.transform("_segs", lambda s: s.tables)),
+                lambda t, i: t.withField("index", i),
+            ).alias("tables"),
+            "error",
+        )
     )
     return normal.unionByName(big_out)

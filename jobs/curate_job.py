@@ -9,7 +9,9 @@ the exact-dedup → quality-gate → chunk pipeline (plans/curate.py).
 ``--input`` is either a parquet path holding a flat (doc_id, text, …) table
 or ``synthetic:N`` for a deterministic seeded corpus (generated on the
 executors; every 10th doc duplicates its predecessor's text so the
-canonical election provably drops rows).  Idempotent per (run_id, bucket):
+canonical election provably drops rows).  The election is one
+map-side-combined aggregate per md5(text), skew-proof under viral
+duplicate groups.  Idempotent per (run_id, bucket):
 re-submission resumes from the metrics manifest — completed buckets are
 skipped, partial buckets are replaced via dynamic partition overwrite.
 """
@@ -38,13 +40,6 @@ def main() -> None:
         help="arm the classifier gate (keep iff score >= CLF_MIN); the "
         "built-in weights are a closed-form stand-in for a trained model, so "
         "the scores are content-hash noise — see plans/curate.py",
-    )
-    parser.add_argument(
-        "--election-method", choices=("groupby", "window"), default="groupby",
-        help="canonical election shape: 'groupby' (default; map-side-"
-        "combined aggregate — skew-proof under viral duplicate groups) or "
-        "'window' (one-shuffle twin; only for corpora with known-bounded "
-        "duplicate-group sizes — see the skew A/B in BASELINE.md)",
     )
     args = parser.parse_args()
 
@@ -98,7 +93,6 @@ def main() -> None:
         max_words=args.max_words,
         stride=args.stride,
         clf_min=args.clf_min,
-        election_method=args.election_method,
     )
     print(json.dumps(stats))
     spark.stop()

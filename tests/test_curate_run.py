@@ -38,10 +38,12 @@ def _corpus(spark):
 
 
 def test_election_methods_agree(spark):
-    """The skew-proof groupBy+join election (default) and the one-shuffle
-    window twin elect IDENTICAL (canonical rows, copy counts, census) — on
-    the handcrafted corpus and on a synthetic one with a planted viral
+    """The shipped map-side-combined election and the window twin elect the
+    same canonical rows, and the census equals plain-Python counts per
+    bucket — on the handcrafted corpus and on one with a planted viral
     duplicate group (one text × 37 copies)."""
+    from collections import defaultdict
+
     from document_parser_spark.plans.curate import election_frames
 
     viral = [(100 + i, "the same viral boilerplate text appears everywhere "
@@ -49,15 +51,23 @@ def test_election_methods_agree(spark):
     extra = spark.createDataFrame(viral, "doc_id long, text string")
     for docs in (_corpus(spark), _corpus(spark).unionByName(extra)):
         b = with_content_bucket(docs, num_buckets=8)
-        canon_g, census_g = election_frames(b, method="groupby")
-        canon_w, census_w = election_frames(b, method="window")
-        cols = ["doc_id", "text", "bucket", "_copies"]
-        assert sorted(map(tuple, canon_g.select(cols).collect())) == sorted(
-            map(tuple, canon_w.select(cols).collect())
+        canonical, census = election_frames(b)
+        cols = ["doc_id", "text", "bucket"]
+        assert sorted(map(tuple, canonical.select(cols).collect())) == sorted(
+            map(tuple, twins.canonical_window(b).select(cols).collect())
         )
-        assert sorted(map(tuple, census_g.collect())) == sorted(
-            map(tuple, census_w.collect())
+        docs_in, texts = defaultdict(int), defaultdict(set)
+        for r in b.collect():
+            docs_in[r["bucket"]] += 1
+            texts[r["bucket"]].add(r["text"])
+        expected = sorted((k, docs_in[k], len(texts[k])) for k in docs_in)
+        got = sorted(
+            tuple(r) for r in census.select("bucket", "docs_in", "docs_canonical").collect()
         )
+        assert got == expected
+    # the last corpus really carries the viral group, all in one bucket
+    assert sum(n for _, n, _ in got) == 45
+    assert max(n for _, n, _ in got) >= 37
 
 
 def test_closed_form_matches_materialized_chunks(spark):
@@ -104,24 +114,6 @@ def test_pipeline_semantics_and_metrics_consistency(spark, tmp_path):
     actual = chunks.agg(F.count("*").alias("c"), F.sum("n_words").alias("w")).collect()[0]
     assert (totals["c"], totals["w"]) == (actual["c"], actual["w"])
     assert stats["chunks_out"] == actual["c"]
-    # the two census shapes (cache-free double scan [default] vs cached-
-    # canonical single scan) are byte-equivalent: same chunks, same metrics
-    out_ts = str(tmp_path / "one_scan")
-    ts = run_curation_checkpointed(
-        spark, _corpus(spark), out_ts, run_id="t1", num_buckets=4,
-        max_words=20, stride=15, single_scan=True,
-    )
-    assert (ts["docs_in"], ts["docs_kept"], ts["chunks_out"]) == (
-        stats["docs_in"], stats["docs_kept"], stats["chunks_out"],
-    )
-    key_cols = ["doc_id", "chunk_id", "first_word", "n_words", "chunk_text"]
-    assert sorted(
-        tuple(r) for r in spark.read.parquet(out_ts + "/chunks").select(*key_cols).collect()
-    ) == sorted(tuple(r) for r in chunks.select(*key_cols).collect())
-    m_cols = ["partition_key", "docs_in", "docs_canonical", "docs_kept", "chunks_out", "words_out"]
-    assert sorted(
-        tuple(r) for r in spark.read.parquet(out_ts + "/metrics").select(*m_cols).collect()
-    ) == sorted(tuple(r) for r in m.select(*m_cols).collect())
     # arming the classifier gate can only shrink the kept set
     out2 = str(tmp_path / "clf")
     armed = run_curation_checkpointed(

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+import twins
 from document_parser_spark.operators import search
 from document_parser_spark.operators.extract import (
     assemble_document_text,
@@ -332,7 +333,7 @@ def test_curation_pipeline_stage_shapes(spark):
     """The end-to-end curation job's three pre-write frames keep the shapes
     its docstring promises at 100 TB (plans/curate.py):
 
-    * election + gate: exactly ONE corpus shuffle (the md5 window), zero
+    * election + gate: exactly ONE corpus shuffle (the md5 aggregate), zero
       joins, and the only Python is vectorized Arrow (the language/word
       pass) — never row-at-a-time BatchEvalPython;
     * the default two-scan census: map-side partial aggregation at the
@@ -350,7 +351,7 @@ def test_curation_pipeline_stage_shapes(spark):
     bucketed = with_content_bucket(d, num_buckets=16)
     canonical, census = election_frames(bucketed)
 
-    gated = quality_language_gate(canonical.drop("_copies"), keep_langs=("en",))
+    gated = quality_language_gate(canonical, keep_langs=("en",))
     plan = plan_of(gated)
     # skew-proof default: the election is ONE map-side-combined aggregate
     # (partial_min/partial_first before the shuffle — each input partition
@@ -364,10 +365,8 @@ def test_curation_pipeline_stage_shapes(spark):
     assert "ArrowEvalPython" in plan, plan
     assert "BatchEvalPython" not in plan, plan
 
-    # the window twin: ONE corpus shuffle, zero joins (the shape that wins
-    # when duplicate groups are known-bounded)
-    canonical_w, _ = election_frames(bucketed, method="window")
-    wplan = plan_of(quality_language_gate(canonical_w.drop("_copies")))
+    # the window twin (tests/twins.py): ONE corpus shuffle, zero joins
+    wplan = plan_of(quality_language_gate(twins.canonical_window(bucketed)))
     assert "Join" not in wplan, wplan
     assert wplan.count("Exchange") == 1, wplan
     assert "hashpartitioning" in wplan, wplan

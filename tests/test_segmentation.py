@@ -5,13 +5,17 @@ import pytest
 
 from document_parser_spark import kernel
 from document_parser_spark.corpus import fixture_documents
+from document_parser_spark.kernel.html import looks_like_html
 from document_parser_spark.kernel.segmentation import (
     parse_document_segmented,
     plan_segments,
     segment_document,
 )
 from document_parser_spark.operators.extract import assemble_document_text, parse_documents
-from document_parser_spark.plans.segmentation import parse_documents_segmented
+from document_parser_spark.plans.segmentation import (
+    TARGET_CHARS,
+    parse_documents_segmented,
+)
 from document_parser_spark.sources.data import fixture_input_df
 
 
@@ -48,21 +52,59 @@ def test_segment_sizes_bounded():
     assert max(sizes) < 20_000 * 3  # no runaway segment
 
 
-def test_spark_segmented_equals_plain(spark):
-    df = assemble_document_text(fixture_input_df(spark))
+def _canon(frame):
+    return {
+        r["doc_id"]: (r["spans"], r["tables"], r["error"])
+        for r in (row.asDict(recursive=True) for row in frame.collect())
+    }
+
+
+def _assert_routes_equal(df, threshold_chars):
     plain = parse_documents(df).select("doc_id", "spans", "tables", "error")
-    # threshold=0 chars forces EVERY doc through the segmented path
-    seg = parse_documents_segmented(df, threshold_chars=10_000)
-
-    def canon(frame):
-        return {
-            r["doc_id"]: (r["spans"], r["tables"], r["error"])
-            for r in (row.asDict(recursive=True) for row in frame.collect())
-        }
-
-    a, b = canon(plain), canon(seg)
+    seg = parse_documents_segmented(df, threshold_chars=threshold_chars)
+    a, b = _canon(plain), _canon(seg)
     assert set(a) == set(b)
     for doc_id in a:
         assert a[doc_id][0] == b[doc_id][0], (doc_id, "spans")
         assert a[doc_id][1] == b[doc_id][1], (doc_id, "tables")
         assert a[doc_id][2] == b[doc_id][2], (doc_id, "error")
+
+
+def _multi_segment_doc() -> str:
+    """~1.7 MB of markdown: every non-HTML fixture tiled 15 times, each tile
+    under its own heading so the tiles are not all boilerplate."""
+    md = [d["text"] for d in fixture_documents() if not looks_like_html(d["text"])]
+    return "\n\n".join(
+        f"## Part {i}\n\n" + "\n\n".join(md) for i in range(15)
+    )
+
+
+def test_spark_segmented_equals_plain(spark):
+    # threshold 10,000 chars: only fx-pathological (107 kB) crosses it, and
+    # it stays ONE segment under TARGET_CHARS
+    _assert_routes_equal(assemble_document_text(fixture_input_df(spark)), 10_000)
+
+
+def test_spark_multi_segment_doc_equals_plain(spark):
+    """A doc big enough to split into several segments reassembles to
+    exactly the plain parse: spans in order, tables globally re-indexed."""
+    text = _multi_segment_doc()
+    assert len(text) >= 1_500_000
+    segments, _ = segment_document(text, TARGET_CHARS)
+    assert len(segments) >= 3
+    df = spark.createDataFrame(
+        [("big", text), ("small", "| a | b |\n|---|---|\n| 1 | 2 |\n")],
+        "doc_id string, text string",
+    )
+    _assert_routes_equal(df, 10_000)
+
+
+def test_segmented_plan_has_no_join_window_or_cache(spark):
+    """Reassembly is one per-doc aggregate over the segment parse: no join
+    of a spans side with a tables side, no re-index window, no persisted
+    intermediate."""
+    df = assemble_document_text(fixture_input_df(spark))
+    seg = parse_documents_segmented(df, threshold_chars=10_000)
+    plan = seg._jdf.queryExecution().executedPlan().toString()
+    for node in ("Join", "Window", "InMemoryRelation"):
+        assert node not in plan, (node, plan)

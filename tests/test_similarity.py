@@ -206,15 +206,3 @@ def test_ivf_sketch_composition_on_clustered_corpus(spark):
     assert scored_frac < sketch_scored_frac
     # sketch-scan volume: hybrid hamming-ranks only the probed fraction
     assert nprobe / nlist < 1.0
-
-
-def test_ann_topk_facade_routes_and_validates(spark, emb):
-    """ann_topk default == sketch_topk output; unknown methods fail loudly."""
-    q = emb.filter(F.col("vec_id") < 3)
-    via_facade = {(r["query_id"], r["vec_id"], r["rank"])
-                  for r in similarity.ann_topk(emb, q, k=5).collect()}
-    direct = {(r["query_id"], r["vec_id"], r["rank"])
-              for r in similarity.sketch_topk(emb, q, k=5).collect()}
-    assert via_facade == direct
-    with pytest.raises(ValueError, match="unknown ANN method"):
-        similarity.ann_topk(emb, q, method="hnsw")

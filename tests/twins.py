@@ -13,7 +13,7 @@ Python UDF of its own.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from document_parser_spark.operators import similarity, text
@@ -254,6 +254,22 @@ def chunk_documents(
     return (
         docs.select("doc_id", F.explode(chunks).alias("c"))
         .select("doc_id", "c.chunk_id", "c.first_word", "c.n_words", "c.chunk_text")
+    )
+
+
+# --------------------------------------------------------- plans/curate.py
+
+
+def canonical_window(todo: DataFrame) -> DataFrame:
+    """``plans.curate.election_frames``' canonical rows from ONE window over
+    md5(text): a single corpus shuffle, but every copy's full text moves
+    into its duplicate group's single partition, so the slowest task grows
+    with the largest group (planted-skew A/B in BASELINE.md r04)."""
+    w = Window.partitionBy(F.md5("text"))
+    return (
+        todo.withColumn("_canon", F.min("doc_id").over(w))
+        .filter(F.col("doc_id") == F.col("_canon"))
+        .drop("_canon")
     )
 
 
