@@ -445,17 +445,17 @@ def synthesize_html_doc(i: int, seed: int = 42) -> Dict[str, Any]:
     return {"doc_id": f"html-{i:09d}", "text": "\n".join(parts)}
 
 
-def html_corpus(n_synth: int = 40, seed: int = 42) -> List[Dict[str, Any]]:
+def html_corpus() -> List[Dict[str, Any]]:
     """The HTML-path correctness corpus: every HTML fixture class (clean,
-    vertical, deep-boiler, malformed, void-heavy) plus ``n_synth``
-    deterministic synthetic pages — the north-rule DOM surface, used by the
+    vertical, deep-boiler, malformed, void-heavy) plus 40 deterministic
+    synthetic pages — the north-rule DOM surface, used by the
     ``extract_html_spans`` contract query and its golden-parquet oracle."""
     docs = [
         {"doc_id": f"fx-{name}", "text": text}
         for name, text in FIXTURE_CLASSES.items()
         if _looks_like_html(text)
     ]
-    docs += [synthesize_html_doc(i, seed) for i in range(n_synth)]
+    docs += [synthesize_html_doc(i) for i in range(40)]
     return docs
 
 

@@ -4,7 +4,7 @@ DataFrame chain.
 
 Shuffle budget: ONE (the dedup window on md5(text)).  Quality and language
 are pure row-wise projections, so they are computed as columns on the
-canonical survivors directly — round 1 joined the quality_scores/language_id
+canonical survivors directly — round 1 joined the quality/language
 outputs back on doc_id, paying two needless shuffle joins (VERDICT.md
 What's-wrong #7)."""
 
@@ -14,34 +14,26 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import STOPWORDS, java_words, language_words_arrow, words
+from .text import PUNCT_RX, STOPWORDS, java_words, language_words_arrow, quality_ok, words
 
 
-def gopher_gate(
-    df: DataFrame,
-    text_col: str = "text",
-    min_words: int = 25,
-    max_words: int = 100_000,
-    min_mean_word_len: int = 3,
-    max_mean_word_len: int = 10,
-    min_stopword_hits: int = 2,
-    max_top_word_pct: int = 10,
-) -> DataFrame:
+def gopher_gate(df: DataFrame) -> DataFrame:
     """Gopher-style document quality gate (public heuristic family): keep a
     document iff word count, mean word length, stopword evidence, and
-    top-word repetition all sit in the healthy band.  All comparisons are
-    integer cross-multiplications (``min_mwl·n ≤ Σlen ≤ max_mwl·n``,
-    ``100·top ≤ pct·n``) so the gate is bit-identical in any engine.
+    top-word repetition all sit in the healthy band — 25 ≤ n ≤ 100,000
+    words, mean word length in [3, 10], ≥ 2 stopword hits, top word ≤ 10 %
+    of the words.  All comparisons are integer cross-multiplications
+    (``3·n ≤ Σlen ≤ 10·n``, ``100·top ≤ 10·n``) so the gate is bit-identical
+    in any engine.
 
     Shape: ONE explode → (doc, word) counts → ONE partial-aggregated groupBy
     computing every signal as a count-weighted sum — zero joins, one scan of
     the text (round 2 re-split the words row-wise for Σlen/stopwords while
     repetition_stats exploded the same words, paying a second full pass plus
     a join — VERDICT r02 What's-wrong #4).  Docs with zero words vanish in
-    the explode, which the ``n_words ≥ min_words`` gate implies anyway."""
-    t = F.col(text_col)
+    the explode, which the ``n_words ≥ 25`` gate implies anyway."""
     stats = (
-        df.select("doc_id", F.explode(words(t)).alias("w"))
+        df.select("doc_id", F.explode(words(F.col("text"))).alias("w"))
         .groupBy("doc_id", "w")
         .agg(F.count("*").alias("cnt"))
         .groupBy("doc_id")
@@ -57,12 +49,12 @@ def gopher_gate(
     )
     n = F.col("n_words")
     keep = (
-        (n >= min_words)
-        & (n <= max_words)
-        & (F.col("sum_word_len") >= min_mean_word_len * n)
-        & (F.col("sum_word_len") <= max_mean_word_len * n)
-        & (F.col("stopword_hits") >= min_stopword_hits)
-        & (F.lit(100) * F.col("top_word_count") <= max_top_word_pct * n)
+        (n >= 25)
+        & (n <= 100_000)
+        & (F.col("sum_word_len") >= 3 * n)
+        & (F.col("sum_word_len") <= 10 * n)
+        & (F.col("stopword_hits") >= 2)
+        & (F.lit(100) * F.col("top_word_count") <= 10 * n)
     )
     return stats.filter(keep).select(
         "doc_id", "n_words", "sum_word_len", "stopword_hits", "top_word_count"
@@ -72,13 +64,11 @@ def gopher_gate(
 def stratified_sample(
     df: DataFrame,
     rates_pct: dict,
-    stratum_col: str = "lang",
     default_pct: int = 100,
     salt: str = "sample",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Deterministic hash sampling per stratum: keep a document iff
-    ``md5(salt:doc_id) % 100 < rate_pct(stratum)``.
+    """Deterministic hash sampling per ``lang`` stratum: keep a document iff
+    ``md5(salt:doc_id) % 100 < rate_pct(lang)``.
 
     Hash-based (not rand()) so the sample is REPRODUCIBLE across runs,
     partitionings, and engines — resampling a petabyte corpus must not
@@ -87,7 +77,7 @@ def stratified_sample(
     filter: no shuffle, pushes below later stages."""
     bucket = (
         F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.lit(salt), F.col(id_col).cast("string"))), 1, 8),
+            F.substring(F.md5(F.concat_ws(":", F.lit(salt), F.col("doc_id").cast("string"))), 1, 8),
             16,
             10,
         ).cast("long")
@@ -95,20 +85,13 @@ def stratified_sample(
     )
     rate = F.lit(default_pct)
     for stratum, pct in sorted(rates_pct.items()):
-        rate = F.when(F.col(stratum_col) == stratum, F.lit(pct)).otherwise(rate)
+        rate = F.when(F.col("lang") == stratum, F.lit(pct)).otherwise(rate)
     return df.withColumn("_bucket", bucket).filter(F.col("_bucket") < rate).drop("_bucket")
 
 
-def pack_shards(
-    df: DataFrame,
-    budget_tokens: int,
-    text_col: str = "text",
-    part_cols: tuple = ("lang",),
-    order_col: str = "doc_id",
-    bucket_width: int = 4096,
-) -> DataFrame:
-    """Greedy sequential shard packing: within each partition class, walk
-    documents in deterministic ``order_col`` order and assign each to the
+def pack_shards(df: DataFrame, budget_tokens: int, bucket_width: int = 4096) -> DataFrame:
+    """Greedy sequential shard packing: within each ``lang`` class, walk
+    documents in deterministic ``doc_id`` order and assign each to the
     shard where its first token lands (``floor(exclusive_cumsum / budget)``)
     — the sequence-packing step that turns a curated corpus into
     fixed-token-budget training shards.
@@ -117,22 +100,21 @@ def pack_shards(
     language through ONE reducer — a scale-killer when one class is most of
     the corpus.  This computes the exclusive cumulative sum in TWO levels:
     (1) intra-bucket window over (class, order_bucket) where
-    ``order_bucket = order_col div bucket_width`` (order-preserving), and
+    ``order_bucket = doc_id div bucket_width`` (order-preserving), and
     (2) per-bucket totals rolled into bucket offsets by a window over the
     tiny (class, bucket) frame.  Both levels are exact integer arithmetic —
     the result is identical to the single-window formulation
     (tests/test_dedup.py asserts it) while the big window parallelizes
-    across ~corpus/bucket_width reducers.  ``order_col`` must cast to long
+    across ~corpus/bucket_width reducers.  ``doc_id`` must cast to long
     (dense ids; for arbitrary keys range-partition first)."""
-    t = F.col(text_col)
     base = df.select(
-        *part_cols,
-        F.col(order_col).alias("_ord"),
-        F.size(words(t)).cast("long").alias("n_tokens"),
+        "lang",
+        F.col("doc_id").alias("_ord"),
+        F.size(words(F.col("text"))).cast("long").alias("n_tokens"),
     ).withColumn("_bucket", F.floor(F.col("_ord").cast("long") / bucket_width))
 
     intra = (
-        Window.partitionBy(*part_cols, "_bucket")
+        Window.partitionBy("lang", "_bucket")
         .orderBy("_ord")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -140,37 +122,33 @@ def pack_shards(
         "_before_in_bucket", F.coalesce(F.sum("n_tokens").over(intra), F.lit(0).cast("long"))
     )
 
-    bucket_totals = base.groupBy(*part_cols, "_bucket").agg(
+    bucket_totals = base.groupBy("lang", "_bucket").agg(
         F.sum("n_tokens").alias("_bucket_total")
     )
     offs = (
-        Window.partitionBy(*part_cols)
+        Window.partitionBy("lang")
         .orderBy("_bucket")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     bucket_offsets = bucket_totals.withColumn(
         "_offset", F.coalesce(F.sum("_bucket_total").over(offs), F.lit(0).cast("long"))
-    ).select(*part_cols, "_bucket", "_offset")
+    ).select("lang", "_bucket", "_offset")
 
     cum_before = F.col("_offset") + F.col("_before_in_bucket")
     return (
-        staged.join(bucket_offsets, on=[*part_cols, "_bucket"])
+        staged.join(bucket_offsets, on=["lang", "_bucket"])
         .withColumn("shard_id", F.floor(cum_before / budget_tokens).cast("long"))
-        .select(*part_cols, F.col("_ord").alias(order_col), "n_tokens", "shard_id")
+        .select("lang", F.col("_ord").alias("doc_id"), "n_tokens", "shard_id")
     )
 
 
-def curate_corpus(
-    df: DataFrame,
-    text_col: str = "text",
-    keep_langs: tuple = ("en",),
-) -> DataFrame:
+def curate_corpus(df: DataFrame, keep_langs: tuple = ("en",)) -> DataFrame:
     """(doc_id, text, …) → surviving docs with their curation signals.
 
     Keep a document iff it is (a) the canonical (min doc_id) copy of its
-    exact-content group, (b) passes the quality gate, (c) language-IDs into
-    ``keep_langs``.  Signals match operators.text.quality_scores /
-    language_id exactly (same expressions, same oracle SQL).
+    exact-content group, (b) passes ``quality_language_gate`` with
+    ``keep_langs``.  Signals match operators.text.text_stats / language_id
+    exactly (same expressions, same oracle SQL).
 
     The election is the skew-proof aggregate form (min doc_id + exact
     ``first(text)`` per md5 — the md5 IS the equality key, and partial
@@ -179,44 +157,18 @@ def curate_corpus(
     BASELINE.md r04 — the r02-r04 ``Window.partitionBy(md5)`` form put
     every copy of the most-duplicated text in one task)."""
     canonical = (
-        df.groupBy(F.md5(F.col(text_col)).alias("_md5"))
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.first(text_col).alias(text_col),
-        )
+        df.groupBy(F.md5(F.col("text")).alias("_md5"))
+        .agg(F.min("doc_id").alias("doc_id"), F.first("text").alias("text"))
         .drop("_md5")
     )
-
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    n_punct = F.regexp_count(t, F.lit(r"[!-/:-@\[-`{-~]"))  # not regexp_replace: r04 measured 27x
-    # r06: score language through the byte-equal Arrow pass (the
-    # interpreted HOF aggregate measured 6x slower, r04); its struct also
-    # carries the word count, so the text is lowered/split once per row.
-    staged = (
-        canonical.withColumn("_best", language_words_arrow(t))
-        .withColumn("n_words", F.col("_best.n_words"))
-        .withColumn(
-            "lang_pred",
-            F.when(F.col("_best.hits") > 0, F.col("_best.lang")).otherwise(F.lit("und")),
-        )
-    )
-    quality_ok = (
-        (F.col("n_words") >= 5)
-        & (n_chars >= 20)
-        & (n_punct * 2 < F.greatest(n_chars, F.lit(1)))
-    )
-    return (
-        staged.filter(quality_ok)
-        .filter(F.col("lang_pred").isin(*keep_langs))
-        .select("doc_id", "n_words", "lang_pred")
+    return quality_language_gate(canonical, keep_langs=keep_langs).select(
+        "doc_id", "n_words", "lang_pred"
     )
 
 
 def decontamination_overlap(
     docs: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
     shingle_k: int = 5,
 ) -> DataFrame:
     """Benchmark decontamination scan (the standard pretraining gate — flag
@@ -245,7 +197,7 @@ def decontamination_overlap(
 
     bench_sh = (
         benchmark.select(
-            F.explode(word_shingles(F.col(text_col), shingle_k)).alias("shingle")
+            F.explode(word_shingles(F.col("text"), shingle_k)).alias("shingle")
         )
         .distinct()
         .withColumn("_hit", F.lit(1))
@@ -257,7 +209,7 @@ def decontamination_overlap(
     # rollup, which partial-aggregates to ~a row per doc first.
     per = docs.join(bench_ids, "doc_id", "left_anti").select(
         "doc_id",
-        F.explode(F.array_distinct(word_shingles(F.col(text_col), shingle_k))).alias(
+        F.explode(F.array_distinct(word_shingles(F.col("text"), shingle_k))).alias(
             "shingle"
         ),
     )
@@ -273,12 +225,7 @@ def decontamination_overlap(
     )
 
 
-def repeated_ngram_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    window_k: int = 10,
-    min_docs: int = 2,
-) -> DataFrame:
+def repeated_ngram_spans(docs: DataFrame, window_k: int = 10, min_docs: int = 2) -> DataFrame:
     """Corpus-internal verbatim-passage detection (the exact-substring dedup
     germ, Lee et al. "Deduplicating Training Data Makes Language Models
     Better", public paper): every ``window_k``-word window whose content
@@ -305,7 +252,7 @@ def repeated_ngram_spans(
     # countDistinct over the full positional stream.
     warr = docs.select(
         "doc_id",
-        F.transform(word_shingles(F.col(text_col), window_k), F.md5).alias("warr"),
+        F.transform(word_shingles(F.col("text"), window_k), F.md5).alias("warr"),
     )
     sh = warr.select(
         "doc_id",
@@ -329,16 +276,12 @@ def repeated_ngram_spans(
 
 
 def quality_language_gate(
-    df: DataFrame,
-    text_col: str = "text",
-    keep_langs: tuple = ("en",),
-    clf_min: int | None = None,
-    min_words: int = 5,
-    min_chars: int = 20,
+    df: DataFrame, keep_langs: tuple = ("en",), clf_min: int | None = None
 ) -> DataFrame:
     """Map-only keep/drop gate shared by the batch curation pipeline
     (plans/curate.py) and its streaming twin (streaming/curate_stream.py):
-    length + punctuation-density heuristics, n-gram language argmax
+    the ``text.quality_ok`` length + punctuation-density rule, n-gram
+    language argmax
     (0 hits → "und"), and — when ``clf_min`` is set — the hashing-trick
     classifier score floor.  Pure projections and filters, no
     joins/windows/aggregates, so the SAME function is legal on a batch
@@ -352,16 +295,9 @@ def quality_language_gate(
     ~850-word docs, the interpreted higher-order aggregate adds +11.2 s
     where the Arrow pass adds +1.8 s (6×, word count included).  The
     pure-Column form is kept in tests/twins.py and equality-gated in
-    tests/test_curate_run.py.
-
-    The punct count is ``regexp_count`` of the punct class, NOT
-    ``length(regexp_replace(non-punct, ''))`` — the identical integer, but
-    the replace materializes a stripped copy of every document (+18.9 s vs
-    +0.7 s in the same measurement, the single largest cost in the whole
-    pipeline)."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    n_punct = F.regexp_count(t, F.lit(r"[!-/:-@\[-`{-~]"))
+    tests/test_curate_run.py.  The punct count is ``regexp_count`` of
+    ``text.PUNCT_RX`` (why not ``regexp_replace``: see there)."""
+    t = F.col("text")
     staged = (
         df.withColumn("_lw", language_words_arrow(t))
         .withColumn("n_words", F.col("_lw.n_words"))
@@ -371,12 +307,8 @@ def quality_language_gate(
         )
         .drop("_lw")
     )
-    quality_ok = (
-        (F.col("n_words") >= min_words)
-        & (n_chars >= min_chars)
-        & (n_punct * 2 < F.greatest(n_chars, F.lit(1)))
-    )
-    gated = staged.filter(quality_ok).filter(F.col("lang_pred").isin(*keep_langs))
+    keep = quality_ok(F.col("n_words"), F.length(t), F.regexp_count(t, F.lit(PUNCT_RX)))
+    gated = staged.filter(keep).filter(F.col("lang_pred").isin(*keep_langs))
     if clf_min is not None:
         from .text import _clf_score_arrow
 
@@ -391,7 +323,6 @@ _CHUNK_UDFS: dict = {}
 
 def chunk_documents(
     docs: DataFrame,
-    text_col: str = "text",
     max_words: int = 64,
     stride: int | None = None,
     passthrough: tuple = (),
@@ -462,7 +393,7 @@ def chunk_documents(
         docs.select(
             "doc_id",
             *passthrough,
-            F.explode(_CHUNK_UDFS[key](F.col(text_col))).alias("c"),
+            F.explode(_CHUNK_UDFS[key](F.col("text"))).alias("c"),
         )
         .select(
             "doc_id",
@@ -476,10 +407,7 @@ def chunk_documents(
 
 
 def repeated_passage_intervals(
-    docs: DataFrame,
-    text_col: str = "text",
-    window_k: int = 10,
-    min_docs: int = 2,
+    docs: DataFrame, window_k: int = 10, min_docs: int = 2
 ) -> DataFrame:
     """MAXIMAL repeated passages: merge the per-position hits of
     ``repeated_ngram_spans`` into maximal word intervals per document — the
@@ -500,9 +428,9 @@ def repeated_passage_intervals(
     shuffle beyond the repartition the window itself needs.  Repeated-hit
     rows are a small fraction of the corpus (only windows shared across
     docs survive), so the window input is the scrub list, not the corpus."""
-    spans = repeated_ngram_spans(
-        docs, text_col=text_col, window_k=window_k, min_docs=min_docs
-    ).select("doc_id", "pos")
+    spans = repeated_ngram_spans(docs, window_k=window_k, min_docs=min_docs).select(
+        "doc_id", "pos"
+    )
     w = Window.partitionBy("doc_id").orderBy("pos")
     isl = spans.withColumn(
         "island", F.col("pos") - F.row_number().over(w).cast("long")

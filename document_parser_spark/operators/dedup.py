@@ -36,11 +36,11 @@ DEFAULT_BANDS = 8
 SIMHASH_BITS = 60
 
 
-def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Exact dedup via md5 grouping: one row per duplicated content hash with
     the canonical (minimum) doc_id and the group size."""
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("text_md5"))
+        df.groupBy(F.md5(F.col("text")).alias("text_md5"))
         .agg(
             F.count("*").alias("n_docs"),
             F.min("doc_id").alias("canonical_doc_id"),
@@ -180,28 +180,18 @@ def _verify_jaccard(
 
 
 def minhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = DEFAULT_BANDS,
-    rows_per_band: int = 2,
-    shingle_k: int = 3,
-    threshold_pct: int = 50,
+    df: DataFrame, shingle_k: int = 3, threshold_pct: int = 50
 ) -> DataFrame:
     """MinHash LSH candidates VERIFIED by exact shingle-set Jaccard
     (``_verify_jaccard``).  The verify join touches only candidate pairs
     (bounded by banding precision), never the corpus cross product."""
-    cand = minhash_candidate_pairs(
-        minhash_signatures(df, text_col, num_hashes, rows_per_band, shingle_k)
-    )
-    return _verify_jaccard(cand, df, text_col, shingle_k, threshold_pct)
+    cand = minhash_candidate_pairs(minhash_signatures(df, shingle_k=shingle_k))
+    return _verify_jaccard(cand, df, "text", shingle_k, threshold_pct)
 
 
 def minhash_incremental_pairs(
     new_docs: DataFrame,
     corpus_docs: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = DEFAULT_BANDS,
-    rows_per_band: int = 2,
     shingle_k: int = 3,
     threshold_pct: int = 50,
 ) -> DataFrame:
@@ -237,16 +227,14 @@ def minhash_incremental_pairs(
             "minhash_incremental_pairs: new_docs and corpus_docs share "
             "doc_ids — Jaccard sizes would double-count shingles"
         )
-    sig_new = minhash_signatures(new_docs, text_col, num_hashes, rows_per_band, shingle_k)
-    sig_old = minhash_signatures(
-        corpus_docs, text_col, num_hashes, rows_per_band, shingle_k
-    )
-    all_docs = new_docs.select("doc_id", text_col).unionByName(
-        corpus_docs.select("doc_id", text_col)
+    sig_new = minhash_signatures(new_docs, shingle_k=shingle_k)
+    sig_old = minhash_signatures(corpus_docs, shingle_k=shingle_k)
+    all_docs = new_docs.select("doc_id", "text").unionByName(
+        corpus_docs.select("doc_id", "text")
     )
     return minhash_pairs_from_signatures(
         sig_new, sig_old.unionByName(sig_new), all_docs,
-        text_col, shingle_k, threshold_pct,
+        shingle_k=shingle_k, threshold_pct=threshold_pct,
     )
 
 
@@ -328,7 +316,11 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def duplicate_clusters(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
+#: star-round cap of ``duplicate_clusters``; convergence takes O(log n) rounds
+CC_MAX_ROUNDS = 30
+
+
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over near-dup pairs: every document that appears
     in ≥1 pair is labeled with the MINIMUM doc_id reachable in its component
     (the canonical representative a dedup pipeline keeps).
@@ -367,7 +359,7 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
         F.col("a").alias("doc_id")
     )
     converged = False
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         new_e = _small_star(_large_star(e)).localCheckpoint(eager=True)
         # ONE driver action per round (r06): both edge sets are distinct,
         # so "unchanged" is an empty symmetric difference — previously this
@@ -388,9 +380,9 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
         # CONVERGED labeling; returning a partial one silently mislabels
         # the component
         raise RuntimeError(
-            f"duplicate_clusters did not converge within max_iter={max_iter} "
+            f"duplicate_clusters did not converge within {CC_MAX_ROUNDS} "
             "alternating star rounds (O(log n) expected — this graph would "
-            f"need > 2^{max_iter} nodes); raise max_iter"
+            f"need > 2^{CC_MAX_ROUNDS} nodes); raise CC_MAX_ROUNDS"
         )
     # at the fixpoint e is a star forest (child → component minimum)
     labels = (
@@ -406,18 +398,14 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
-def canonical_keep(
-    clusters: DataFrame,
-    docs: DataFrame,
-    size_col: str = "n_chars",
-) -> DataFrame:
+def canonical_keep(clusters: DataFrame, docs: DataFrame) -> DataFrame:
     """The keep/drop DECISION a dedup pipeline ships: per near-dup cluster,
-    elect the canonical document (largest ``size_col``, ties to the smallest
+    elect the canonical document (largest ``n_chars``, ties to the smallest
     doc_id — the deterministic "keep the longest" policy of public dedup
     pipelines) and report the cluster's membership accounting.
 
     Input: ``clusters`` = (doc_id, cluster_id) from ``duplicate_clusters``;
-    ``docs`` supplies the per-doc size column.  Output one row per cluster:
+    ``docs`` supplies the per-doc ``n_chars`` column.  Output one row per cluster:
     (cluster_id, keep_doc, keep_chars, n_members, n_dropped) — all integers,
     oracle-exact.
 
@@ -431,15 +419,15 @@ def canonical_keep(
     never co-locates (the r04 window formulation put every member of the
     largest cluster in one task — same straggler the curation election
     study measured, BASELINE.md r04).  No driver-side state."""
-    j = clusters.join(docs.select("doc_id", size_col), "doc_id")
+    j = clusters.join(docs.select("doc_id", "n_chars"), "doc_id")
     keep_key = F.struct(
-        (-F.col(size_col)).alias("neg_size"), F.col("doc_id").alias("d")
+        (-F.col("n_chars")).alias("neg_size"), F.col("doc_id").alias("d")
     )
     return (
         j.groupBy("cluster_id")
         .agg(
             F.min_by("doc_id", keep_key).alias("keep_doc"),
-            F.max(size_col).alias("keep_chars"),
+            F.max("n_chars").alias("keep_chars"),
             F.count("*").alias("n_members"),
         )
         .select(
@@ -481,7 +469,7 @@ def _simhash_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def simhash_arrow(df: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_arrow(df: DataFrame) -> DataFrame:
     """Frequency-weighted SimHash over word hashes: bit i of the fingerprint
     is 1 iff the count-weighted ±1 sum over words at bit i is positive, with
     the word hash the first 60 bits of md5 (``('0x' ||
@@ -500,30 +488,26 @@ def simhash_arrow(df: DataFrame, text_col: str = "text") -> DataFrame:
     no row for them (the UDF signals them with -1, below any real 60-bit
     fingerprint)."""
     return df.select(
-        "doc_id", _simhash_udf(F.col(text_col)).alias("simhash")
+        "doc_id", _simhash_udf(F.col("text")).alias("simhash")
     ).filter(F.col("simhash") >= 0)
 
 
-def simhash_candidate_pairs(
-    sim: DataFrame, max_hamming: int = 2, bits: int = SIMHASH_BITS
-) -> DataFrame:
+def simhash_candidate_pairs(sim: DataFrame, max_hamming: int = 2) -> DataFrame:
     """Pre-verify candidates from the bit-mask-bucket trick: split the
     fingerprint into k+1 chunks — any pair within hamming k agrees on ≥1
     chunk → bucket join, never all-pairs.  Exposed separately so the growth
     study can measure candidate volume vs corpus size."""
-    return _simhash_candidates_raw(sim, max_hamming, bits).select(
+    return _simhash_candidates_raw(sim, max_hamming).select(
         "doc_a", "doc_b", "sim_a", "sim_b"
     ).distinct()
 
 
-def _simhash_candidates_raw(
-    sim: DataFrame, max_hamming: int, bits: int
-) -> DataFrame:
+def _simhash_candidates_raw(sim: DataFrame, max_hamming: int) -> DataFrame:
     """Chunk-bucket collision pairs WITH multiplicity (a pair appears once
     per agreeing chunk) — callers dedup after their own pair-level filters
     so the distinct shuffle carries the fewest, narrowest rows."""
     chunks = max_hamming + 1
-    chunk_bits = bits // chunks
+    chunk_bits = SIMHASH_BITS // chunks
     keyed = sim.select(
         "doc_id",
         "simhash",
@@ -541,7 +525,7 @@ def _simhash_candidates_raw(
     )
 
 
-def simhash_near_pairs(sim: DataFrame, max_hamming: int = 2, bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash_near_pairs(sim: DataFrame, max_hamming: int = 2) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ k over the chunk-bucket
     candidates.  At 60 bits the chunk key space is 2^30 (k=1) / 2^15 (k=3)
     buckets, so the expected bucket population — and hence candidate volume —
@@ -559,7 +543,7 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 2, bits: int = SIMHASH
     # chunk) before deduplicating — the distinct then shuffles only
     # qualifying (doc_a, doc_b, hamming) rows instead of every candidate
     # with both 8-byte fingerprints attached.
-    cand = _simhash_candidates_raw(sim, max_hamming, bits)
+    cand = _simhash_candidates_raw(sim, max_hamming)
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (
         cand.withColumn("hamming", hamming)
@@ -688,13 +672,10 @@ def ngram_candidate_pairs(
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    block_cols: tuple = ("lang", "source"),
-    threshold_pct: int = 80,
-    ngram_n: int = 1,
+    df: DataFrame, threshold_pct: int = 80, ngram_n: int = 1
 ) -> DataFrame:
-    """Blocked n-gram Jaccard with PREFIX + LENGTH + POSITIONAL filtering:
+    """Blocked (per ``lang``, ``source``) n-gram Jaccard with PREFIX +
+    LENGTH + POSITIONAL filtering:
     results are EXACTLY the pairs with ``100·|A∩B| ≥ t·|A∪B|`` (integer
     arithmetic, same semantics as the exhaustive token self-join), but
     candidate generation joins only each document's prefix tokens and prunes
@@ -732,7 +713,7 @@ def ngram_jaccard_pairs(
     docs should length-gate them upstream (the curation gate) or segment
     them first (plans/segmentation.py); a book-length doc is not a sane
     near-dup unit anyway."""
-    toks, cand = _ngram_frames(df, text_col, block_cols, threshold_pct, ngram_n)
+    toks, cand = _ngram_frames(df, "text", ("lang", "source"), threshold_pct, ngram_n)
 
     # r06 verify: one row per doc carrying its DISTINCT token set as an
     # array; |A∩B| is a codegen ``array_intersect`` on the joined pair row.
@@ -778,10 +759,7 @@ def ngram_jaccard_pairs(
 
 
 def containment_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    window_k: int = 10,
-    min_pct: int = 80,
+    docs: DataFrame, window_k: int = 10, min_pct: int = 80
 ) -> DataFrame:
     """Document-containment detection: ordered pairs (inner, outer) where
     ≥ ``min_pct``% of the INNER document's DISTINCT ``window_k``-word
@@ -812,7 +790,7 @@ def containment_pairs(
     toks = docs.select(
         "doc_id",
         F.array_distinct(
-            F.transform(word_shingles(F.col(text_col), window_k), F.md5)
+            F.transform(word_shingles(F.col("text"), window_k), F.md5)
         ).alias("wset"),
     )
     w = toks.select("doc_id", F.explode("wset").alias("wmd5"))

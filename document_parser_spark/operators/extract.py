@@ -35,11 +35,11 @@ from ..kernel.pipeline import parse_document_columns
 from ..schemas import PARSE_RESULT
 
 
-def assemble_document_text(df: DataFrame, spans_col: str = "spans") -> DataFrame:
+def assemble_document_text(df: DataFrame) -> DataFrame:
     """Concatenate the raw ``text`` spans in offset order into one markdown
     string per document; keep sidecar media refs.  Pure Column algebra —
     no Python executes per row."""
-    spans = F.col(spans_col)
+    spans = F.col("spans")
     text_spans = F.array_sort(
         F.filter(spans, lambda s: s.kind == F.lit("text")),
         lambda a, b: F.when(a.offset < b.offset, -1).when(a.offset > b.offset, 1).otherwise(0),
@@ -217,7 +217,7 @@ def _build_parse_arrays(results, spans_type, tables_type):
     return spans_arr, tables_arr, error_arr
 
 
-def parse_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
+def parse_documents(df: DataFrame) -> DataFrame:
     """Attach parsed ``spans``, ``tables``, ``error`` columns; all other
     input columns pass through untouched (the big ``text`` column is
     consumed and dropped).
@@ -228,8 +228,8 @@ def parse_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
     time."""
     from pyspark.sql.pandas.types import to_arrow_type
 
-    keep = [c for c in df.columns if c not in (text_col, "spans", "tables", "error")]
-    narrowed = df.select(*keep, text_col)
+    keep = [c for c in df.columns if c not in ("text", "spans", "tables", "error")]
+    narrowed = df.select(*keep, "text")
 
     spans_type = to_arrow_type(PARSE_RESULT["spans"].dataType)
     tables_type = to_arrow_type(PARSE_RESULT["tables"].dataType)

@@ -72,7 +72,7 @@ def _feature_vector(data: bytes, dim: int = 8) -> list[int]:
     return [digest[i] for i in range(dim)]
 
 
-def extract_media_features(media: DataFrame, feature_dim: int = 8) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """mapInPandas over binary blobs → typed metadata + feature vector.
 
     The binary column never leaves the executor (no collect); Arrow moves
@@ -95,7 +95,7 @@ def extract_media_features(media: DataFrame, feature_dim: int = 8) -> DataFrame:
                         "width": width if r.media_kind == "image" else None,
                         "height": height if r.media_kind == "image" else None,
                         "n_frames": _frame_sample(data, r.media_kind),
-                        "features": _feature_vector(data, feature_dim),
+                        "features": _feature_vector(data),
                     }
                 )
             yield pd.DataFrame(rows)

@@ -26,48 +26,42 @@ from pyspark.sql import functions as F
 DEFAULT_QUANTILES = (25, 50, 90)
 
 
-def corpus_profile(
-    docs: DataFrame,
-    group_col: str = "source",
-    value_col: str = "n_chars",
-    lang_col: str = "lang",
-    id_col: str = "doc_id",
-    quantiles: tuple = DEFAULT_QUANTILES,
-) -> DataFrame:
-    """One profile row per ``group_col``: (group, n_docs, chars_sum,
-    n_langs, chars_p{q}..., top_lang, top_lang_docs)."""
-    base = docs.groupBy(group_col).agg(
+def corpus_profile(docs: DataFrame) -> DataFrame:
+    """One profile row per ``source``: (source, n_docs, chars_sum, n_langs,
+    chars_p{q}... for q in ``DEFAULT_QUANTILES`` over ``n_chars``, top_lang,
+    top_lang_docs)."""
+    base = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(value_col).cast("long").alias("chars_sum"),
-        F.countDistinct(lang_col).alias("n_langs"),
+        F.sum("n_chars").cast("long").alias("chars_sum"),
+        F.countDistinct("lang").alias("n_langs"),
     )
-    w = Window.partitionBy(group_col).orderBy(F.asc(value_col), F.asc(id_col))
-    wp = Window.partitionBy(group_col)
+    w = Window.partitionBy("source").orderBy(F.asc("n_chars"), F.asc("doc_id"))
+    wp = Window.partitionBy("source")
     ranked = (
-        docs.select(group_col, id_col, value_col)
+        docs.select("source", "doc_id", "n_chars")
         .withColumn("_rn", F.row_number().over(w))
         .withColumn("_n", F.count("*").over(wp))
     )
-    quant = ranked.groupBy(group_col).agg(
+    quant = ranked.groupBy("source").agg(
         *[
             F.max(
                 F.when(
                     F.col("_rn") == F.expr(f"(_n * {q} + 99) div 100"),
-                    F.col(value_col),
+                    F.col("n_chars"),
                 )
             ).alias(f"chars_p{q}")
-            for q in quantiles
+            for q in DEFAULT_QUANTILES
         ]
     )
-    lang_counts = docs.groupBy(group_col, lang_col).agg(F.count("*").alias("_c"))
-    wr = Window.partitionBy(group_col).orderBy(F.desc("_c"), F.asc(lang_col))
+    lang_counts = docs.groupBy("source", "lang").agg(F.count("*").alias("_c"))
+    wr = Window.partitionBy("source").orderBy(F.desc("_c"), F.asc("lang"))
     top = (
         lang_counts.withColumn("_r", F.row_number().over(wr))
         .filter(F.col("_r") == 1)
         .select(
-            group_col,
-            F.col(lang_col).alias("top_lang"),
+            "source",
+            F.col("lang").alias("top_lang"),
             F.col("_c").alias("top_lang_docs"),
         )
     )
-    return base.join(quant, group_col).join(top, group_col)
+    return base.join(quant, "source").join(top, "source")

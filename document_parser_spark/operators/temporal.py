@@ -34,9 +34,8 @@ def asof_join(
     ts: str,
     payload_cols: Sequence[str],
     direction: str = "backward",
-    prefix: str = "asof_",
 ) -> DataFrame:
-    """Left as-of join: every probe row, plus ``prefix``-renamed payload
+    """Left as-of join: every probe row, plus ``asof_``-prefixed payload
     columns from the matched build row (NULLs when no build row precedes).
 
     ``direction='backward'`` matches the latest build at-or-before the probe
@@ -64,5 +63,5 @@ def asof_join(
     )
     out = filled.filter(F.col("_side") == 1).drop("_ts", "_side", "_payload")
     for c in payload_cols:
-        out = out.withColumn(prefix + c, F.col("_match")[c])
+        out = out.withColumn("asof_" + c, F.col("_match")[c])
     return out.drop("_match")

@@ -60,69 +60,34 @@ def java_words(text: str | None) -> list[str]:
     return [w for w in _JAVA_WS_RX.split(text or "") if w]
 
 
-def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace + BPE-ish token counts, char count, mean word length ×100
-    as exact integer arithmetic."""
-    t = F.col(text_col)
-    w = words(t)
-    return df.select(
-        "doc_id",
-        F.length(t).cast("long").alias("n_chars_exact"),
-        F.size(w).cast("long").alias("n_words"),
-        F.regexp_count(t, F.lit(BPE_ISH_TOKEN)).cast("long").alias("n_tokens_bpeish"),
-        F.aggregate(w, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)).alias(
-            "sum_word_len"
-        ),
-    )
+#: ASCII punctuation class counted by the quality rule.  regexp_count, not
+#: length(regexp_replace(...)): identical integers, but the replace
+#: materializes a stripped copy of every document (measured r04: +18.9 s vs
+#: +0.7 s over 45k docs at 16 cores)
+PUNCT_RX = r"[!-/:-@\[-`{-~]"
 
 
-def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / punctuation / stopword / digit signals per document.
-
-    Counts are exact longs; `quality_ok` is the boolean headline gate a
-    training pipeline would filter on."""
-    t = F.col(text_col)
-    w = words(t)
-    n_words = F.size(w)
-    stop_hits = F.size(F.filter(w, lambda x: F.lower(x).isin(*STOPWORDS["en"])))
-    # regexp_count, not length(regexp_replace(...)): identical integers,
-    # but the replace materializes a stripped copy of every document
-    # (measured r04: +18.9 s vs +0.7 s over 45k docs at 16 cores)
-    n_punct = F.regexp_count(t, F.lit(r"[!-/:-@\[-`{-~]"))
-    n_digits = F.regexp_count(t, F.lit(r"[0-9]"))
-    n_chars = F.length(t)
-    return df.select(
-        "doc_id",
-        n_chars.cast("long").alias("n_chars_exact"),
-        n_words.cast("long").alias("n_words"),
-        stop_hits.cast("long").alias("stopword_hits"),
-        n_punct.cast("long").alias("punct_chars"),
-        n_digits.cast("long").alias("digit_chars"),
-        (
-            (n_words >= 5)
-            & (n_chars >= 20)
-            & (n_punct * 2 < F.greatest(n_chars, F.lit(1)))
-        ).alias("quality_ok"),
-    )
+def quality_ok(n_words: Column, n_chars: Column, n_punct: Column) -> Column:
+    """The one document quality rule shared by ``text_stats`` and the
+    curation gate: at least 5 words, at least 20 chars, and punctuation under
+    half of the chars."""
+    return (n_words >= 5) & (n_chars >= 20) & (n_punct * 2 < F.greatest(n_chars, F.lit(1)))
 
 
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """token_stats ∪ quality_scores in ONE map-only projection.
+def text_stats(df: DataFrame) -> DataFrame:
+    """Token counts and quality signals in ONE map-only projection.
 
-    The two families share the word split and char count; computing all
-    eight signals in a single Project keeps one pass over the text (no join,
-    no shuffle) — the shape a 100 TB curation scan actually wants.  Kept as
-    the contract-query surface (`text_stats`); the narrower ``token_stats``/
-    ``quality_scores`` remain for callers that want one family."""
-    t = F.col(text_col)
+    The token and quality families share the word split and char count;
+    computing all eight signals in a single Project keeps one pass over the
+    text (no join, no shuffle) — the shape a 100 TB curation scan actually
+    wants.  `quality_ok` is the boolean headline gate a training pipeline
+    would filter on."""
+    t = F.col("text")
     w = words(t)
     n_words = F.size(w)
     n_chars = F.length(t)
     stop_hits = F.size(F.filter(w, lambda x: F.lower(x).isin(*STOPWORDS["en"])))
-    # regexp_count, not length(regexp_replace(...)): identical integers,
-    # but the replace materializes a stripped copy of every document
-    # (measured r04: +18.9 s vs +0.7 s over 45k docs at 16 cores)
-    n_punct = F.regexp_count(t, F.lit(r"[!-/:-@\[-`{-~]"))
+    n_punct = F.regexp_count(t, F.lit(PUNCT_RX))
     n_digits = F.regexp_count(t, F.lit(r"[0-9]"))
     return df.select(
         "doc_id",
@@ -135,11 +100,7 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         stop_hits.cast("long").alias("stopword_hits"),
         n_punct.cast("long").alias("punct_chars"),
         n_digits.cast("long").alias("digit_chars"),
-        (
-            (n_words >= 5)
-            & (n_chars >= 20)
-            & (n_punct * 2 < F.greatest(n_chars, F.lit(1)))
-        ).alias("quality_ok"),
+        quality_ok(n_words, n_chars, n_punct).alias("quality_ok"),
     )
 
 
@@ -196,7 +157,7 @@ def language_words_arrow(texts: pd.Series) -> pd.DataFrame:
     )
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Stopword-hit language heuristic with deterministic argmax
     (max hits; ties broken by language code DESCENDING; 'und' when no hits).
     The SQL mirror is ``ORDER BY hits DESC, lang DESC LIMIT 1`` per doc.
@@ -206,7 +167,7 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     cores, r04); the HOF form is kept in tests/twins.py for
     cross-checking."""
     return (
-        df.withColumn("_best", language_words_arrow(F.col(text_col)))
+        df.withColumn("_best", language_words_arrow(F.col("text")))
         .select(
             "doc_id",
             F.when(F.col("_best.hits") > 0, F.col("_best.lang"))
@@ -217,14 +178,14 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprints(df: DataFrame, text_col: str = "text", shingle_words: int = 3) -> DataFrame:
+def fingerprints(df: DataFrame, shingle_words: int = 3) -> DataFrame:
     """Document fingerprints: full-text md5 plus a rolling min-hash over word
     shingles (the winnowing-style representative hash).
 
     Explode + partial-aggregated groupBy instead of array expressions: the
     shingle array is materialized once (array exprs re-evaluate per consumer),
     and the min/count combine map-side — the 100 TB-friendly shape."""
-    t = F.col(text_col)
+    t = F.col("text")
     exploded = df.select(
         "doc_id",
         F.md5(t).alias("md5_full"),
@@ -242,9 +203,7 @@ def fingerprints(df: DataFrame, text_col: str = "text", shingle_words: int = 3) 
     )
 
 
-def bigram_novelty(
-    df: DataFrame, text_col: str = "text", common_df: int = 3
-) -> DataFrame:
+def bigram_novelty(df: DataFrame, common_df: int = 3) -> DataFrame:
     """Corpus-statistics quality proxy (the integer-exact analogue of the
     CCNet/RedPajama perplexity filter, public pipeline family): per document,
     how much of its word-bigram stream is CORPUS-COMMON vs novel.  A high
@@ -275,7 +234,7 @@ def bigram_novelty(
     # rollup and no doc_id join.  The exploded-join formulation is kept in
     # tests/twins.py (equality test in tests/test_dedup.py).
     per = df.select(
-        "doc_id", F.explode(_bigram_counts_arrow(F.col(text_col))).alias("bc")
+        "doc_id", F.explode(_bigram_counts_arrow(F.col("text"))).alias("bc")
     ).select("doc_id", F.col("bc.bg").alias("bigram"), F.col("bc.cnt").alias("cnt"))
     common = (
         per.groupBy("bigram")
@@ -324,7 +283,7 @@ _CLF_M = 21
 _CLF_HALF = 10  # (M-1)/2 → weights centered on 0
 
 
-def hash_classifier_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def hash_classifier_score(df: DataFrame) -> DataFrame:
     """fastText-style hashing-trick linear classifier score per document —
     the architecture of the public LLM-pipeline quality filters (Joulin et
     al. 2016 "Bag of Tricks for Efficient Text Classification"; hashed
@@ -340,7 +299,7 @@ def hash_classifier_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     into one Arrow map pass — zero shuffle, zero join; the scale shape a
     100 TB curation scan wants.  A pure-Column twin in tests/twins.py is
     equality-gated in tests/test_dedup.py.  Docs with zero words score 0."""
-    t = F.col(text_col)
+    t = F.col("text")
     n = F.size(words(t))
     n_feats = F.when(n >= 1, n * 2 - 1).otherwise(F.lit(0)).cast("long")
     return df.select(
@@ -399,7 +358,7 @@ def _rep_stats_udf(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=_REP_FIELDS)
 
 
-def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document: top-word fraction and
     top-bigram fraction as exact integers (numerator/denominator pairs — the
     training pipeline filters on e.g. ``top_word_count * 10 > n_words * 3``).
@@ -412,7 +371,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     byte-identical Java-\\s one used by word_shingles; the exploded shape
     is kept in tests/twins.py with an equality gate in
     tests/test_dedup.py."""
-    return df.select("doc_id", _rep_stats_udf(F.col(text_col)).alias("_r")).select(
+    return df.select("doc_id", _rep_stats_udf(F.col("text")).alias("_r")).select(
         "doc_id", "_r.*"
     )
 
@@ -424,10 +383,10 @@ EMAIL_RX = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 URL_RX = r"https?://[^\s]+"
 
 
-def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
+def scrub_pii(df: DataFrame) -> DataFrame:
     """Mask emails and URLs with typed placeholders; report match counts.
     Pure Column regex — codegen, no UDF."""
-    t = F.col(text_col)
+    t = F.col("text")
     scrubbed = F.regexp_replace(
         F.regexp_replace(t, URL_RX, "<URL>"), EMAIL_RX, "<EMAIL>"
     )
@@ -439,12 +398,7 @@ def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def tfidf_topk(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 5,
-    scale: int = 1_000_000,
-) -> DataFrame:
+def tfidf_topk(df: DataFrame, k: int = 5, scale: int = 1_000_000) -> DataFrame:
     """Integer-exact tf-idf keyword extraction: the top-``k`` most salient
     terms per document by ``score = tf * ((N * scale) DIV df)`` — term
     frequency times a floor-scaled inverse document frequency, all BIGINT
@@ -464,7 +418,7 @@ def tfidf_topk(
     # r06: document frequency from the map-side-distinct per-doc word set
     # (explode of array_distinct — no dedup shuffle, plain count instead of
     # a two-phase countDistinct over the full token stream).
-    wa = df.select("doc_id", words(F.col(text_col)).alias("wa"))
+    wa = df.select("doc_id", words(F.col("text")).alias("wa"))
     w = wa.select("doc_id", F.explode("wa").alias("word"))
     tf = w.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     dfreq = (

@@ -45,7 +45,7 @@ from ..operators.similarity import (
     ivf_nlist,
     probe_dim,
 )
-from .resume import completed_buckets, write_metrics, write_partitioned
+from .resume import select_unfinished, write_metrics, write_partitioned
 
 DEFAULT_BUCKETS = 64
 
@@ -240,35 +240,19 @@ def _index_pass(
         embeddings, cids, cmat, planes, id_col, vec_col
     ).withColumn("bucket", F.pmod(F.xxhash64("vec_id"), F.lit(num_buckets)).cast("int"))
 
-    done = completed_buckets(spark, metrics_dir, run_id)
-    todo = bucketed.filter(~F.col("bucket").isin(sorted(done))) if done else bucketed
-    if max_buckets_this_run is not None:
-        # bucket list from the id column only — never runs the sketch UDF
-        remaining = sorted(
-            r["b"]
-            for r in embeddings.select(
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_buckets))
-                .cast("int")
-                .alias("b")
-            )
-            .distinct()
-            .collect()
-            if r["b"] not in done
-        )[:max_buckets_this_run]
-        todo = todo.filter(F.col("bucket").isin(remaining))
-
-    write_partitioned(todo, index_dir)
+    # bucket list from the id column only — never runs the sketch UDF
+    id_buckets = embeddings.select(
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_buckets)).cast("int").alias("bucket")
+    )
+    done, keep = select_unfinished(spark, metrics_dir, run_id, id_buckets, max_buckets_this_run)
+    write_partitioned(bucketed.filter(keep), index_dir)
 
     wall_ms = int((time.monotonic() - t0) * 1000)
     # lineage from the WRITTEN rows (durable truth, no UDF recompute), with
     # the bucket filters BEFORE the aggregation so partition pruning reads
     # only this run's buckets — post-agg filtering would scan every bucket
     # of the index just to emit metrics for the few that resumed
-    written = spark.read.parquet(index_dir)
-    if done:
-        written = written.filter(~F.col("bucket").isin(sorted(done)))
-    if max_buckets_this_run is not None:
-        written = written.filter(F.col("bucket").isin(remaining))
+    written = spark.read.parquet(index_dir).filter(keep)
     metrics = (
         written.groupBy("bucket")
         .agg(

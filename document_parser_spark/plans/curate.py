@@ -24,7 +24,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .resume import completed_buckets, write_metrics, write_partitioned
+from .resume import select_unfinished, write_metrics, write_partitioned
 
 DEFAULT_BUCKETS = 64
 
@@ -228,15 +228,8 @@ def run_curation_checkpointed(
     t0 = time.monotonic()
     bucketed = with_content_bucket(docs.select("doc_id", "text"), num_buckets)
 
-    done = completed_buckets(spark, metrics_dir, run_id)
-    todo = (
-        bucketed.filter(~F.col("bucket").isin(sorted(done))) if done else bucketed
-    )
-    if max_buckets_this_run is not None:
-        remaining = sorted(
-            r["bucket"] for r in todo.select("bucket").distinct().collect()
-        )[:max_buckets_this_run]
-        todo = todo.filter(F.col("bucket").isin(remaining))
+    done, keep = select_unfinished(spark, metrics_dir, run_id, bucketed, max_buckets_this_run)
+    todo = bucketed.filter(keep)
 
     # canonical election: global because every md5 group is bucket-local
     canonical, per_bucket_in = election_frames(todo)

@@ -5,8 +5,8 @@ SURVEY.md §3.3), so the only scale problems are placement problems:
 
   * doc_ids are unique ⇒ count skew is solved by any uniform hash; the real
     skew is BYTE skew from pathologically large documents.
-  * ``salted_repartition`` spreads normal docs over ``salt_buckets`` hash
-    buckets and gives every oversize doc its own shuffle key, so two giants
+  * ``salted_repartition`` spreads normal docs over 32 hash buckets per
+    partition and gives every oversize doc its own shuffle key, so two giants
     never share a partition by bucket collision.
   * true intra-document parallelism for giants is the segmentation protocol
     (plans/segmentation.py) — offset/order-stable splitting, parse per
@@ -25,19 +25,16 @@ OVERSIZE_CHARS = 1 << 20
 def salted_repartition(
     df: DataFrame,
     num_partitions: int,
-    size_col: str = "n_chars",
     oversize_chars: int = OVERSIZE_CHARS,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Repartition for the parse stage: normal docs hash-salted into
-    ``salt_buckets`` (≥8× partitions so bucket→partition collisions even
-    out), oversize docs keyed individually by doc_id."""
-    if salt_buckets is None:
-        salt_buckets = num_partitions * 32
+    32 buckets per partition (≥8× partitions so bucket→partition collisions
+    even out), docs over ``oversize_chars`` ``n_chars`` keyed individually
+    by doc_id."""
     key = F.when(
-        F.col(size_col) > F.lit(oversize_chars),
+        F.col("n_chars") > F.lit(oversize_chars),
         F.concat(F.lit("big:"), F.col("doc_id")),
     ).otherwise(
-        F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)).cast("string")
+        F.pmod(F.xxhash64("doc_id"), F.lit(num_partitions * 32)).cast("string")
     )
     return df.repartition(num_partitions, key)

@@ -22,7 +22,7 @@ import os
 import time
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 64
@@ -49,6 +49,29 @@ def completed_buckets(spark: SparkSession, metrics_dir: str, run_id: str) -> set
     return {r["partition_key"] for r in rows}
 
 
+def select_unfinished(
+    spark: SparkSession,
+    metrics_dir: str,
+    run_id: str,
+    buckets: DataFrame,
+    max_buckets_this_run: int | None,
+) -> tuple[set[int], Column]:
+    """The resume manifest's work selection, shared by every bucketed job:
+    the buckets this run already finished, and a predicate on ``bucket``
+    that keeps the unfinished ones.  ``max_buckets_this_run`` (crash
+    simulation for resume tests) narrows it to the first N unfinished
+    buckets in order; only then is ``buckets`` — any frame with a
+    ``bucket`` column — collected."""
+    done = completed_buckets(spark, metrics_dir, run_id)
+    keep = ~F.col("bucket").isin(sorted(done)) if done else F.lit(True)
+    if max_buckets_this_run is not None:
+        remaining = sorted(
+            r["bucket"] for r in buckets.filter(keep).select("bucket").distinct().collect()
+        )[:max_buckets_this_run]
+        keep = F.col("bucket").isin(remaining)
+    return done, keep
+
+
 def lineage_metrics(parsed: DataFrame, run_id: str, wall_ms: int) -> DataFrame:
     """One row per bucket: doc/span/table/error counts + doc_id range
     (SURVEY.md §2.6 A7).  Pure aggregation over the parse output — partial
@@ -65,9 +88,9 @@ def lineage_metrics(parsed: DataFrame, run_id: str, wall_ms: int) -> DataFrame:
     ).withColumnRenamed("bucket", "partition_key")
 
 
-def write_partitioned(df: DataFrame, path: str, partition_col: str = "bucket") -> None:
-    """Dynamic partition overwrite: only the partitions present in ``df`` are
-    replaced — idempotent under retry.
+def write_partitioned(df: DataFrame, path: str) -> None:
+    """Dynamic partition overwrite by ``bucket``: only the partitions present
+    in ``df`` are replaced — idempotent under retry.
 
     Repartition on the partition column FIRST: from the salted (bucket-
     uncorrelated) task layout, every write task would otherwise hold one
@@ -78,10 +101,10 @@ def write_partitioned(df: DataFrame, path: str, partition_col: str = "bucket") -
     ONE open writer and, on a real cluster, one output file per partition
     instead of cores× fragments."""
     (
-        df.repartition(F.col(partition_col))
+        df.repartition(F.col("bucket"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
+        .partitionBy("bucket")
         .parquet(path)
     )
 
@@ -122,13 +145,8 @@ def run_extraction_checkpointed(
     t0 = time.monotonic()
     docs = with_bucket(assemble_document_text(df_input), num_buckets)
 
-    done = completed_buckets(spark, metrics_dir, run_id)
-    todo = docs.filter(~F.col("bucket").isin(sorted(done))) if done else docs
-    if max_buckets_this_run is not None:
-        remaining = sorted(
-            r["bucket"] for r in todo.select("bucket").distinct().collect()
-        )[:max_buckets_this_run]
-        todo = todo.filter(F.col("bucket").isin(remaining))
+    done, keep = select_unfinished(spark, metrics_dir, run_id, docs, max_buckets_this_run)
+    todo = docs.filter(keep)
 
     parallelism = spark.sparkContext.defaultParallelism
     repartitioned = salted_repartition(todo, max(parallelism * 2, 8))

@@ -30,12 +30,9 @@ def fixture_input_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(to_input_rows(fixture_documents()), DOCUMENTS_INPUT)
 
 
-def synthetic_input_df(
-    spark: SparkSession, n_docs: int, seed: int = 42, partitions: int | None = None
-) -> DataFrame:
+def synthetic_input_df(spark: SparkSession, n_docs: int, seed: int = 42) -> DataFrame:
     """Executor-side corpus generation: deterministic per (seed, index)."""
-    if partitions is None:
-        partitions = max(spark.sparkContext.defaultParallelism, 8)
+    partitions = max(spark.sparkContext.defaultParallelism, 8)
     base = spark.range(0, n_docs, 1, partitions)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

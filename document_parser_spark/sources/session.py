@@ -22,15 +22,13 @@ ARROW_BATCH_ROWS = 2048
 def get_spark(
     app_name: str = "document_parser_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        # ~2× cores: enough slots for AQE to coalesce, not enough to drown
-        # tiny local runs in task overhead.
-        shuffle_partitions = max(2 * cpus, 8)
+    # ~2× cores: enough slots for AQE to coalesce, not enough to drown
+    # tiny local runs in task overhead.
+    shuffle_partitions = max(2 * cpus, 8)
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

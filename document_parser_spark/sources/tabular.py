@@ -1,4 +1,4 @@
-"""Delimited-table source (CSV/TSV) — tables ingested WITHOUT a markdown
+"""Delimited-table source (comma-separated CSV) — tables ingested WITHOUT a markdown
 detour, straight into the engine's structured-table model.
 
 The reference only reads markdown streams; its users also hold plain CSVs
@@ -26,10 +26,10 @@ from pyspark.sql import types as T
 from ..schemas import TABLE
 
 
-def _table_row(doc_id: str, text: str, delimiter: str) -> dict | None:
+def _table_row(doc_id: str, text: str) -> dict | None:
     from ..kernel import extract_table_auto
 
-    rows = [r for r in csv.reader(io.StringIO(text), delimiter=delimiter) if r]
+    rows = [r for r in csv.reader(io.StringIO(text)) if r]
     if len(rows) < 2:
         return None
     width = max(len(r) for r in rows)
@@ -40,10 +40,8 @@ def _table_row(doc_id: str, text: str, delimiter: str) -> dict | None:
     return {"doc_id": doc_id, **table}
 
 
-def tables_from_delimited(
-    spark: SparkSession, path: str, delimiter: str = ","
-) -> DataFrame:
-    """Directory (or glob) of delimited files → structured-tables DataFrame
+def tables_from_delimited(spark: SparkSession, path: str) -> DataFrame:
+    """Directory (or glob) of comma-delimited files → structured-tables DataFrame
     (tables_output schema: doc_id = file name, table_index = 0)."""
     files = spark.read.text(path, wholetext=True).select(
         F.element_at(F.split(F.input_file_name(), "/"), -1).alias("doc_id"),
@@ -63,7 +61,7 @@ def tables_from_delimited(
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                parsed = _table_row(r.doc_id, r.text, delimiter)
+                parsed = _table_row(r.doc_id, r.text)
                 if parsed is not None:
                     parsed["table_index"] = parsed.pop("index")
                     rows.append(parsed)

@@ -32,15 +32,11 @@ def stream_index_rows(
     dim: int,
     planes: int = SKETCH_PLANES,
     num_buckets: int = DEFAULT_BUCKETS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(vec_id, cid, sk, bucket) rows for a stream of embeddings, against
     the stored quantizer (``plans.ann_index.load_ann_index`` supplies
     ``cids``/``cmat`` and ``meta['dim']``/``meta['planes']``).  ``dim`` is
     explicit because a streaming frame cannot be probed for it."""
-    return ann_index_frame(
-        stream_df, cids, cmat, planes, id_col, vec_col, dim=dim
-    ).withColumn(
+    return ann_index_frame(stream_df, cids, cmat, planes, dim=dim).withColumn(
         "bucket", F.pmod(F.xxhash64("vec_id"), F.lit(num_buckets)).cast("int")
     )

@@ -36,25 +36,11 @@ from .dedup_stream import stream_exact_dedup
 
 
 def stream_curate(
-    stream_df: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ingest_ts",
-    watermark: str = "10 minutes",
-    keep_langs: tuple = ("en",),
-    max_words: int = 512,
-    stride: int | None = None,
-    clf_min: int | None = None,
+    stream_df: DataFrame, max_words: int = 512, stride: int | None = None
 ) -> DataFrame:
     """(doc_id, chunk_id, first_word, n_words, chunk_text) stream of curated
     training chunks — the streaming twin of ``plans.curate``'s
     dedup→gate→chunk stages (bucketed lineage/resume stays batch-side: a
     streaming sink's exactly-once story is its checkpoint, not a manifest)."""
-    deduped = stream_exact_dedup(
-        stream_df, text_col=text_col, ts_col=ts_col, watermark=watermark
-    )
-    gated = quality_language_gate(
-        deduped, text_col=text_col, keep_langs=keep_langs, clf_min=clf_min
-    )
-    return chunk_documents(
-        gated, text_col=text_col, max_words=max_words, stride=stride
-    )
+    gated = quality_language_gate(stream_exact_dedup(stream_df))
+    return chunk_documents(gated, max_words=max_words, stride=stride)

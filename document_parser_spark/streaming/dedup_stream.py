@@ -28,24 +28,19 @@ from pyspark.sql import functions as F
 from ..operators.dedup import simhash_arrow
 
 
-def stream_exact_dedup(
-    stream_df: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ingest_ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def stream_exact_dedup(stream_df: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Emit only the FIRST document seen for each exact text content within
-    the watermark horizon.  Duplicates arriving later than ``watermark``
-    after the original are re-admitted by design — that is the bounded-state
-    contract (a later batch-mode ``exact_duplicates`` pass over the sink
+    the watermark horizon on ``ingest_ts``.  Duplicates arriving later than
+    ``watermark`` after the original are re-admitted by design — that is the
+    bounded-state contract (a later batch-mode ``exact_duplicates`` pass over the sink
     catches cross-horizon repeats)."""
-    keyed = stream_df.withColumn("text_md5", F.md5(F.col(text_col)))
-    return keyed.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    keyed = stream_df.withColumn("text_md5", F.md5(F.col("text")))
+    return keyed.withWatermark("ingest_ts", watermark).dropDuplicatesWithinWatermark(
         ["text_md5"]
     )
 
 
-def stream_simhash(stream_df: DataFrame, text_col: str = "text") -> DataFrame:
+def stream_simhash(stream_df: DataFrame) -> DataFrame:
     """(doc_id, simhash) fingerprint stream — stateless map-only pass,
     byte-identical to the batch ``simhash``/``simhash_arrow``."""
-    return simhash_arrow(stream_df, text_col=text_col)
+    return simhash_arrow(stream_df)

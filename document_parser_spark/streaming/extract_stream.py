@@ -33,15 +33,14 @@ def stream_extract(stream_df: DataFrame) -> DataFrame:
 
 def span_rate_monitor(
     parsed_stream: DataFrame,
-    ts_col: str = "ingest_ts",
     window: str = "1 minute",
     watermark: str = "5 minutes",
 ) -> DataFrame:
     """Windowed operational metrics with late-data watermarking: docs, spans,
-    tables, errors per event-time window."""
+    tables, errors per ``ingest_ts`` event-time window."""
     return (
-        parsed_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window))
+        parsed_stream.withWatermark("ingest_ts", watermark)
+        .groupBy(F.window(F.col("ingest_ts"), window))
         .agg(
             F.count("*").alias("docs"),
             F.sum(F.size("spans")).alias("spans"),

@@ -60,8 +60,6 @@ def sessionize_stream(
     events: DataFrame,
     gap_sec: int = 600,
     watermark: str = "30 minutes",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
 ) -> DataFrame:
     """(user_id, ts, …) event stream → closed-session stream.
 
@@ -97,7 +95,7 @@ def sessionize_stream(
         ts_all: list[int] = []
         for pdf in pdfs:
             ts_all.extend(
-                pdf[ts_col].astype("datetime64[us]").astype("int64").tolist()
+                pdf["ts"].astype("datetime64[us]").astype("int64").tolist()
             )
         closed, (start_us, last_us, n) = fold_events(
             (start_us, last_us, n), sorted(ts_all), gap_us
@@ -110,8 +108,8 @@ def sessionize_stream(
             state.setTimeoutTimestamp(last_us // 1000 + gap_sec * 1000)
 
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(user_col)
+        events.withWatermark("ts", watermark)
+        .groupBy("user_id")
         .applyInPandasWithState(
             fn,
             outputStructType=SESSION_OUTPUT,

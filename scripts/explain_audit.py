@@ -3,11 +3,16 @@ query at sf0.01, with the plan-quality properties the 100 TB checklist cares
 about called out per query (pushdown, broadcast vs sort-merge, partial
 aggregation, codegen spans, Python stages).
 
-Usage: python scripts/explain_audit.py
+Usage: python scripts/explain_audit.py [QUERY ...] [--out PATH]
+
+Named queries replace the headline list; ``--out`` writes somewhere other
+than EXPLAIN.md.  A before/after plan comparison runs the same command in
+two checkouts with different ``--out`` files and diffs them.
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
@@ -62,6 +67,12 @@ _CHECKS = [
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="*", help="contract query names (default: headline list)")
+    ap.add_argument("--out", default=os.path.join(REPO, "EXPLAIN.md"))
+    args = ap.parse_args()
+    names = args.queries or AUDITED
+
     import __spark_entry__ as entry
     from document_parser_spark.sources.session import get_spark
 
@@ -76,7 +87,7 @@ def main() -> None:
         "",
     ]
     qs = entry.queries()
-    for name in AUDITED:
+    for name in names:
         df = qs[name](spark, SF)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
@@ -91,9 +102,9 @@ def main() -> None:
         out.append(plan.rstrip())
         out.append("```")
         out.append("")
-    with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
+    with open(args.out, "w") as f:
         f.write("\n".join(out))
-    print(f"wrote EXPLAIN.md ({len(AUDITED)} queries)")
+    print(f"wrote {args.out} ({len(names)} queries)")
     spark.stop()
 
 

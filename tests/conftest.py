@@ -16,6 +16,18 @@ sys.path.insert(0, ROOT)
 REFERENCE_DIR = "/root/reference"
 
 
+def write_bucketed(
+    df, table: str, bucket_cols: list[str], num_buckets: int, sort_cols: list[str]
+) -> None:
+    """Persist ``df`` as a catalog table bucketed and sorted by the join key:
+    later equi-joins and aggregations keyed on a prefix of ``bucket_cols``
+    against a table bucketed the same way plan no Exchange.  Spark honours
+    bucket metadata only through the catalog (``saveAsTable``), not bare
+    parquet paths."""
+    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
+    writer.sortBy(*sort_cols).format("parquet").saveAsTable(table)
+
+
 def load_reference_functions(filename: str, names: list[str]) -> dict:
     """Extract named top-level functions from a reference source file via AST
     and exec ONLY those (the reference modules import heavyweight/unavailable

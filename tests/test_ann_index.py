@@ -135,9 +135,7 @@ def test_incremental_shard_indexes_against_corpus_quantizer(spark, emb, tmp_path
     inline = _rows(
         similarity._ivf_sketch_from_side(
             similarity.ann_index_frame(emb, cids, cmat),
-            cids, cmat, emb, q, emb.count(), 10, None,
-            similarity.RERANK_FRAC_PCT, similarity.SKETCH_PLANES,
-            "vec_id", "embedding",
+            cids, cmat, emb, q, emb.count(), 10, similarity.SKETCH_PLANES,
         )
     )
     assert stored == inline
@@ -167,10 +165,10 @@ def test_index_and_floats_co_bucketed_join_exchange_free(spark, emb, built):
     """The at-rest 100 TB layout: the index table and the float table
     bucketed by vec_id make the rerank fetch (index-selected candidates →
     float rows) a ZERO-exchange co-located join — neither corpus-sized side
-    shuffles (plans/bucketing.py; same gate as the cells index)."""
+    shuffles (same gate as tests/test_bucketing.py)."""
     import uuid
 
-    from document_parser_spark.plans.bucketing import write_bucketed
+    from conftest import write_bucketed
 
     out, _ = built
     suffix = uuid.uuid4().hex[:8]

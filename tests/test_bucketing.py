@@ -6,7 +6,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from document_parser_spark.plans.bucketing import write_bucketed
+from conftest import write_bucketed
 
 
 @pytest.fixture()

@@ -1,12 +1,17 @@
 """Each operator ships ONE implementation: cross-check twins live in
-tests/twins.py, and no parameter selects an alternative execution path."""
+tests/twins.py, no parameter selects an alternative execution path, and no
+defaulted parameter goes unset by every caller."""
 
+import ast
 import importlib
 import inspect
+import pathlib
 import pkgutil
 
 import document_parser_spark.operators as operators
 import document_parser_spark.plans as plans
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 MODULES = [
     importlib.import_module(f"{pkg.__name__}.{m.name}")
@@ -31,6 +36,7 @@ REMOVED_OPTIONS = {
 
 #: module attributes whose only job was to pick between implementations
 REMOVED_NAMES = {
+    "operators.text": ("token_stats", "quality_scores"),
     "operators.similarity": ("ann_topk", "ANN_METHODS"),
     "plans.segmentation": ("_parse_segment_udf", "_SEGMENT_PARSE"),
 }
@@ -62,3 +68,67 @@ def test_removed_dispatchers_stay_removed():
         if hasattr(importlib.import_module(f"document_parser_spark.{module}"), name)
     ]
     assert left == []
+
+
+#: package paths whose public functions may keep a default only while some
+#: call sets it (kernel/ is frozen to the reference's signatures)
+DEFAULT_SCOPE = ("operators/", "plans/", "sources/", "streaming/", "corpus.py", "presentation.py")
+
+
+def _callee_names(f: ast.expr) -> list[str]:
+    """Names a call may dispatch to: ``f(...)``, ``m.f(...)``, and both
+    branches of ``(f if c else g)(...)``."""
+    if isinstance(f, ast.Name):
+        return [f.id]
+    if isinstance(f, ast.Attribute):
+        return [f.attr]
+    if isinstance(f, ast.IfExp):
+        return _callee_names(f.body) + _callee_names(f.orelse)
+    return []
+
+
+def test_every_default_has_a_setter():
+    """A defaulted parameter that no call in the repo sets is a
+    configuration no test or benchmark runs: it belongs in a module
+    constant.  A call sets a parameter by keyword, by position, or through
+    ``*args``/``**kwargs``; calls are matched by function name."""
+    files = [
+        p for p in ROOT.rglob("*.py")
+        if not {".git", "dist", ".tmp"} & set(p.relative_to(ROOT).parts)
+    ]
+    pkg = ROOT / "document_parser_spark"
+    calls: dict[str, list[ast.Call]] = {}
+    public = []
+    for path in files:
+        tree = ast.parse(path.read_text(encoding="utf-8"), str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                for name in _callee_names(node.func):
+                    calls.setdefault(name, []).append(node)
+        rel = path.relative_to(pkg).as_posix() if path.is_relative_to(pkg) else ""
+        if rel.startswith(DEFAULT_SCOPE):
+            public += [
+                (rel, n) for n in tree.body
+                if isinstance(n, ast.FunctionDef) and not n.name.startswith("_")
+            ]
+    assert len(public) > 50  # the scope resolved
+
+    unset = []
+    for rel, fn in public:
+        a = fn.args
+        positional = [p.arg for p in a.posonlyargs + a.args]
+        defaulted = positional[len(positional) - len(a.defaults):] + [
+            p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+        ]
+        set_somewhere = set()
+        for call in calls.get(fn.name, []):
+            if any(isinstance(x, ast.Starred) for x in call.args):
+                set_somewhere.update(positional)
+            set_somewhere.update(positional[: len(call.args)])
+            for kw in call.keywords:
+                if kw.arg is None:
+                    set_somewhere.update(positional + [p.arg for p in a.kwonlyargs])
+                else:
+                    set_somewhere.add(kw.arg)
+        unset += [f"{rel}:{fn.name}({p}=)" for p in defaulted if p not in set_somewhere]
+    assert unset == []

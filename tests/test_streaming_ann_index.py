@@ -81,9 +81,7 @@ def test_stream_rows_equal_batch_and_union_queries(spark):
         ).collect()
         inline = similarity._ivf_sketch_from_side(
             similarity.ann_index_frame(emb, cids, cmat),
-            cids, cmat, emb, queries, emb.count(), 10, None,
-            similarity.RERANK_FRAC_PCT, similarity.SKETCH_PLANES,
-            "vec_id", "embedding",
+            cids, cmat, emb, queries, emb.count(), 10, similarity.SKETCH_PLANES,
         ).collect()
         key = lambda r: (r["query_id"], r["rank"], r["vec_id"], r["cos_sim"])
         assert sorted(map(key, stored)) == sorted(map(key, inline))
