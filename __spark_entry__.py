@@ -2166,7 +2166,7 @@ _IVF_NPROBE = similarity.ivf_nprobe(_IVF_NLIST)
 _SQL_IVF_TOPK = _ivf_sql(_IVF_NLIST, _IVF_NPROBE, similarity.LLOYD_ITERS)
 
 # rerank budget of the IVF→sketch composition — MIRRORS
-# similarity._ivf_sketch_from_side: rerank_frac of the EXPECTED probed-set
+# similarity.ivf_sketch_topk_from_index: rerank_frac of the EXPECTED probed-set
 # size, floored at 4·k (the slack that lets hamming misrankings wash out).
 _IVF_SKETCH_M = max(
     4 * 10,

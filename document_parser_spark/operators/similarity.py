@@ -1,57 +1,43 @@
 """Similarity search over an embedding column (array<float>).
 
-Paths:
-  * ``brute_force_topk``       — the float performance baseline: native
-    ``F.zip_with`` dot product in double precision, whole-stage codegen,
-    per-query top-k.  This is the path bench.py measures.
-  * ``brute_force_topk_exact`` — the oracle-comparable twin: components are
-    scaled to exact integers (``floor(val * 1e8)``), dot/norm accumulate in
-    int64 (order-independent), and only the final cosine divides in double —
-    bit-identical to the DuckDB mirror.  Query norms come from the query's
-    OWN vector (not looked up in the corpus), so arbitrary query frames work.
-  * ``lsh_bucketed_topk``      — banded sign-LSH (bands × rows_per_band
-    deterministic hyperplanes) buckets vectors; a pair is a candidate iff it
-    shares ≥1 band bucket; exact integer cosine ranks candidates.
-  * ``ivf_topk``               — IVF-flat with a k-means-refined quantizer
-    (integer-exact Lloyd), nlist ~ √n, nprobe = nlist/8 (≤12.5% probed at
-    any corpus size).  The right tool when the corpus actually clusters.
-  * ``sketch_topk``            — hamming-sketch scan + exact re-rank: the
-    measured winner on THIS corpus (isotropic embeddings, where partition
-    membership is nearly independent of cosine neighborhoods — BASELINE.md
-    has the sweep: sketch 0.995 recall@10 at 10% scored vs IVF ≤0.63 /
-    LSH 0.78 at similar fractions).  At rest the 64 B sketch column is the
-    only thing the full-corpus pass reads.
-  * ``cosine_near_dup_pairs``  — embedding near-dup for the dedup family:
-    sign-sketch hamming candidates + exact integer cosine threshold, in one
-    cogrouped Arrow pass over block pairs.
+Every top-k method is one skeleton: a candidate generator yields
+(query_id, vec_id) pairs, and one exact-rerank tail (``_exact_topk``) joins
+the float vectors, scores them with the integer-exact ``cosine_exact_arrow``
+and keeps rank ≤ k.  The candidate generators:
 
-  * ``ivf_sketch_topk``        — the IVF→sketch→exact composition for
-    corpora that actually cluster: probe nprobe/nlist of the corpus,
-    hamming-rank ONLY the probed lists' sketch words, exact-rerank the top
-    slice — sub-linear in BOTH the sketch scan (nprobe/nlist of the corpus)
-    and the exact scoring (rerank_frac of the probed set, ~1.3% of the
-    corpus at defaults).  On THIS sandbox's isotropic embeddings any
-    partition pruning caps recall at ~0.5-0.6 (measured, BASELINE.md), so
-    the flat ``sketch_topk`` stays the scale path; on clustered data (pytest:
-    tests/test_similarity.py clustered-corpus case) the hybrid holds
-    recall ≥0.9 at an exact-scored fraction below either parent.
-  * ``sketch_topk_from_index`` / ``ivf_sketch_topk_from_index`` — the same
-    queries against the PERSISTED index table (plans/ann_index.py builds
-    it; build-once / query-many): the corpus pass scans only the stored
-    64 B sketches and the float column is read exactly once, for the
-    rerank join.  Byte-identical to the inline twins; amortization
-    measured in BASELINE.md (scripts/ann_index_study.py).
+  * ``brute_force_topk`` / ``brute_force_topk_exact`` — every corpus vector
+    (broadcast cross join, scored in-line); the float form is the bench
+    baseline, the exact form the oracle-comparable one.
+  * ``lsh_bucketed_topk`` — vectors sharing ≥1 of the query's
+    BANDS × ROWS_PER_BAND sign-LSH buckets; the buckets are the nibbles of
+    the first sign-sketch word (planes 0–31).
+  * ``ivf_topk`` — the members of the query's nprobe nearest k-means lists
+    (integer-exact Lloyd, nlist ~ √n, nprobe = nlist/8).
+  * ``sketch_topk`` — the rerank_frac hamming-nearest 512-bit sign sketches:
+    the measured winner on the isotropic sf embeddings (BASELINE.md: 0.995
+    recall@10 at 10% scored vs IVF ≤0.63 / LSH 0.78).
+  * ``ivf_sketch_topk`` — the same sketch scan over the probed lists only,
+    for corpora that cluster.
 
-Determinism: hyperplane signs are the parity of the first md5 nibble of
-"plane:pos" — reproducible in Python (sign matrix is computed driver-side
-with hashlib and inlined as a LITERAL column, zero per-row hashing) and in
-SQL (DuckDB mirror in __spark_entry__.py), so every integer projection,
-bucket id, and cosine is bit-identical across engines.
+``sketch_topk_from_index`` / ``ivf_sketch_topk_from_index`` read the
+(vec_id, cid, sk) side from the persisted index (plans/ann_index.py); the
+inline forms build that side from the embeddings and run the same body.
+``cosine_near_dup_pairs`` is the dedup family's embedding near-dup:
+sketch-hamming candidates and the exact verify in one cogrouped Arrow pass
+over block pairs.
+
+Exactness: components scale to int64 once (``_int_matrix``), projections
+and dots are order-independent int64 sums, and only the final cosine
+divides in double.  Hyperplane signs are the parity of the first md5 nibble
+of "plane:pos" (``plane_signs``), computed driver-side and inlined; the
+DuckDB mirrors in __spark_entry__.py replay the same arithmetic, so every
+bucket, sketch word and cosine is bit-identical across engines.
 """
 
 from __future__ import annotations
 
 import hashlib
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -139,25 +125,84 @@ def cosine_exact(a: Column, b: Column) -> Column:
     )
 
 
+def _int_matrix(vecs) -> np.ndarray:
+    """n × dim int64 of floor(v·SCALE): the one float→int step of every Arrow
+    UDF here — bit-identical to Spark's floor(double)·cast(long)."""
+    return np.floor(
+        np.stack([np.asarray(v, dtype=np.float64) for v in vecs]) * SCALE
+    ).astype(np.int64)
+
+
 @F.pandas_udf(DoubleType())
 def cosine_exact_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
     """Arrow-batched twin of ``cosine_exact`` — one int64 numpy pass per
     batch instead of interpreted per-element lambdas per pair (candidate-
-    heavy stages score ~100× faster).  Bit-identical: floor/scale matches
-    Spark's floor(double)·cast(long), integer sums are order-independent,
-    and the final double divide/sqrt are IEEE-exact in both."""
+    heavy stages score ~100× faster).  Bit-identical: integer sums are
+    order-independent, and the final double divide/sqrt are IEEE-exact."""
     if not len(a):
         return pd.Series([], dtype="float64")
-    ia = np.floor(
-        np.stack([np.asarray(v, dtype=np.float64) for v in a]) * SCALE
-    ).astype(np.int64)
-    ib = np.floor(
-        np.stack([np.asarray(v, dtype=np.float64) for v in b]) * SCALE
-    ).astype(np.int64)
+    ia, ib = _int_matrix(a), _int_matrix(b)
     dot = (ia * ib).sum(axis=1).astype(np.float64)
     na = np.sqrt((ia * ia).sum(axis=1).astype(np.float64))
     nb = np.sqrt((ib * ib).sum(axis=1).astype(np.float64))
     return pd.Series(dot / (na * nb))
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """rank ≤ k per query over (query_id, vec_id, cos_sim); ties → lowest vec_id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _exact_topk(
+    cand: DataFrame, embeddings: DataFrame, queries: DataFrame, k: int
+) -> DataFrame:
+    """The shared exact-rerank tail: (query_id, vec_id) candidates → top-k.
+    Float vectors are fetched for candidate rows only, the queries
+    broadcast, and ``cosine_exact_arrow`` scores every pair in one Arrow
+    pass."""
+    e_vec = embeddings.select("vec_id", F.col("embedding").alias("v_vec"))
+    q_vec = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
+    )
+    scored = (
+        cand.join(e_vec, "vec_id")
+        .join(F.broadcast(q_vec), "query_id")
+        .select(
+            "query_id",
+            "vec_id",
+            cosine_exact_arrow(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
+        )
+    )
+    return _rank_topk(scored, k)
+
+
+def _brute_topk(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    cos: Callable[[Column, Column], Column],
+) -> DataFrame:
+    """Every corpus vector is a candidate of every query.  Queries are
+    broadcast (a query set is small by definition) and ``cos`` scores
+    in-line, so the corpus streams with no shuffle until the top-k window."""
+    q_vec = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
+    )
+    scored = (
+        embeddings.select("vec_id", F.col("embedding").alias("v_vec"))
+        .crossJoin(F.broadcast(q_vec))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            cos(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
+        )
+    )
+    return _rank_topk(scored, k)
 
 
 def brute_force_topk(
@@ -165,25 +210,9 @@ def brute_force_topk(
     queries: DataFrame,
     k: int = 10,
 ) -> DataFrame:
-    """Exact cosine top-k per query vector.  Queries are broadcast (a query
-    set is small by definition); the corpus side streams — no shuffle until
-    the per-query top-k, which TakeOrderedAndProject/window keeps bounded."""
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
-    )
-    pairs = embeddings.select(
-        "vec_id", F.col("embedding").alias("v_vec")
-    ).crossJoin(F.broadcast(q))
-    scored = pairs.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "vec_id",
-        cosine(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    """Float cosine top-k per query vector — the performance baseline bench.py
+    measures (native ``F.zip_with`` dot product, whole-stage codegen)."""
+    return _brute_topk(embeddings, queries, k, cosine)
 
 
 def brute_force_topk_exact(
@@ -191,29 +220,18 @@ def brute_force_topk_exact(
     queries: DataFrame,
     k: int = 10,
 ) -> DataFrame:
-    """Oracle-comparable top-k: same plan shape as ``brute_force_topk``
-    (broadcast cross join, no explode), but integer-exact arithmetic.  The
-    query norm is computed from the query's own vector, so the query frame
-    need not be a subset of the corpus."""
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
-    )
-    pairs = embeddings.select(
-        "vec_id", F.col("embedding").alias("v_vec")
-    ).crossJoin(F.broadcast(q))
-    scored = pairs.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "vec_id",
-        cosine_exact(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    """Oracle-comparable top-k: ``brute_force_topk``'s plan with the
+    integer-exact ``cosine_exact``.  The query norm is computed from the
+    query's own vector, so the query frame need not be a subset of the
+    corpus."""
+    return _brute_topk(embeddings, queries, k, cosine_exact)
 
 
-# --- banded sign-LSH ----------------------------------------------------------
+# --- sign sketch (shared by LSH, the sketch scans and near-dup) --------------
+
+SKETCH_PLANES = 512  # 16 32-bit words per vector (64 bytes)
+SKETCH_WORD_BITS = 32  # 32 bits/word: 1<<31 stays far from signed-64 overflow
+
 
 def plane_signs(plane: int, dim: int) -> list[int]:
     """Deterministic ±1 hyperplane: parity of the first md5 nibble of
@@ -225,44 +243,54 @@ def plane_signs(plane: int, dim: int) -> list[int]:
     ]
 
 
+def _sign_matrix(dim: int, planes: int) -> np.ndarray:
+    """dim × planes int64 matrix of hyperplanes 0..planes-1."""
+    return np.array([plane_signs(p, dim) for p in range(planes)], dtype=np.int64).T
+
+
 def probe_dim(df: DataFrame, vec_col: str = "embedding") -> int:
     """One tiny driver-side job to learn the (uniform) embedding dimension;
     the sign matrix is then inlined as literals — zero per-row hashing."""
     row = df.select(
         F.min(F.size(vec_col)).alias("lo"), F.max(F.size(vec_col)).alias("hi")
     ).first()
-    if row is None or row.lo != row.hi:
-        raise ValueError(f"embedding dimension not uniform: {row}")
+    # an aggregate always returns one row: an empty frame reads lo = hi = None
+    if row.hi is None or row.lo != row.hi:
+        raise ValueError(f"embedding dimension not uniform or frame empty: {row}")
     return int(row.hi)
 
 
-def _band_buckets_udf(dim: int):
-    """Arrow-batched bucket computation: ONE int64 matmul per batch instead
-    of BANDS·ROWS_PER_BAND interpreted per-element lambdas per row (the
-    higher-order-function path is ~30× slower — HOFs don't codegen).
-
-    Exactness is preserved: np.floor(float64(v)·1e8)→int64 matches Spark's
-    floor(double)·cast(long) bit-for-bit, and integer matmul is
-    order-independent — so buckets equal the pure-Column projection form
-    (tests/twins.py) and the DuckDB mirror exactly."""
-    planes = BANDS * ROWS_PER_BAND
-    signs = np.array(
-        [plane_signs(p, dim) for p in range(planes)], dtype=np.int64
-    ).T  # dim × planes
-    weights = np.array([1 << j for j in range(ROWS_PER_BAND)], dtype=np.int64)
+def _sketch_udf(dim: int, planes: int = SKETCH_PLANES):
+    """Arrow-batched sign sketch: ONE int64 matmul per batch against the md5
+    sign planes (HOF projections are ~30× slower — they don't codegen).  Bit
+    j of word w is ``projection(32w+j) > 0``, packed into ``planes/32`` long
+    words of 32 bits each (a 1<<63 top bit would overflow signed int64 in
+    numpy AND DuckDB).  Exact in SQL: the projection is an int64 sum, the
+    bit decision a comparison, the packing a sum of 1<<j."""
+    signs = _sign_matrix(dim, planes)
+    weights = np.array([1 << j for j in range(SKETCH_WORD_BITS)], dtype=np.int64)
 
     @F.pandas_udf("array<long>")
-    def buckets(vecs: pd.Series) -> pd.Series:
+    def sketch(vecs: pd.Series) -> pd.Series:
         if not len(vecs):
             return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        iv = np.floor(x * SCALE).astype(np.int64)
-        bits = (iv @ signs) > 0  # n × planes
-        per_band = bits.reshape(len(vecs), BANDS, ROWS_PER_BAND) @ weights
-        return pd.Series(list(per_band))
+        bits = (_int_matrix(vecs) @ signs) > 0  # n × planes
+        words = bits.reshape(len(vecs), planes // SKETCH_WORD_BITS, SKETCH_WORD_BITS) @ weights
+        return pd.Series(list(words))
 
-    return buckets
+    return sketch
 
+
+def _hamming_words(a: str, b: str, words: int) -> Column:
+    """XOR+POPCNT hamming distance between the packed sketch columns ``a``
+    and ``b`` — ``words`` integer ops per pair, all in whole-stage codegen."""
+    return sum(
+        F.bit_count(F.col(a).getItem(i).bitwiseXOR(F.col(b).getItem(i)))
+        for i in range(words)
+    )
+
+
+# --- banded sign-LSH ----------------------------------------------------------
 
 def lsh_band_buckets(
     df: DataFrame,
@@ -271,12 +299,16 @@ def lsh_band_buckets(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, band, bucket) — exploded band buckets, ready for the bucket join.
-    Buckets come from the Arrow/numpy path; tests/twins.py keeps the
-    pure-Column form for cross-checking (tests assert equality)."""
-    udf = _band_buckets_udf(dim)
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(udf(F.col(vec_col))).alias("band", "bucket"),
+    The BANDS·ROWS_PER_BAND = 32 planes are exactly one sketch word, so band
+    b's bucket is bits [b·r, b·r + r) of it; tests/twins.py keeps the
+    pure-Column projection form for cross-checking (tests assert equality)."""
+    word = _sketch_udf(dim, BANDS * ROWS_PER_BAND)(F.col(vec_col))[0]
+    mask = (1 << ROWS_PER_BAND) - 1
+    buckets = [
+        F.shiftright("w", ROWS_PER_BAND * b).bitwiseAND(mask) for b in range(BANDS)
+    ]
+    return df.select(F.col(id_col).alias("id"), word.alias("w")).select(
+        "id", F.posexplode(F.array(*buckets)).alias("band", "bucket")
     )
 
 
@@ -299,22 +331,7 @@ def lsh_bucketed_topk(
         .select("query_id", F.col("id").alias("vec_id"))
         .distinct()
     )
-    e_vec = embeddings.select("vec_id", F.col("embedding").alias("v_vec"))
-    q_vec = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
-    scored = (
-        cand.join(e_vec, "vec_id")
-        .join(F.broadcast(q_vec), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_exact_arrow(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _exact_topk(cand, embeddings, queries, k)
 
 
 # --- IVF-flat (inverted-file) ANN ---------------------------------------------
@@ -366,9 +383,7 @@ def _probe_udf(cids: np.ndarray, cmat: np.ndarray, nprobe: int):
     def probe(vecs: pd.Series) -> pd.Series:
         if not len(vecs):
             return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        iv = np.floor(x * SCALE).astype(np.int64)
-        score = (iv @ cmat.T).astype(np.float64) / np.sqrt(cnsq)
+        score = (_int_matrix(vecs) @ cmat.T).astype(np.float64) / np.sqrt(cnsq)
         order = np.argsort(-score, axis=1, kind="stable")[:, :nprobe]
         return pd.Series([cids[o].tolist() for o in order])
 
@@ -394,8 +409,7 @@ def _partial_sums_udf(cids: np.ndarray, cmat: np.ndarray):
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-            iv = np.floor(x * SCALE).astype(np.int64)
+            iv = _int_matrix(pdf["_v"])
             score = (iv @ cmat.T).astype(np.float64) / np.sqrt(cnsq)
             a = np.argsort(-score, axis=1, kind="stable")[:, 0]
             for idx in np.unique(a):
@@ -504,22 +518,7 @@ def ivf_topk(
         .select("query_id", "vec_id")
         .distinct()
     )
-    e_vec = embeddings.select("vec_id", F.col("embedding").alias("v_vec"))
-    q_vec = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
-    scored = (
-        cand.join(e_vec, "vec_id")
-        .join(F.broadcast(q_vec), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_exact_arrow(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _exact_topk(cand, embeddings, queries, k)
 
 
 # --- hamming-sketch rerank ANN --------------------------------------------------
@@ -536,79 +535,50 @@ def ivf_topk(
 # XOR+POPCNTs per pair in whole-stage codegen, and fetches floats for the top
 # ``rerank_frac`` only.  Measured at sf0.1: recall@10 = 0.995 at 10%.
 
-SKETCH_PLANES = 512  # 16 32-bit words per vector (64 bytes)
-SKETCH_WORD_BITS = 32  # 32 bits/word: 1<<31 stays far from signed-64 overflow
 RERANK_FRAC_PCT = 10  # % of the corpus exactly re-scored per query
 
 
-def _sketch_udf(dim: int, planes: int = SKETCH_PLANES):
-    """Arrow-batched sketch: ONE int64 matmul per batch against the
-    deterministic md5 sign planes (same ``plane_signs`` machinery as the
-    banded LSH — bit j of word w is ``projection(32w+j) > 0``), packed into
-    ``planes/32`` long words of 32 bits each (a 1<<63 top bit would overflow
-    signed int64 in numpy AND DuckDB — 32-bit words sidestep it).  Exact in
-    SQL: the projection is an int64 sum, the bit decision a comparison, the
-    packing a sum of 1<<j."""
-    signs = np.array(
-        [plane_signs(p, dim) for p in range(planes)], dtype=np.int64
-    ).T  # dim × planes
-    weights = np.array([1 << j for j in range(SKETCH_WORD_BITS)], dtype=np.int64)
-
-    @F.pandas_udf("array<long>")
-    def sketch(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        iv = np.floor(x * SCALE).astype(np.int64)
-        bits = (iv @ signs) > 0  # n × planes
-        words = bits.reshape(len(vecs), planes // SKETCH_WORD_BITS, SKETCH_WORD_BITS) @ weights
-        return pd.Series(list(words))
-
-    return sketch
-
-
-def _hamming_words(words: int) -> Column:
-    """XOR+POPCNT hamming distance between the packed sketch columns ``sk``
-    and ``qsk`` — ``words`` integer ops per pair, all in whole-stage codegen."""
-    return sum(
-        F.bit_count(F.col("sk").getItem(i).bitwiseXOR(F.col("qsk").getItem(i)))
-        for i in range(words)
-    )
-
-
-def _topm_exact_rerank(
-    scored: DataFrame,
+def _sketch_rerank(
+    pairs: DataFrame,
+    words: int,
     embeddings: DataFrame,
     queries: DataFrame,
     k: int,
     m: int,
 ) -> DataFrame:
-    """Shared sketch-ANN tail: keep the ``m`` hamming-nearest candidates per
-    query (ties → lowest vec_id), fetch float vectors for ONLY those rows,
-    exact integer-cosine re-score, top-k.  ``scored`` is (query_id, vec_id,
-    hamming); this is the only stage that touches the float column."""
+    """Shared sketch-ANN tail over (query_id, vec_id, sk, qsk) pairs: keep the
+    ``m`` hamming-nearest candidates per query (ties → lowest vec_id), then
+    the exact tail — the only stage that touches the float column."""
     w = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("vec_id"))
     cand = (
-        scored.withColumn("_rn", F.row_number().over(w))
+        pairs.filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", _hamming_words("sk", "qsk", words).alias("hamming"))
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= m)
         .select("query_id", "vec_id")
     )
-    e_vec = embeddings.select("vec_id", F.col("embedding").alias("v_vec"))
-    q_vec = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
-    rescored = (
-        cand.join(e_vec, "vec_id")
-        .join(F.broadcast(q_vec), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_exact_arrow(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
-        )
+    return _exact_topk(cand, embeddings, queries, k)
+
+
+def _sketch_scan_topk(
+    index: DataFrame,
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    dim: int,
+    planes: int,
+    rerank_frac_pct: int,
+) -> DataFrame:
+    """The flat sketch scan over a (vec_id, sk) side: every corpus sketch is
+    hamming-ranked against the broadcast query sketches, and the nearest
+    ``rerank_frac_pct``% of the corpus go to the exact tail."""
+    m = max(k, (index.count() * rerank_frac_pct + 99) // 100)
+    q_sk = queries.select(
+        F.col("vec_id").alias("query_id"),
+        _sketch_udf(dim, planes)(F.col("embedding")).alias("qsk"),
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-    )
+    pairs = index.select("vec_id", "sk").crossJoin(F.broadcast(q_sk))
+    return _sketch_rerank(pairs, planes // SKETCH_WORD_BITS, embeddings, queries, k, m)
 
 
 def sketch_topk(
@@ -621,24 +591,13 @@ def sketch_topk(
     query, the ``rerank_frac_pct``% of the corpus with the smallest sketch
     hamming distance (ties → lowest vec_id) is exactly re-scored; top-k of
     that.  Fully deterministic and integer/bit-exact → full DuckDB oracle.
-
-    Plan shape: the corpus side flows once through the sketch UDF (at rest
-    this column would be a precomputed index table), the tiny query sketch
-    set broadcasts, hamming is 8 XOR+POPCNTs in codegen, and only candidate
-    rows rejoin the float vectors."""
-    n = embeddings.count()
-    m = max(k, (n * rerank_frac_pct + 99) // 100)
+    The corpus sketches are computed inline; ``sketch_topk_from_index``
+    reads them from the persisted index instead."""
     dim = probe_dim(embeddings)
-    udf = _sketch_udf(dim)
-    words = SKETCH_PLANES // SKETCH_WORD_BITS
-    e_sk = embeddings.select("vec_id", udf(F.col("embedding")).alias("sk"))
-    q_sk = queries.select(F.col("vec_id").alias("query_id"), udf(F.col("embedding")).alias("qsk"))
-    scored = (
-        e_sk.crossJoin(F.broadcast(q_sk))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _hamming_words(words).alias("hamming"))
+    index = embeddings.select("vec_id", _sketch_udf(dim)(F.col("embedding")).alias("sk"))
+    return _sketch_scan_topk(
+        index, embeddings, queries, k, dim, SKETCH_PLANES, rerank_frac_pct
     )
-    return _topm_exact_rerank(scored, embeddings, queries, k, m)
 
 
 def sketch_topk_from_index(
@@ -655,19 +614,9 @@ def sketch_topk_from_index(
     far smaller table, and the float vectors are read exactly once, for the
     top-m rerank join (plan-gated in tests/test_ann_index.py).  Results are
     byte-identical to ``sketch_topk`` over the same corpus (equality-gated)."""
-    n = index.count()
-    m = max(k, (n * RERANK_FRAC_PCT + 99) // 100)
-    dim = probe_dim(queries)
-    udf = _sketch_udf(dim, planes)
-    words = planes // SKETCH_WORD_BITS
-    q_sk = queries.select(F.col("vec_id").alias("query_id"), udf(F.col("embedding")).alias("qsk"))
-    scored = (
-        index.select("vec_id", "sk")
-        .crossJoin(F.broadcast(q_sk))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _hamming_words(words).alias("hamming"))
+    return _sketch_scan_topk(
+        index, embeddings, queries, k, probe_dim(queries), planes, RERANK_FRAC_PCT
     )
-    return _topm_exact_rerank(scored, embeddings, queries, k, m)
 
 
 def ann_index_frame(
@@ -709,8 +658,7 @@ def ivf_sketch_topk(
          k-means lists — candidates are ONLY the probed lists' members
          (nprobe/nlist of the corpus, ≤12.5%);
       2. sketch: hamming-rank ONLY those candidates' 512-bit sketches
-         (8 XOR+POPCNTs each in codegen — vs ``sketch_topk`` which scans
-         every corpus sketch);
+         (vs ``sketch_topk`` which scans every corpus sketch);
       3. exact: integer-cosine re-score only the top ``RERANK_FRAC_PCT``%
          of the probed set (~1.25% of the corpus at defaults).
 
@@ -718,18 +666,14 @@ def ivf_sketch_topk(
     only makes sense where the corpus clusters — there it holds the probe
     recall at an exact-scored fraction ~8× below IVF and a sketch-scan
     volume ~8× below the flat sketch scan.  On isotropic data use
-    ``sketch_topk`` (see module docstring).  At rest both the assignment
-    (cid) and the sketch are precomputed index columns; the only per-query
-    work is steps 2-3 over the probed slice."""
-    n = embeddings.count()
+    ``sketch_topk`` (see module docstring).  This is
+    ``ivf_sketch_topk_from_index`` over the index frame built inline."""
     if nlist is None:
-        nlist = ivf_nlist(n)
+        nlist = ivf_nlist(embeddings.count())
     cids, cmat = ivf_centroids_kmeans(embeddings, nlist)
-    # corpus index side: (vec_id, cid, sketch) — at rest this is a stored
-    # index table (plans/ann_index.py persists exactly this frame); the
-    # float vectors stay unread until the exact rerank
-    e_side = ann_index_frame(embeddings, cids, cmat)
-    return _ivf_sketch_from_side(e_side, cids, cmat, embeddings, queries, n, k, SKETCH_PLANES)
+    # the centroids already fix the dimension: no second probe of the corpus
+    index = ann_index_frame(embeddings, cids, cmat, dim=cmat.shape[1])
+    return ivf_sketch_topk_from_index(index, cids, cmat, embeddings, queries, k)
 
 
 def ivf_sketch_topk_from_index(
@@ -747,30 +691,10 @@ def ivf_sketch_topk_from_index(
     probe + the probed slice's hamming scan + the exact rerank; nothing
     corpus-sized is recomputed.  Byte-identical to ``ivf_sketch_topk`` built
     with the same centroids (equality-gated in tests/test_ann_index.py)."""
-    n = index.count()
-    return _ivf_sketch_from_side(
-        index.select("vec_id", "cid", "sk"), cids, cmat, embeddings, queries,
-        n, k, planes,
-    )
-
-
-def _ivf_sketch_from_side(
-    e_side: DataFrame,
-    cids: np.ndarray,
-    cmat: np.ndarray,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    n: int,
-    k: int,
-    planes: int,
-) -> DataFrame:
-    """Shared IVF→sketch→exact body over an inline or persisted index side."""
     nlist = len(cids)
     nprobe = ivf_nprobe(nlist)
     probe_udf = _probe_udf(cids, cmat, nprobe)
-    dim = probe_dim(queries)
-    sk_udf = _sketch_udf(dim, planes)
-    words = planes // SKETCH_WORD_BITS
+    sk_udf = _sketch_udf(probe_dim(queries), planes)
     probes = queries.select(
         F.col("vec_id").alias("query_id"),
         sk_udf(F.col("embedding")).alias("qsk"),
@@ -782,14 +706,10 @@ def _ivf_sketch_from_side(
     # ordering would need to be PERFECT (measured: recall 0.74 at m=k vs
     # 0.98 at m≈2.5k on the clustered fixture) — 4·k is the slack that lets
     # hamming misrankings wash out in the exact rerank.
-    expected_probed = max(1, (n * nprobe) // nlist)
+    expected_probed = max(1, (index.count() * nprobe) // nlist)
     m = max(4 * k, (expected_probed * RERANK_FRAC_PCT + 99) // 100)
-    scored = (
-        e_side.join(F.broadcast(probes), "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _hamming_words(words).alias("hamming"))
-    )
-    return _topm_exact_rerank(scored, embeddings, queries, k, m)
+    pairs = index.select("vec_id", "cid", "sk").join(F.broadcast(probes), "cid")
+    return _sketch_rerank(pairs, planes // SKETCH_WORD_BITS, embeddings, queries, k, m)
 
 
 def sketch_near_dup_max_hamming(threshold: float) -> int:
@@ -823,6 +743,19 @@ def near_dup_blocks(parallelism: int) -> int:
     return b
 
 
+def _block_pair_keys(blocks: int) -> tuple[Column, Column]:
+    """Exploded block-pair keys of a row in block ``blk``: the lo side owns
+    pairs (blk, j) for j ≥ blk, the hi side (i, blk) for i ≤ blk, so an
+    unordered pair of rows in blocks (p, q), p ≤ q, meets in exactly one
+    group: pk = p·B + q."""
+    blk = F.col("blk")
+    lo = F.explode(
+        F.transform(F.sequence(blk, F.lit(blocks - 1)), lambda j: blk * blocks + j)
+    )
+    hi = F.explode(F.transform(F.sequence(F.lit(0), blk), lambda i: i * blocks + blk))
+    return lo, hi
+
+
 def _near_dup_pairs_grouped_arrow(
     embeddings: DataFrame,
     threshold: float,
@@ -847,10 +780,8 @@ def _near_dup_pairs_grouped_arrow(
     exact verify reuses the ``cosine_exact_arrow`` arithmetic verbatim:
     int64 floor-scaled dot/norms, one IEEE double divide.
 
-    Each row lands in block ``xxhash64(id) % B``; the lo side is replicated
-    to block-pairs (b, b..B-1), the hi side to (0..b, b) — every unordered
-    pair meets in exactly one group (same enumeration as
-    ``sketch_near_dup_candidates``).
+    Each row lands in block ``xxhash64(id) % B`` and is replicated to its
+    ``_block_pair_keys`` groups (shared with ``sketch_near_dup_candidates``).
     An explicit ``repartition(n, pk)`` pins the exchange width: without it
     AQE coalesces the small-byte/huge-compute shuffle to ~2 partitions
     (64 MB advisory) and the pair pass runs nearly serial — the single
@@ -861,9 +792,7 @@ def _near_dup_pairs_grouped_arrow(
         blocks = near_dup_blocks(par)
     npart = max(2 * par, 8)
     dim = probe_dim(embeddings)
-    signs = np.array(
-        [plane_signs(p, dim) for p in range(SKETCH_PLANES)], dtype=np.int64
-    ).T  # dim × planes
+    signs = _sign_matrix(dim, SKETCH_PLANES)
     B, mh, thr = int(blocks), int(max_hamming), float(threshold)
     id_dt = embeddings.schema["vec_id"].dataType.simpleString()
 
@@ -872,26 +801,9 @@ def _near_dup_pairs_grouped_arrow(
         F.col("embedding").alias("vec"),
         F.pmod(F.xxhash64(F.col("vec_id")), F.lit(B)).alias("blk"),
     )
-    lo = base.select(
-        "id",
-        "vec",
-        F.explode(
-            F.transform(
-                F.sequence(F.col("blk"), F.lit(B - 1)),
-                lambda j: F.col("blk") * B + j,
-            )
-        ).alias("pk"),
-    ).repartition(npart, "pk")
-    hi = base.select(
-        "id",
-        "vec",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("blk")),
-                lambda i: i * B + F.col("blk"),
-            )
-        ).alias("pk"),
-    ).repartition(npart, "pk")
+    lo_pk, hi_pk = _block_pair_keys(B)
+    lo = base.select("id", "vec", lo_pk.alias("pk")).repartition(npart, "pk")
+    hi = base.select("id", "vec", hi_pk.alias("pk")).repartition(npart, "pk")
 
     def _empty() -> pd.DataFrame:
         return pd.DataFrame(
@@ -909,12 +821,7 @@ def _near_dup_pairs_grouped_arrow(
         same_block = (pk // B) == (pk % B)
         ida = left["id"].to_numpy()
         idb = right["id"].to_numpy()
-        iva = np.floor(
-            np.stack([np.asarray(v, dtype=np.float64) for v in left["vec"]]) * SCALE
-        ).astype(np.int64)
-        ivb = np.floor(
-            np.stack([np.asarray(v, dtype=np.float64) for v in right["vec"]]) * SCALE
-        ).astype(np.int64)
+        iva, ivb = _int_matrix(left["vec"]), _int_matrix(right["vec"])
         ba = ((iva @ signs) > 0).astype(np.float32)
         bb = ((ivb @ signs) > 0).astype(np.float32)
         ca = ba.sum(axis=1)
@@ -1018,41 +925,25 @@ def sketch_near_dup_candidates(
         udf(F.col(vec_col)).alias("sk"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(blocks)).alias("blk"),
     )
-    # lo side owns block-pairs (blk, j) for j ≥ blk; hi side (i, blk) for
-    # i ≤ blk — an unordered pair of rows in blocks (p, q), p ≤ q, meets in
-    # exactly one join group: pk = p·B + q.
+    lo_pk, hi_pk = _block_pair_keys(blocks)
     lo = sk.select(
         F.col("id").alias("id_a"),
         F.col("sk").alias("sk_a"),
         F.col("blk").alias("blk_a"),
-        F.explode(
-            F.transform(
-                F.sequence(F.col("blk"), F.lit(blocks - 1)),
-                lambda j: F.col("blk") * blocks + j,
-            )
-        ).alias("pk"),
+        lo_pk.alias("pk"),
     )
     hi = sk.select(
         F.col("id").alias("id_b"),
         F.col("sk").alias("sk_b"),
         F.col("blk").alias("blk_b"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("blk")),
-                lambda i: i * blocks + F.col("blk"),
-            )
-        ).alias("pk"),
-    )
-    hamming = sum(
-        F.bit_count(F.col("sk_a").getItem(i).bitwiseXOR(F.col("sk_b").getItem(i)))
-        for i in range(words)
+        hi_pk.alias("pk"),
     )
     return (
         lo.join(hi, "pk")
         # same-block group (pk = (b,b)) holds every ordered pair — halve it;
         # cross-block groups already see each unordered pair exactly once
         .filter((F.col("blk_a") != F.col("blk_b")) | (F.col("id_a") < F.col("id_b")))
-        .filter(hamming <= F.lit(max_hamming))
+        .filter(_hamming_words("sk_a", "sk_b", words) <= F.lit(max_hamming))
         # cross-block pairs carry block order, not id order — normalize
         .select(
             F.least("id_a", "id_b").alias("id_a"),

@@ -237,7 +237,7 @@ def _index_pass(
     metrics_dir = os.path.join(out_dir, "metrics")
 
     bucketed = ann_index_frame(
-        embeddings, cids, cmat, planes, id_col, vec_col
+        embeddings, cids, cmat, planes, id_col, vec_col, dim
     ).withColumn("bucket", F.pmod(F.xxhash64("vec_id"), F.lit(num_buckets)).cast("int"))
 
     # bucket list from the id column only — never runs the sketch UDF

@@ -133,9 +133,8 @@ def test_incremental_shard_indexes_against_corpus_quantizer(spark, emb, tmp_path
         similarity.ivf_sketch_topk_from_index(union_index, cids, cmat, emb, q, k=10)
     )
     inline = _rows(
-        similarity._ivf_sketch_from_side(
-            similarity.ann_index_frame(emb, cids, cmat),
-            cids, cmat, emb, q, emb.count(), 10, similarity.SKETCH_PLANES,
+        similarity.ivf_sketch_topk_from_index(
+            similarity.ann_index_frame(emb, cids, cmat), cids, cmat, emb, q, k=10
         )
     )
     assert stored == inline

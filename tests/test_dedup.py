@@ -368,9 +368,9 @@ def test_decontamination_overlap_semantics(spark):
     assert rows == {1: (5, 2), 3: (1, 1)}
 
 
-def test_minhash_incremental_equals_filtered_full(spark):
-    """Incremental shard-vs-corpus pairs = the full-corpus pair set filtered
-    to >=1 new-side doc; old x old near-dups (20,21) are NOT regenerated."""
+def _incremental_frames(spark):
+    """(new shard, corpus) with disjoint doc_ids: one old x old near-dup
+    (20, 21) and one new x old near-dup (30 vs 20/21)."""
     base = "one two three four five six seven eight nine ten"
     corpus = spark.createDataFrame(
         [(20, base), (21, base), (22, "nothing in common with anything else at all")],
@@ -380,12 +380,23 @@ def test_minhash_incremental_equals_filtered_full(spark):
         [(30, base + " eleven"), (31, "fresh content unlike every other document here")],
         "doc_id long, text string",
     )
-    inc = {
+    return new, corpus
+
+
+def _incremental_pairs(new, corpus):
+    return {
         (r["doc_a"], r["doc_b"]): (r["n_inter"], r["n_union"])
         for r in dedup.minhash_incremental_pairs(
             new, corpus, shingle_k=3, threshold_pct=50
         ).collect()
     }
+
+
+def test_minhash_incremental_equals_filtered_full(spark):
+    """Incremental shard-vs-corpus pairs = the full-corpus pair set filtered
+    to >=1 new-side doc; old x old near-dups (20,21) are NOT regenerated."""
+    new, corpus = _incremental_frames(spark)
+    inc = _incremental_pairs(new, corpus)
     full = {
         (r["doc_a"], r["doc_b"]): (r["n_inter"], r["n_union"])
         for r in dedup.minhash_near_dup_pairs(
@@ -397,6 +408,20 @@ def test_minhash_incremental_equals_filtered_full(spark):
     assert inc == expected
     assert (20, 21) in full and (20, 21) not in inc  # old x old stays untouched
     assert any(30 in p for p in inc)  # the new near-dup IS found
+
+
+def test_minhash_incremental_debug_overlap_check(spark, monkeypatch):
+    """SPARK_GRAFT_DEBUG_CHECKS turns the disjoint-doc_id contract into an
+    explicit error on overlap, and changes nothing on disjoint inputs."""
+    new, corpus = _incremental_frames(spark)
+    unchecked = _incremental_pairs(new, corpus)
+    monkeypatch.setenv("SPARK_GRAFT_DEBUG_CHECKS", "1")
+    assert _incremental_pairs(new, corpus) == unchecked and unchecked
+    with pytest.raises(AssertionError, match="share doc_ids"):
+        dedup.minhash_incremental_pairs(
+            new.unionByName(corpus.filter(F.col("doc_id") == 20)), corpus,
+            shingle_k=3, threshold_pct=50,
+        )
 
 
 def test_duplicate_clusters_empty_and_self_pair_edges(spark):

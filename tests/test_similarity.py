@@ -54,8 +54,11 @@ def test_lsh_results_subset_of_exact_candidates(spark, emb):
 
 def test_numpy_buckets_equal_column_buckets(spark, emb):
     """The Arrow/numpy bucket path (production) must equal the pure-Column
-    integer formulation bit-for-bit — both mirror the DuckDB oracle."""
+    integer formulation bit-for-bit — both mirror the DuckDB oracle.  An
+    empty frame has no dimension to probe and must say so."""
     dim = similarity.probe_dim(emb)
+    with pytest.raises(ValueError, match="frame empty"):
+        similarity.probe_dim(emb.filter(F.lit(False)))
     fast = {
         (r["id"], r["band"]): r["bucket"]
         for r in similarity.lsh_band_buckets(emb, dim).collect()

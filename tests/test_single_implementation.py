@@ -37,7 +37,9 @@ REMOVED_OPTIONS = {
 #: module attributes whose only job was to pick between implementations
 REMOVED_NAMES = {
     "operators.text": ("token_stats", "quality_scores"),
-    "operators.similarity": ("ann_topk", "ANN_METHODS"),
+    "operators.similarity": (
+        "ann_topk", "ANN_METHODS", "_band_buckets_udf", "_ivf_sketch_from_side",
+    ),
     "plans.segmentation": ("_parse_segment_udf", "_SEGMENT_PARSE"),
 }
 

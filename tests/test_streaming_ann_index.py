@@ -79,9 +79,8 @@ def test_stream_rows_equal_batch_and_union_queries(spark):
         stored = similarity.ivf_sketch_topk_from_index(
             union_index, cids, cmat, emb, queries, k=10
         ).collect()
-        inline = similarity._ivf_sketch_from_side(
-            similarity.ann_index_frame(emb, cids, cmat),
-            cids, cmat, emb, queries, emb.count(), 10, similarity.SKETCH_PLANES,
+        inline = similarity.ivf_sketch_topk_from_index(
+            similarity.ann_index_frame(emb, cids, cmat), cids, cmat, emb, queries, k=10
         ).collect()
         key = lambda r: (r["query_id"], r["rank"], r["vec_id"], r["cos_sim"])
         assert sorted(map(key, stored)) == sorted(map(key, inline))
