@@ -336,19 +336,12 @@ def lsh_bucketed_topk(
 
 # --- IVF-flat (inverted-file) ANN ---------------------------------------------
 
-def ivf_centroids(
-    embeddings: DataFrame,
-    nlist: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_centroids(embeddings: DataFrame, nlist: int) -> DataFrame:
     """Deterministic quantizer INIT: the ``nlist`` corpus vectors with the
     smallest md5(vec_id) (a reproducible uniform sample — no RNG state,
     exactly mirrorable in SQL).  ``ivf_centroids_kmeans`` refines these."""
     return (
-        embeddings.select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("c_vec")
-        )
+        embeddings.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("c_vec"))
         .orderBy(F.md5(F.col("cid").cast("string")), "cid")
         .limit(nlist)
     )
@@ -433,8 +426,6 @@ def ivf_centroids_kmeans(
     embeddings: DataFrame,
     nlist: int,
     iters: int = LLOYD_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ):
     """K-means-refined coarse quantizer, ALL integer-exact (so the DuckDB
     oracle can replay it bit-for-bit):
@@ -452,15 +443,15 @@ def ivf_centroids_kmeans(
     only the nlist × dim matrix, tiny relative to the corpus at any scale
     (1000 × dim at 10^6 vectors); measured 6.6 s → ~1 s for 2 rounds at
     sf0.1 vs the posexplode(n×dim) shape."""
-    dim = probe_dim(embeddings, vec_col)
-    init = ivf_centroids(embeddings, nlist, id_col, vec_col).select(
+    dim = probe_dim(embeddings)
+    init = ivf_centroids(embeddings, nlist).select(
         "cid", _ivec(F.col("c_vec")).alias("civ")
     )
     rows = sorted(init.collect(), key=lambda r: r["cid"])
     cids = np.array([r["cid"] for r in rows], dtype=np.int64)
     cmat = np.array([r["civ"] for r in rows], dtype=np.int64)
 
-    corpus = embeddings.select(F.col(vec_col).alias("_v"))
+    corpus = embeddings.select(F.col("embedding").alias("_v"))
     for _ in range(iters):
         partials = corpus.mapInPandas(
             _partial_sums_udf(cids, cmat), schema="cid long, s array<long>, c long"
@@ -624,8 +615,6 @@ def ann_index_frame(
     cids: np.ndarray,
     cmat: np.ndarray,
     planes: int = SKETCH_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
     """The at-rest ANN index row set — (vec_id, cid, sk) — in ONE map-only
@@ -636,12 +625,12 @@ def ann_index_frame(
     input (probing it would aggregate an unbounded frame)."""
     assign_udf = _probe_udf(cids, cmat, 1)
     if dim is None:
-        dim = probe_dim(embeddings, vec_col)
+        dim = probe_dim(embeddings)
     sk_udf = _sketch_udf(dim, planes)
     return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.element_at(assign_udf(F.col(vec_col)), 1).alias("cid"),
-        sk_udf(F.col(vec_col)).alias("sk"),
+        "vec_id",
+        F.element_at(assign_udf(F.col("embedding")), 1).alias("cid"),
+        sk_udf(F.col("embedding")).alias("sk"),
     )
 
 

@@ -3,23 +3,30 @@
 ``sketch_topk``/``ivf_sketch_topk`` document their corpus side as "at rest
 this is a stored index table"; this module makes that real.  At 100 TB of
 embeddings the sketch+assignment pass is itself a large job, so the build
-follows the same resumable shape as extraction (plans/resume.py) and
-curation (plans/curate.py):
+follows the same resumable shape as extraction and curation, on the one
+shared resume manifest (plans/resume.py):
 
-  * **step 1 — quantizer (global, idempotent)**: integer-exact k-means
-    centroids over the FULL corpus, written once to ``<out>/centroids``
-    with a one-row ``<out>/meta`` table recording (n, nlist, planes, dim).
-    Per-bucket resume is only valid against FIXED centroids — a restart
-    therefore REUSES stored centroids when the meta row matches the
-    requested dials, and recomputes+overwrites when it doesn't (a partial
-    centroid write fails the readback and recomputes).
-  * **step 2 — index rows (per-bucket, resumable)**: one map-only Arrow
-    pass emits (vec_id, cid, sk) — ``operators.similarity.ann_index_frame``,
-    the exact frame ``ivf_sketch_topk`` builds inline — bucketed by
-    ``pmod(xxhash64(vec_id), B)`` (id-derived: rows are independent, no
-    cross-row grouping to co-locate), written ``partitionBy(bucket)`` with
-    dynamic partition overwrite plus one lineage row per (run_id, bucket).
-    A crash between buckets resumes with completed buckets untouched.
+  * **step 1 — quantizer (global, idempotent), resolved once**: the source
+    is ``centroids_from`` when given (a shard indexed against the corpus's
+    fixed quantizer) and ``out_dir`` itself otherwise.  Its one-row meta
+    table (n, nlist, planes, dim, num_buckets) is read once through the
+    shared state reader; the stored integer-exact k-means centroids are
+    reused when the source is ``centroids_from`` or its meta matches the
+    requested dials, and recomputed over the FULL corpus otherwise.
+    Per-bucket resume is only valid against FIXED centroids, so one layout
+    guard refuses any change to a dir that already holds indexed buckets,
+    and centroids and meta are then written in one place — meta last, as
+    the commit marker (a partial centroid write re-runs the quantizer).
+  * **step 2 — index rows (per-bucket, resumable)**: ``bucketed_index_rows``
+    — the (vec_id, cid, sk) rows of ``operators.similarity.ann_index_frame``
+    (the exact frame ``ivf_sketch_topk`` builds inline) with the resume
+    bucket of vec_id (id-derived: rows are independent, no cross-row
+    grouping to co-locate) — written ``partitionBy(bucket)`` with dynamic
+    partition overwrite plus one manifest row per (run_id, bucket).  A
+    crash between buckets resumes with completed buckets untouched.  The
+    streaming shard build (a stateless select over a readStream, since
+    list assignment and sketch are per-row maps against fixed centroids)
+    emits the same rows through the same function.
 
 Query side: ``load_ann_index`` returns the index frame + the centroid
 matrix; ``similarity.sketch_topk_from_index`` /
@@ -45,18 +52,10 @@ from ..operators.similarity import (
     ivf_nlist,
     probe_dim,
 )
-from .resume import select_unfinished, write_metrics, write_partitioned
+from . import resume
 
-DEFAULT_BUCKETS = 64
-
-
-def _has_metrics(spark: SparkSession, metrics_dir: str) -> bool:
-    """True iff ANY bucket (any run_id) has a lineage row — the marker that
-    index rows exist on disk and the quantizer is no longer changeable."""
-    try:
-        return not spark.read.parquet(metrics_dir).isEmpty()
-    except Exception:
-        return False
+#: the build dials a stored index is bound to, in meta-table column order
+_LAYOUT = ("n", "nlist", "planes", "dim", "num_buckets")
 
 
 def _centroids_frame(
@@ -64,6 +63,14 @@ def _centroids_frame(
 ) -> DataFrame:
     rows = [(int(c), [int(x) for x in cmat[i]]) for i, c in enumerate(cids)]
     return spark.createDataFrame(rows, "cid long, civ array<long>")
+
+
+def _read_layout(spark: SparkSession, out_dir: str) -> tuple | None:
+    meta = resume.read_state(spark, os.path.join(out_dir, "meta"))
+    if meta is None:
+        return None
+    row = meta.collect()[0]
+    return tuple(row[k] for k in _LAYOUT)
 
 
 def load_centroids(spark: SparkSession, centroids_dir: str):
@@ -89,18 +96,36 @@ def load_ann_index(spark: SparkSession, out_dir: str):
     return index, cids, cmat, meta
 
 
+def bucketed_index_rows(
+    embeddings: DataFrame,
+    cids: np.ndarray,
+    cmat: np.ndarray,
+    dim: int,
+    planes: int,
+    num_buckets: int,
+) -> DataFrame:
+    """(vec_id, cid, sk, bucket) index rows for ``embeddings`` against a
+    fixed quantizer — the batch build's step 2, and as is the streaming
+    shard build over a readStream: ``load_ann_index`` supplies ``cids``/
+    ``cmat`` and ``meta['dim']``/``meta['planes']`` (``dim`` is explicit
+    because a streaming frame cannot be probed for it).  The k-means refit
+    stays a batch job: refitting inside a stream would assign new vectors
+    to lists inconsistent with the corpus rows they are probed with."""
+    return resume.with_bucket(
+        ann_index_frame(embeddings, cids, cmat, planes, dim=dim), "vec_id", num_buckets
+    )
+
+
 def run_index_build_checkpointed(
     spark: SparkSession,
     embeddings: DataFrame,
     out_dir: str,
     run_id: str,
-    num_buckets: int = DEFAULT_BUCKETS,
+    num_buckets: int = resume.DEFAULT_BUCKETS,
     nlist: int | None = None,
     planes: int = SKETCH_PLANES,
     max_buckets_this_run: int | None = None,
     centroids_from: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> dict:
     """Build (or resume building) the persisted ANN index for ``embeddings``
     under ``out_dir`` (layout: index/, centroids/, meta/, metrics/).
@@ -116,172 +141,101 @@ def run_index_build_checkpointed(
     are the caller's contract, as in minhash_incremental_pairs)."""
     index_dir = os.path.join(out_dir, "index")
     centroids_dir = os.path.join(out_dir, "centroids")
-    meta_dir = os.path.join(out_dir, "meta")
     metrics_dir = os.path.join(out_dir, "metrics")
 
     t0 = time.monotonic()
     n = embeddings.count()
-    if nlist is None:
-        nlist = ivf_nlist(n)
-    dim = probe_dim(embeddings, vec_col)
+    dim = probe_dim(embeddings)
 
-    def _guard_layout(stored: dict, requested: tuple) -> None:
-        # A dial change would RECOMPUTE the quantizer — fatal if any bucket
-        # is already indexed against the old one (done buckets keep old
-        # cids/sketches while new buckets get new ones: a silently torn
-        # index).  Refuse instead; a fresh out_dir is the correct move.
-        keys = ("n", "nlist", "planes", "dim", "num_buckets")
-        if tuple(stored[k] for k in keys) != requested and _has_metrics(
-            spark, metrics_dir
-        ):
-            raise ValueError(
-                f"{out_dir} holds buckets indexed under {stored}; this "
-                f"invocation requests {dict(zip(keys, requested))} — a "
-                "quantizer/layout change cannot resume; use a fresh out_dir"
-            )
-
-    # step 1: the quantizer must be FIXED before any bucket is written —
-    # reuse stored centroids iff the meta dials match this invocation
-    centroids_reused = False
-    if centroids_from is not None:
-        src_meta = spark.read.parquet(
-            os.path.join(centroids_from, "meta")
-        ).collect()[0].asDict()
-        if (src_meta["planes"], src_meta["dim"]) != (planes, dim):
+    # step 1: resolve the quantizer once — the FIXED centroids every bucket
+    # is indexed against
+    stored = _read_layout(spark, out_dir)
+    if centroids_from is None:
+        source = out_dir
+        layout = (n, ivf_nlist(n) if nlist is None else nlist, planes, dim, num_buckets)
+        reused = stored == layout
+    else:
+        source = centroids_from
+        src = _read_layout(spark, centroids_from)
+        if src is None:
+            raise ValueError(f"no quantizer at {centroids_from}")
+        if src[2:4] != (planes, dim):
             raise ValueError(
                 f"quantizer at {centroids_from} was built with "
-                f"planes={src_meta['planes']}, dim={src_meta['dim']} — "
+                f"planes={src[2]}, dim={src[3]} — "
                 f"this shard requested planes={planes}, dim={dim}"
             )
-        cids, cmat = load_centroids(spark, os.path.join(centroids_from, "centroids"))
-        nlist = int(src_meta["nlist"])
-        centroids_reused = True
-        # the mirror meta keeps the SOURCE quantizer provenance (n/nlist/
-        # planes/dim) but the SHARD's bucket layout; a re-attempt against a
-        # rebuilt corpus quantizer must not resume this shard's buckets
-        mirror = (
-            int(src_meta["n"]), nlist, planes, dim, num_buckets,
-        )
-        try:
-            local = spark.read.parquet(meta_dir).collect()[0].asDict()
-        except Exception:
-            local = None
-        if local is not None:
-            _guard_layout(local, mirror)
-        # mirror the corpus quantizer verbatim into the shard dir so
-        # load_ann_index(shard_dir) is self-contained
-        _centroids_frame(spark, cids, cmat).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(centroids_dir)
-        spark.createDataFrame(
-            [mirror], "n long, nlist int, planes int, dim int, num_buckets int"
-        ).coalesce(1).write.mode("overwrite").parquet(meta_dir)
-        return _index_pass(
-            spark, embeddings, cids, cmat, out_dir, run_id, num_buckets,
-            planes, max_buckets_this_run, id_col, vec_col,
-            t0, n, nlist, dim, centroids_reused,
-        )
-    requested = (n, nlist, planes, dim, num_buckets)
-    try:
-        meta = spark.read.parquet(meta_dir).collect()[0].asDict()
-    except Exception:
-        meta = None
-    if meta is not None and tuple(
-        meta[k] for k in ("n", "nlist", "planes", "dim", "num_buckets")
-    ) == requested:
-        cids, cmat = load_centroids(spark, centroids_dir)
-        centroids_reused = True
+        # the shard keeps the SOURCE quantizer provenance (n/nlist/planes/
+        # dim) but its OWN bucket layout: a re-attempt against a rebuilt
+        # corpus quantizer must not resume this shard's buckets
+        layout = src[:4] + (num_buckets,)
+        reused = True
+    if stored != layout:
+        # a changed quantizer or layout is fatal once any bucket is indexed
+        # against the stored one (done buckets would keep old cids/sketches
+        # while new buckets get new ones: a silently torn index)
+        indexed = resume.read_state(spark, metrics_dir)
+        if indexed is not None and not indexed.isEmpty():
+            raise ValueError(
+                f"{out_dir} holds buckets indexed under "
+                f"{stored and dict(zip(_LAYOUT, stored))}; this invocation requests "
+                f"{dict(zip(_LAYOUT, layout))} — a quantizer/layout change "
+                "cannot resume; use a fresh out_dir"
+            )
+    if reused:
+        cids, cmat = load_centroids(spark, os.path.join(source, "centroids"))
     else:
-        if meta is not None:
-            _guard_layout(meta, requested)
-        cids, cmat = ivf_centroids_kmeans(embeddings, nlist, id_col=id_col, vec_col=vec_col)
+        cids, cmat = ivf_centroids_kmeans(embeddings, layout[1])
+    if source != out_dir or not reused:
+        # a shard mirrors the corpus quantizer verbatim, so load_ann_index
+        # on its dir is self-contained; meta is written AFTER the
+        # centroids — its presence+match is the commit marker
         _centroids_frame(spark, cids, cmat).coalesce(1).write.mode(
             "overwrite"
         ).parquet(centroids_dir)
-        # meta is written AFTER the centroids: its presence+match is the
-        # commit marker for step 1 (a crash between the two writes re-runs
-        # the quantizer, never resumes buckets against torn centroids)
         spark.createDataFrame(
-            [requested], "n long, nlist int, planes int, dim int, num_buckets int"
-        ).coalesce(1).write.mode("overwrite").parquet(meta_dir)
+            [layout], "n long, nlist int, planes int, dim int, num_buckets int"
+        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "meta"))
 
-    return _index_pass(
-        spark, embeddings, cids, cmat, out_dir, run_id, num_buckets,
-        planes, max_buckets_this_run, id_col, vec_col,
-        t0, n, nlist, dim, centroids_reused,
+    # step 2: bucketed, resumable index rows; the bucket list comes from the
+    # id column only — it never runs the sketch UDF
+    done, keep = resume.select_unfinished(
+        spark,
+        metrics_dir,
+        run_id,
+        resume.with_bucket(embeddings, "vec_id", num_buckets),
+        max_buckets_this_run,
     )
-
-
-def _index_pass(
-    spark: SparkSession,
-    embeddings: DataFrame,
-    cids: np.ndarray,
-    cmat: np.ndarray,
-    out_dir: str,
-    run_id: str,
-    num_buckets: int,
-    planes: int,
-    max_buckets_this_run: int | None,
-    id_col: str,
-    vec_col: str,
-    t0: float,
-    n: int,
-    nlist: int,
-    dim: int,
-    centroids_reused: bool,
-) -> dict:
-    """Step 2 of the build — the bucketed, resumable (vec_id, cid, sk) map
-    pass + lineage — shared by the fresh-quantizer and ``centroids_from``
-    branches of ``run_index_build_checkpointed``."""
-    index_dir = os.path.join(out_dir, "index")
-    metrics_dir = os.path.join(out_dir, "metrics")
-
-    bucketed = ann_index_frame(
-        embeddings, cids, cmat, planes, id_col, vec_col, dim
-    ).withColumn("bucket", F.pmod(F.xxhash64("vec_id"), F.lit(num_buckets)).cast("int"))
-
-    # bucket list from the id column only — never runs the sketch UDF
-    id_buckets = embeddings.select(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_buckets)).cast("int").alias("bucket")
+    resume.write_partitioned(
+        bucketed_index_rows(embeddings, cids, cmat, dim, planes, num_buckets).filter(keep),
+        index_dir,
     )
-    done, keep = select_unfinished(spark, metrics_dir, run_id, id_buckets, max_buckets_this_run)
-    write_partitioned(bucketed.filter(keep), index_dir)
-
-    wall_ms = int((time.monotonic() - t0) * 1000)
     # lineage from the WRITTEN rows (durable truth, no UDF recompute), with
-    # the bucket filters BEFORE the aggregation so partition pruning reads
-    # only this run's buckets — post-agg filtering would scan every bucket
-    # of the index just to emit metrics for the few that resumed
-    written = spark.read.parquet(index_dir).filter(keep)
-    metrics = (
-        written.groupBy("bucket")
+    # the bucket filter BEFORE the aggregation so partition pruning reads
+    # only this run's buckets
+    counts = (
+        spark.read.parquet(index_dir)
+        .filter(keep)
+        .groupBy("bucket")
         .agg(
             F.count("*").alias("vec_count"),
             F.min("vec_id").alias("min_vec_id"),
             F.max("vec_id").alias("max_vec_id"),
         )
-        .select(
-            F.col("bucket").alias("partition_key"),
-            F.lit(run_id).alias("run_id"),
-            "vec_count",
-            "min_vec_id",
-            "max_vec_id",
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-        )
     )
-    write_metrics(metrics, metrics_dir)
-
-    manifest = spark.read.parquet(metrics_dir).filter(F.col("run_id") == run_id)
-    total = manifest.agg(F.sum("vec_count").alias("v")).collect()[0]["v"]
+    wall_ms = resume.write_manifest(counts, metrics_dir, run_id, t0)
+    buckets, totals = resume.manifest_totals(
+        spark, metrics_dir, run_id, {"vectors_indexed": "vec_count"}
+    )
     return {
         "run_id": run_id,
         "n": n,
-        "nlist": nlist,
+        "nlist": layout[1],
         "planes": planes,
         "dim": dim,
-        "centroids_reused": centroids_reused,
+        "centroids_reused": reused,
         "buckets_done_before": len(done),
-        "buckets_done_total": manifest.select("partition_key").distinct().count(),
-        "vectors_indexed": int(total or 0),
+        "buckets_done_total": buckets,
+        **totals,
         "wall_ms": wall_ms,
     }

@@ -4,15 +4,16 @@ gate (heuristic signals + the hashing-trick classifier) → language keep →
 context-window chunking → partitioned chunk output + per-bucket lineage.
 
 The one design decision that makes this resume-safe AND globally correct is
-the bucket key: documents bucket by CONTENT hash (``pmod(xxhash64(md5(text)),
-B)``), not by doc_id — every exact copy of a text lands in the same bucket,
-so the per-bucket canonical election (min doc_id per md5 group) is the
-GLOBAL election, bucket by bucket, with no cross-bucket state.  Buckets are
-then independently processable, skippable on resume (metrics manifest per
-(run_id, bucket), dynamic-partition-overwrite — retries replace, never
-duplicate), and uniformly sized at any corpus scale (content hashes don't
-skew).  Near-dup dedup stays the dedup_job's incremental-manifest domain;
-this pipeline is the exact-dedup + gate + chunk pass a shard runs first.
+the bucket key: documents bucket by CONTENT hash (the resume bucket of
+``md5(text)``, plans/resume.py), not by doc_id — every exact copy of a text
+lands in the same bucket, so the per-bucket canonical election (min doc_id
+per md5 group) is the GLOBAL election, bucket by bucket, with no
+cross-bucket state.  Buckets are then independently processable, skippable
+on resume (the shared resume manifest: one row per (run_id, bucket),
+dynamic-partition-overwrite — retries replace, never duplicate), and
+uniformly sized at any corpus scale (content hashes don't skew).  Near-dup
+dedup stays the dedup_job's incremental-manifest domain; this pipeline is
+the exact-dedup + gate + chunk pass a shard runs first.
 """
 
 from __future__ import annotations
@@ -24,9 +25,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .resume import select_unfinished, write_metrics, write_partitioned
-
-DEFAULT_BUCKETS = 64
+from . import resume
 
 #: English-signal preamble planted on 3/4 of synthetic source ids: the raw
 #: synthetic vocabulary carries no stopword signal (language-ID → "und" on
@@ -69,13 +68,10 @@ def synthetic_curation_corpus(spark: SparkSession, n_docs: int) -> DataFrame:
     return base.mapInPandas(gen, "doc_id long, text string")
 
 
-def with_content_bucket(df: DataFrame, num_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+def with_content_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     """Content-derived stable bucket: identical texts → identical bucket, on
     any run at any cluster size (never placement-dependent)."""
-    return df.withColumn(
-        "bucket",
-        F.pmod(F.xxhash64(F.md5("text")), F.lit(num_buckets)).cast("int"),
-    )
+    return resume.with_bucket(df, F.md5("text"), num_buckets)
 
 
 def chunk_stats_closed_form(
@@ -105,12 +101,10 @@ def chunk_stats_closed_form(
 def curation_metrics(
     survivors: DataFrame,
     per_bucket_in: DataFrame,
-    run_id: str,
-    wall_ms: int,
     max_words: int,
     stride: int,
 ) -> DataFrame:
-    """One lineage row per (run_id, bucket): input/canonical/kept doc counts
+    """One (bucket, counts…) row per bucket: input/canonical/kept doc counts
     and chunk/word output totals.  ``docs_in``/``docs_canonical`` come from
     the pre-gate frame so the gate's drop rate is auditable per bucket;
     chunk totals come from the closed form over doc word counts (no second
@@ -126,14 +120,12 @@ def curation_metrics(
     return (
         per_bucket_in.join(out, "bucket", "left")
         .select(
-            F.col("bucket").alias("partition_key"),
-            F.lit(run_id).alias("run_id"),
+            "bucket",
             "docs_in",
             "docs_canonical",
             F.coalesce("docs_kept", F.lit(0)).cast("long").alias("docs_kept"),
             F.coalesce("chunks_out", F.lit(0)).cast("long").alias("chunks_out"),
             F.coalesce("words_out", F.lit(0)).cast("long").alias("words_out"),
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
         )
     )
 
@@ -188,7 +180,7 @@ def run_curation_checkpointed(
     docs: DataFrame,
     out_dir: str,
     run_id: str,
-    num_buckets: int = DEFAULT_BUCKETS,
+    num_buckets: int = resume.DEFAULT_BUCKETS,
     max_buckets_this_run: int | None = None,
     keep_langs: tuple = ("en",),
     max_words: int = 512,
@@ -228,7 +220,7 @@ def run_curation_checkpointed(
     t0 = time.monotonic()
     bucketed = with_content_bucket(docs.select("doc_id", "text"), num_buckets)
 
-    done, keep = select_unfinished(spark, metrics_dir, run_id, bucketed, max_buckets_this_run)
+    done, keep = resume.select_unfinished(spark, metrics_dir, run_id, bucketed, max_buckets_this_run)
     todo = bucketed.filter(keep)
 
     # canonical election: global because every md5 group is bucket-local
@@ -244,38 +236,30 @@ def run_curation_checkpointed(
     kept = chunk_documents(
         survivors, max_words=max_words, stride=stride, passthrough=("bucket",)
     )
-    write_partitioned(
+    resume.write_partitioned(
         kept.select(
             "doc_id", "chunk_id", "first_word", "n_words", "chunk_text", "bucket"
         ),
         chunks_dir,
     )
 
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    metrics = curation_metrics(
-        survivors, per_bucket_in, run_id, wall_ms, max_words, stride or max_words
+    wall_ms = resume.write_manifest(
+        curation_metrics(survivors, per_bucket_in, max_words, stride or max_words),
+        metrics_dir,
+        run_id,
+        t0,
     )
-    write_metrics(metrics, metrics_dir)
     survivors.unpersist()
 
-    # stats from the WRITTEN manifest (this run's rows: just-done ∪ resumed),
-    # not the live `metrics` frame — aggregating that would re-execute the
-    # whole pipeline a second time just to print counters
-    agg = (
-        spark.read.parquet(metrics_dir)
-        .filter(F.col("run_id") == run_id)
-        .agg(
-            F.sum("docs_in").alias("docs_in"),
-            F.sum("docs_kept").alias("docs_kept"),
-            F.sum("chunks_out").alias("chunks_out"),
-        )
-        .collect()[0]
+    _, totals = resume.manifest_totals(
+        spark,
+        metrics_dir,
+        run_id,
+        {"docs_in": "docs_in", "docs_kept": "docs_kept", "chunks_out": "chunks_out"},
     )
     return {
         "run_id": run_id,
         "buckets_done_before": len(done),
-        "docs_in": int(agg["docs_in"] or 0),
-        "docs_kept": int(agg["docs_kept"] or 0),
-        "chunks_out": int(agg["chunks_out"] or 0),
+        **totals,
         "wall_ms": wall_ms,
     }

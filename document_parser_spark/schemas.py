@@ -95,18 +95,3 @@ PARSE_RESULT = T.StructType(
         T.StructField("error", T.StringType(), True),
     ]
 )
-
-# Per-partition lineage/metrics row (north_rule; SURVEY.md §2.6 A7).
-METRICS = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_key", T.IntegerType(), False),
-        T.StructField("doc_count", T.LongType(), False),
-        T.StructField("span_count", T.LongType(), False),
-        T.StructField("table_count", T.LongType(), False),
-        T.StructField("error_count", T.LongType(), False),
-        T.StructField("min_doc_id", T.StringType(), True),
-        T.StructField("max_doc_id", T.StringType(), True),
-        T.StructField("wall_ms", T.LongType(), False),
-    ]
-)

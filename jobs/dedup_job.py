@@ -46,21 +46,6 @@ import json
 import os
 
 
-def _read_state(spark, path):
-    """Read a state parquet, treating ONLY path-absence as 'no state yet'.
-    Any other failure (corrupt footer, permissions, schema drift) must
-    surface — silently degrading to have_state=False would emit only
-    intra-shard pairs and permanently miss shard-vs-corpus near-dups."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return None
-        raise
-
-
 class _IngestLock:
     """Single-writer guard for the state dir (VERDICT r04 item 2b): an
     O_CREAT|O_EXCL lockfile is atomic on POSIX filesystems, so the second of
@@ -145,12 +130,13 @@ def main() -> None:
             minhash_pairs_from_signatures,
             minhash_signatures,
         )
+        from document_parser_spark.plans.resume import read_state
 
         sig_path = os.path.join(args.state, "signatures")
         txt_path = os.path.join(args.state, "texts")
         manifest = os.path.join(args.state, "manifest")
 
-        mf = _read_state(spark, manifest)
+        mf = read_state(spark, manifest)
         # manifest is tiny: one row per ingested shard
         done = {r["shard_id"] for r in mf.collect()} if mf is not None else set()
         if args.shard_id in done:
@@ -162,8 +148,8 @@ def main() -> None:
         n_docs = shard.count()
         sig_new = minhash_signatures(shard, shingle_k=args.shingle_k)
 
-        sig_old = _read_state(spark, sig_path)
-        texts_old = _read_state(spark, txt_path)
+        sig_old = read_state(spark, sig_path)
+        texts_old = read_state(spark, txt_path)
         if sig_old is not None and texts_old is not None and done:
             # only manifest-COMPLETED shards count as state: a crashed previous
             # attempt may have written partial partitions (this shard's own, or

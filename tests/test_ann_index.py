@@ -3,6 +3,9 @@ must be byte-identical to their inline twins, the build must resume per
 bucket against FIXED (reused) centroids, and the from-index query plan must
 touch the float vector column exactly once (the rerank join)."""
 
+import glob
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -146,18 +149,36 @@ def test_layout_change_with_indexed_buckets_refuses(spark, emb, built):
     old one (done buckets keep old cids/sketches: a silently torn index).
     The build must REFUSE, not recompute."""
     out, stats = built
-    for kwargs in (
-        {"nlist": stats["nlist"] + 1},
-        {"num_buckets": 16},
-    ):
+    for nlist, num_buckets in ((stats["nlist"] + 1, 8), (stats["nlist"], 16)):
         with pytest.raises(ValueError, match="cannot resume"):
             run_index_build_checkpointed(
-                spark, emb, out, run_id="t1", num_buckets=kwargs.pop("num_buckets", 8),
-                **kwargs,
+                spark, emb, out, run_id="t1", num_buckets=num_buckets, nlist=nlist
             )
     # matching dials still resume fine after the refused attempts
     again = run_index_build_checkpointed(spark, emb, out, run_id="t1", num_buckets=8)
     assert again["centroids_reused"] and again["buckets_done_before"] == 8
+
+
+def test_unreadable_meta_refuses_layout_change(spark, emb, built, tmp_path):
+    """A meta table that cannot be read is not "no quantizer yet": with
+    buckets already indexed, a dial change must still refuse, and the stored
+    centroids must stay the ones those buckets were indexed against."""
+    src, stats = built
+    out = str(tmp_path / "torn")
+    shutil.copytree(src, out)
+    for part in glob.glob(f"{out}/meta/*.parquet"):
+        with open(part, "wb") as fh:
+            fh.write(b"not a parquet file")
+
+    def centroid_rows():
+        return sorted(tuple(r) for r in spark.read.parquet(f"{out}/centroids").collect())
+
+    before = centroid_rows()
+    with pytest.raises(Exception, match="parquet"):
+        run_index_build_checkpointed(
+            spark, emb, out, run_id="t1", num_buckets=8, nlist=stats["nlist"] + 1
+        )
+    assert centroid_rows() == before
 
 
 def test_index_and_floats_co_bucketed_join_exchange_free(spark, emb, built):

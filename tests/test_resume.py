@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from conftest import TMP
 from document_parser_spark.corpus import synthesize_corpus, to_input_rows
-from document_parser_spark.plans.resume import run_extraction_checkpointed
+from document_parser_spark.plans.resume import read_state, run_extraction_checkpointed
 from document_parser_spark.schemas import DOCUMENTS_INPUT
 
 
@@ -88,3 +88,22 @@ def test_rerun_completed_is_noop(spark, workdir):
     assert stats["buckets_done_before"] == 4
     assert stats["docs_processed"] == 0
     assert _spans_rows(spark, out) == before
+
+
+def test_read_state_absent_or_empty_is_no_state_corrupt_raises(spark, workdir):
+    """Only a missing table means "no state yet": an absent path and a
+    directory without data files read as None, while a present but
+    unreadable file raises instead of silently reading as no state."""
+    import os
+
+    assert read_state(spark, f"{workdir}/absent") is None
+    os.makedirs(f"{workdir}/empty")
+    assert read_state(spark, f"{workdir}/empty") is None
+
+    spark.createDataFrame([(1,)], "x int").write.parquet(f"{workdir}/table")
+    assert [tuple(r) for r in read_state(spark, f"{workdir}/table").collect()] == [(1,)]
+    os.makedirs(f"{workdir}/corrupt")
+    with open(f"{workdir}/corrupt/part-0.parquet", "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception, match="parquet"):
+        read_state(spark, f"{workdir}/corrupt").collect()

@@ -41,7 +41,22 @@ REMOVED_NAMES = {
         "ann_topk", "ANN_METHODS", "_band_buckets_udf", "_ivf_sketch_from_side",
     ),
     "plans.segmentation": ("_parse_segment_udf", "_SEGMENT_PARSE"),
+    "plans.ann_index": ("_index_pass", "_has_metrics", "DEFAULT_BUCKETS"),
+    "plans.curate": ("DEFAULT_BUCKETS",),
 }
+
+
+def test_resume_manifest_format_lives_in_resume():
+    """The extract, curate and ANN-index builders share one manifest: only
+    plans/resume.py frames its rows (``partition_key``) or defines the
+    bucket default."""
+    pkg = ROOT / "document_parser_spark"
+    spelled = sorted(
+        p.relative_to(pkg).as_posix()
+        for p in pkg.rglob("*.py")
+        if any(w in p.read_text(encoding="utf-8") for w in ("partition_key", "DEFAULT_BUCKETS ="))
+    )
+    assert spelled == ["plans/resume.py"]
 
 
 def test_no_twin_in_package():
@@ -89,24 +104,40 @@ def _callee_names(f: ast.expr) -> list[str]:
     return []
 
 
+def _dict_keys(node: ast.Dict) -> list[str]:
+    return [
+        k.value for k in node.keys
+        if isinstance(k, ast.Constant) and isinstance(k.value, str)
+    ]
+
+
 def test_every_default_has_a_setter():
     """A defaulted parameter that no call in the repo sets is a
     configuration no test or benchmark runs: it belongs in a module
-    constant.  A call sets a parameter by keyword, by position, or through
-    ``*args``/``**kwargs``; calls are matched by function name."""
+    constant.  A call sets a parameter by keyword, by position or through
+    ``*args``; ``**`` of a dict literal sets that literal's keys, and
+    ``**mapping`` sets only the string keys its own file spells in a dict
+    display (``{...}`` or ``dict(k=...)``), never every parameter.  Calls
+    are matched by function name."""
     files = [
         p for p in ROOT.rglob("*.py")
         if not {".git", "dist", ".tmp"} & set(p.relative_to(ROOT).parts)
     ]
     pkg = ROOT / "document_parser_spark"
-    calls: dict[str, list[ast.Call]] = {}
+    calls: dict[str, list[tuple[ast.Call, set[str]]]] = {}
     public = []
     for path in files:
         tree = ast.parse(path.read_text(encoding="utf-8"), str(path))
+        spelled = set()  # the string keys of this file's dict displays
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Dict):
+                spelled.update(_dict_keys(node))
+            elif isinstance(node, ast.Call) and _callee_names(node.func) == ["dict"]:
+                spelled.update(kw.arg for kw in node.keywords if kw.arg)
         for node in ast.walk(tree):
             if isinstance(node, ast.Call):
                 for name in _callee_names(node.func):
-                    calls.setdefault(name, []).append(node)
+                    calls.setdefault(name, []).append((node, spelled))
         rel = path.relative_to(pkg).as_posix() if path.is_relative_to(pkg) else ""
         if rel.startswith(DEFAULT_SCOPE):
             public += [
@@ -123,14 +154,16 @@ def test_every_default_has_a_setter():
             p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
         ]
         set_somewhere = set()
-        for call in calls.get(fn.name, []):
+        for call, spelled in calls.get(fn.name, []):
             if any(isinstance(x, ast.Starred) for x in call.args):
                 set_somewhere.update(positional)
             set_somewhere.update(positional[: len(call.args)])
             for kw in call.keywords:
-                if kw.arg is None:
-                    set_somewhere.update(positional + [p.arg for p in a.kwonlyargs])
-                else:
+                if kw.arg is not None:
                     set_somewhere.add(kw.arg)
+                elif isinstance(kw.value, ast.Dict):
+                    set_somewhere.update(_dict_keys(kw.value))
+                else:
+                    set_somewhere.update(spelled)
         unset += [f"{rel}:{fn.name}({p}=)" for p in defaulted if p not in set_somewhere]
     assert unset == []

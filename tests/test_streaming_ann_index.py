@@ -11,11 +11,11 @@ from pyspark.sql import functions as F
 from conftest import TMP
 from document_parser_spark.operators import similarity
 from document_parser_spark.plans.ann_index import (
+    bucketed_index_rows,
     load_ann_index,
     run_index_build_checkpointed,
 )
 from document_parser_spark.sources.session import load_table
-from document_parser_spark.streaming.ann_index_stream import stream_index_rows
 
 SF = "/root/testdata/sf0.001"
 _SCHEMA = "vec_id long, embedding array<float>"
@@ -47,7 +47,7 @@ def test_stream_rows_equal_batch_and_union_queries(spark):
             .parquet(f"{workdir}/in")
         )
         q = (
-            stream_index_rows(
+            bucketed_index_rows(
                 stream, cids, cmat, dim=meta["dim"], planes=meta["planes"],
                 num_buckets=8,
             )
