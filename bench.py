@@ -749,14 +749,16 @@ def growth_study(sizes=(2_000, 20_000)) -> dict:
 
         t0 = time.monotonic()
         sim = dedup.simhash_arrow(d)
-        cand = dedup.simhash_candidate_pairs(sim, max_hamming=3).count()
+        cand = dedup.simhash_candidate_pairs(sim, max_hamming=3).distinct().count()
         pairs = dedup.simhash_near_pairs(sim, max_hamming=3).count()
         record("simhash", n, time.monotonic() - t0, cand, pairs)
 
         # cand counted OUTSIDE the timed window: the verify pipeline
         # re-executes candidate generation internally, so timing both would
         # double-count it and break comparability with earlier rounds
-        cand = dedup.ngram_candidate_pairs(d, threshold_pct=50).count()
+        cand = dedup.ngram_candidate_pairs(
+            dedup.token_sets(d, 1, *dedup.NGRAM_BLOCK_COLS), 50
+        ).count()
         t0 = time.monotonic()
         pairs = dedup.ngram_jaccard_pairs(d, threshold_pct=50).count()
         record("ngram_jaccard", n, time.monotonic() - t0, cand, pairs)
@@ -779,7 +781,7 @@ def growth_study(sizes=(2_000, 20_000)) -> dict:
 
         t0 = time.monotonic()
         zsim = dedup.simhash_arrow(z)
-        cand = dedup.simhash_candidate_pairs(zsim, max_hamming=3).count()
+        cand = dedup.simhash_candidate_pairs(zsim, max_hamming=3).distinct().count()
         pairs = dedup.simhash_near_pairs(zsim, max_hamming=3).count()
         record("simhash_zipf", n, time.monotonic() - t0, cand, pairs)
 
@@ -787,7 +789,9 @@ def growth_study(sizes=(2_000, 20_000)) -> dict:
         # words are candidate-bound there (mid-df words contribute C(df,2)
         # prefix pairs each; measured 37× wall at 10× docs), n-gram tokens
         # are near-unique so candidates track the planted true pairs
-        cand = dedup.ngram_candidate_pairs(z, threshold_pct=50, ngram_n=3).count()
+        cand = dedup.ngram_candidate_pairs(
+            dedup.token_sets(z, 3, *dedup.NGRAM_BLOCK_COLS), 50
+        ).count()
         t0 = time.monotonic()
         pairs = dedup.ngram_jaccard_pairs(z, threshold_pct=50, ngram_n=3).count()
         record("ngram_jaccard_zipf", n, time.monotonic() - t0, cand, pairs)

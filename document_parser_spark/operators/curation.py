@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import exact_canonical
 from .text import PUNCT_RX, STOPWORDS, java_words, language_words_arrow, quality_ok, words
 
 
@@ -150,18 +151,9 @@ def curate_corpus(df: DataFrame, keep_langs: tuple = ("en",)) -> DataFrame:
     ``keep_langs``.  Signals match operators.text.text_stats / language_id
     exactly (same expressions, same oracle SQL).
 
-    The election is the skew-proof aggregate form (min doc_id + exact
-    ``first(text)`` per md5 — the md5 IS the equality key, and partial
-    aggregation ships at most one row per (input partition, distinct
-    text), so viral duplicate groups never co-locate; planted-skew A/B in
-    BASELINE.md r04 — the r02-r04 ``Window.partitionBy(md5)`` form put
-    every copy of the most-duplicated text in one task)."""
-    canonical = (
-        df.groupBy(F.md5(F.col("text")).alias("_md5"))
-        .agg(F.min("doc_id").alias("doc_id"), F.first("text").alias("text"))
-        .drop("_md5")
-    )
-    return quality_language_gate(canonical, keep_langs=keep_langs).select(
+    The election is ``dedup.exact_canonical``: one map-side-combined
+    aggregate per md5, so viral duplicate groups never co-locate."""
+    return quality_language_gate(exact_canonical(df), keep_langs=keep_langs).select(
         "doc_id", "n_words", "lang_pred"
     )
 

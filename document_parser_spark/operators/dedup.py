@@ -49,11 +49,37 @@ def exact_duplicates(df: DataFrame) -> DataFrame:
     )
 
 
-def _doc_shingles(df: DataFrame, text_col: str, shingle_k: int) -> DataFrame:
-    """(doc_id, shingle) — exploded word shingles (with duplicates)."""
-    return df.select(
-        "doc_id", F.explode(word_shingles(F.col(text_col), shingle_k)).alias("shingle")
+def exact_canonical(df: DataFrame, *carry: str) -> DataFrame:
+    """The exact-content election: one row per distinct ``text`` with the
+    minimum doc_id, the text and ``first`` of each ``carry`` column.
+
+    One aggregate per md5(text): the md5 IS the equality key, so
+    ``first(text)`` — and ``first`` of any column derived from the text,
+    such as its content bucket — is exact, and it combines map-side: each
+    input partition ships at most one row per distinct text, so a viral
+    duplicate group never co-locates (the window-over-md5 form's slowest
+    task grows with the largest group — planted-skew A/B in BASELINE.md r04;
+    kept as ``tests/twins.canonical_window``)."""
+    return (
+        df.groupBy(F.md5(F.col("text")).alias("_md5"))
+        .agg(
+            F.min("doc_id").alias("doc_id"),
+            F.first("text").alias("text"),
+            *[F.first(c).alias(c) for c in carry],
+        )
+        .drop("_md5")
     )
+
+
+def token_sets(texts: DataFrame, n: int, *carry: str) -> DataFrame:
+    """(doc_id, *carry, ws) — one row per document holding its DISTINCT
+    tokens: ``words`` for n = 1, word n-gram ``word_shingles`` for n > 1.
+    The one token-set projection of the set-similarity operators here: the
+    n-gram candidates and containment explode it, the exact verify
+    intersects it.  It is map-only, and ``explode(ws)`` is the distinct
+    (doc, token) grain without a dedup shuffle."""
+    tok = words(F.col("text")) if n <= 1 else word_shingles(F.col("text"), n)
+    return texts.select("doc_id", *carry, F.array_distinct(tok).alias("ws"))
 
 
 def minhash_signatures(
@@ -88,9 +114,9 @@ def minhash_signatures(
             f"num_hashes={num_hashes} not divisible by rows_per_band="
             f"{rows_per_band}: leftover hash functions would be silently dropped"
         )
-    hs = _doc_shingles(df, text_col, shingle_k).select(
-        "doc_id", F.sha2(F.col("shingle"), 256).alias("s")
-    )
+    hs = df.select(
+        "doc_id", F.explode(word_shingles(F.col(text_col), shingle_k)).alias("shingle")
+    ).select("doc_id", F.sha2(F.col("shingle"), 256).alias("s"))
     mins = hs.groupBy("doc_id").agg(
         *[
             F.min(F.substring("s", 8 * i + 1, 8)).alias(f"m{i}")
@@ -131,51 +157,46 @@ def minhash_candidate_pairs(signatures: DataFrame) -> DataFrame:
     )
 
 
-def _verify_jaccard(
-    cand: DataFrame,
-    docs: DataFrame,
-    text_col: str,
-    shingle_k: int,
-    threshold_pct: int,
-) -> DataFrame:
-    """Exact shingle-set Jaccard over candidate pairs only:
-    ``100·|A∩B| ≥ t·|A∪B|`` in integer arithmetic.  ``docs`` only needs the
-    documents that can appear in ``cand`` — callers doing incremental work
-    semi-join it down first so the shingle pass never re-reads the whole
-    corpus.
+def _verify_jaccard(cand: DataFrame, sets: DataFrame, threshold_pct: int) -> DataFrame:
+    """The one exact set-Jaccard verify: (doc_a, doc_b, n_inter, n_union)
+    for the candidate pairs with ``100·|A∩B| ≥ t·|A∪B|``, in integer
+    arithmetic, over the ``token_sets`` frame ``sets``.  ``sets`` only needs
+    the documents that can appear in ``cand`` — incremental callers
+    semi-join it down first so the token pass never re-reads the corpus.
 
-    r06 (same rewrite as ngram_jaccard_pairs): the intersection is a
-    codegen ``array_intersect`` over one-row-per-doc distinct-shingle arrays
-    joined to the candidate pairs (AQE broadcasts the doc table when it
-    fits, so candidates are not shuffled for the verify), with the
-    threshold rewritten to reference the intersect once:
-    100·I ≥ t·(na+nb−I) ⟺ (100+t)·I ≥ t·(na+nb).  The exploded
-    candidate×shingle join + groupBy it replaced is kept in tests/twins.py
-    (equality test in tests/test_dedup.py)."""
-    toks = docs.select(
-        "doc_id",
-        F.array_distinct(word_shingles(F.col(text_col), shingle_k)).alias("sh"),
-    ).withColumn("n_sh", F.size("sh").cast("long"))
-    ta = toks.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sh").alias("sh_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    tb = toks.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sh").alias("sh_b"),
-        F.col("n_sh").alias("n_b"),
+    Candidates join the one-row-per-doc token arrays (AQE broadcasts them
+    when they fit, so candidates are not shuffled for the verify) and |A∩B|
+    is a codegen ``array_intersect`` on the pair row.  The threshold reads
+    the intersect once, 100·I ≥ t·(na+nb−I) ⟺ (100+t)·I ≥ t·(na+nb), and
+    the intersect is evaluated once: a plain filter on an ``n_inter``
+    column lets predicate pushdown substitute the expression per
+    reference, while ``inline(filter(array(struct(…))))`` keeps it inside
+    one generator input that nothing is pushed through.  The exploded
+    candidate×token join + groupBy it replaced is kept in tests/twins.py
+    (equality tests in tests/test_dedup.py)."""
+    t = threshold_pct
+    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("ws").alias("ws_a"))
+    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("ws").alias("ws_b"))
+    row = F.struct(
+        "doc_a",
+        "doc_b",
+        F.size(F.array_intersect("ws_a", "ws_b")).cast("long").alias("n_inter"),
+        (F.size("ws_a").cast("long") + F.size("ws_b").cast("long")).alias("n_sum"),
     )
     return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("long"))
-        .filter(
-            F.lit(100 + threshold_pct) * F.col("n_inter")
-            >= F.lit(threshold_pct) * (F.col("n_a") + F.col("n_b"))
+        cand.join(a, "doc_a")
+        .join(b, "doc_b")
+        .select(
+            F.inline(
+                F.filter(
+                    F.array(row),
+                    lambda r: F.lit(100 + t) * r["n_inter"] >= F.lit(t) * r["n_sum"],
+                )
+            )
         )
-        .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        .select("doc_a", "doc_b", "n_inter", "n_union")
+        .select(
+            "doc_a", "doc_b", "n_inter", (F.col("n_sum") - F.col("n_inter")).alias("n_union")
+        )
     )
 
 
@@ -186,7 +207,7 @@ def minhash_near_dup_pairs(
     (``_verify_jaccard``).  The verify join touches only candidate pairs
     (bounded by banding precision), never the corpus cross product."""
     cand = minhash_candidate_pairs(minhash_signatures(df, shingle_k=shingle_k))
-    return _verify_jaccard(cand, df, "text", shingle_k, threshold_pct)
+    return _verify_jaccard(cand, token_sets(df, shingle_k), threshold_pct)
 
 
 def minhash_incremental_pairs(
@@ -269,8 +290,10 @@ def minhash_pairs_from_signatures(
         .union(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    touched = texts.select("doc_id", text_col).join(cand_ids, "doc_id", "left_semi")
-    return _verify_jaccard(cand, touched, text_col, shingle_k, threshold_pct)
+    touched = texts.select("doc_id", F.col(text_col).alias("text")).join(
+        cand_ids, "doc_id", "left_semi"
+    )
+    return _verify_jaccard(cand, token_sets(touched, shingle_k), threshold_pct)
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -492,20 +515,13 @@ def simhash_arrow(df: DataFrame) -> DataFrame:
     ).filter(F.col("simhash") >= 0)
 
 
-def simhash_candidate_pairs(sim: DataFrame, max_hamming: int = 2) -> DataFrame:
+def simhash_candidate_pairs(sim: DataFrame, max_hamming: int) -> DataFrame:
     """Pre-verify candidates from the bit-mask-bucket trick: split the
     fingerprint into k+1 chunks — any pair within hamming k agrees on ≥1
-    chunk → bucket join, never all-pairs.  Exposed separately so the growth
-    study can measure candidate volume vs corpus size."""
-    return _simhash_candidates_raw(sim, max_hamming).select(
-        "doc_a", "doc_b", "sim_a", "sim_b"
-    ).distinct()
-
-
-def _simhash_candidates_raw(sim: DataFrame, max_hamming: int) -> DataFrame:
-    """Chunk-bucket collision pairs WITH multiplicity (a pair appears once
-    per agreeing chunk) — callers dedup after their own pair-level filters
-    so the distinct shuffle carries the fewest, narrowest rows."""
+    chunk → bucket join, never all-pairs.  Returns the raw collisions
+    (doc_a, doc_b, sim_a, sim_b) WITH multiplicity — a pair appears once per
+    agreeing chunk — so callers dedup after their own pair-level filters and
+    the distinct shuffle carries the fewest, narrowest rows."""
     chunks = max_hamming + 1
     chunk_bits = SIMHASH_BITS // chunks
     keyed = sim.select(
@@ -543,7 +559,7 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 2) -> DataFrame:
     # chunk) before deduplicating — the distinct then shuffles only
     # qualifying (doc_a, doc_b, hamming) rows instead of every candidate
     # with both 8-byte fingerprints attached.
-    cand = _simhash_candidates_raw(sim, max_hamming)
+    cand = simhash_candidate_pairs(sim, max_hamming)
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (
         cand.withColumn("hamming", hamming)
@@ -553,29 +569,17 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 2) -> DataFrame:
     )
 
 
-def _ngram_frames(
-    df: DataFrame,
-    text_col: str,
-    block_cols: tuple,
-    threshold_pct: int,
-    ngram_n: int,
-):
-    """Shared candidate machinery for the ngram-Jaccard family: returns
-    (toks, cand) where toks holds one row per doc with its DISTINCT token
-    array ``ws`` and cand the prefix-filtered candidate pairs.  See
-    ngram_jaccard_pairs."""
-    tok = (
-        words(F.col(text_col))
-        if ngram_n <= 1
-        else word_shingles(F.col(text_col), ngram_n)
-    )
-    # One row per doc with its DISTINCT token array (map-only); the exploded
-    # distinct frame falls out of it without a dedup shuffle.  r06: the old
-    # formulation derived explode+distinct THREE times (dw, dfreq(dw),
-    # sizes(dw)) and ranked prefixes with a row_number window — ~4.5 s of
-    # the candidate stage at the 50k-doc tier was those re-derivations.
-    toks = df.select("doc_id", *block_cols, F.array_distinct(tok).alias("ws"))
-    dw = toks.select("doc_id", *block_cols, F.explode("ws").alias("w"))
+#: the ngram-Jaccard blocking key: pairs form only within one (lang, source)
+NGRAM_BLOCK_COLS = ("lang", "source")
+
+
+def ngram_candidate_pairs(sets: DataFrame, threshold_pct: int) -> DataFrame:
+    """The prefix-filtered (doc_a, doc_b) candidates ``ngram_jaccard_pairs``
+    verifies, from a ``token_sets`` frame carrying ``NGRAM_BLOCK_COLS`` —
+    exposed so growth studies measure candidate volume from the executed
+    join instead of inferring it.  See ngram_jaccard_pairs."""
+    block_cols = NGRAM_BLOCK_COLS
+    dw = sets.select("doc_id", *block_cols, F.explode("ws").alias("w"))
 
     # Prefix selection: global (per-block) df order, rarest first.  Instead
     # of a per-doc row_number window over the (token ⋈ dfreq) frame, ONE
@@ -640,7 +644,7 @@ def _ngram_frames(
     #     prefix intersection admits (measured: the 20k-doc zipf corpus fell
     #     696 s → see BASELINE.md r04 growth rows).
     t = threshold_pct
-    cand = (
+    return (
         pa.join(pb, on="wid", how="inner")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .filter(
@@ -655,20 +659,6 @@ def _ngram_frames(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return toks, cand
-
-
-def ngram_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    block_cols: tuple = ("lang", "source"),
-    threshold_pct: int = 80,
-    ngram_n: int = 1,
-) -> DataFrame:
-    """The (doc_a, doc_b) candidate frame ngram_jaccard_pairs verifies —
-    exposed so growth studies can measure candidate volume from the
-    executed join instead of inferring it."""
-    return _ngram_frames(df, text_col, block_cols, threshold_pct, ngram_n)[1]
 
 
 def ngram_jaccard_pairs(
@@ -713,49 +703,15 @@ def ngram_jaccard_pairs(
     docs should length-gate them upstream (the curation gate) or segment
     them first (plans/segmentation.py); a book-length doc is not a sane
     near-dup unit anyway."""
-    toks, cand = _ngram_frames(df, "text", ("lang", "source"), threshold_pct, ngram_n)
-
-    # r06 verify: one row per doc carrying its DISTINCT token set as an
-    # array; |A∩B| is a codegen ``array_intersect`` on the joined pair row.
-    # Replaces the exploded candidate×token join + groupBy (the explode
-    # multiplied every candidate by ~|doc| tokens: ~3·10⁸ shuffled rows at
-    # the 50k-doc tier, 35-50 s of the query) with two joins against the
-    # 1-row-per-doc token table — small enough that AQE broadcasts it, so
-    # the candidate frame is never shuffled for the verify at all.  Counts
-    # are identical by construction (both count the same distinct-token
-    # intersection); equality-gated against the explode form (tests/twins.py)
-    # in tests/test_dedup.py.  n_a/n_b come from the SAME arrays, so no
-    # per-doc size table is joined.
-    sized = toks.select("doc_id", "ws", F.size("ws").cast("long").alias("n_words"))
-    ta = sized.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("ws").alias("ws_a"),
-        F.col("n_words").alias("n_a"),
-    )
-    tb = sized.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("ws").alias("ws_b"),
-        F.col("n_words").alias("n_b"),
-    )
-    # Filter rewritten to reference the (interpreted, per-row-HashSet)
-    # intersect ONCE: 100·I ≥ t·(na+nb−I) ⟺ (100+t)·I ≥ t·(na+nb), all
-    # int64-exact — predicate pushdown substitutes the alias into the
-    # filter, so every extra reference re-evaluates array_intersect.
+    # The verify (``_verify_jaccard``) joins the candidates to the same
+    # token_sets rows instead of exploding every candidate by ~|doc| tokens
+    # (~3·10⁸ shuffled rows at the 50k-doc tier, 35-50 s of the query).
     # No terminal orderBy: the driver canonicalizes (rows sorted) before
     # hashing, and a range sort here SAMPLES its child — re-executing the
     # whole verify subtree a second time (guide §2.4; measured 2.1× on the
     # 50k-doc tier, OPTIMIZATION_r06.md).
-    return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .withColumn("n_inter", F.size(F.array_intersect("ws_a", "ws_b")).cast("long"))
-        .filter(
-            F.lit(100 + threshold_pct) * F.col("n_inter")
-            >= F.lit(threshold_pct) * (F.col("n_a") + F.col("n_b"))
-        )
-        .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        .select("doc_a", "doc_b", "n_inter", "n_union")
-    )
+    sets = token_sets(df, ngram_n, *NGRAM_BLOCK_COLS)
+    return _verify_jaccard(ngram_candidate_pairs(sets, threshold_pct), sets, threshold_pct)
 
 
 def containment_pairs(
@@ -781,17 +737,11 @@ def containment_pairs(
     fewer than ``window_k`` words have no windows and cannot appear on
     either side.
     """
-    from .text import word_shingles
-
-    # r06: per-doc array_distinct over the hashed windows IS the distinct
-    # (doc, wmd5) grain, computed map-side — the three consumers (totals,
-    # both join sides) previously each re-derived an explode + dedup
-    # SHUFFLE of the full window stream; now each is a map-only explode.
-    toks = docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(word_shingles(F.col("text"), window_k), F.md5)
-        ).alias("wset"),
+    # the hashed distinct windows are the distinct (doc, wmd5) grain, computed
+    # map-side — the three consumers (totals, both join sides) each explode
+    # it without a dedup shuffle of the full window stream.
+    toks = token_sets(docs, window_k).select(
+        "doc_id", F.transform("ws", F.md5).alias("wset")
     )
     w = toks.select("doc_id", F.explode("wset").alias("wmd5"))
     totals = toks.select(

@@ -147,8 +147,8 @@ def run_index_build_checkpointed(
     n = embeddings.count()
     dim = probe_dim(embeddings)
 
-    # step 1: resolve the quantizer once — the FIXED centroids every bucket
-    # is indexed against
+    # step 1: resolve the quantizer layout once — the FIXED centroids every
+    # bucket is indexed against — and guard it
     stored = _read_layout(spark, out_dir)
     if centroids_from is None:
         source = out_dir
@@ -182,48 +182,52 @@ def run_index_build_checkpointed(
                 f"{dict(zip(_LAYOUT, layout))} — a quantizer/layout change "
                 "cannot resume; use a fresh out_dir"
             )
-    if reused:
-        cids, cmat = load_centroids(spark, os.path.join(source, "centroids"))
-    else:
-        cids, cmat = ivf_centroids_kmeans(embeddings, layout[1])
-    if source != out_dir or not reused:
-        # a shard mirrors the corpus quantizer verbatim, so load_ann_index
-        # on its dir is self-contained; meta is written AFTER the
-        # centroids — its presence+match is the commit marker
-        _centroids_frame(spark, cids, cmat).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(centroids_dir)
-        spark.createDataFrame(
-            [layout], "n long, nlist int, planes int, dim int, num_buckets int"
-        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "meta"))
 
     # step 2: bucketed, resumable index rows; the bucket list comes from the
-    # id column only — it never runs the sketch UDF
-    done, keep = resume.select_unfinished(
+    # id column only — it never runs the sketch UDF.  A finished build has
+    # passed the guard with its quantizer committed, so it loads nothing.
+    done, keep, idle = resume.select_unfinished(
         spark,
         metrics_dir,
         run_id,
         resume.with_bucket(embeddings, "vec_id", num_buckets),
         max_buckets_this_run,
     )
-    resume.write_partitioned(
-        bucketed_index_rows(embeddings, cids, cmat, dim, planes, num_buckets).filter(keep),
-        index_dir,
-    )
-    # lineage from the WRITTEN rows (durable truth, no UDF recompute), with
-    # the bucket filter BEFORE the aggregation so partition pruning reads
-    # only this run's buckets
-    counts = (
-        spark.read.parquet(index_dir)
-        .filter(keep)
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("vec_count"),
-            F.min("vec_id").alias("min_vec_id"),
-            F.max("vec_id").alias("max_vec_id"),
+    if idle:
+        wall_ms = resume.elapsed_ms(t0)
+    else:
+        if reused:
+            cids, cmat = load_centroids(spark, os.path.join(source, "centroids"))
+        else:
+            cids, cmat = ivf_centroids_kmeans(embeddings, layout[1])
+        if source != out_dir or not reused:
+            # a shard mirrors the corpus quantizer verbatim, so load_ann_index
+            # on its dir is self-contained; meta is written AFTER the
+            # centroids — its presence+match is the commit marker
+            _centroids_frame(spark, cids, cmat).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(centroids_dir)
+            spark.createDataFrame(
+                [layout], "n long, nlist int, planes int, dim int, num_buckets int"
+            ).coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "meta"))
+        resume.write_partitioned(
+            bucketed_index_rows(embeddings, cids, cmat, dim, planes, num_buckets).filter(keep),
+            index_dir,
         )
-    )
-    wall_ms = resume.write_manifest(counts, metrics_dir, run_id, t0)
+        # lineage from the WRITTEN rows (durable truth, no UDF recompute),
+        # with the bucket filter BEFORE the aggregation so partition pruning
+        # reads only this run's buckets
+        counts = (
+            spark.read.parquet(index_dir)
+            .filter(keep)
+            .groupBy("bucket")
+            .agg(
+                F.count("*").alias("vec_count"),
+                F.min("vec_id").alias("min_vec_id"),
+                F.max("vec_id").alias("max_vec_id"),
+            )
+        )
+        wall_ms = resume.write_manifest(counts, metrics_dir, run_id, t0)
     buckets, totals = resume.manifest_totals(
         spark, metrics_dir, run_id, {"vectors_indexed": "vec_count"}
     )

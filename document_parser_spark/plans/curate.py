@@ -25,6 +25,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import exact_canonical
 from . import resume
 
 #: English-signal preamble planted on 3/4 of synthetic source ids: the raw
@@ -136,33 +137,20 @@ def election_frames(todo: DataFrame) -> tuple[DataFrame, DataFrame]:
     executes, exposed so the plan gate (tests/test_plans.py) audits the real
     pipeline frames.
 
-    canonical: ONE aggregate per md5 — ``min(doc_id), first(text)``.
-    ``first(text)`` is EXACT here because every row in an md5 group carries
-    the identical text (the md5 IS the equality key), and it participates
-    in partial aggregation: each input partition emits at most one
-    (md5, id, text) row per distinct text it holds, so a viral boilerplate
-    duplicated millions of times crosses the wire as
-    ``num_input_partitions`` rows instead of every copy, and the reduce side
-    never materializes a duplicate group.  Two other shapes were measured
-    and rejected: a window over md5 (its slowest task grows with the
-    largest duplicate group — planted-skew A/B in BASELINE.md r04; kept as
-    ``tests/twins.canonical_window``) and a groupBy+equi-join re-attach (two
-    scans + three shuffles, 3.5× the window on an unskewed 50k corpus).
+    canonical: the one exact-content election, ``dedup.exact_canonical``
+    (min doc_id, first text, per md5), carrying the content bucket — exact
+    because the bucket is derived from the text.  Two other shapes were
+    measured and rejected: a window over md5 (its slowest task grows with
+    the largest duplicate group — planted-skew A/B in BASELINE.md r04) and a
+    groupBy+equi-join re-attach (two scans + three shuffles, 3.5× the window
+    on an unskewed 50k corpus).
 
     per_bucket_in: a second, column-pruned scan pre-aggregated at the
     (bucket, md5) grain — so no distinct aggregate (and hence no Expand)
     appears — rolled up to one row per bucket.  Deriving it from a cached
     canonical instead LOSES at scale (164 s vs 27.5 s at 200k docs × 16
     cores, BASELINE.md r04)."""
-    canonical = (
-        todo.groupBy(F.md5("text").alias("_md5"))
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.first("text").alias("text"),
-            F.first("bucket").alias("bucket"),
-        )
-        .drop("_md5")
-    )
+    canonical = exact_canonical(todo, "bucket")
     per_bucket_in = (
         todo.groupBy("bucket", F.md5("text").alias("_md5"))
         .agg(F.count("*").alias("_copies"))
@@ -220,36 +208,39 @@ def run_curation_checkpointed(
     t0 = time.monotonic()
     bucketed = with_content_bucket(docs.select("doc_id", "text"), num_buckets)
 
-    done, keep = resume.select_unfinished(spark, metrics_dir, run_id, bucketed, max_buckets_this_run)
-    todo = bucketed.filter(keep)
-
-    # canonical election: global because every md5 group is bucket-local
-    canonical, per_bucket_in = election_frames(todo)
-
-    # map-only gate: heuristics + classifier + language, one projection each
-    # (shared with the streaming twin — see operators.curation)
-    gated = quality_language_gate(canonical, keep_langs=keep_langs, clf_min=clf_min)
-    survivors = gated.select("doc_id", "text", "bucket", "n_words").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )  # consumed twice: the chunk write and the metrics rollup
-
-    kept = chunk_documents(
-        survivors, max_words=max_words, stride=stride, passthrough=("bucket",)
+    done, keep, idle = resume.select_unfinished(
+        spark, metrics_dir, run_id, bucketed, max_buckets_this_run
     )
-    resume.write_partitioned(
-        kept.select(
-            "doc_id", "chunk_id", "first_word", "n_words", "chunk_text", "bucket"
-        ),
-        chunks_dir,
-    )
+    if idle:
+        wall_ms = resume.elapsed_ms(t0)
+    else:
+        # canonical election: global because every md5 group is bucket-local
+        canonical, per_bucket_in = election_frames(bucketed.filter(keep))
 
-    wall_ms = resume.write_manifest(
-        curation_metrics(survivors, per_bucket_in, max_words, stride or max_words),
-        metrics_dir,
-        run_id,
-        t0,
-    )
-    survivors.unpersist()
+        # map-only gate: heuristics + classifier + language, one projection
+        # each (shared with the streaming twin — see operators.curation)
+        gated = quality_language_gate(canonical, keep_langs=keep_langs, clf_min=clf_min)
+        survivors = gated.select("doc_id", "text", "bucket", "n_words").persist(
+            StorageLevel.MEMORY_AND_DISK
+        )  # consumed twice: the chunk write and the metrics rollup
+
+        kept = chunk_documents(
+            survivors, max_words=max_words, stride=stride, passthrough=("bucket",)
+        )
+        resume.write_partitioned(
+            kept.select(
+                "doc_id", "chunk_id", "first_word", "n_words", "chunk_text", "bucket"
+            ),
+            chunks_dir,
+        )
+
+        wall_ms = resume.write_manifest(
+            curation_metrics(survivors, per_bucket_in, max_words, stride or max_words),
+            metrics_dir,
+            run_id,
+            t0,
+        )
+        survivors.unpersist()
 
     _, totals = resume.manifest_totals(
         spark,

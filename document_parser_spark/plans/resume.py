@@ -18,7 +18,8 @@ Batch-level idempotency without Structured Streaming:
     ``run_id=…/partition_key=…`` directory — overwrite-by-partition means
     retries can never duplicate a row (MERGE-like exactly-once);
   * on restart, ``select_unfinished`` anti-joins away the buckets already
-    in the manifest for this run_id: only unfinished work re-runs;
+    in the manifest for this run_id: only unfinished work re-runs, and a
+    finished build returns before building any pipeline;
     ``manifest_totals`` reads this run's counters back in one aggregate.
 """
 
@@ -72,13 +73,16 @@ def select_unfinished(
     run_id: str,
     buckets: DataFrame,
     max_buckets_this_run: int | None,
-) -> tuple[set[int], Column]:
+) -> tuple[set[int], Column, bool]:
     """The resume manifest's work selection, shared by every bucketed job:
-    the buckets this run already finished, and a predicate on ``bucket``
-    that keeps the unfinished ones.  ``max_buckets_this_run`` (crash
-    simulation for resume tests) narrows it to the first N unfinished
-    buckets in order; only then is ``buckets`` — any frame with a
-    ``bucket`` column — collected."""
+    the buckets this run already finished, a predicate on ``bucket`` that
+    keeps the unfinished ones, and whether that selection is empty — a
+    resumed run of a finished build then returns early instead of running
+    its whole pipeline over zero rows.  Only a resumed run probes for that
+    (one ``isEmpty`` on ``buckets`` — any frame with a ``bucket`` column —
+    which stops at the first unfinished row).  ``max_buckets_this_run``
+    (crash simulation for resume tests) narrows the selection to the first
+    N unfinished buckets in order; only then is ``buckets`` collected."""
     m = _this_run(spark, metrics_dir, run_id)
     done = (
         set() if m is None
@@ -89,8 +93,13 @@ def select_unfinished(
         remaining = sorted(
             r["bucket"] for r in buckets.filter(keep).select("bucket").distinct().collect()
         )[:max_buckets_this_run]
-        keep = F.col("bucket").isin(remaining)
-    return done, keep
+        return done, F.col("bucket").isin(remaining), bool(done) and not remaining
+    return done, keep, bool(done) and buckets.filter(keep).isEmpty()
+
+
+def elapsed_ms(t0: float) -> int:
+    """Milliseconds since ``t0``, a ``time.monotonic()`` reading."""
+    return int((time.monotonic() - t0) * 1000)
 
 
 def write_manifest(counts: DataFrame, metrics_dir: str, run_id: str, t0: float) -> int:
@@ -99,7 +108,7 @@ def write_manifest(counts: DataFrame, metrics_dir: str, run_id: str, t0: float) 
     row is stored with its ``partition_key``, ``run_id`` and the run's
     ``wall_ms`` so far (since ``t0``, a ``time.monotonic()`` reading),
     which is returned."""
-    wall_ms = int((time.monotonic() - t0) * 1000)
+    wall_ms = elapsed_ms(t0)
     (
         counts.select(
             F.col("bucket").alias("partition_key"),
@@ -195,7 +204,14 @@ def run_extraction_checkpointed(
     t0 = time.monotonic()
     docs = with_bucket(assemble_document_text(df_input), "doc_id", num_buckets)
 
-    done, keep = select_unfinished(spark, metrics_dir, run_id, docs, max_buckets_this_run)
+    done, keep, idle = select_unfinished(spark, metrics_dir, run_id, docs, max_buckets_this_run)
+    if idle:
+        return {
+            "run_id": run_id,
+            "buckets_done_before": len(done),
+            "docs_processed": 0,
+            "wall_ms": elapsed_ms(t0),
+        }
     todo = docs.filter(keep)
 
     parallelism = spark.sparkContext.defaultParallelism

@@ -79,3 +79,18 @@ def spark():
 
     spark = get_spark(app_name="tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
     yield spark
+
+
+def run_counting_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it started, counted through a
+    job group set around the call."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

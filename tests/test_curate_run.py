@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 
 import twins
+from conftest import run_counting_jobs
 from document_parser_spark.operators.curation import (
     chunk_documents,
     quality_language_gate,
@@ -139,9 +140,15 @@ def test_resume_skips_completed_and_crash_recovers(spark, tmp_path):
     populated = (
         with_content_bucket(docs, 4).select("bucket").distinct().count()
     )
-    again = run_curation_checkpointed(
-        spark, docs, out_a, run_id="r", num_buckets=4, max_words=20, stride=15
+    again, jobs = run_counting_jobs(
+        spark,
+        lambda: run_curation_checkpointed(
+            spark, docs, out_a, run_id="r", num_buckets=4, max_words=20, stride=15
+        ),
     )
+    # the finished build returns after its manifest lookup: 7 bookkeeping
+    # jobs, where election + gate + chunk write over zero rows ran 13
+    assert jobs <= 7, jobs
     assert again["buckets_done_before"] == populated
     assert (again["docs_in"], again["docs_kept"], again["chunks_out"]) == (
         full["docs_in"], full["docs_kept"], full["chunks_out"],

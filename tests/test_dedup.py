@@ -62,9 +62,9 @@ def test_array_verify_equals_explode_twin(docs, ngram_n):
     arr = key(
         dedup.ngram_jaccard_pairs(docs, threshold_pct=50, ngram_n=ngram_n).collect()
     )
-    exp = key(
-        twins.ngram_jaccard_pairs(docs, threshold_pct=50, ngram_n=ngram_n).collect()
-    )
+    sets = dedup.token_sets(docs, ngram_n, *dedup.NGRAM_BLOCK_COLS)
+    cand = dedup.ngram_candidate_pairs(sets, 50)
+    exp = key(twins.verify_jaccard(cand, sets, 50).collect())
     assert arr == exp
 
 
@@ -123,8 +123,9 @@ def test_minhash_verify_array_equals_explode_twin(spark):
     )
     cand = dedup.minhash_candidate_pairs(dedup.minhash_signatures(d, shingle_k=5))
     key = lambda df: sorted(tuple(r) for r in df.collect())
-    arr = key(dedup._verify_jaccard(cand, d, "text", 5, 50))
-    exp = key(twins.verify_jaccard(cand, d, "text", 5, 50))
+    sets = dedup.token_sets(d, 5)
+    arr = key(dedup._verify_jaccard(cand, sets, 50))
+    exp = key(twins.verify_jaccard(cand, sets, 50))
     assert arr == exp and len(arr) > 0
 
 

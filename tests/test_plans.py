@@ -198,6 +198,27 @@ def test_ngram_jaccard_all_equi_joins(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_jaccard_verify_intersects_once(spark):
+    """Every set-Jaccard operator verifies through the one exact verify,
+    and its plan evaluates ``array_intersect`` exactly once per pair row —
+    a filter on the intersect size lets predicate pushdown copy the
+    expression into the filter."""
+    from document_parser_spark.operators import dedup
+
+    d = load_table(spark, SF, "documents").select("doc_id", "lang", "source", "text")
+    sig = dedup.minhash_signatures(d, shingle_k=5)
+    for q in (
+        dedup.ngram_jaccard_pairs(d, threshold_pct=50),
+        dedup.ngram_jaccard_pairs(d, threshold_pct=50, ngram_n=3),
+        dedup.minhash_near_dup_pairs(d, shingle_k=5),
+        dedup.minhash_pairs_from_signatures(
+            sig.filter(F.col("doc_id") % 5 == 0), sig, d, shingle_k=5
+        ),
+    ):
+        plan = plan_of(q)
+        assert plan.count("array_intersect(") == 1, plan
+
+
 def test_minhash_mins_combine_map_side(spark):
     """The 8 per-doc minima aggregate partially before the shuffle —
     shuffled bytes are (doc_id, 8×8 chars), never the shingle stream."""

@@ -8,7 +8,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import TMP
+from conftest import TMP, run_counting_jobs
 from document_parser_spark.corpus import synthesize_corpus, to_input_rows
 from document_parser_spark.plans.resume import read_state, run_extraction_checkpointed
 from document_parser_spark.schemas import DOCUMENTS_INPUT
@@ -84,9 +84,14 @@ def test_rerun_completed_is_noop(spark, workdir):
     out = f"{workdir}/noop"
     run_extraction_checkpointed(spark, df, out, run_id="r1", num_buckets=4)
     before = _spans_rows(spark, out)
-    stats = run_extraction_checkpointed(spark, df, out, run_id="r1", num_buckets=4)
+    stats, jobs = run_counting_jobs(
+        spark, lambda: run_extraction_checkpointed(spark, df, out, run_id="r1", num_buckets=4)
+    )
     assert stats["buckets_done_before"] == 4
     assert stats["docs_processed"] == 0
+    # the finished build returns after its manifest lookup: 4 bookkeeping
+    # jobs, where parse + writes over zero rows ran 9
+    assert jobs <= 4, jobs
     assert _spans_rows(spark, out) == before
 
 

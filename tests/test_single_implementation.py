@@ -43,6 +43,7 @@ REMOVED_NAMES = {
     "plans.segmentation": ("_parse_segment_udf", "_SEGMENT_PARSE"),
     "plans.ann_index": ("_index_pass", "_has_metrics", "DEFAULT_BUCKETS"),
     "plans.curate": ("DEFAULT_BUCKETS",),
+    "operators.dedup": ("_doc_shingles", "_ngram_frames", "_simhash_candidates_raw"),
 }
 
 
@@ -57,6 +58,18 @@ def test_resume_manifest_format_lives_in_resume():
         if any(w in p.read_text(encoding="utf-8") for w in ("partition_key", "DEFAULT_BUCKETS ="))
     )
     assert spelled == ["plans/resume.py"]
+
+
+def test_exact_election_lives_in_dedup():
+    """The exact-content election is written once, ``dedup.exact_canonical``:
+    no other package module spells its ``first("text")`` aggregate."""
+    pkg = ROOT / "document_parser_spark"
+    spelled = sorted(
+        p.relative_to(pkg).as_posix()
+        for p in pkg.rglob("*.py")
+        if 'first("text")' in p.read_text(encoding="utf-8")
+    )
+    assert spelled == ["operators/dedup.py"]
 
 
 def test_no_twin_in_package():

@@ -17,11 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from document_parser_spark.operators import similarity, text
-from document_parser_spark.operators.dedup import (
-    SIMHASH_BITS,
-    _doc_shingles,
-    ngram_candidate_pairs,
-)
+from document_parser_spark.operators.dedup import SIMHASH_BITS
 from document_parser_spark.operators.text import (
     _CLF_A,
     _CLF_B,
@@ -309,27 +305,19 @@ def simhash(df: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS) -> 
     return bit_sums.select("doc_id", fingerprint.alias("simhash"))
 
 
-def verify_jaccard(
-    cand: DataFrame,
-    docs: DataFrame,
-    text_col: str,
-    shingle_k: int,
-    threshold_pct: int,
-) -> DataFrame:
-    """``dedup._verify_jaccard`` as the exploded candidate×shingle join +
-    groupBy."""
-    dsh = _doc_shingles(docs, text_col, shingle_k).distinct()
-    sizes = dsh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = dsh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = dsh.select(F.col("doc_id").alias("doc_b"), "shingle")
+def verify_jaccard(cand: DataFrame, sets: DataFrame, threshold_pct: int) -> DataFrame:
+    """``dedup._verify_jaccard`` as the exploded candidate×token join +
+    groupBy over the same ``dedup.token_sets`` frame."""
+    dw = sets.select("doc_id", F.explode("ws").alias("w"))
+    sizes = sets.select("doc_id", F.size("ws").cast("long").alias("n"))
     inter = (
-        cand.join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
+        cand.join(dw.withColumnRenamed("doc_id", "doc_a"), "doc_a")
+        .join(dw.withColumnRenamed("doc_id", "doc_b"), ["doc_b", "w"])
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_inter"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -337,46 +325,6 @@ def verify_jaccard(
         .filter(F.lit(100) * F.col("n_inter") >= F.lit(threshold_pct) * F.col("n_union"))
         .select("doc_a", "doc_b", "n_inter", "n_union")
     )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    block_cols: tuple = ("lang", "source"),
-    threshold_pct: int = 80,
-    ngram_n: int = 1,
-) -> DataFrame:
-    """``dedup.ngram_jaccard_pairs`` with the exploded verify: the public
-    prefix-filtered candidates joined to the distinct (doc, token) stream,
-    intersections counted by groupBy."""
-    cand = ngram_candidate_pairs(df, text_col, block_cols, threshold_pct, ngram_n)
-    tok = (
-        words(F.col(text_col))
-        if ngram_n <= 1
-        else text.word_shingles(F.col(text_col), ngram_n)
-    )
-    toks = df.select("doc_id", F.array_distinct(tok).alias("ws"))
-    dw = toks.select("doc_id", F.explode("ws").alias("w"))
-    sizes = toks.select("doc_id", F.size("ws").cast("long").alias("n_words")).filter(
-        F.col("n_words") > 0
-    )
-    a = dw.select(F.col("doc_id").alias("doc_a"), "w")
-    b = dw.select(F.col("doc_id").alias("doc_b"), "w")
-    inter = (
-        cand.join(a, "doc_a")
-        .join(b, ["doc_b", "w"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_words").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_words").alias("n_b"))
-    out = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        .filter(F.lit(100) * F.col("n_inter") >= F.lit(threshold_pct) * F.col("n_union"))
-    )
-    return out.select("doc_a", "doc_b", "n_inter", "n_union").orderBy("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------- similarity.py
