@@ -1,15 +1,16 @@
 """The table-query surface Q1–Q7 (SURVEY.md §2.12) as pure DataFrame algebra
 over the denormalized cells table — no UDFs anywhere.
 
-Reference: the reference's table_search.py, which rescans every
-cell for each match (O(matches × cells), table_search.py:222-228, 363-367).
-Here the two row-shaped queries are single passes instead: one range
-exchange by (doc_id, table_index, row) co-locates each table row, the key or
-first hit is found within the row (a window for Q2, an aggregate for Q4),
-and the same exchange serves the final ordering — one Exchange, no join.
-Ranging by the full row key, not by doc_id alone, spreads a heavy-tail
-document over many tasks.  The reference's sort-then-slice becomes
-TakeOrderedAndProject (SURVEY.md §4.1).
+Reference: the reference's table_search.py builds its index once and scans
+every cell per match (table_search.py:47-49, 222-228, 363-367).  Here each
+operator reads its filtered cache input through one narrow coalesce(1), and
+a single partition satisfies every clustered and ordered distribution: the
+row window (Q2), the row aggregate (Q4), each sort and each
+TakeOrderedAndProject (the reference's sort-then-slice, SURVEY.md §4.1) run
+in one task, so a query is one Spark job of one task with no Exchange.  The
+trade-off is one task linear in the cached cells: at 2,000 docs (~345k cells,
+4 cores) a query's wall time matched the range-exchanged layout's and its
+CPU fell by a third or more.  Results are collected to the driver anyway.
 
 Every function takes the cells/tables DataFrames produced by
 operators.extract — callers should ``.cache()`` them once per session, which
@@ -38,15 +39,18 @@ _POSITION = ("doc_id", "table_index", "row", "col")
 _ROW = _POSITION[:3]
 
 
-def _rows_of(cells: DataFrame, table_type: str, table_title: Optional[str]) -> DataFrame:
-    """The cells of ``table_type`` tables whose title matches, range-
-    partitioned by row: the one exchange of a row-shaped query, which both
-    groups each row and orders the result."""
-    return (
-        cells.filter(F.col("table_type") == table_type)
-        .filter(title_filter(F.col("table_title"), table_title))
-        .repartitionByRange(*_ROW)
-    )
+def _one_task(df: DataFrame) -> DataFrame:
+    """A query's filtered cache input as one partition, without an exchange."""
+    return df.coalesce(1)
+
+
+def _cells_of(cells: DataFrame, table_type: Optional[str], table_title: Optional[str]) -> DataFrame:
+    """The cells of ``table_type`` tables (any type when None) whose title
+    matches, in one task; later filters push below the coalesce."""
+    out = cells.filter(title_filter(F.col("table_title"), table_title))
+    if table_type is not None:
+        out = out.filter(F.col("table_type") == table_type)
+    return _one_task(out)
 
 
 def search_by_key_value(
@@ -62,16 +66,18 @@ def search_by_key_value(
     Parity: table_search.py:173-252.  The nested per-match rescan becomes a
     window over each row: the row's key cell, when it matches, is attached
     to every cell of the row, and the value cells (col > 0) of keyed rows
-    are kept."""
+    are kept; its sort by (row, col) also serves the result ordering."""
     matched, score = match_score(F.col("text"), key_query, mode, case_sensitive)
     key = F.struct(
         F.col("text").alias("key"),
         F.col("header").alias("key_column"),
         score.alias("match_score"),
     )
-    row_key = F.max(F.when((F.col("col") == 0) & matched, key)).over(Window.partitionBy(*_ROW))
+    whole_row = Window.partitionBy(*_ROW).orderBy("col")
+    whole_row = whole_row.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    row_key = F.max(F.when((F.col("col") == 0) & matched, key)).over(whole_row)
     return (
-        _rows_of(cells, "vertical", table_title)
+        _cells_of(cells, "vertical", table_title)
         .withColumn("_key", row_key)
         .filter((F.col("col") > 0) & F.col("_key").isNotNull())
         .select(
@@ -112,11 +118,7 @@ def search_by_column(
 ) -> DataFrame:
     """Q3: values of a named column in HORIZONTAL tables, optionally filtered
     by a value match.  Parity: table_search.py:254-323."""
-    out = (
-        cells.filter(F.col("table_type") == "horizontal")
-        .filter(title_filter(F.col("table_title"), table_title))
-        .filter(_column_match(column_name))
-    )
+    out = _cells_of(cells, "horizontal", table_title).filter(_column_match(column_name))
     if value_query is not None:
         matched, score = match_score(F.col("text"), value_query, mode, case_sensitive)
         out = out.filter(matched).withColumn("match_score", score)
@@ -155,7 +157,7 @@ def get_row_by_column_value(
         score.alias("match_score"),
     )
     return (
-        _rows_of(cells, "horizontal", table_title)
+        _cells_of(cells, "horizontal", table_title)
         .groupBy(*_ROW)
         .agg(
             F.min_by(hit, F.when(_column_match(column_name) & matched, F.col("col"))).alias("_hit"),
@@ -184,11 +186,9 @@ def search_anywhere(
     """Q5: full cell scan, score sort, top-k.  Parity: table_search.py:390-450
     (the full-sort-then-slice upgrades to TakeOrderedAndProject for free)."""
     matched, score = match_score(F.col("text"), query, mode, case_sensitive)
-    out = cells.filter(title_filter(F.col("table_title"), table_title))
-    if table_type is not None:
-        out = out.filter(F.col("table_type") == table_type)
     out = (
-        out.filter(matched)
+        _cells_of(cells, table_type, table_title)
+        .filter(matched)
         .select(
             "doc_id", "table_index", "table_source", "table_title", "table_type",
             "row", "col", "header", "header_levels",
@@ -206,7 +206,7 @@ def search_anywhere(
 def list_all_tables(tables: DataFrame) -> DataFrame:
     """Q6/F9: metadata projection with the "RxC" size string.
     Parity: table_search.py:452-463."""
-    return tables.select(
+    return _one_task(tables).select(
         "doc_id",
         F.col("table_index").alias("index"),
         F.col("title"),
@@ -222,4 +222,4 @@ def get_table_by_title(
     """Q7/O5: first table matching the title, in insertion order — parity
     requires orderBy before limit(1) (table_search.py:465-476; SURVEY.md O5)."""
     matched, _ = match_score(F.col("title"), title_query, mode, case_sensitive=False)
-    return tables.filter(matched).orderBy("doc_id", "table_index").limit(1)
+    return _one_task(tables.filter(matched)).orderBy("doc_id", "table_index").limit(1)

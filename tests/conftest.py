@@ -81,9 +81,10 @@ def spark():
     yield spark
 
 
-def run_counting_jobs(spark, fn):
-    """``fn()`` and the number of Spark jobs it started, counted through a
-    job group set around the call."""
+def run_counting_tasks(spark, fn):
+    """``fn()``, the number of Spark jobs it started and the number of tasks
+    those jobs ran (a skipped stage runs none), counted through a job group
+    set around the call."""
     import uuid
 
     sc = spark.sparkContext
@@ -93,4 +94,14 @@ def run_counting_jobs(spark, fn):
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # it feeds the status tracker
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    stages = [tracker.getStageInfo(s) for j in jobs for s in j.stageIds]
+    return out, len(jobs), sum(s.numCompletedTasks for s in stages if s)
+
+
+def run_counting_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it started."""
+    out, jobs, _ = run_counting_tasks(spark, fn)
+    return out, jobs

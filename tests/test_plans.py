@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 import twins
+from conftest import run_counting_tasks
 from document_parser_spark.operators import search
 from document_parser_spark.operators.extract import (
     assemble_document_text,
@@ -68,31 +69,61 @@ def test_semi_join_shape(spark):
     assert "LeftSemi" in plan
 
 
-def test_search_operators_single_exchange(spark):
-    """Every search operator over the cached cells/tables plans at most ONE
-    Exchange above the cache scan, and the row-shaped ones plan no join:
-    key_value and row_by_value range-partition by row once, and that one
-    exchange both groups each row and orders the result.  (The top-k's
-    TakeOrderedAndProject: test_search_anywhere_topk_is_take_ordered.)"""
-    parsed = parse_documents(assemble_document_text(fixture_input_df(spark)))
-    tables = tables_output(parsed).cache()
-    cells = cells_output(tables).cache()
-    queries = {
+def _search_queries(cells, tables) -> dict:
+    """The seven search queries, one per operator (search_anywhere with and
+    without its limit)."""
+    return {
         "key_value": search.search_by_key_value(cells, "Pathology"),
         "by_column": search.search_by_column(cells, "Group Number", "2"),
         "row_by_value": search.get_row_by_column_value(cells, "Group Number", "2"),
-        "anywhere": search.search_anywhere(cells, "mg/kg"),
-        "anywhere_topk": search.search_anywhere(cells, "mg/kg", max_results=10),
+        "anywhere": search.search_anywhere(cells, "Normal"),
+        "anywhere_topk": search.search_anywhere(cells, "Normal", max_results=2),
         "table_by_title": search.get_table_by_title(tables, "Experimental"),
         "list_tables": search.list_all_tables(tables),
     }
+
+
+def _cached_index(spark, partitions: int) -> tuple:
+    """(cells, tables) of the fixture corpus, cached at ``partitions``
+    partitions each and materialized."""
+    parsed = parse_documents(assemble_document_text(fixture_input_df(spark)))
+    tables = tables_output(parsed).repartition(partitions).cache()
+    cells = cells_output(tables).repartition(partitions).cache()
+    assert tables.count() and cells.count()
+    assert cells.rdd.getNumPartitions() == tables.rdd.getNumPartitions() == partitions
+    return cells, tables
+
+
+def test_search_operators_plan_no_exchange(spark):
+    """Every search operator over the cached cells/tables plans NO Exchange
+    above the cache scan: each reads its input as one partition, which
+    satisfies every grouping and ordering above it.  The row-shaped ones
+    plan no join, and key_value's window sort also serves its result
+    ordering (one Sort).  (The top-k's TakeOrderedAndProject:
+    test_search_anywhere_topk_is_take_ordered.)"""
+    cells, tables = _cached_index(spark, 3)
     try:
-        for name, q in queries.items():
+        for name, q in _search_queries(cells, tables).items():
             plan = plan_of(q)
             above_cache = plan[: plan.index("InMemoryTableScan")]
-            assert above_cache.count("Exchange") <= 1, (name, plan)
+            assert "Exchange" not in above_cache, (name, plan)
             if name in ("key_value", "by_column", "row_by_value"):
                 assert "Join" not in plan, (name, plan)
+            if name == "key_value":
+                assert above_cache.count("Sort [") == 1, plan
+    finally:
+        tables.unpersist()
+        cells.unpersist()
+
+
+def test_search_query_is_one_job_of_one_task(spark):
+    """Over a cache of several partitions, every search query runs as one
+    Spark job of one task: no range-sample job, no shuffle stage."""
+    cells, tables = _cached_index(spark, 3)
+    try:
+        for name, q in _search_queries(cells, tables).items():
+            _, jobs, tasks = run_counting_tasks(spark, q.collect)
+            assert (jobs, tasks) == (1, 1), name
     finally:
         tables.unpersist()
         cells.unpersist()

@@ -58,6 +58,9 @@ FIELDS = {
     "get_table_by_title": ("index", "title"),
 }
 
+#: The operators over the tables frame; the others read the cells.
+TABLE_METHODS = ("list_all_tables", "get_table_by_title")
+
 
 def _plain(value):
     if hasattr(value, "asDict"):
@@ -136,7 +139,7 @@ def spark_answer(frames, method: str, case: dict) -> dict:
     ``search_anywhere`` and ``get_table_by_title`` run per document, since
     their limit and first-match rule apply per reference engine."""
     tables, cells = frames
-    src = tables if method in ("list_all_tables", "get_table_by_title") else cells
+    src = tables if method in TABLE_METHODS else cells
     op = getattr(S, method)
     docs = [d["doc_id"] for d in fixture_documents()]
     got: dict = {}
@@ -245,6 +248,41 @@ def test_list_all_tables_parity(reference, frames):
 
 def test_get_table_by_title_parity(reference, frames):
     _assert_parity(reference, frames, "get_table_by_title", dict(title_query="Experimental"))
+
+
+#: One call per operator, search_anywhere with and without its limit, each
+#: with a non-empty answer over the fixtures.
+PARTITION_CALLS = [
+    ("search_by_key_value", dict(key_query="Pathology")),
+    ("search_by_column", dict(column_name="Group Number")),
+    ("get_row_by_column_value", dict(column_name="Group Number", value_query="2")),
+    ("search_anywhere", dict(query="Normal")),
+    ("search_anywhere", dict(query="Normal", max_results=5)),
+    ("list_all_tables", {}),
+    ("get_table_by_title", dict(title_query="Experimental")),
+]
+
+
+def test_answers_independent_of_cache_partitions(spark):
+    """Every operator returns the same rows in the same order whether the
+    fixture tables and cells are cached as 1 partition or as 7."""
+    parsed = parse_documents(assemble_document_text(fixture_input_df(spark)))
+    answers = []
+    for n in (1, 7):
+        tables = tables_output(parsed).repartition(n).cache()
+        cells = cells_output(tables).repartition(n).cache()
+        try:
+            assert cells.rdd.getNumPartitions() == n
+            answers.append([
+                getattr(S, method)(tables if method in TABLE_METHODS else cells, **kw).collect()
+                for method, kw in PARTITION_CALLS
+            ])
+        finally:
+            tables.unpersist()
+            cells.unpersist()
+    for (method, kw), one, seven in zip(PARTITION_CALLS, *answers):
+        assert one, (method, kw)
+        assert one == seven, (method, kw)
 
 
 # --- seeded equality against the kernel, no reference needed -----------------
