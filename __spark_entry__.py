@@ -822,14 +822,6 @@ FROM documents GROUP BY 1 HAVING count(*) > 1 ORDER BY text_md5
 """
 
 
-def _q_minhash_pairs(spark, sf_dir):
-    """Banded MinHash (b=4, r=2) candidates VERIFIED by exact shingle
-    Jaccard ≥ 50% — round 1's r=1 unverified candidates collapse in
-    precision at corpus scale (VERDICT.md What's-wrong #5)."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return dedup.minhash_near_dup_pairs(d, shingle_k=5, threshold_pct=50)
-
-
 _SQL_MINHASH_PAIRS = rf"""
 WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
 sh AS (
@@ -864,18 +856,6 @@ FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a JOIN sizes sb ON sb.doc_id = i
 WHERE 100 * i.n_inter >= 50 * (sa.n_sh + sb.n_sh - i.n_inter)
 ORDER BY doc_a, doc_b
 """
-
-
-def _q_minhash_incremental(spark, sf_dir):
-    """Incremental-ingest dedup: pairs INTRODUCED by a new shard (doc_id %
-    5 == 0) against the already-deduped rest of the corpus — new×(all)
-    band-signature candidates, old×old never regenerated, verify shingles
-    semi-joined to candidate docs only.  Equals the full-corpus pair set
-    filtered to ≥1 new-side doc (the oracle's closed form)."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    new = d.filter(F.col("doc_id") % 5 == 0)
-    corpus = d.filter(F.col("doc_id") % 5 != 0)
-    return dedup.minhash_incremental_pairs(new, corpus, shingle_k=5, threshold_pct=50)
 
 
 # The full-corpus pair derivation (same CTEs as _SQL_MINHASH_PAIRS) filtered
@@ -1377,12 +1357,6 @@ FROM nov n JOIN clf c USING (doc_id) ORDER BY n.doc_id
 
 # ---- similarity (oracled) ------------------------------------------------------
 
-def _q_embedding_topk(spark, sf_dir):
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5)
-    return similarity.brute_force_topk_exact(e, q, k=10)
-
-
 _SQL_EMBEDDING_TOPK = """
 WITH ev AS (
   SELECT vec_id, g.i AS pos,
@@ -1776,11 +1750,6 @@ ORDER BY op, doc_id
 
 
 # ---- banded sign-LSH (oracled: integer projections/buckets/cosine are exact) --
-
-def _q_ann_lsh(spark, sf_dir):
-    e = load_table(spark, sf_dir, "embeddings")
-    return similarity.lsh_bucketed_topk(e, e.filter(F.col("vec_id") < 5), k=10)
-
 
 def _q_embedding_near_dup(spark, sf_dir):
     # 0.45 sits just under the corpus' top-pair cosine band (max ≈ 0.51 at
@@ -2377,7 +2346,7 @@ def _q_ann_baselines(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
     cols = ["query_id", "vec_id", "cos_sim", "rank"]
-    brute = similarity.brute_force_topk_exact(e, q, k=10).select(
+    brute = similarity.brute_force_topk(e, q, k=10).select(
         F.lit("brute").alias("branch"), *cols
     )
     lsh = similarity.lsh_bucketed_topk(e, q, k=10).select(

@@ -255,7 +255,7 @@ def run_queries(spark, sf_dir: str, repeats: int = 3) -> tuple:
         runs = timed(lambda: qs[name](spark, sf_dir))
         times[name] = round(statistics.median(runs), 3)
         stats[name] = {"median": times[name], "best": min(runs), "runs": runs}
-    # similarity on the fast native path (the exact variant is the oracle twin)
+    # similarity: exact brute force, then the ANN paths it is recalled against
     from document_parser_spark.operators import similarity
     from document_parser_spark.operators.similarity import (
         brute_force_topk,
@@ -296,7 +296,7 @@ def run_queries(spark, sf_dir: str, repeats: int = 3) -> tuple:
     # the scale path: sketch rerank (the measured winner on this corpus);
     # IVF/LSH numbers above are the clustered-corpus paths, not the scale
     # story
-    extras["ann_primary"] = "ann_sketch (ann_topk default; recall/fraction above)"
+    extras["ann_primary"] = "ann_sketch (the scale path; recall/fraction above)"
     return times, extras, stats
 
 

@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import exact_canonical
+from .dedup import exact_canonical, token_sets
 from .text import PUNCT_RX, STOPWORDS, java_words, language_words_arrow, quality_ok, words
 
 
@@ -185,25 +185,19 @@ def decontamination_overlap(
 
     Only docs with ≥1 overlapping shingle are returned (the contaminated
     set a pipeline quarantines)."""
-    from .text import word_shingles
-
     bench_sh = (
-        benchmark.select(
-            F.explode(word_shingles(F.col("text"), shingle_k)).alias("shingle")
-        )
+        token_sets(benchmark, shingle_k)
+        .select(F.explode("ws").alias("shingle"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
     bench_ids = benchmark.select("doc_id").distinct()
-    # r06: the distinct (doc, shingle) grain via per-doc array_distinct —
+    # r06: the distinct (doc, shingle) grain via the per-doc token set —
     # deduped map-side inside each row, so the corpus shingle stream is
     # never shuffled; the only corpus-sized shuffle left is the per-doc
     # rollup, which partial-aggregates to ~a row per doc first.
-    per = docs.join(bench_ids, "doc_id", "left_anti").select(
-        "doc_id",
-        F.explode(F.array_distinct(word_shingles(F.col("text"), shingle_k))).alias(
-            "shingle"
-        ),
+    per = token_sets(docs.join(bench_ids, "doc_id", "left_anti"), shingle_k).select(
+        "doc_id", F.explode("ws").alias("shingle")
     )
     probed = per.join(F.broadcast(bench_sh), "shingle", "left")
     return (

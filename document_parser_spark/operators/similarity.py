@@ -1,13 +1,13 @@
 """Similarity search over an embedding column (array<float>).
 
-Every top-k method is one skeleton: a candidate generator yields
-(query_id, vec_id) pairs, and one exact-rerank tail (``_exact_topk``) joins
-the float vectors, scores them with the integer-exact ``cosine_exact_arrow``
-and keeps rank ≤ k.  The candidate generators:
+Every top-k method scores with one integer-exact arithmetic
+(``_int_matrix``/``_int_norms``) and keeps rank ≤ k with ``_rank_topk``.
+``brute_force_topk`` scores every corpus vector: the collected query
+matrix meets each corpus Arrow batch in one int64 matmul.  The ANN methods
+are candidate generators of (query_id, vec_id) pairs feeding one
+exact-rerank tail (``_exact_topk``), which joins the float vectors of the
+candidates only and scores them with ``cosine_exact_arrow``:
 
-  * ``brute_force_topk`` / ``brute_force_topk_exact`` — every corpus vector
-    (broadcast cross join, scored in-line); the float form is the bench
-    baseline, the exact form the oracle-comparable one.
   * ``lsh_bucketed_topk`` — vectors sharing ≥1 of the query's
     BANDS × ROWS_PER_BAND sign-LSH buckets; the buckets are the nibbles of
     the first sign-sketch word (planes 0–31).
@@ -37,7 +37,6 @@ bucket, sketch word and cosine is bit-identical across engines.
 from __future__ import annotations
 
 import hashlib
-from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -75,54 +74,10 @@ def ivf_nprobe(nlist: int) -> int:
     return max(2, nlist // 8)
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Float cosine — the bench/hot path (one pass, codegen-friendly)."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 # --- exact integer arithmetic (oracle-comparable) ----------------------------
 
 def _int_val(x: Column) -> Column:
     return F.floor(x.cast("double") * F.lit(SCALE)).cast("long")
-
-
-def _int_dot(a: Column, b: Column) -> Column:
-    """Σ floor(aᵢ·1e8)·floor(bᵢ·1e8) in int64 — order-independent, exact."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: _int_val(x) * _int_val(y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _int_nsq(a: Column) -> Column:
-    return F.aggregate(
-        a,
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + _int_val(x) * _int_val(x),
-    )
-
-
-def cosine_exact(a: Column, b: Column) -> Column:
-    """Cosine of the integer-scaled vectors: exact int64 dot/norms, one double
-    division at the end — bit-identical in any engine (IEEE sqrt/divide are
-    correctly rounded).  Pure-Column formulation (interpreted HOFs) — used
-    for small pair counts and as the cross-check twin of the Arrow path."""
-    return _int_dot(a, b).cast("double") / (
-        F.sqrt(_int_nsq(a).cast("double")) * F.sqrt(_int_nsq(b).cast("double"))
-    )
 
 
 def _int_matrix(vecs) -> np.ndarray:
@@ -133,19 +88,26 @@ def _int_matrix(vecs) -> np.ndarray:
     ).astype(np.int64)
 
 
+def _int_norms(m: np.ndarray) -> np.ndarray:
+    """Per-row norm of an ``_int_matrix``: the exact int64 sum of squares,
+    then one IEEE conversion and sqrt — the SQL mirrors'
+    ``sqrt(CAST(sum(val*val) AS DOUBLE))`` bit for bit (a float64 summation
+    would round differently above 2^53)."""
+    return np.sqrt((m * m).sum(axis=1).astype(np.float64))
+
+
 @F.pandas_udf(DoubleType())
 def cosine_exact_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched twin of ``cosine_exact`` — one int64 numpy pass per
-    batch instead of interpreted per-element lambdas per pair (candidate-
-    heavy stages score ~100× faster).  Bit-identical: integer sums are
-    order-independent, and the final double divide/sqrt are IEEE-exact."""
+    """Cosine of the integer-scaled vectors, row by row: exact int64 dot and
+    norms, one double division at the end — bit-identical in any engine
+    (integer sums are order-independent, IEEE sqrt/divide correctly
+    rounded).  One numpy pass per Arrow batch, no interpreted lambda per
+    element."""
     if not len(a):
         return pd.Series([], dtype="float64")
     ia, ib = _int_matrix(a), _int_matrix(b)
     dot = (ia * ib).sum(axis=1).astype(np.float64)
-    na = np.sqrt((ia * ia).sum(axis=1).astype(np.float64))
-    nb = np.sqrt((ib * ib).sum(axis=1).astype(np.float64))
-    return pd.Series(dot / (na * nb))
+    return pd.Series(dot / (_int_norms(ia) * _int_norms(ib)))
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -180,51 +142,39 @@ def _exact_topk(
     return _rank_topk(scored, k)
 
 
-def _brute_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    cos: Callable[[Column, Column], Column],
-) -> DataFrame:
-    """Every corpus vector is a candidate of every query.  Queries are
-    broadcast (a query set is small by definition) and ``cos`` scores
-    in-line, so the corpus streams with no shuffle until the top-k window."""
-    q_vec = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
-    )
-    scored = (
-        embeddings.select("vec_id", F.col("embedding").alias("v_vec"))
-        .crossJoin(F.broadcast(q_vec))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cos(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
-        )
+def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """Exact top-k per query over every corpus vector.  A query set is small
+    by contract, so it is collected once into an int64 matrix Q, and each
+    corpus Arrow batch is scored with ONE int64 matmul ``V @ Qᵀ`` and one
+    IEEE divide by the two norms — ``cosine_exact_arrow``'s arithmetic, so
+    every score is bit-identical to the other top-k methods and to the
+    DuckDB mirror.  Self-pairs (vec_id == query_id) are dropped; the query
+    frame need not be a subset of the corpus.  The corpus streams with no
+    shuffle until the top-k window."""
+    rows = queries.select("vec_id", "embedding").collect()
+    qids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    qmat = _int_matrix([r["embedding"] for r in rows]) if rows else None
+
+    def score(batches):
+        for pdf in batches:
+            if qmat is None or not len(pdf):
+                continue
+            iv = _int_matrix(pdf["embedding"])
+            cos = (iv @ qmat.T).astype(np.float64) / (
+                _int_norms(iv)[:, None] * _int_norms(qmat)
+            )
+            vids = pdf["vec_id"].to_numpy()
+            vi, qi = np.nonzero(vids[:, None] != qids)
+            yield pd.DataFrame(
+                {"query_id": qids[qi], "vec_id": vids[vi], "cos_sim": cos[vi, qi]}
+            )
+
+    q_dt = queries.schema["vec_id"].dataType.simpleString()
+    v_dt = embeddings.schema["vec_id"].dataType.simpleString()
+    scored = embeddings.select("vec_id", "embedding").mapInPandas(
+        score, f"query_id {q_dt}, vec_id {v_dt}, cos_sim double"
     )
     return _rank_topk(scored, k)
-
-
-def brute_force_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-) -> DataFrame:
-    """Float cosine top-k per query vector — the performance baseline bench.py
-    measures (native ``F.zip_with`` dot product, whole-stage codegen)."""
-    return _brute_topk(embeddings, queries, k, cosine)
-
-
-def brute_force_topk_exact(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-) -> DataFrame:
-    """Oracle-comparable top-k: ``brute_force_topk``'s plan with the
-    integer-exact ``cosine_exact``.  The query norm is computed from the
-    query's own vector, so the query frame need not be a subset of the
-    corpus."""
-    return _brute_topk(embeddings, queries, k, cosine_exact)
 
 
 # --- sign sketch (shared by LSH, the sketch scans and near-dup) --------------
@@ -367,16 +317,13 @@ def _probe_udf(cids: np.ndarray, cmat: np.ndarray, nprobe: int):
     Ties break to the LOWEST cid: stable argsort on the descending score with
     columns pre-ordered by cid — exactly the SQL's
     ``ORDER BY score DESC, cid ASC``."""
-    # int64 norm sums (exact, order-independent), THEN one IEEE conversion —
-    # matches the SQL mirror's CAST(sum(cval*cval) AS DOUBLE) bit-for-bit
-    # (a float64 summation would round differently above 2^53)
-    cnsq = (cmat * cmat).sum(axis=1).astype(np.float64)
+    cn = _int_norms(cmat)
 
     @F.pandas_udf("array<long>")
     def probe(vecs: pd.Series) -> pd.Series:
         if not len(vecs):
             return pd.Series([], dtype=object)
-        score = (_int_matrix(vecs) @ cmat.T).astype(np.float64) / np.sqrt(cnsq)
+        score = (_int_matrix(vecs) @ cmat.T).astype(np.float64) / cn
         order = np.argsort(-score, axis=1, kind="stable")[:, :nprobe]
         return pd.Series([cids[o].tolist() for o in order])
 
@@ -393,7 +340,7 @@ def _partial_sums_udf(cids: np.ndarray, cmat: np.ndarray):
     and the DuckDB oracle that replays the explode+groupBy form — are
     bit-identical.  Scoring/tie-breaking is exactly ``_probe_udf``'s
     (stable argsort on -dot/|centroid|, cids pre-ordered ascending)."""
-    cnsq = (cmat * cmat).sum(axis=1).astype(np.float64)
+    cn = _int_norms(cmat)
 
     def part(batches):
         nlist, dim = cmat.shape
@@ -403,7 +350,7 @@ def _partial_sums_udf(cids: np.ndarray, cmat: np.ndarray):
             if not len(pdf):
                 continue
             iv = _int_matrix(pdf["_v"])
-            score = (iv @ cmat.T).astype(np.float64) / np.sqrt(cnsq)
+            score = (iv @ cmat.T).astype(np.float64) / cn
             a = np.argsort(-score, axis=1, kind="stable")[:, 0]
             for idx in np.unique(a):
                 m = a == idx
@@ -815,8 +762,7 @@ def _near_dup_pairs_grouped_arrow(
         bb = ((ivb @ signs) > 0).astype(np.float32)
         ca = ba.sum(axis=1)
         cb = bb.sum(axis=1)
-        na = np.sqrt((iva * iva).sum(axis=1).astype(np.float64))
-        nb = np.sqrt((ivb * ivb).sum(axis=1).astype(np.float64))
+        na, nb = _int_norms(iva), _int_norms(ivb)
         out_a, out_b, out_c = [], [], []
         # chunk the lo rows so the (chunk × nb) hamming plane stays ~32 MB
         step = max(1, 4_000_000 // max(len(idb), 1))

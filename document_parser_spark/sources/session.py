@@ -1,9 +1,10 @@
 """SparkSession factory tuned for the engine.
 
-Local mode is the test harness; the same configs are what we'd submit to a
-real cluster (spark-submit --py-files, see jobs/extract_job.py).  AQE handles
-runtime skew-join/coalesce; Arrow batch size is capped so one pathological
-multi-MB document can't blow up a single Arrow batch (SURVEY.md §4.3).
+Local mode is the test harness; ``ENGINE_CONF`` is what every spark-submit
+job in jobs/ applies on a real cluster too (spark-submit --py-files, see
+jobs/extract_job.py).  AQE handles runtime skew-join/coalesce; Arrow batch
+size is capped so one pathological multi-MB document can't blow up a single
+Arrow batch (SURVEY.md §4.3).
 """
 
 from __future__ import annotations
@@ -14,9 +15,20 @@ from pyspark.sql import SparkSession
 
 #: Rows per Arrow batch entering the parse UDF.  Measured: 256 serializes the
 #: pipeline on IPC round-trips at high core counts; 2048 amortizes them while
-#: expected batch bytes stay ~MBs (oversize docs are routed to segmentation
-#: before they can blow a batch up).
+#: expected batch bytes stay ~MBs.  A run over a corpus with multi-MB
+#: documents passes a segment threshold (``extract_job.py
+#: --segment-threshold``), which parses the oversize ones in segments; without
+#: it a batch of such documents is as large as they are.
 ARROW_BATCH_ROWS = 2048
+
+#: The engine settings every session shares — ``get_spark`` and each
+#: spark-submit job in jobs/ apply this one mapping.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
+}
 
 
 def get_spark(
@@ -33,13 +45,10 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
+        .config(map=ENGINE_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -2,30 +2,25 @@
 Structured Streaming form (SURVEY.md §2.13 extension; the reference is
 batch-only — cited seam `main.py:375-386` processes one file per run).
 
-Two operators, both state-bounded:
+``stream_exact_dedup`` is first-occurrence-wins exact content dedup keyed
+on md5(text) (the SAME content key as the batch ``exact_duplicates``), via
+``dropDuplicatesWithinWatermark``: state for a content hash is dropped once
+the watermark passes it, so state size is bounded by the dedup horizon, not
+the stream's lifetime — the only formulation that survives an unbounded
+corpus ingest.
 
-* ``stream_exact_dedup`` — first-occurrence-wins exact content dedup keyed
-  on md5(text) (the SAME content key as the batch ``exact_duplicates``),
-  via ``dropDuplicatesWithinWatermark``: state for a content hash is
-  dropped once the watermark passes it, so state size is bounded by the
-  dedup horizon, not the stream's lifetime — the only formulation that
-  survives an unbounded corpus ingest.
-
-* ``stream_simhash`` — the zero-shuffle Arrow fingerprint
-  (``dedup.simhash_arrow``) applied to a stream unchanged: it is a
-  stateless per-row select+filter, so any output mode/trigger works and
-  the fingerprints are byte-identical to the batch path (equality-gated in
-  tests/test_streaming_dedup.py).  Downstream near-dup candidate joins
-  stay batch jobs over the fingerprint sink: the chunk-bucket self-join
-  needs the corpus, not the micro-batch.
+Fingerprinting needs no streaming operator: the zero-shuffle Arrow
+``dedup.simhash_arrow`` is a stateless per-row select+filter, so it applies
+to a stream unchanged under any output mode/trigger, byte-identical to the
+batch path (equality-gated in tests/test_streaming_dedup.py).  Downstream
+near-dup candidate joins stay batch jobs over the fingerprint sink: the
+chunk-bucket self-join needs the corpus, not the micro-batch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators.dedup import simhash_arrow
 
 
 def stream_exact_dedup(stream_df: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -38,9 +33,3 @@ def stream_exact_dedup(stream_df: DataFrame, watermark: str = "10 minutes") -> D
     return keyed.withWatermark("ingest_ts", watermark).dropDuplicatesWithinWatermark(
         ["text_md5"]
     )
-
-
-def stream_simhash(stream_df: DataFrame) -> DataFrame:
-    """(doc_id, simhash) fingerprint stream — stateless map-only pass,
-    byte-identical to the batch ``simhash``/``simhash_arrow``."""
-    return simhash_arrow(stream_df)

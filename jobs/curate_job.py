@@ -45,14 +45,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from document_parser_spark.sources.session import ARROW_BATCH_ROWS
+    from document_parser_spark.sources.session import ENGINE_CONF
 
     spark = (
         SparkSession.builder.appName(f"curate:{args.run_id}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

@@ -117,11 +117,11 @@ def main() -> None:
         from pyspark.sql import SparkSession
         from pyspark.sql import functions as F
 
+        from document_parser_spark.sources.session import ENGINE_CONF
+
         spark = (
             SparkSession.builder.appName(f"dedup:{args.shard_id}")
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            .config(map=ENGINE_CONF)
             .getOrCreate()
         )
         spark.sparkContext.setLogLevel("WARN")
@@ -181,12 +181,12 @@ def main() -> None:
         # dynamic overwrite, a rerun replaces this shard's partition in place.
         # The manifest row goes LAST — any crash before it leaves a state a full
         # rerun of the same command repairs
-        sig_new.withColumn("shard_id", F.lit(args.shard_id)).write.mode(
-            "overwrite"
-        ).partitionBy("shard_id").parquet(sig_path)
-        shard.withColumn("shard_id", F.lit(args.shard_id)).write.mode(
-            "overwrite"
-        ).partitionBy("shard_id").parquet(txt_path)
+        for frame, path in ((sig_new, sig_path), (shard, txt_path)):
+            frame.withColumn("shard_id", F.lit(args.shard_id)).write.mode(
+                "overwrite"
+            ).option("partitionOverwriteMode", "dynamic").partitionBy(
+                "shard_id"
+            ).parquet(path)
         spark.createDataFrame([(args.shard_id,)], "shard_id string").write.mode(
             "append"
         ).parquet(manifest)

@@ -48,8 +48,9 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from document_parser_spark.sources.ingest import ingest_rendered
+    from document_parser_spark.sources.session import ENGINE_CONF
 
-    spark = SparkSession.builder.appName("ingest-example").getOrCreate()
+    spark = SparkSession.builder.appName("ingest-example").config(map=ENGINE_CONF).getOrCreate()
     sources = args.pdfs or ["sample.pdf"]
     triples = []
     for i, path in enumerate(sources):

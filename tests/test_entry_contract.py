@@ -111,3 +111,11 @@ def test_entry_flagship(spark):
 def test_all_queries_have_unique_names():
     q = entrymod.queries()
     assert set(entrymod.oracle_sql()) <= set(q)
+
+
+def test_every_query_function_is_registered():
+    """A ``_q_*`` function missing from ``queries()`` is dead code: neither
+    the driver nor these tests run it."""
+    registered = {f.__name__ for f in entrymod.queries().values()}
+    defined = {n for n, v in vars(entrymod).items() if n.startswith("_q_") and callable(v)}
+    assert defined - registered == set()

@@ -495,3 +495,29 @@ def test_operators_equal_kernel_oracle(spark):
     finally:
         tables.unpersist()
         cells.unpersist()
+
+
+#: search_anywhere cases the frozen vectors cannot check (their ``max_results``
+#: cases have no hits): ``Normal`` has 6 equal-score hits, so the cut keeps the
+#: first 4 by position; the fuzzy query's hits score 0.714 and 0.625, so the
+#: score sort decides which rows survive the cut.
+ANYWHERE_KERNEL_CASES = [
+    dict(query="Normal", max_results=4),
+    dict(query="Dr. James Chen", mode=kernel.SearchMode.FUZZY, max_results=4),
+]
+
+
+@pytest.mark.parametrize("case", ANYWHERE_KERNEL_CASES, ids=lambda c: repr(c)[:40])
+def test_search_anywhere_limit_and_order_equal_kernel(frames, case):
+    """search_anywhere's score sort and ``max_results`` cut on real hits:
+    rows and their order equal ``kernel.match_text`` evaluated over the
+    kernel's own parse of the fixtures."""
+    k_cells, k_tables = _kernel_index(fixture_documents())
+    uncut = _oracle("anywhere", {k: v for k, v in case.items() if k != "max_results"},
+                    k_cells, k_tables)
+    assert len(uncut) > case["max_results"]
+    if case.get("mode") == kernel.SearchMode.FUZZY:
+        assert len({r[5] for r in uncut}) > 1
+    tables, cells = frames
+    expected = _oracle("anywhere", case, k_cells, k_tables)
+    assert _spark_rows("anywhere", case, cells, tables) == expected

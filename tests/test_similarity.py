@@ -1,6 +1,6 @@
-"""Similarity-path consistency: the fast native top-k (float math) must agree
-with the decimal-exact oracle twin on neighbor sets, and the LSH path must be
-a subset-recall approximation of the exact path."""
+"""Similarity-path consistency: the matmul brute-force top-k must equal its
+Column-algebra twin row for row, and the ANN paths must be recall
+approximations of it whose returned scores are exact."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,22 +17,20 @@ def emb(spark):
     return load_table(spark, SF, "embeddings").cache()
 
 
-def _topk_map(rows):
-    out = {}
-    for r in rows:
-        out.setdefault(r["query_id"], []).append((r["rank"], r["vec_id"], r["cos_sim"]))
-    return {q: sorted(v) for q, v in out.items()}
-
-
-def test_fast_path_matches_exact_twin(spark, emb):
-    q = emb.filter(F.col("vec_id") < 5)
-    fast = _topk_map(similarity.brute_force_topk(emb, q, k=10).collect())
-    exact = _topk_map(similarity.brute_force_topk_exact(emb, q, k=10).collect())
-    assert set(fast) == set(exact)
-    for qid in fast:
-        assert [v for _, v, _ in fast[qid]] == [v for _, v, _ in exact[qid]], qid
-        for (_, _, a), (_, _, b) in zip(fast[qid], exact[qid]):
-            assert a == pytest.approx(b, rel=1e-6)
+def test_brute_force_equals_cosine_exact_twin(spark, emb):
+    """The matmul pass returns the twin's rows exactly — ids, ranks and
+    bit-equal scores — also for a query that is not in the corpus (vector 7
+    nudged, under an id the corpus lacks: nothing to drop as a self-pair)."""
+    near7 = [x + 1e-3 for x in emb.filter(F.col("vec_id") == 7).first()["embedding"]]
+    outside = spark.createDataFrame(
+        [(10**9, near7)], "vec_id long, embedding array<float>"
+    )
+    q = emb.filter(F.col("vec_id") < 5).select("vec_id", "embedding").unionByName(outside)
+    key = lambda rows: sorted(tuple(r) for r in rows)  # noqa: E731
+    got = key(similarity.brute_force_topk(emb, q, k=10).collect())
+    want = key(twins.brute_force_topk(emb, q, k=10).collect())
+    assert got == want and len(got) == 6 * 10
+    assert [r[1] for r in got if r[0] == 10**9 and r[3] == 1] == [7]
 
 
 def test_lsh_results_subset_of_exact_candidates(spark, emb):
@@ -47,9 +45,7 @@ def test_lsh_results_subset_of_exact_candidates(spark, emb):
         for r in similarity.brute_force_topk(emb, q, k=500).collect()
     }
     for r in lsh:
-        key = (r["query_id"], r["vec_id"])
-        assert key in exact_all
-        assert r["cos_sim"] == pytest.approx(exact_all[key], rel=1e-6)
+        assert exact_all[(r["query_id"], r["vec_id"])] == r["cos_sim"]
 
 
 def test_numpy_buckets_equal_column_buckets(spark, emb):
@@ -118,7 +114,7 @@ def test_ivf_topk_candidates_from_probed_lists(spark, emb):
     the exact top-k from below (recall ≤ 1, deterministic)."""
     q = emb.filter(F.col("vec_id") < 5)
     ivf = similarity.ivf_topk(emb, q, k=10, nlist=16, nprobe=4).collect()
-    exact = similarity.brute_force_topk_exact(emb, q, k=10).collect()
+    exact = similarity.brute_force_topk(emb, q, k=10).collect()
     assert {r["query_id"] for r in ivf} == {r["query_id"] for r in exact}
     per_q = {}
     for r in ivf:
@@ -141,7 +137,7 @@ def test_sketch_topk_recall_and_full_rerank_exactness(spark, emb):
     separates cos≈0.35 neighbors from the isotropic bulk)."""
     q = emb.filter(F.col("vec_id") < 5)
     exact = {(r["query_id"], r["vec_id"])
-             for r in similarity.brute_force_topk_exact(emb, q, k=10).collect()}
+             for r in similarity.brute_force_topk(emb, q, k=10).collect()}
     full = {(r["query_id"], r["vec_id"])
             for r in similarity.sketch_topk(emb, q, k=10, rerank_frac_pct=100).collect()}
     assert full == exact
@@ -186,7 +182,7 @@ def test_ivf_sketch_composition_on_clustered_corpus(spark):
     n = emb.count()
     q = emb.filter(F.col("vec_id") < 5)
     truth = {}
-    for r in similarity.brute_force_topk_exact(emb, q, k=10).collect():
+    for r in similarity.brute_force_topk(emb, q, k=10).collect():
         truth.setdefault(r["query_id"], set()).add(r["vec_id"])
     hybrid = similarity.ivf_sketch_topk(emb, q, k=10).collect()
     got = {}

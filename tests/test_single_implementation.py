@@ -10,12 +10,13 @@ import pkgutil
 
 import document_parser_spark.operators as operators
 import document_parser_spark.plans as plans
+import document_parser_spark.streaming as streaming
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 MODULES = [
     importlib.import_module(f"{pkg.__name__}.{m.name}")
-    for pkg in (operators, plans)
+    for pkg in (operators, plans, streaming)
     for m in pkgutil.iter_modules(pkg.__path__)
 ]
 
@@ -39,11 +40,14 @@ REMOVED_NAMES = {
     "operators.text": ("token_stats", "quality_scores"),
     "operators.similarity": (
         "ann_topk", "ANN_METHODS", "_band_buckets_udf", "_ivf_sketch_from_side",
+        "brute_force_topk_exact", "_brute_topk", "cosine", "cosine_exact",
+        "_dot", "_norm", "_int_dot", "_int_nsq",
     ),
     "plans.segmentation": ("_parse_segment_udf", "_SEGMENT_PARSE"),
     "plans.ann_index": ("_index_pass", "_has_metrics", "DEFAULT_BUCKETS"),
     "plans.curate": ("DEFAULT_BUCKETS",),
     "operators.dedup": ("_doc_shingles", "_ngram_frames", "_simhash_candidates_raw"),
+    "streaming.dedup_stream": ("stream_simhash",),
 }
 
 
@@ -70,6 +74,16 @@ def test_exact_election_lives_in_dedup():
         if 'first("text")' in p.read_text(encoding="utf-8")
     )
     assert spelled == ["operators/dedup.py"]
+
+
+def test_engine_settings_live_in_session():
+    """Every spark-submit job applies ``session.ENGINE_CONF``: no job spells
+    a ``spark.sql.`` setting of its own, so their sessions cannot drift."""
+    spelled = sorted(
+        p.name for p in (ROOT / "jobs").glob("*.py")
+        if "spark.sql." in p.read_text(encoding="utf-8")
+    )
+    assert spelled == []
 
 
 def test_no_twin_in_package():

@@ -10,10 +10,8 @@ from pyspark.sql import functions as F
 
 from conftest import TMP
 import twins
-from document_parser_spark.streaming.dedup_stream import (
-    stream_exact_dedup,
-    stream_simhash,
-)
+from document_parser_spark.operators.dedup import simhash_arrow
+from document_parser_spark.streaming.dedup_stream import stream_exact_dedup
 
 _SCHEMA = "doc_id long, ingest_ts timestamp, text string"
 
@@ -79,7 +77,7 @@ def test_stream_simhash_equals_batch(spark):
         )
         stream = spark.readStream.schema(_SCHEMA).parquet(f"{workdir}/in")
         q = (
-            stream_simhash(stream)
+            simhash_arrow(stream)
             .writeStream.outputMode("append")
             .format("memory")
             .queryName(name)

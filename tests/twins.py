@@ -330,6 +330,50 @@ def verify_jaccard(cand: DataFrame, sets: DataFrame, threshold_pct: int) -> Data
 # ---------------------------------------------------------- similarity.py
 
 
+def _int_dot(a: Column, b: Column) -> Column:
+    """Σ floor(aᵢ·1e8)·floor(bᵢ·1e8) in int64 — order-independent, exact."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: similarity._int_val(x) * similarity._int_val(y)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _int_nsq(a: Column) -> Column:
+    return F.aggregate(
+        a,
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + similarity._int_val(x) * similarity._int_val(x),
+    )
+
+
+def cosine_exact(a: Column, b: Column) -> Column:
+    """``similarity.cosine_exact_arrow`` as Column algebra (interpreted
+    HOFs): exact int64 dot and norms, one double division at the end."""
+    return _int_dot(a, b).cast("double") / (
+        F.sqrt(_int_nsq(a).cast("double")) * F.sqrt(_int_nsq(b).cast("double"))
+    )
+
+
+def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """``similarity.brute_force_topk`` as a broadcast cross join scored
+    in-line by ``cosine_exact``, self-pairs dropped."""
+    q_vec = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
+    )
+    scored = (
+        embeddings.select("vec_id", F.col("embedding").alias("v_vec"))
+        .crossJoin(F.broadcast(q_vec))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            cosine_exact(F.col("q_vec"), F.col("v_vec")).alias("cos_sim"),
+        )
+    )
+    return similarity._rank_topk(scored, k)
+
+
 def band_buckets(
     vec: Column,
     dim: int,
