@@ -5,9 +5,10 @@ re-designed Spark-first (DataFrame/SQL + vectorized Arrow UDFs).
 Layout:
   kernel/     pure-Python reference-faithful parse core (oracle + UDF bodies)
   operators/  Spark operators: extract, search, dedup, similarity, text, multimodal
-  sources/    readers/writers incl. the partition-overwrite catalog
+  sources/    session, readers, sinks and the render-ingest seam
   functions/  native Column-expression twins of the kernel predicates
-  plans/      partitioning, skew/salting, segmentation, resume manifest
+  plans/      partitioning, skew/salting, segmentation, resume manifest +
+              the one partition-overwrite writer
   streaming/  structured-streaming wrapper around the same extraction UDF
 """
 

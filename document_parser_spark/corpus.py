@@ -18,6 +18,7 @@ the raw pre-parse stream is a single ``text`` span holding the markdown plus
 from __future__ import annotations
 
 import random
+import re
 from typing import Any, Dict, Iterator, List
 
 from .kernel.html import looks_like_html as _looks_like_html
@@ -467,21 +468,24 @@ def synthesize_corpus(n_docs: int, seed: int = 42) -> Iterator[Dict[str, Any]]:
         yield synthesize_doc(i, seed)
 
 
+_MD_REF_RX = re.compile(r"!\[[^\]]*\]\(([^)]+)\)")
+_IMG_REF_RX = re.compile(r'<img[^>]*\ssrc="([^"]+)"')
+
+
+def media_refs(text: str) -> List[str]:
+    """The distinct media references of a document: markdown ``![](ref)``
+    first, then HTML ``<img src="ref">``, deduped in that order — the one
+    Python rule (``sources.data.lift_flat_to_input`` is its Spark form)."""
+    return list(dict.fromkeys(_MD_REF_RX.findall(text) + _IMG_REF_RX.findall(text)))
+
+
 def to_input_rows(docs) -> List[Dict[str, Any]]:
     """Shape docs per input_hint: one raw ``text`` span with the markdown at
-    offset 0, plus a ``media`` span per distinct ``![](ref)`` attachment."""
-    import re as _re
-
+    offset 0, plus a ``media`` span per distinct ``media_refs`` entry."""
     rows = []
     for d in docs:
         spans = [{"kind": "text", "text": d["text"], "media_ref": None, "offset": 0}]
-        # markdown ![](ref) first, then HTML <img src="ref"> — deduped in
-        # that order (mirrored exactly by sources.data.lift_flat_to_input
-        # and scripts/build_golden.py)
-        refs = _re.findall(r"!\[[^\]]*\]\(([^)]+)\)", d["text"]) + _re.findall(
-            r'<img[^>]*\ssrc="([^"]+)"', d["text"]
-        )
-        for k, ref in enumerate(dict.fromkeys(refs)):
+        for k, ref in enumerate(media_refs(d["text"])):
             spans.append({"kind": "media", "text": "", "media_ref": ref, "offset": k + 1})
         rows.append({"doc_id": d["doc_id"], "spans": spans})
     return rows

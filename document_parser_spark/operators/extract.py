@@ -263,11 +263,13 @@ def spans_output(parsed: DataFrame) -> DataFrame:
     return parsed.select("doc_id", "spans")
 
 
-def tables_output(parsed: DataFrame) -> DataFrame:
-    """One row per (doc_id, table): the structured-table side table."""
-    t = parsed.select("doc_id", F.explode("tables").alias("t"))
+def tables_output(parsed: DataFrame, *carry: str) -> DataFrame:
+    """One row per (doc_id, table): the structured-table side table, with
+    each ``carry`` column of the table's document."""
+    t = parsed.select("doc_id", *carry, F.explode("tables").alias("t"))
     return t.select(
         "doc_id",
+        *carry,
         F.col("t.index").alias("table_index"),
         F.col("t.source").alias("source"),
         F.col("t.title").alias("title"),

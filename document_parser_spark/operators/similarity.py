@@ -198,16 +198,24 @@ def _sign_matrix(dim: int, planes: int) -> np.ndarray:
     return np.array([plane_signs(p, dim) for p in range(planes)], dtype=np.int64).T
 
 
-def probe_dim(df: DataFrame, vec_col: str = "embedding") -> int:
-    """One tiny driver-side job to learn the (uniform) embedding dimension;
-    the sign matrix is then inlined as literals — zero per-row hashing."""
+def probe_count_dim(df: DataFrame, vec_col: str = "embedding") -> tuple[int, int]:
+    """The row count and the (uniform) embedding dimension, in one tiny
+    driver-side aggregate; the sign matrix is then inlined as literals —
+    zero per-row hashing."""
     row = df.select(
-        F.min(F.size(vec_col)).alias("lo"), F.max(F.size(vec_col)).alias("hi")
+        F.count("*").alias("n"),
+        F.min(F.size(vec_col)).alias("lo"),
+        F.max(F.size(vec_col)).alias("hi"),
     ).first()
     # an aggregate always returns one row: an empty frame reads lo = hi = None
     if row.hi is None or row.lo != row.hi:
         raise ValueError(f"embedding dimension not uniform or frame empty: {row}")
-    return int(row.hi)
+    return int(row.n), int(row.hi)
+
+
+def probe_dim(df: DataFrame, vec_col: str = "embedding") -> int:
+    """The (uniform) embedding dimension of ``df`` (``probe_count_dim``)."""
+    return probe_count_dim(df, vec_col)[1]
 
 
 def _sketch_udf(dim: int, planes: int = SKETCH_PLANES):

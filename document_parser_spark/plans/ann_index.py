@@ -50,7 +50,7 @@ from ..operators.similarity import (
     ann_index_frame,
     ivf_centroids_kmeans,
     ivf_nlist,
-    probe_dim,
+    probe_count_dim,
 )
 from . import resume
 
@@ -144,8 +144,7 @@ def run_index_build_checkpointed(
     metrics_dir = os.path.join(out_dir, "metrics")
 
     t0 = time.monotonic()
-    n = embeddings.count()
-    dim = probe_dim(embeddings)
+    n, dim = probe_count_dim(embeddings)
 
     # step 1: resolve the quantizer layout once — the FIXED centroids every
     # bucket is indexed against — and guard it

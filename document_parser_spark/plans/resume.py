@@ -1,8 +1,10 @@
 """The resume manifest — checkpoint-resume + lineage metrics (north_rule;
-SURVEY.md §4.3).  This module is the ONLY owner of the manifest format:
-the extraction builder below, the curation builder (plans/curate.py) and
-the ANN-index builder (plans/ann_index.py) hand it per-bucket counts and
-read their totals back through it, never through the table itself.
+SURVEY.md §4.3).  This module is the ONLY owner of the manifest format and
+of the partition-overwrite writer: the extraction builder below, the
+curation builder (plans/curate.py), the ANN-index builder
+(plans/ann_index.py) and the incremental dedup job (jobs/dedup_job.py) hand
+it per-bucket counts and read their totals back through it, never through
+the table itself.
 
 Batch-level idempotency without Structured Streaming:
 
@@ -10,10 +12,10 @@ Batch-level idempotency without Structured Streaming:
     ``pmod(xxhash64(key), B)`` over an input-derived key (doc_id, md5 of
     the text, vec_id) — identical across runs and cluster sizes (never
     ``spark_partition_id``, which is placement-dependent);
-  * outputs are written ``partitionBy(bucket)`` with dynamic partition
-    overwrite — re-processing a bucket REPLACES it (the local-parquet
-    stand-in for Iceberg ``overwritePartitions``; swap the writer for
-    ``.format("iceberg")`` when the runtime has the jar);
+  * outputs are written ``partitionBy(bucket)`` by ``overwrite_partitions``
+    — re-processing a bucket REPLACES it (the local-parquet stand-in for
+    Iceberg ``overwritePartitions``, which slots in there when the runtime
+    has the jar);
   * ``write_manifest`` stores one lineage row per (run_id, bucket) under a
     ``run_id=…/partition_key=…`` directory — overwrite-by-partition means
     retries can never duplicate a row (MERGE-like exactly-once);
@@ -21,6 +23,8 @@ Batch-level idempotency without Structured Streaming:
     in the manifest for this run_id: only unfinished work re-runs, and a
     finished build returns before building any pipeline;
     ``manifest_totals`` reads this run's counters back in one aggregate.
+    Both read ``run_id`` and ``partition_key`` as the strings written, so
+    any run id or bucket value a caller passes compares exactly.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 DEFAULT_BUCKETS = 64
 
@@ -43,25 +48,39 @@ def with_bucket(df: DataFrame, key: str | Column, num_buckets: int) -> DataFrame
     )
 
 
-def read_state(spark: SparkSession, path: str) -> DataFrame | None:
+def read_state(spark: SparkSession, path: str, *keys: str) -> DataFrame | None:
     """The parquet table at ``path``, or None when there is no state yet:
     the path is absent, or it is a directory with no data files.  Any other
     read failure (corrupt footer, permissions, schema drift) raises —
     degrading it to "no state" would let an index build recompute a
     quantizer that indexed buckets still use, or an incremental dedup emit
-    only intra-shard pairs and permanently miss shard-vs-corpus near-dups."""
+    only intra-shard pairs and permanently miss shard-vs-corpus near-dups.
+
+    ``keys`` name partition columns read back as the strings written: left
+    to type inference, ``run_id=20261019`` reads back as the int 20261019,
+    so ``020261019`` would match it and ``nightly-01`` would fail to cast.
+    A table without one of them was not written by this module and raises."""
     try:
-        return spark.read.parquet(path)
+        df = spark.read.parquet(path)
     except AnalysisException as exc:
         if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             return None
         raise
+    if not keys:
+        return df
+    missing = sorted(set(keys) - set(df.columns))
+    if missing:
+        raise ValueError(f"{path} has no partition column {missing}: not a table of this format")
+    schema = StructType(
+        [StructField(f.name, StringType()) if f.name in keys else f for f in df.schema]
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def _this_run(spark: SparkSession, metrics_dir: str, run_id: str) -> DataFrame | None:
     """This run's manifest rows, with ``partition_key`` read back as
-    ``bucket``."""
-    m = read_state(spark, metrics_dir)
+    ``bucket`` (a string)."""
+    m = read_state(spark, metrics_dir, "run_id", "partition_key")
     if m is None:
         return None
     return m.filter(F.col("run_id") == run_id).withColumnRenamed("partition_key", "bucket")
@@ -73,22 +92,24 @@ def select_unfinished(
     run_id: str,
     buckets: DataFrame,
     max_buckets_this_run: int | None,
-) -> tuple[set[int], Column, bool]:
+) -> tuple[set[str], Column, bool]:
     """The resume manifest's work selection, shared by every bucketed job:
-    the buckets this run already finished, a predicate on ``bucket`` that
-    keeps the unfinished ones, and whether that selection is empty — a
-    resumed run of a finished build then returns early instead of running
-    its whole pipeline over zero rows.  Only a resumed run probes for that
-    (one ``isEmpty`` on ``buckets`` — any frame with a ``bucket`` column —
-    which stops at the first unfinished row).  ``max_buckets_this_run``
+    the buckets this run already finished (as strings), a predicate on
+    ``bucket`` that keeps the unfinished ones, and whether that selection
+    is empty — a resumed run of a finished build then returns early
+    instead of running its whole pipeline over zero rows.  The finished
+    buckets are one scan of this run's rows, no ``distinct``:
+    overwrite-by-partition keeps one row per bucket.  Only a resumed run
+    probes for that (one ``isEmpty`` on ``buckets`` — any frame with a
+    ``bucket`` column — which stops at the first unfinished row).  ``max_buckets_this_run``
     (crash simulation for resume tests) narrows the selection to the first
     N unfinished buckets in order; only then is ``buckets`` collected."""
     m = _this_run(spark, metrics_dir, run_id)
     done = (
         set() if m is None
-        else {r["bucket"] for r in m.select("bucket").distinct().collect()}
+        else {r["bucket"] for r in m.select("bucket").collect()}
     )
-    keep = ~F.col("bucket").isin(sorted(done)) if done else F.lit(True)
+    keep = ~F.col("bucket").cast("string").isin(sorted(done)) if done else F.lit(True)
     if max_buckets_this_run is not None:
         remaining = sorted(
             r["bucket"] for r in buckets.filter(keep).select("bucket").distinct().collect()
@@ -109,17 +130,16 @@ def write_manifest(counts: DataFrame, metrics_dir: str, run_id: str, t0: float) 
     ``wall_ms`` so far (since ``t0``, a ``time.monotonic()`` reading),
     which is returned."""
     wall_ms = elapsed_ms(t0)
-    (
+    overwrite_partitions(
         counts.select(
             F.col("bucket").alias("partition_key"),
             F.lit(run_id).alias("run_id"),
             *[c for c in counts.columns if c != "bucket"],
             F.lit(wall_ms).cast("long").alias("wall_ms"),
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("run_id", "partition_key")
-        .parquet(metrics_dir)
+        ),
+        metrics_dir,
+        "run_id",
+        "partition_key",
     )
     return wall_ms
 
@@ -156,9 +176,22 @@ def lineage_metrics(parsed: DataFrame) -> DataFrame:
     )
 
 
+def overwrite_partitions(df: DataFrame, path: str, *cols: str) -> None:
+    """The one partition-overwrite writer: ``df`` written ``partitionBy(cols)``
+    to the parquet table at ``path``, replacing only the partitions present
+    in ``df`` and leaving the rest — idempotent under retry.  Iceberg's
+    ``writeTo(…).overwritePartitions()`` is the same contract and slots in
+    here when the runtime has the jar."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*cols)
+        .parquet(path)
+    )
+
+
 def write_partitioned(df: DataFrame, path: str) -> None:
-    """Dynamic partition overwrite by ``bucket``: only the partitions present
-    in ``df`` are replaced — idempotent under retry.
+    """``overwrite_partitions`` by ``bucket``, clustered by it first.
 
     Repartition on the partition column FIRST: from the salted (bucket-
     uncorrelated) task layout, every write task would otherwise hold one
@@ -168,13 +201,7 @@ def write_partitioned(df: DataFrame, path: str) -> None:
     this write stage, not the parse).  Clustering by bucket gives each task
     ONE open writer and, on a real cluster, one output file per partition
     instead of cores× fragments."""
-    (
-        df.repartition(F.col("bucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
+    overwrite_partitions(df.repartition(F.col("bucket")), path, "bucket")
 
 
 def run_extraction_checkpointed(
@@ -194,7 +221,7 @@ def run_extraction_checkpointed(
     segment-parallel parse (plans/segmentation.py) — identical output,
     bounded task times.  Returns counters for observability.
     """
-    from ..operators.extract import assemble_document_text, parse_documents
+    from ..operators.extract import assemble_document_text, parse_documents, tables_output
     from .partitioning import salted_repartition
 
     spans_dir = os.path.join(out_dir, "document_spans")
@@ -233,13 +260,7 @@ def run_extraction_checkpointed(
     # OOM'd a 16 GiB local[32] heap that the serialized form fits easily
 
     write_partitioned(parsed.select("doc_id", "bucket", "spans"), spans_dir)
-
-    from ..operators.extract import tables_output
-
-    tables = tables_output(parsed.select("doc_id", "spans", "tables")).join(
-        parsed.select("doc_id", "bucket"), on="doc_id"
-    )
-    write_partitioned(tables, tables_dir)
+    write_partitioned(tables_output(parsed, "bucket"), tables_dir)
 
     wall_ms = write_manifest(lineage_metrics(parsed), metrics_dir, run_id, t0)
     stats = {

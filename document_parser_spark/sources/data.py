@@ -69,7 +69,8 @@ def flat_documents_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lift_flat_to_input(flat: DataFrame) -> DataFrame:
     """(doc_id, text) → input_hint span shape: one raw text span at offset 0
-    plus one media span per distinct ``![](ref)`` occurrence."""
+    plus one media span per distinct media reference — the Spark form of
+    ``corpus.media_refs`` (markdown ``![](ref)`` then HTML ``<img src>``)."""
     refs = F.array_distinct(
         F.concat(
             F.expr(r"regexp_extract_all(text, '!\\[[^\\]]*\\]\\(([^)]+)\\)', 1)"),

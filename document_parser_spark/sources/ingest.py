@@ -24,9 +24,8 @@ from typing import Any, Dict, Iterable, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..corpus import media_refs
 from ..schemas import DOCUMENTS_INPUT
-
-_MEDIA_REF_RX = re.compile(r"!\[[^\]]*\]\(([^)]+)\)")
 
 _KIND_BY_EXT = (
     (re.compile(r"(?i)\.(png|jpe?g|gif|bmp|webp|tiff?)$"), "image"),
@@ -52,9 +51,10 @@ def adapt_rendered(
     ``rendered.markdown``); ``images`` is its name→bytes sidecar
     (``rendered.images``, use_marker_converter.py:614-623).  The input row
     carries the whole stream as one raw ``text`` span at offset 0 plus one
-    ``media`` span per distinct ``![](ref)`` occurrence — identical to
-    corpus.to_input_rows, so adapted documents flow through the same parse,
-    golden oracle, and search surface as every other source.
+    ``media`` span per ``corpus.media_refs`` entry (markdown ``![](ref)``
+    then HTML ``<img src>``) — identical to corpus.to_input_rows, so adapted
+    documents flow through the same parse, golden oracle, and search surface
+    as every other source.
 
     Raises ValueError on shape violations (the schema is enforced again at
     DataFrame creation)."""
@@ -67,7 +67,7 @@ def adapt_rendered(
     spans: List[Dict[str, Any]] = [
         {"kind": "text", "text": markdown, "media_ref": None, "offset": 0}
     ]
-    refs = list(dict.fromkeys(_MEDIA_REF_RX.findall(markdown)))
+    refs = media_refs(markdown)
     for k, ref in enumerate(refs):
         spans.append({"kind": "media", "text": "", "media_ref": ref, "offset": k + 1})
 

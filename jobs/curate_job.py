@@ -58,6 +58,7 @@ def main() -> None:
         run_curation_checkpointed,
         synthetic_curation_corpus,
     )
+    from document_parser_spark.plans.resume import read_state
 
     if args.input.startswith("synthetic:"):
         # Stage the generated corpus to parquet ONCE and read it back: the
@@ -71,9 +72,7 @@ def main() -> None:
 
         n = int(args.input.split(":", 1)[1])
         stage = os.path.join(args.output, f"_input_{n}")
-        try:
-            spark.read.parquet(stage).limit(1).collect()
-        except Exception:  # noqa: BLE001 — first run: stage dir absent
+        if read_state(spark, stage) is None:
             synthetic_curation_corpus(spark, n).write.mode("overwrite").parquet(stage)
         docs = spark.read.parquet(stage)
     else:

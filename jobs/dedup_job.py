@@ -16,27 +16,31 @@ signature table — across shard ingests.  Per shard it:
      exact-Jaccard verify touches only candidate docs' text) — the shared
      core is ``dedup.minhash_pairs_from_signatures``;
   3. writes the shard's signatures and text into state tables PARTITIONED
-     BY shard_id with dynamic partition overwrite, so a crash-rerun
+     BY shard_id through ``resume.overwrite_partitions``, so a crash-rerun
      overwrites the shard's own partition instead of double-appending —
      idempotent per shard regardless of where a previous attempt died;
-     the manifest row (written last) makes a completed shard a no-op.
+     the shard's completion row (written last) makes it a no-op.
+
+``<state>/manifest`` is the one resume manifest of plans/resume.py: the
+state dir is the run (run id ``dedup``), each shard is one bucket keyed by
+its shard id, and the row counts the shard's ``docs`` and ``pairs``.  A
+state dir whose manifest is in any other format raises instead of reading
+as "no shards done", which would re-pair the shard against partial state.
 
 Prints ONE JSON line: shard size, verified pair count, and whether the
 shard was a resume no-op.
 
-**Sequential-ingest contract (ADVICE r03, enforced r05):** shard ingests
-into one state directory must run ONE AT A TIME.  The manifest is an
-append-only parquet with no writer lock: two concurrent ingests would each
-read ``done`` before the other commits, so each verifies only against the
-already-completed corpus and the cross-pair between the two in-flight
-shards is permanently missed (and concurrent appends to the same manifest
-path can race).  The contract is now ENFORCED by an O_CREAT|O_EXCL
-lockfile (``<state>/.ingest.lock``) taken before state is read and released
-on every exit path: a second concurrent ingest fails fast with the holder's
-identity instead of silently missing pairs.  A crash can leave the lock
-behind — ``--steal-lock`` reclaims it once the operator has confirmed no
-ingest is running (detected after the fact by ``manifest`` rows whose count
-differs from the number of distinct shard_ids).
+**Sequential-ingest contract:** shard ingests into one state directory
+must run ONE AT A TIME.  Two concurrent ingests
+would each read ``done`` before the other commits, so each verifies only
+against the already-completed corpus and the cross-pair between the two
+in-flight shards is permanently missed (overwrite-by-partition keeps their
+manifest rows from duplicating, but cannot recover the pair).  The contract
+is ENFORCED by an O_CREAT|O_EXCL lockfile (``<state>/.ingest.lock``) taken
+before state is read and released on every exit path: a second concurrent
+ingest fails fast with the holder's identity instead of silently missing
+pairs.  A crash can leave the lock behind — ``--steal-lock`` reclaims it
+once the operator has confirmed no ingest is running.
 """
 
 from __future__ import annotations
@@ -44,15 +48,18 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import time
 
 
 class _IngestLock:
     """Single-writer guard for the state dir (VERDICT r04 item 2b): an
     O_CREAT|O_EXCL lockfile is atomic on POSIX filesystems, so the second of
     two racing ingests fails fast instead of silently losing the cross-pair
-    between the in-flight shards.  Scope note: on object stores without
-    atomic create (S3 without a consistency layer) this degrades to
-    best-effort — there, serialize through the scheduler as before."""
+    between the in-flight shards.  It guards that pair only: the manifest
+    and state writes replace partitions, so a race cannot duplicate their
+    rows.  Scope note: on object stores without atomic create (S3 without a
+    consistency layer) this degrades to best-effort — there, serialize
+    through the scheduler as before."""
 
     def __init__(self, state_dir: str, shard_id: str, steal: bool = False):
         self.path = os.path.join(state_dir, ".ingest.lock")
@@ -89,6 +96,78 @@ class _IngestLock:
         return False
 
 
+#: the state dir is the run: every shard's manifest row carries this run id
+RUN_ID = "dedup"
+
+
+def ingest(
+    spark, shard_path: str, state: str, shard_id: str, shingle_k: int, threshold_pct: int
+) -> dict:
+    """Ingest one shard into the state dir: the near-dup pairs it introduces
+    against every completed shard, then its state and manifest row.  A
+    shard already in the manifest is a no-op."""
+    from pyspark.sql import functions as F
+
+    from document_parser_spark.operators.dedup import (
+        minhash_pairs_from_signatures,
+        minhash_signatures,
+    )
+    from document_parser_spark.plans import resume
+
+    t0 = time.monotonic()
+    sig_path = os.path.join(state, "signatures")
+    txt_path = os.path.join(state, "texts")
+    manifest = os.path.join(state, "manifest")
+
+    # a literal bucket: the done check folds to a constant, no job
+    this_shard = spark.range(1).select(F.lit(shard_id).alias("bucket"))
+    done, _, idle = resume.select_unfinished(spark, manifest, RUN_ID, this_shard, None)
+    if idle:
+        return {"shard_id": shard_id, "resumed_noop": True, "docs": 0, "pairs": 0}
+
+    shard = spark.read.parquet(shard_path).select("doc_id", "text")
+    n_docs = shard.count()
+    sig_new = minhash_signatures(shard, shingle_k=shingle_k)
+
+    sig_old = resume.read_state(spark, sig_path, "shard_id")
+    texts_old = resume.read_state(spark, txt_path, "shard_id")
+    if sig_old is not None and texts_old is not None and done:
+        # only manifest-COMPLETED shards count as state: a crashed previous
+        # attempt may have written partial partitions (this shard's own, or
+        # another shard's signatures without its texts) — those are invisible
+        # until their shard re-runs and overwrites them, so the candidate
+        # join never pairs against half-written state
+        completed = F.col("shard_id").isin(sorted(done))
+        sig_all = sig_old.filter(completed).select("doc_id", "band", "sig").unionByName(sig_new)
+        all_texts = texts_old.filter(completed).select("doc_id", "text").unionByName(shard)
+    else:
+        sig_all = sig_new
+        all_texts = shard
+
+    pairs = minhash_pairs_from_signatures(
+        sig_new, sig_all, all_texts, shingle_k=shingle_k, threshold_pct=threshold_pct,
+    )
+    pairs_path = os.path.join(state, f"pairs_{shard_id}")
+    pairs.write.mode("overwrite").parquet(pairs_path)
+    # count the WRITTEN output — counting the lazy frame first would execute
+    # the whole candidate+verify pipeline twice
+    n_pairs = spark.read.parquet(pairs_path).count()
+
+    # state writes replace this shard's partition in place; no repartition —
+    # the partition value is one constant, which would funnel the shard into
+    # one task.  The manifest row goes LAST — any crash before it leaves a
+    # state a full rerun of the same command repairs
+    for frame, path in ((sig_new, sig_path), (shard, txt_path)):
+        resume.overwrite_partitions(
+            frame.withColumn("shard_id", F.lit(shard_id)), path, "shard_id"
+        )
+    counts = spark.createDataFrame(
+        [(shard_id, n_docs, n_pairs)], "bucket string, docs long, pairs long"
+    )
+    resume.write_manifest(counts, manifest, RUN_ID, t0)
+    return {"shard_id": shard_id, "resumed_noop": False, "docs": n_docs, "pairs": n_pairs}
+
+
 def main() -> None:
     parser = argparse.ArgumentParser(
         description=__doc__,
@@ -115,7 +194,6 @@ def main() -> None:
 
     with _IngestLock(args.state, args.shard_id, args.steal_lock):
         from pyspark.sql import SparkSession
-        from pyspark.sql import functions as F
 
         from document_parser_spark.sources.session import ENGINE_CONF
 
@@ -125,82 +203,11 @@ def main() -> None:
             .getOrCreate()
         )
         spark.sparkContext.setLogLevel("WARN")
-
-        from document_parser_spark.operators.dedup import (
-            minhash_pairs_from_signatures,
-            minhash_signatures,
-        )
-        from document_parser_spark.plans.resume import read_state
-
-        sig_path = os.path.join(args.state, "signatures")
-        txt_path = os.path.join(args.state, "texts")
-        manifest = os.path.join(args.state, "manifest")
-
-        mf = read_state(spark, manifest)
-        # manifest is tiny: one row per ingested shard
-        done = {r["shard_id"] for r in mf.collect()} if mf is not None else set()
-        if args.shard_id in done:
-            print(json.dumps({"shard_id": args.shard_id, "resumed_noop": True,
-                              "docs": 0, "pairs": 0}))
-            return
-
-        shard = spark.read.parquet(args.shard).select("doc_id", "text")
-        n_docs = shard.count()
-        sig_new = minhash_signatures(shard, shingle_k=args.shingle_k)
-
-        sig_old = read_state(spark, sig_path)
-        texts_old = read_state(spark, txt_path)
-        if sig_old is not None and texts_old is not None and done:
-            # only manifest-COMPLETED shards count as state: a crashed previous
-            # attempt may have written partial partitions (this shard's own, or
-            # another shard's signatures without its texts) — those are invisible
-            # until their shard re-runs and overwrites them, so the candidate
-            # join never pairs against half-written state
-            completed = sorted(done)
-            sig_all = sig_old.filter(F.col("shard_id").isin(completed)).select(
-                "doc_id", "band", "sig"
-            ).unionByName(sig_new)
-            all_texts = texts_old.filter(F.col("shard_id").isin(completed)).select(
-                "doc_id", "text"
-            ).unionByName(shard)
-        else:
-            sig_all = sig_new
-            all_texts = shard
-
-        pairs = minhash_pairs_from_signatures(
-            sig_new, sig_all, all_texts,
+        stats = ingest(
+            spark, args.shard, args.state, args.shard_id,
             shingle_k=args.shingle_k, threshold_pct=args.threshold_pct,
         )
-        pairs_path = os.path.join(args.state, f"pairs_{args.shard_id}")
-        pairs.write.mode("overwrite").parquet(pairs_path)
-        # count the WRITTEN output — counting the lazy frame first would execute
-        # the whole candidate+verify pipeline twice
-        n_pairs = spark.read.parquet(pairs_path).count()
-
-        # state writes are idempotent per shard: partitioned by shard_id with
-        # dynamic overwrite, a rerun replaces this shard's partition in place.
-        # The manifest row goes LAST — any crash before it leaves a state a full
-        # rerun of the same command repairs
-        for frame, path in ((sig_new, sig_path), (shard, txt_path)):
-            frame.withColumn("shard_id", F.lit(args.shard_id)).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "shard_id"
-            ).parquet(path)
-        spark.createDataFrame([(args.shard_id,)], "shard_id string").write.mode(
-            "append"
-        ).parquet(manifest)
-
-        print(
-            json.dumps(
-                {
-                    "shard_id": args.shard_id,
-                    "resumed_noop": False,
-                    "docs": n_docs,
-                    "pairs": n_pairs,
-                }
-            )
-        )
+        print(json.dumps(stats))
 
 
 if __name__ == "__main__":

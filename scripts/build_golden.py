@@ -28,7 +28,11 @@ import pyarrow.parquet as pq
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from document_parser_spark.corpus import fixture_documents, html_corpus  # noqa: E402
+from document_parser_spark.corpus import (  # noqa: E402
+    fixture_documents,
+    html_corpus,
+    media_refs,
+)
 from document_parser_spark.kernel import (  # noqa: E402
     parse_document,
     parse_table_sink_dialect,
@@ -111,18 +115,11 @@ def extraction_corpus(sf_dir: str) -> list[dict]:
     return docs
 
 
-_MD_REF_RX = __import__("re").compile(r"!\[[^\]]*\]\(([^)]+)\)")
-_IMG_REF_RX = __import__("re").compile(r'<img[^>]*\ssrc="([^"]+)"')
-
-
 def build_rows(docs: list[dict]):
     spans_rows, tables_rows, cells_rows, merged_rows, media_rows = [], [], [], [], []
     for d in docs:
-        # Input-shape media spans: one per DISTINCT ![](ref), mirroring
-        # corpus.to_input_rows / sources.data.lift_flat_to_input.
-        for ref in dict.fromkeys(
-            _MD_REF_RX.findall(d["text"]) + _IMG_REF_RX.findall(d["text"])
-        ):
+        # Input-shape media spans, as corpus.to_input_rows emits them
+        for ref in media_refs(d["text"]):
             media_rows.append({"doc_id": d["doc_id"], "media_ref": ref})
         parsed = parse_document(d["text"])
         for seq, s in enumerate(parsed["spans"]):

@@ -4,6 +4,7 @@ SAME extraction pipeline as every other source."""
 
 import pytest
 
+from document_parser_spark.corpus import to_input_rows
 from document_parser_spark.operators.extract import (
     assemble_document_text,
     parse_documents,
@@ -38,6 +39,15 @@ def test_adapter_shape():
     assert by_ref["clip.mp3"]["media_kind"] == "audio"
     assert by_ref["clip.mp3"]["data"] is None  # referenced but no sidecar
     assert by_ref["extra.png"]["data"] == b"\x03"  # unreferenced sidecar kept
+
+
+def test_adapter_emits_the_same_spans_as_to_input_rows():
+    """One media-ref rule: an HTML ``<img src>`` after a markdown image is a
+    media span in both the adapter and the corpus row shaper."""
+    text = '<p><img src="fig.png"></p>\n\n![](a.png)\n'
+    row, media = adapt_rendered("d1", text)
+    assert row == to_input_rows([{"doc_id": "d1", "text": text}])[0]
+    assert [m["media_ref"] for m in media] == ["a.png", "fig.png"]
 
 
 def test_adapter_validates():

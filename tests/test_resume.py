@@ -3,6 +3,7 @@ mid-way and resumed produces exactly the same output table as a fresh
 uninterrupted run, with no duplicate lineage rows."""
 
 import shutil
+import time
 import uuid
 
 import pytest
@@ -10,7 +11,14 @@ from pyspark.sql import functions as F
 
 from conftest import TMP, run_counting_jobs
 from document_parser_spark.corpus import synthesize_corpus, to_input_rows
-from document_parser_spark.plans.resume import read_state, run_extraction_checkpointed
+from document_parser_spark.plans.resume import (
+    manifest_totals,
+    overwrite_partitions,
+    read_state,
+    run_extraction_checkpointed,
+    select_unfinished,
+    write_manifest,
+)
 from document_parser_spark.schemas import DOCUMENTS_INPUT
 
 
@@ -89,9 +97,9 @@ def test_rerun_completed_is_noop(spark, workdir):
     )
     assert stats["buckets_done_before"] == 4
     assert stats["docs_processed"] == 0
-    # the finished build returns after its manifest lookup: 4 bookkeeping
+    # the finished build returns after its manifest lookup: 3 bookkeeping
     # jobs, where parse + writes over zero rows ran 9
-    assert jobs <= 4, jobs
+    assert jobs <= 3, jobs
     assert _spans_rows(spark, out) == before
 
 
@@ -112,3 +120,47 @@ def test_read_state_absent_or_empty_is_no_state_corrupt_raises(spark, workdir):
         fh.write(b"not a parquet file")
     with pytest.raises(Exception, match="parquet"):
         read_state(spark, f"{workdir}/corrupt").collect()
+
+
+def test_overwrite_partitions_is_selective(spark, workdir):
+    """Only the partitions present in the written frame are replaced."""
+    path = f"{workdir}/t"
+    schema = "id int, bucket int, v string"
+    overwrite_partitions(
+        spark.createDataFrame([(1, 0, "a"), (2, 1, "b"), (3, 0, "c")], schema), path, "bucket"
+    )
+    overwrite_partitions(spark.createDataFrame([(9, 0, "z")], schema), path, "bucket")
+    rows = {tuple(r) for r in spark.read.parquet(path).select("id", "bucket", "v").collect()}
+    assert rows == {(9, 0, "z"), (2, 1, "b")}
+
+
+def _record(spark, metrics_dir, run_id, buckets):
+    counts = spark.createDataFrame([(b, 1) for b in buckets], "bucket int, docs long")
+    write_manifest(counts, metrics_dir, run_id, time.monotonic())
+
+
+def _selection(spark, metrics_dir, run_id):
+    buckets = spark.createDataFrame([(0,), (1,)], "bucket int")
+    done, keep, idle = select_unfinished(spark, metrics_dir, run_id, buckets, None)
+    todo = sorted(r["bucket"] for r in buckets.filter(keep).collect())
+    return done, todo, idle, manifest_totals(spark, metrics_dir, run_id, {"docs": "docs"})
+
+
+def test_numeric_then_named_run_ids_share_one_manifest(spark, workdir):
+    """Run ids are partition directories read back as the strings written:
+    after a run named ``20261019``, a run named ``nightly-01`` in the same
+    manifest is a fresh run and resumes from its own rows only."""
+    metrics = f"{workdir}/metrics"
+    _record(spark, metrics, "20261019", [0, 1])
+    assert _selection(spark, metrics, "nightly-01") == (set(), [0, 1], False, (0, {"docs": 0}))
+    _record(spark, metrics, "nightly-01", [0])
+    assert _selection(spark, metrics, "nightly-01") == ({"0"}, [1], False, (1, {"docs": 1}))
+    assert _selection(spark, metrics, "20261019") == ({"0", "1"}, [], True, (2, {"docs": 2}))
+
+
+def test_run_id_with_a_leading_zero_is_another_run(spark, workdir):
+    """``020261019`` is not ``20261019``: it finds no finished buckets and
+    none of the other run's totals."""
+    metrics = f"{workdir}/metrics"
+    _record(spark, metrics, "20261019", [0, 1])
+    assert _selection(spark, metrics, "020261019") == (set(), [0, 1], False, (0, {"docs": 0}))

@@ -4,6 +4,7 @@ defaulted parameter goes unset by every caller."""
 
 import ast
 import importlib
+import importlib.util
 import inspect
 import pathlib
 import pkgutil
@@ -62,6 +63,19 @@ def test_resume_manifest_format_lives_in_resume():
         if any(w in p.read_text(encoding="utf-8") for w in ("partition_key", "DEFAULT_BUCKETS ="))
     )
     assert spelled == ["plans/resume.py"]
+
+
+def test_partition_overwrite_lives_in_resume():
+    """One partition-overwrite writer, ``resume.overwrite_partitions``: no
+    other package module or job spells the dynamic-overwrite option, and
+    the table catalog that duplicated it stays deleted."""
+    files = [*(ROOT / "document_parser_spark").rglob("*.py"), *(ROOT / "jobs").glob("*.py")]
+    spelled = sorted(
+        p.relative_to(ROOT).as_posix() for p in files
+        if "partitionOverwriteMode" in p.read_text(encoding="utf-8")
+    )
+    assert spelled == ["document_parser_spark/plans/resume.py"]
+    assert importlib.util.find_spec("document_parser_spark.sources.catalog") is None
 
 
 def test_exact_election_lives_in_dedup():
