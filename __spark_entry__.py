@@ -5,7 +5,7 @@ plus the driver's sf0.001 documents, then the reference's own first example
 query (search_by_key_value 'Pathology', /root/reference/table_search.py:549-554).
 
 ``queries()`` / ``oracle_sql()`` — one entry per implemented operator family
-(SURVEY.md §2 + the training-data-pipeline layer): 46 queries, EVERY one
+(SURVEY.md §2 + the training-data-pipeline layer): 50 queries, EVERY one
 with a DuckDB oracle.  Cross-engine arithmetic is engineered to be
 bit-identical (md5/sha256 string hashing, integer set/ratio/projection
 math, decimal-exact money sums, timezone-free NTZ microsecond gaps); the
@@ -28,6 +28,7 @@ from document_parser_spark.functions.columns import (
     is_numeric_cell_expr,
 )
 from document_parser_spark.operators import dedup, search, similarity, text
+from document_parser_spark.operators.multimodal import media_kind_sql
 from document_parser_spark.operators.extract import (
     assemble_document_text,
     cells_output,
@@ -2205,9 +2206,7 @@ def _q_media_features(spark, sf_dir):
 _SQL_MEDIA_FEATURES = f"""
 WITH media AS (
   SELECT doc_id, media_ref,
-         CASE WHEN regexp_matches(media_ref, '(?i)\\.(png|jpe?g|gif)$') THEN 'image'
-              WHEN regexp_matches(media_ref, '(?i)\\.(wav|mp3|flac)$') THEN 'audio'
-              ELSE 'video' END AS media_kind,
+         {media_kind_sql("media_ref")} AS media_kind,
          sha256(sha256(doc_id || '|' || media_ref)) AS digest
   FROM read_parquet('{_GOLDEN}/media.parquet')
 ),

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Benchmark harness.
+"""Benchmark harness: the repo's one bench, query-timing and plan-audit tool.
 
 Default (driver contract): run the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
@@ -9,14 +9,27 @@ JSON line: {"metric", "value", "unit": "sec", "queries": {...}, "sf": ...}.
 local[nproc] (N vs 4N cores — this sandbox's proxy for N vs 4N executors) in
 separate subprocesses (clean JVM per master) and report throughput at both
 plus scaling efficiency  eff = T_N / (4 · T_4N)  =  thr_4N / (4 · thr_N).
+--scaling-queries and --curate-scaling run the same N-vs-4N loop over the
+query subset and the curation pipeline; --growth runs the near-dup/ANN
+family at n and 10n.
+
+--queries A,B: each named contract query's median, best and raw runs
+(noop sink, --repeats runs each) over --sf-dir.
+--explain [A ...] [--out PATH]: the plan audit — plan-quality properties and
+the formatted plan of each named contract query (every one by default),
+written to EXPLAIN.md unless --out says otherwise.
+--make-sf1like [--docs N]: build the sf1-like tier under .bench_data/sf1like.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import json
 import os
 import re
+import statistics
 import subprocess
 import sys
 import time
@@ -24,8 +37,13 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+#: generated corpora, one directory each, reused while its tables' _SUCCESS
+#: markers exist
+BENCH_DATA = os.path.join(REPO, ".bench_data")
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: the real tier the sf1-like tier draws its vocabulary and other tables from
+SF01_DIR = "/root/testdata/sf0.1"
 
 #: synthetic extraction corpus size per unit scale factor
 DOCS_PER_SF = 200_000
@@ -40,15 +58,23 @@ def extraction_docs(sf: float) -> int:
     return max(200, int(DOCS_PER_SF * sf))
 
 
+def _cached(name: str, table: str, make) -> str:
+    """``.bench_data/<name>``, holding ``<table>.parquet`` written from the
+    DataFrame ``make()`` returns unless that table's ``_SUCCESS`` marker
+    exists — every generated corpus is built once per size."""
+    path = os.path.join(BENCH_DATA, name)
+    if not os.path.exists(os.path.join(path, f"{table}.parquet", "_SUCCESS")):
+        make().write.mode("overwrite").parquet(os.path.join(path, f"{table}.parquet"))
+    return path
+
+
 def corpus_path(spark, n_docs: int) -> str:
     """Materialize the seeded corpus once per size (cached parquet) so the
     measured pipeline is scan→assemble→parse, not Python corpus generation."""
     from document_parser_spark.sources.data import synthetic_input_df
 
-    path = os.path.join(REPO, ".bench_data", f"corpus_{n_docs}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        synthetic_input_df(spark, n_docs).write.mode("overwrite").parquet(path)
-    return path
+    path = _cached(f"corpus_{n_docs}", "documents", lambda: synthetic_input_df(spark, n_docs))
+    return os.path.join(path, "documents.parquet")
 
 
 def run_html_extraction(spark, n_docs: int) -> dict:
@@ -131,32 +157,27 @@ def run_extraction(spark, n_docs: int) -> dict:
 def run_span_match(spark) -> dict:
     """North-rule correctness metric (BASELINE.json: "documents/sec AND
     span-sequence exact-match rate"): Spark-parse the golden corpus
-    (fixtures ∪ sf0.01 documents — the corpus scripts/build_golden.py pins)
-    and compare every document's FULL ordered span sequence
-    (seq, kind, text, media_ref, offset) against golden/sf0.01/spans.parquet
-    with two exceptAll passes (posexplode's seq makes multiset equality of
-    these rows sequence equality per doc).  Pinned to sf0.01 regardless of
-    --sf-dir: the rate is a corpus-pinned exactness check, not a throughput
-    row — the throughput rows above scale with sf."""
+    (the contract's extraction corpus, fixtures ∪ sf0.01 documents — the
+    corpus scripts/build_golden.py pins) and compare every document's FULL
+    ordered span sequence (seq, kind, text, media_ref, offset) against
+    golden/sf0.01/spans.parquet with two exceptAll passes (posexplode's seq
+    makes multiset equality of these rows sequence equality per doc).
+    Pinned to sf0.01 regardless of --sf-dir: the rate is a corpus-pinned
+    exactness check, not a throughput row — the throughput rows above scale
+    with sf."""
     from pyspark.sql import functions as F
 
+    import __spark_entry__ as entry
     from document_parser_spark.operators.extract import (
         assemble_document_text,
         parse_documents,
-    )
-    from document_parser_spark.sources.data import (
-        fixture_input_df,
-        flat_documents_df,
-        lift_flat_to_input,
     )
 
     golden = os.path.join(REPO, "golden", "sf0.01", "spans.parquet")
     sf_dir = "/root/testdata/sf0.01"
     if not (os.path.exists(golden) and os.path.isdir(sf_dir)):
         return {}
-    corpus = fixture_input_df(spark).unionByName(
-        lift_flat_to_input(flat_documents_df(spark, sf_dir).select("doc_id", "text"))
-    )
+    corpus = entry._extraction_corpus(spark, sf_dir)
     parsed = parse_documents(assemble_document_text(corpus)).persist()
     n_docs = parsed.count()
     mine = parsed.select("doc_id", F.posexplode("spans").alias("seq", "span")).select(
@@ -220,6 +241,31 @@ QUERY_NAMES = [
 ]
 
 
+def time_query(fn, repeats: int) -> dict:
+    """Run the DataFrame ``fn()`` builds ``repeats`` times into the noop sink
+    (full execution without driver materialization of wide rows):
+    ``{"median", "best", "runs"}`` in seconds."""
+    runs = []
+    for _ in range(max(repeats, 1)):
+        t0 = time.monotonic()
+        fn().write.format("noop").mode("overwrite").save()
+        runs.append(round(time.monotonic() - t0, 3))
+    return {"median": round(statistics.median(runs), 3), "best": min(runs), "runs": runs}
+
+
+def time_queries(spark, sf_dir: str, names: list[str], repeats: int) -> dict:
+    """``time_query`` of each named contract query over ``sf_dir``."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    stats = {}
+    for name in names:
+        spark.sparkContext.setJobDescription(f"bench:{name}")
+        stats[name] = time_query(lambda: qs[name](spark, sf_dir), repeats)
+    spark.sparkContext.setJobDescription(None)
+    return stats
+
+
 def run_queries(spark, sf_dir: str, repeats: int = 3) -> tuple:
     """Times every bench query ``repeats`` times and reports the MEDIAN as
     the headline (plus best + raw runs): single runs on this co-tenant box
@@ -227,34 +273,13 @@ def run_queries(spark, sf_dir: str, repeats: int = 3) -> tuple:
     (VERDICT r03 item 6).  The shared corpus-parse cache is warmed ONCE
     up front as its own row — previously whichever query ran first silently
     paid the ~5 s parse, coupling its number to registry order."""
-    import statistics
-
     import __spark_entry__ as entry
-
-    qs = entry.queries()
-    times = {}
-    stats = {}
 
     t0 = time.monotonic()
     entry._cells(spark, sf_dir).write.format("noop").mode("overwrite").save()
     warm = round(time.monotonic() - t0, 3)
-    times["corpus_parse_warm"] = warm
-    stats["corpus_parse_warm"] = {"median": warm, "best": warm, "runs": [warm]}
-
-    def timed(fn) -> list:
-        runs = []
-        for _ in range(max(repeats, 1)):
-            t0 = time.monotonic()
-            df = fn()
-            # Force full execution without driver materialization of wide rows.
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.monotonic() - t0, 3))
-        return runs
-
-    for name in QUERY_NAMES:
-        runs = timed(lambda: qs[name](spark, sf_dir))
-        times[name] = round(statistics.median(runs), 3)
-        stats[name] = {"median": times[name], "best": min(runs), "runs": runs}
+    stats = {"corpus_parse_warm": {"median": warm, "best": warm, "runs": [warm]}}
+    stats.update(time_queries(spark, sf_dir, QUERY_NAMES, repeats))
     # similarity: exact brute force, then the ANN paths it is recalled against
     from document_parser_spark.operators import similarity
     from document_parser_spark.operators.similarity import (
@@ -268,25 +293,15 @@ def run_queries(spark, sf_dir: str, repeats: int = 3) -> tuple:
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    for name, fn in [
-        ("ann_brute_force", brute_force_topk),
-        ("ann_lsh", lsh_bucketed_topk),
-        ("ann_ivf", ivf_topk),
-        ("ann_sketch", sketch_topk),
-    ]:
-        runs = timed(lambda: fn(emb, q, k=10))
-        times[name] = round(statistics.median(runs), 3)
-        stats[name] = {"median": times[name], "best": min(runs), "runs": runs}
+    approximate = [("ann_lsh", lsh_bucketed_topk), ("ann_ivf", ivf_topk), ("ann_sketch", sketch_topk)]
+    for name, fn in [("ann_brute_force", brute_force_topk), *approximate]:
+        stats[name] = time_query(lambda: fn(emb, q, k=10), repeats)
     # ANN quality: recall@10 of each approximate path vs the exact brute
     # force, with the probed/scored corpus fraction each one pays — the
     # recall-per-fraction trade IS the ANN scale story (VERDICT r02 item 2/3).
     bf = {(r["query_id"], r["vec_id"]) for r in brute_force_topk(emb, q, k=10).collect()}
     extras = {}
-    for name, fn in [
-        ("ann_lsh", lsh_bucketed_topk),
-        ("ann_ivf", ivf_topk),
-        ("ann_sketch", sketch_topk),
-    ]:
+    for name, fn in approximate:
         approx = {(r["query_id"], r["vec_id"]) for r in fn(emb, q, k=10).collect()}
         extras[f"{name}_recall_at_10"] = round(len(bf & approx) / max(len(bf), 1), 3)
     n = emb.count()
@@ -297,7 +312,63 @@ def run_queries(spark, sf_dir: str, repeats: int = 3) -> tuple:
     # IVF/LSH numbers above are the clustered-corpus paths, not the scale
     # story
     extras["ann_primary"] = "ann_sketch (the scale path; recall/fraction above)"
+    times = {name: s["median"] for name, s in stats.items()}
     return times, extras, stats
+
+
+#: plan-quality properties the audit flags per query
+_CHECKS = [
+    ("PushedFilters", lambda p: "PushedFilters: [" in p and not re.search(r"PushedFilters: \[\](?!,)", p)),
+    ("BroadcastHashJoin", lambda p: "BroadcastHashJoin" in p),
+    ("SortMergeJoin", lambda p: "SortMergeJoin" in p),
+    ("partial aggregation", lambda p: "partial_" in p),
+    ("TakeOrderedAndProject", lambda p: "TakeOrderedAndProject" in p),
+    ("Arrow-vectorized Python", lambda p: any(m in p for m in ("ArrowEvalPython", "MapInArrow", "PythonMapInArrow", "MapInPandas"))),
+    ("row-at-a-time Python (BAD)", lambda p: "BatchEvalPython" in p),
+    ("CartesianProduct (check)", lambda p: "CartesianProduct" in p),
+]
+
+
+def plan_audit(spark, sf_dir: str, names: list[str]) -> str:
+    """The plan audit in EXPLAIN.md's format: per named contract query (all
+    of ``__spark_entry__.queries()`` when ``names`` is empty) the
+    plan-quality properties it shows (pushdown, broadcast vs sort-merge,
+    partial aggregation, Python stages) and its ``explain("formatted")``
+    plan.  A before/after plan comparison runs the same command in two
+    checkouts with different ``--out`` files and diffs them."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    command = " ".join(
+        ["python bench.py --explain", *names, "--sf-dir", sf_dir,
+         "--cpus", str(spark.sparkContext.defaultParallelism)]
+    )
+    out = [
+        f"# EXPLAIN audit — contract queries at {os.path.basename(sf_dir.rstrip('/'))}",
+        "",
+        f"Generated by `{command}` (re-run after plan-affecting",
+        "changes).  Properties flagged per query; full formatted plans follow.",
+        "Whole-stage-codegen spans only appear in EXECUTED plans under AQE —",
+        "they are gated separately by tests/test_plans.py.",
+        "",
+    ]
+    for name in names or list(qs):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            qs[name](spark, sf_dir).explain("formatted")
+        plan = buf.getvalue()
+        props = [label for label, check in _CHECKS if check(plan)]
+        out += [
+            f"## {name}",
+            "",
+            "Properties: " + (", ".join(props) if props else "(none flagged)"),
+            "",
+            "```",
+            plan.rstrip(),
+            "```",
+            "",
+        ]
+    return "\n".join(out)
 
 
 def bench_once(
@@ -354,9 +425,6 @@ def _mp_control(n_docs: int, nproc: int) -> float:
     clock) so the engine's efficiency can be judged against it."""
     import multiprocessing as mp
 
-    from document_parser_spark.corpus import synthesize_doc
-    from document_parser_spark.kernel import parse_document
-
     chunk = n_docs // nproc
     rngs = [range(i * chunk, (i + 1) * chunk) for i in range(nproc)]
     t0 = time.monotonic()
@@ -380,10 +448,34 @@ def _scaling_tiers() -> tuple[int, int, int]:
     return nproc, max(nproc // 4, 1), nproc
 
 
-def _curate_once(cpus: int, docs: int) -> dict:
-    """One in-process run of the curation pipeline (plans/curate.py) over
-    the deterministic synthetic corpus — the subprocess unit of
-    ``curate_scaling_study`` (one master per JVM, like scaling_study).
+def _best_of_tiers(kind: str, docs: int, repeats: int) -> tuple[dict, dict, dict]:
+    """The N-vs-4N protocol every scaling study shares: ``--internal kind``
+    over ``docs`` documents at the low and the high tier, alternating, one
+    fresh subprocess (one master per JVM) per run, ``repeats`` rounds, and
+    each tier's fastest run kept — best-of shrugs off co-tenant noise
+    (single one-shot spark-submit pairs of one job measured 0.32–0.74
+    purely by load window — see BASELINE.md).  Returns the block's tier
+    fields and the best low and high runs."""
+    nproc, low, high = _scaling_tiers()
+    best: dict = {}
+    for _ in range(repeats):
+        for cpus in (low, high):
+            _kill_leftovers()
+            proc = subprocess.run(
+                [sys.executable, __file__, "--internal", kind,
+                 "--cpus", str(cpus), "--docs", str(docs)],
+                capture_output=True, text=True, check=True,
+            )
+            r = json.loads(proc.stdout.strip().splitlines()[-1])
+            if cpus not in best or r["wall_sec"] < best[cpus]["wall_sec"]:
+                best[cpus] = r
+    return {"nproc": nproc, "cores_low": low, "cores_high": high}, best[low], best[high]
+
+
+def _curate_once(spark, docs: int) -> dict:
+    """One run of the curation pipeline (plans/curate.py) over the
+    deterministic synthetic corpus — the subprocess unit of
+    ``curate_scaling_study``.
 
     r04 protocol fix (matches jobs/curate_job.py): the corpus is STAGED to
     parquet before the timed pipeline — the pipeline scans its input
@@ -398,9 +490,7 @@ def _curate_once(cpus: int, docs: int) -> dict:
         run_curation_checkpointed,
         synthetic_curation_corpus,
     )
-    from document_parser_spark.sources.session import get_spark
 
-    spark = get_spark(app_name=f"curate-bench[{cpus}]", cpus=cpus)
     out = tempfile.mkdtemp(prefix="curate_bench_")
     try:
         stage = os.path.join(out, "_input")
@@ -416,7 +506,6 @@ def _curate_once(cpus: int, docs: int) -> dict:
         )
     finally:
         shutil.rmtree(out, ignore_errors=True)
-        spark.stop()
     wall = stats["wall_ms"] / 1000.0
     return {
         "wall_sec": round(wall, 2),
@@ -429,74 +518,42 @@ def _curate_once(cpus: int, docs: int) -> dict:
 
 def curate_scaling_study(repeats: int = 2, docs: int = 50_000) -> dict:
     """North-rule scaling evidence for the curation job: same synthetic
-    input, N vs 4N cores, separate JVMs, alternating best-of to shrug off
-    co-tenant noise (single one-shot spark-submit pairs measured 0.32–0.74
-    on this box purely by load window — see BASELINE.md)."""
-    nproc, low, high = _scaling_tiers()
-    best: dict = {low: None, high: None}
-    for _ in range(repeats):
-        for cpus in (low, high):
-            _kill_leftovers()
-            proc = subprocess.run(
-                [sys.executable, __file__, "--curate-internal",
-                 "--cpus", str(cpus), "--docs", str(docs)],
-                capture_output=True, text=True, check=True,
-            )
-            r = json.loads(proc.stdout.strip().splitlines()[-1])
-            if best[cpus] is None or r["wall_sec"] < best[cpus]["wall_sec"]:
-                best[cpus] = r
-    factor = high / low
+    input, N vs 4N cores (``_best_of_tiers``)."""
+    tiers, low, high = _best_of_tiers("curate", docs, repeats)
+    factor = tiers["cores_high"] / tiers["cores_low"]
     return {
-        "nproc": nproc,
-        "cores_low": low,
-        "cores_high": high,
+        **tiers,
         "docs": docs,
-        "docs_per_sec_low": best[low]["docs_per_sec"],
-        "docs_per_sec_high": best[high]["docs_per_sec"],
-        "speedup": round(best[high]["docs_per_sec"] / best[low]["docs_per_sec"], 3),
-        "scaling_efficiency": round(
-            best[high]["docs_per_sec"] / (best[low]["docs_per_sec"] * factor), 3
-        ),
-        "wall_sec_high": best[high]["wall_sec"],
+        "docs_per_sec_low": low["docs_per_sec"],
+        "docs_per_sec_high": high["docs_per_sec"],
+        "speedup": round(high["docs_per_sec"] / low["docs_per_sec"], 3),
+        "scaling_efficiency": round(high["docs_per_sec"] / (low["docs_per_sec"] * factor), 3),
+        "wall_sec_high": high["wall_sec"],
     }
 
 
-def scaling_study(sf_dir: str, repeats: int = 3) -> dict:
-    """Same job, same input, two parallelism levels (N and 4N cores — this
-    sandbox's proxy for N vs 4N executors), separate JVMs, alternating
-    best-of-N to shrug off co-tenant noise, plus a no-Spark multiprocessing
-    control that measures the hardware's own ceiling (on a 32-core box the
-    control itself scales 8→32 at only ~0.55 — BASELINE.md "Measured
-    results")."""
-    nproc, low, high = _scaling_tiers()
-    best = {low: 0.0, high: 0.0}
-    for _ in range(repeats):
-        for cpus in (low, high):
-            _kill_leftovers()
-            proc = subprocess.run(
-                [sys.executable, __file__, "--cpus", str(cpus), "--sf-dir", sf_dir,
-                 "--extract-only", "--internal-json", "--docs", "100000"],
-                capture_output=True, text=True, check=True,
-            )
-            thr = json.loads(proc.stdout.strip().splitlines()[-1])["extract"]["docs_per_sec"]
-            best[cpus] = max(best[cpus], thr)
-    factor = high / low
+def scaling_study(repeats: int = 3, docs: int = 100_000) -> dict:
+    """Same job, same input, two parallelism levels (``_best_of_tiers``),
+    plus a no-Spark multiprocessing control that measures the hardware's
+    own ceiling (on a 32-core box the control itself scales 8→32 at only
+    ~0.55 — BASELINE.md "Measured results")."""
+    tiers, low, high = _best_of_tiers("extract", docs, repeats)
+    thr_low, thr_high = low["docs_per_sec"], high["docs_per_sec"]
+    factor = tiers["cores_high"] / tiers["cores_low"]
     ctl_docs = 20_000
-    ctl_low = _mp_control(ctl_docs, low)
-    ctl_high = _mp_control(ctl_docs, high)
+    ctl_low = _mp_control(ctl_docs, tiers["cores_low"])
+    ctl_high = _mp_control(ctl_docs, tiers["cores_high"])
     return {
-        "nproc": nproc,
-        "cores_low": low,
-        "cores_high": high,
-        "docs_per_sec_low": round(best[low], 1),
-        "docs_per_sec_high": round(best[high], 1),
-        "speedup": round(best[high] / best[low], 3),
-        "scaling_efficiency": round(best[high] / (best[low] * factor), 3),
+        **tiers,
+        "docs_per_sec_low": round(thr_low, 1),
+        "docs_per_sec_high": round(thr_high, 1),
+        "speedup": round(thr_high / thr_low, 3),
+        "scaling_efficiency": round(thr_high / (thr_low * factor), 3),
         "hw_control_docs_per_sec_low": round(ctl_low, 1),
         "hw_control_docs_per_sec_high": round(ctl_high, 1),
         "hw_control_efficiency": round(ctl_high / (ctl_low * factor), 3),
         "efficiency_vs_hw_ceiling": round(
-            (best[high] / (best[low] * factor)) / max(ctl_high / (ctl_low * factor), 1e-9), 3
+            (thr_high / (thr_low * factor)) / max(ctl_high / (ctl_low * factor), 1e-9), 3
         ),
     }
 
@@ -520,42 +577,42 @@ SCALING_QUERY_SUBSET = [
 QUERY_SCALING_DOCS = 20_000
 
 
-def _scaled_documents_dir(spark, n_docs: int) -> str:
-    """Materialize a flat documents table (doc_id, text, lang, source,
-    n_chars) at the requested size — cached parquet, deterministic."""
-    import pandas as pd
+def _flat_documents(spark, name: str, n_docs: int, doc_of) -> str:
+    """``_cached`` flat documents table (doc_id, text, lang, source, n_chars)
+    of ``n_docs`` docs, doc ``i`` being ``doc_of(i)`` = (text, lang, source),
+    generated on the executors."""
     from typing import Iterator
 
-    path = os.path.join(REPO, ".bench_data", f"qscale_{n_docs}")
-    marker = os.path.join(path, "documents.parquet", "_SUCCESS")
-    if not os.path.exists(marker):
-        from document_parser_spark.corpus import synthesize_doc
+    import pandas as pd
 
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = pd.DataFrame(
+                [(i, *doc_of(i)) for i in map(int, pdf["id"])],
+                columns=["doc_id", "text", "lang", "source"],
+            )
+            out["n_chars"] = out["text"].str.len()
+            yield out
+
+    def make():
         base = spark.range(0, n_docs, 1, spark.sparkContext.defaultParallelism * 2)
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            langs, sources = ["en", "fr", "de", "es"], ["web", "pdf"]
-            for pdf in batches:
-                rows = []
-                for i in pdf["id"]:
-                    i = int(i)
-                    text = synthesize_doc(i)["text"]
-                    rows.append(
-                        {
-                            "doc_id": i,
-                            "text": text,
-                            "lang": langs[i % 4],
-                            "source": sources[i % 2],
-                            "n_chars": len(text),
-                        }
-                    )
-                yield pd.DataFrame(rows)
-
-        df = base.mapInPandas(
+        return base.mapInPandas(
             gen, schema="doc_id long, text string, lang string, source string, n_chars long"
         )
-        df.write.mode("overwrite").parquet(os.path.join(path, "documents.parquet"))
-    return path
+
+    return _cached(name, "documents", make)
+
+
+def _scaled_documents_dir(spark, n_docs: int) -> str:
+    """Flat synthetic documents at the requested size — cached parquet,
+    deterministic."""
+
+    def doc_of(i: int) -> tuple:
+        from document_parser_spark.corpus import synthesize_doc
+
+        return synthesize_doc(i)["text"], ("en", "fr", "de", "es")[i % 4], ("web", "pdf")[i % 2]
+
+    return _flat_documents(spark, f"qscale_{n_docs}", n_docs, doc_of)
 
 
 def _zipf_documents_dir(
@@ -572,80 +629,112 @@ def _zipf_documents_dir(
     pairs ≈ n/97, LINEAR in n.  Candidate growth can then be read directly
     against true-pair growth."""
     import numpy as np
+
+    ranks = np.arange(1, vocab + 1, dtype=np.float64)
+    probs = 1.0 / ranks**zipf_s
+    cum = np.cumsum(probs / probs.sum())
+
+    def zipf_draw(rng, size: int) -> np.ndarray:
+        # inverse-CDF sampling: O(size·log vocab), vs rng.choice(p=...)
+        # which is O(vocab) PER CALL (4×10^8 ops over a 20k-doc corpus)
+        return np.searchsorted(cum, rng.random_sample(size))
+
+    def words_of(i: int) -> list:
+        rng = np.random.RandomState(1_000_003 + i)
+        n_words = 80 + (i * 37) % 121
+        # the bulk draw runs even for planted-dup docs (which discard
+        # it): it advances the RNG to the state the mutation draws
+        # assume — reordering would change the frozen cached corpus
+        words = [f"w{w}" for w in zipf_draw(rng, n_words)]
+        if i % dup_every == 0 and i > 0:
+            # planted near-dup: predecessor's text with 3 tokens swapped
+            words = list(words_of(i - 1))
+            pos = rng.choice(len(words), size=3, replace=False)
+            for p, r in zip(pos, zipf_draw(rng, 3)):
+                words[p] = f"w{r}"
+        return words
+
+    # lang/source CONSTANT: ngram_jaccard blocks on (lang, source), and a
+    # planted pair (i-1, i) must not be split across blocks
+    return _flat_documents(
+        spark, f"zscale_{n_docs}", n_docs, lambda i: (" ".join(words_of(i)), "en", "web")
+    )
+
+
+def _embeddings(spark, n_vecs: int, dim: int = 64):
+    """Seed-deterministic isotropic unit embeddings in the testdata tiers'
+    schema, ``vec_id bigint, embedding array<float>, label int``, with ten
+    labels that, as there, carry no cosine signal."""
+    import numpy as np
     import pandas as pd
-    from typing import Iterator
 
-    path = os.path.join(REPO, ".bench_data", f"zscale_{n_docs}")
-    marker = os.path.join(path, "documents.parquet", "_SUCCESS")
-    if not os.path.exists(marker):
-        base = spark.range(0, n_docs, 1, spark.sparkContext.defaultParallelism * 2)
-        ranks = np.arange(1, vocab + 1, dtype=np.float64)
-        probs = 1.0 / ranks**zipf_s
-        cum = np.cumsum(probs / probs.sum())
+    rng = np.random.RandomState(7)
+    mat = rng.normal(size=(n_vecs, dim)).astype(np.float32)
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    ids = np.arange(n_vecs, dtype=np.int64)
+    return spark.createDataFrame(
+        pd.DataFrame({"vec_id": ids, "embedding": list(mat), "label": (ids % 10).astype(np.int32)})
+    )
 
-        def zipf_draw(rng, size: int) -> np.ndarray:
-            # inverse-CDF sampling: O(size·log vocab), vs rng.choice(p=...)
-            # which is O(vocab) PER CALL (4×10^8 ops over a 20k-doc corpus)
-            return np.searchsorted(cum, rng.random_sample(size))
 
-        def words_of(i: int) -> list:
-            rng = np.random.RandomState(1_000_003 + i)
-            n_words = 80 + (i * 37) % 121
-            # the bulk draw runs even for planted-dup docs (which discard
-            # it): it advances the RNG to the state the mutation draws
-            # assume — reordering would change the frozen cached corpus
-            words = [f"w{w}" for w in zipf_draw(rng, n_words)]
-            if i % dup_every == 0 and i > 0:
-                # planted near-dup: predecessor's text with 3 tokens swapped
-                words = list(words_of(i - 1))
-                pos = rng.choice(len(words), size=3, replace=False)
-                for p, r in zip(pos, zipf_draw(rng, 3)):
-                    words[p] = f"w{r}"
-            return words
+def _scaled_embeddings_dir(spark, n_vecs: int, dim: int = 64) -> str:
+    """``_embeddings`` at the requested size, cached — the ANN growth corpus."""
+    name = f"escale_{n_vecs}" if dim == 64 else f"escale_{n_vecs}_d{dim}"
+    return _cached(name, "embeddings", lambda: _embeddings(spark, n_vecs, dim))
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # lang/source CONSTANT: ngram_jaccard blocks on (lang, source),
-            # and a planted pair (i-1, i) must not be split across blocks
-            for pdf in batches:
-                rows = []
-                for i in pdf["id"]:
-                    i = int(i)
-                    text = " ".join(words_of(i))
-                    rows.append(
-                        {
-                            "doc_id": i,
-                            "text": text,
-                            "lang": "en",
-                            "source": "web",
-                            "n_chars": len(text),
-                        }
-                    )
-                yield pd.DataFrame(rows)
 
-        df = base.mapInPandas(
-            gen, schema="doc_id long, text string, lang string, source string, n_chars long"
+#: documents in the default sf1-like tier: 10× sf0.1's 5,000
+SF1LIKE_DOCS = 50_000
+
+
+def make_sf1like(spark, n_docs: int) -> str:
+    """The sf1-like tier, ``.bench_data/sf1like``: a statistically matched
+    stand-in for an sf1 tier (10× the sf0.1 row counts).
+    ``n_docs`` documents draw 17–60 words (mean ≈ sf0.1's 38) from the real
+    sf0.1 vocabulary and cycle through its (lang, source) blocks;
+    ``n_docs·2/5`` embeddings (sf0.1's ratio) come from ``_embeddings``; the
+    other sf0.1 tables are linked in, so every contract query resolves.
+    Deterministic."""
+    import numpy as np
+    import pandas as pd
+
+    def documents():
+        src = spark.read.parquet(os.path.join(SF01_DIR, "documents.parquet"))
+        rows = src.select("text").limit(50).collect()
+        vocab = np.array(sorted({w for r in rows for w in r["text"].split()}))
+        langs = sorted(r["lang"] for r in src.select("lang").distinct().collect())
+        sources = sorted(r["source"] for r in src.select("source").distinct().collect())
+        rng = np.random.RandomState(42)
+        texts = [
+            " ".join(vocab[rng.randint(0, len(vocab), 17 + rng.randint(0, 44))])
+            for _ in range(n_docs)
+        ]
+        pdf = pd.DataFrame(
+            {
+                "doc_id": np.arange(n_docs, dtype=np.int64),
+                "text": texts,
+                "lang": [langs[i % len(langs)] for i in range(n_docs)],
+                "source": [sources[(i // len(langs)) % len(sources)] for i in range(n_docs)],
+            }
         )
-        df.write.mode("overwrite").parquet(os.path.join(path, "documents.parquet"))
+        pdf["n_chars"] = pdf["text"].str.len().astype("int64")
+        return spark.createDataFrame(pdf).repartition(64)
+
+    _cached("sf1like", "documents", documents)
+    path = _cached("sf1like", "embeddings", lambda: _embeddings(spark, n_docs * 2 // 5))
+    for table in os.listdir(SF01_DIR):
+        link = os.path.join(path, table)
+        if not os.path.exists(link):
+            os.symlink(os.path.join(SF01_DIR, table), link)
     return path
 
 
-def _query_subset_once(cpus: int, sf_dir: str, n_docs: int) -> float:
-    """Steady-state wall time of the scaling query subset on one session.
-
-    maxPartitionBytes is lowered so the compact generated parquet yields
-    enough input splits to feed 4N cores — at petabyte scale splits abound,
-    but a 70 MB local file would otherwise scan as ~1 task and measure
-    single-thread time at every core count."""
+def _query_subset_wall(spark, n_docs: int) -> float:
+    """Steady-state wall time of the scaling query subset over the
+    ``n_docs`` scaled documents."""
     import __spark_entry__ as entry
 
-    from document_parser_spark.sources.session import get_spark
-
-    spark = get_spark(
-        app_name=f"qscale[{cpus}]",
-        cpus=cpus,
-        extra={"spark.sql.files.maxPartitionBytes": "2m"},
-    )
-    data_dir = _scaled_documents_dir(spark, n_docs) if n_docs else sf_dir
+    data_dir = _scaled_documents_dir(spark, n_docs)
     qs = entry.queries()
 
     def run() -> float:
@@ -655,66 +744,48 @@ def _query_subset_once(cpus: int, sf_dir: str, n_docs: int) -> float:
         return time.monotonic() - t0
 
     run()  # warm-up (JVM, Python workers, shuffle paths)
-    wall = run()
-    spark.stop()
-    return wall
+    return run()
 
 
-def query_scaling_study(
-    sf_dir: str, repeats: int = 1, n_docs: int = QUERY_SCALING_DOCS
-) -> dict:
+def query_scaling_study(repeats: int = 1, n_docs: int = QUERY_SCALING_DOCS) -> dict:
     """The scaling criterion applied to the QUERY surface: the same
     shuffle-heavy dedup/fingerprint queries at N and 4N cores over a corpus
-    big enough to feed 4N cores, separate JVMs, best-of-N interleaved.
+    big enough to feed 4N cores (``_best_of_tiers``).
     eff = T_low / (factor · T_high)."""
-    nproc, low, high = _scaling_tiers()
-    best = {low: float("inf"), high: float("inf")}
-    for _ in range(repeats):
-        for cpus in (low, high):
-            _kill_leftovers()
-            proc = subprocess.run(
-                [sys.executable, __file__, "--cpus", str(cpus), "--sf-dir", sf_dir,
-                 "--query-subset-internal", "--docs", str(n_docs)],
-                capture_output=True, text=True, check=True,
-            )
-            wall = json.loads(proc.stdout.strip().splitlines()[-1])["subset_sec"]
-            best[cpus] = min(best[cpus], wall)
-    factor = high / low
+    tiers, low, high = _best_of_tiers("queries", n_docs, repeats)
+    factor = tiers["cores_high"] / tiers["cores_low"]
     return {
         "queries": SCALING_QUERY_SUBSET,
         "n_docs": n_docs,
-        "nproc": nproc,
-        "cores_low": low,
-        "cores_high": high,
-        "sec_low": round(best[low], 2),
-        "sec_high": round(best[high], 2),
-        "speedup": round(best[low] / best[high], 3),
-        "scaling_efficiency": round(best[low] / (best[high] * factor), 3),
+        **tiers,
+        "sec_low": round(low["wall_sec"], 2),
+        "sec_high": round(high["wall_sec"], 2),
+        "speedup": round(low["wall_sec"] / high["wall_sec"], 3),
+        "scaling_efficiency": round(low["wall_sec"] / (high["wall_sec"] * factor), 3),
     }
 
 
-def _scaled_embeddings_dir(spark, n_vecs: int, dim: int = 64) -> str:
-    """Seed-deterministic isotropic embeddings at the requested size (cached
-    parquet) — the ANN growth corpus."""
-    import numpy as np
-    import pandas as pd
+def _internal_run(kind: str, cpus: int, docs: int) -> dict:
+    """One subprocess unit of ``_best_of_tiers`` on a fresh local[cpus]
+    session: the extraction pass, the curation pipeline or the query
+    subset over ``docs`` documents, with its ``wall_sec``.
 
-    # dim is part of the cache key (default dim keeps the legacy name so
-    # existing growth-study caches stay valid)
-    suffix = f"escale_{n_vecs}" if dim == 64 else f"escale_{n_vecs}_d{dim}"
-    path = os.path.join(REPO, ".bench_data", suffix)
-    marker = os.path.join(path, "embeddings.parquet", "_SUCCESS")
-    if not os.path.exists(marker):
-        rng = np.random.RandomState(7)
-        mat = rng.normal(size=(n_vecs, dim)).astype(np.float32)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        pdf = pd.DataFrame(
-            {"vec_id": np.arange(n_vecs, dtype=np.int64), "embedding": list(mat)}
-        )
-        spark.createDataFrame(pdf).write.mode("overwrite").parquet(
-            os.path.join(path, "embeddings.parquet")
-        )
-    return path
+    The query subset lowers maxPartitionBytes so the compact generated
+    parquet yields enough input splits to feed 4N cores — at petabyte scale
+    splits abound, but a 70 MB local file would otherwise scan as ~1 task
+    and measure single-thread time at every core count."""
+    from document_parser_spark.sources.session import get_spark
+
+    extra = {"spark.sql.files.maxPartitionBytes": "2m"} if kind == "queries" else None
+    spark = get_spark(app_name=f"{kind}[{cpus}]", cpus=cpus, extra=extra)
+    try:
+        if kind == "extract":
+            return run_extraction(spark, docs)
+        if kind == "curate":
+            return _curate_once(spark, docs)
+        return {"wall_sec": _query_subset_wall(spark, docs)}
+    finally:
+        spark.stop()
 
 
 def growth_study(sizes=(2_000, 20_000)) -> dict:
@@ -736,65 +807,46 @@ def growth_study(sizes=(2_000, 20_000)) -> dict:
             "wall_sec": round(wall, 2), "candidates": cand, "verified": verified,
         }
 
+    def documents(path: str):
+        return load_table(spark, path, "documents").select("doc_id", "lang", "source", "text")
+
     for n in sizes:
-        ddir = _scaled_documents_dir(spark, n)
-        d = load_table(spark, ddir, "documents").select("doc_id", "lang", "source", "text")
+        # the synthetic tier, then the sparse-vocab (Zipfian) tier: its true
+        # pairs are PLANTED and linear in n (≈ n/97), so candidate growth
+        # reads directly against true-pair growth — the degenerate-vocab
+        # rows cannot separate output-bound from candidate-bound growth
+        # (VERDICT r03 item 4).  On the Zipf tier n-grams run at n=3: the
+        # corpus-scale dial on natural vocabulary — single words are
+        # candidate-bound there (mid-df words contribute C(df,2) prefix
+        # pairs each; measured 37× wall at 10× docs), n-gram tokens are
+        # near-unique so candidates track the planted true pairs
+        for suffix, d, ngram_n in (
+            ("", documents(_scaled_documents_dir(spark, n)), 1),
+            ("_zipf", documents(_zipf_documents_dir(spark, n)), 3),
+        ):
+            t0 = time.monotonic()
+            cand = dedup.minhash_candidate_pairs(
+                dedup.minhash_signatures(d, shingle_k=5)
+            ).count()
+            pairs = dedup.minhash_near_dup_pairs(d, shingle_k=5, threshold_pct=50).count()
+            record("minhash" + suffix, n, time.monotonic() - t0, cand, pairs)
 
-        t0 = time.monotonic()
-        cand = dedup.minhash_candidate_pairs(
-            dedup.minhash_signatures(d, shingle_k=5)
-        ).count()
-        pairs = dedup.minhash_near_dup_pairs(d, shingle_k=5, threshold_pct=50).count()
-        record("minhash", n, time.monotonic() - t0, cand, pairs)
+            t0 = time.monotonic()
+            sim = dedup.simhash_arrow(d)
+            cand = dedup.simhash_candidate_pairs(sim, max_hamming=3).distinct().count()
+            pairs = dedup.simhash_near_pairs(sim, max_hamming=3).count()
+            record("simhash" + suffix, n, time.monotonic() - t0, cand, pairs)
 
-        t0 = time.monotonic()
-        sim = dedup.simhash_arrow(d)
-        cand = dedup.simhash_candidate_pairs(sim, max_hamming=3).distinct().count()
-        pairs = dedup.simhash_near_pairs(sim, max_hamming=3).count()
-        record("simhash", n, time.monotonic() - t0, cand, pairs)
-
-        # cand counted OUTSIDE the timed window: the verify pipeline
-        # re-executes candidate generation internally, so timing both would
-        # double-count it and break comparability with earlier rounds
-        cand = dedup.ngram_candidate_pairs(
-            dedup.token_sets(d, 1, *dedup.NGRAM_BLOCK_COLS), 50
-        ).count()
-        t0 = time.monotonic()
-        pairs = dedup.ngram_jaccard_pairs(d, threshold_pct=50).count()
-        record("ngram_jaccard", n, time.monotonic() - t0, cand, pairs)
-
-        # --- sparse-vocab (Zipfian) tier: true pairs are PLANTED and linear
-        # in n (≈ n/97), so candidate growth reads directly against
-        # true-pair growth — the degenerate-vocab rows above cannot separate
-        # output-bound from candidate-bound growth (VERDICT r03 item 4)
-        zdir = _zipf_documents_dir(spark, n)
-        z = load_table(spark, zdir, "documents").select(
-            "doc_id", "lang", "source", "text"
-        )
-
-        t0 = time.monotonic()
-        cand = dedup.minhash_candidate_pairs(
-            dedup.minhash_signatures(z, shingle_k=5)
-        ).count()
-        pairs = dedup.minhash_near_dup_pairs(z, shingle_k=5, threshold_pct=50).count()
-        record("minhash_zipf", n, time.monotonic() - t0, cand, pairs)
-
-        t0 = time.monotonic()
-        zsim = dedup.simhash_arrow(z)
-        cand = dedup.simhash_candidate_pairs(zsim, max_hamming=3).distinct().count()
-        pairs = dedup.simhash_near_pairs(zsim, max_hamming=3).count()
-        record("simhash_zipf", n, time.monotonic() - t0, cand, pairs)
-
-        # ngram_n=3: the corpus-scale dial on natural vocabulary — single
-        # words are candidate-bound there (mid-df words contribute C(df,2)
-        # prefix pairs each; measured 37× wall at 10× docs), n-gram tokens
-        # are near-unique so candidates track the planted true pairs
-        cand = dedup.ngram_candidate_pairs(
-            dedup.token_sets(z, 3, *dedup.NGRAM_BLOCK_COLS), 50
-        ).count()
-        t0 = time.monotonic()
-        pairs = dedup.ngram_jaccard_pairs(z, threshold_pct=50, ngram_n=3).count()
-        record("ngram_jaccard_zipf", n, time.monotonic() - t0, cand, pairs)
+            # cand counted OUTSIDE the timed window: the verify pipeline
+            # re-executes candidate generation internally, so timing both
+            # would double-count it and break comparability with earlier
+            # rounds
+            cand = dedup.ngram_candidate_pairs(
+                dedup.token_sets(d, ngram_n, *dedup.NGRAM_BLOCK_COLS), 50
+            ).count()
+            t0 = time.monotonic()
+            pairs = dedup.ngram_jaccard_pairs(d, threshold_pct=50, ngram_n=ngram_n).count()
+            record("ngram_jaccard" + suffix, n, time.monotonic() - t0, cand, pairs)
 
         edir = _scaled_embeddings_dir(spark, n)
         e = load_table(spark, edir, "embeddings")
@@ -849,24 +901,40 @@ def growth_study(sizes=(2_000, 20_000)) -> dict:
         record("embedding_near_dup", n, time.monotonic() - t0, cand, pairs)
 
     lo, hi = (str(s) for s in sizes)
-    # provenance of the candidate counts, so derived numbers can't read as
-    # measurements: minhash/simhash/ivf/ngram are counted from executed
-    # joins (ngram via ngram_candidate_pairs, counted outside the timed
-    # window), sketch is exact-by-construction (top rerank-frac)
-    basis = {
-        "minhash": "measured", "simhash": "measured", "ann_ivf": "measured",
-        "ann_sketch": "by-construction", "ngram_jaccard": "measured",
-        "minhash_zipf": "measured", "simhash_zipf": "measured",
-        "ngram_jaccard_zipf": "measured", "embedding_near_dup": "measured",
-    }
     for op, rows in out["ops"].items():
-        rows["candidate_basis"] = basis.get(op, "measured")
+        # provenance of the candidate counts, so derived numbers can't read
+        # as measurements: every op's are counted from executed joins
+        # (ngram outside the timed window) except sketch's, which is exact
+        # by construction (top rerank-frac)
+        rows["candidate_basis"] = "by-construction" if op == "ann_sketch" else "measured"
         if rows[lo]["candidates"] > 0:
             rows["candidate_growth"] = round(rows[hi]["candidates"] / max(rows[lo]["candidates"], 1), 1)
         rows["verified_growth"] = round(rows[hi]["verified"] / max(rows[lo]["verified"], 1), 1)
         rows["wall_growth"] = round(rows[hi]["wall_sec"] / max(rows[lo]["wall_sec"], 1e-9), 1)
     spark.stop()
     return out
+
+
+def run_tool(args) -> None:
+    """--make-sf1like, --explain or --queries on one local[--cpus] session."""
+    from document_parser_spark.sources.session import get_spark
+
+    spark = get_spark(app_name="bench-tool", cpus=args.cpus)
+    try:
+        if args.make_sf1like:
+            print(make_sf1like(spark, args.docs or SF1LIKE_DOCS))
+        elif args.explain is not None:
+            out = args.out or os.path.join(REPO, "EXPLAIN.md")
+            text = plan_audit(spark, args.sf_dir, args.explain)
+            with open(out, "w") as fh:
+                fh.write(text)
+            print(f"wrote {out}")
+        else:
+            names = [n for n in args.queries.split(",") if n]
+            stats = time_queries(spark, args.sf_dir, names, args.repeats)
+            print(json.dumps({"sf_dir": args.sf_dir, "cpus": args.cpus, "queries": stats}))
+    finally:
+        spark.stop()
 
 
 def main() -> None:
@@ -876,11 +944,13 @@ def main() -> None:
     ap.add_argument("--extract-only", action="store_true")
     ap.add_argument("--scaling", action="store_true")
     ap.add_argument("--scaling-queries", action="store_true")
-    ap.add_argument("--growth", action="store_true")
-    ap.add_argument("--query-subset-internal", action="store_true")
-    ap.add_argument("--internal-json", action="store_true")
-    ap.add_argument("--curate-internal", action="store_true")
     ap.add_argument("--curate-scaling", action="store_true")
+    ap.add_argument("--growth", action="store_true")
+    ap.add_argument(
+        "--internal",
+        choices=("extract", "curate", "queries"),
+        help="one subprocess unit of the N-vs-4N scaling loop",
+    )
     ap.add_argument("--docs", type=int, default=None)
     ap.add_argument(
         "--repeats",
@@ -888,13 +958,14 @@ def main() -> None:
         default=3,
         help="per-query timing repetitions; headline = median (noise protocol)",
     )
+    ap.add_argument("--queries", default="", help="time these contract queries (A,B,...)")
+    ap.add_argument("--explain", nargs="*", help="plan audit of these contract queries (all by default)")
+    ap.add_argument("--out", default="", help="--explain's output file (default EXPLAIN.md)")
+    ap.add_argument("--make-sf1like", action="store_true")
     args = ap.parse_args()
 
-    if args.query_subset_internal:
-        print(json.dumps({"subset_sec": _query_subset_once(args.cpus, args.sf_dir, args.docs or 0)}))
-        return
-    if args.curate_internal:
-        print(json.dumps(_curate_once(args.cpus, args.docs or 50_000)))
+    if args.internal:
+        print(json.dumps(_internal_run(args.internal, args.cpus, args.docs)))
         return
     if args.curate_scaling:
         print(json.dumps(
@@ -902,10 +973,13 @@ def main() -> None:
         ))
         return
     if args.scaling_queries:
-        print(json.dumps({"query_scaling": query_scaling_study(args.sf_dir)}))
+        print(json.dumps({"query_scaling": query_scaling_study()}))
         return
     if args.growth:
         print(json.dumps({"growth": growth_study()}))
+        return
+    if args.make_sf1like or args.explain is not None or args.queries:
+        run_tool(args)
         return
 
     hw_pre = _hw_control_sec()
@@ -917,9 +991,6 @@ def main() -> None:
         repeats=args.repeats,
     )
     hw_post = _hw_control_sec()
-    if args.internal_json:
-        print(json.dumps(result))
-        return
 
     queries = dict(result.get("queries", {}))
     queries["extract_pipeline"] = round(result["extract"]["wall_sec"], 3)
@@ -970,7 +1041,7 @@ def main() -> None:
     }
     sidecar_path = os.path.join(REPO, "BENCH_STATS.json")
     if args.scaling:
-        payload["scaling"] = scaling_study(args.sf_dir)
+        payload["scaling"] = scaling_study()
         sidecar["scaling"] = payload["scaling"]
     else:
         # Carry the last measured scaling block forward (marked as such) so

@@ -5,7 +5,7 @@ Spark-first design (SURVEY.md §3.1 "Spark shape"):
     documents(doc_id, spans)                      -- input_hint shape
       │  assemble_document_text()                 -- native exprs only
       ▼
-    (doc_id, text, n_chars, media_refs)
+    (doc_id, text)
       │  salted_repartition()                     -- plans/partitioning.py
       ▼
     parse_documents(): spans, tables, error       -- ONE mapInArrow pass
@@ -37,19 +37,17 @@ from ..schemas import PARSE_RESULT
 
 def assemble_document_text(df: DataFrame) -> DataFrame:
     """Concatenate the raw ``text`` spans in offset order into one markdown
-    string per document; keep sidecar media refs.  Pure Column algebra —
-    no Python executes per row."""
-    spans = F.col("spans")
+    string per document: ``(doc_id, text)`` and nothing else, since
+    ``parse_documents`` passes every other column through its Arrow
+    boundary.  Pure Column algebra — no Python executes per row."""
     text_spans = F.array_sort(
-        F.filter(spans, lambda s: s.kind == F.lit("text")),
+        F.filter("spans", lambda s: s.kind == F.lit("text")),
         lambda a, b: F.when(a.offset < b.offset, -1).when(a.offset > b.offset, 1).otherwise(0),
     )
-    media_spans = F.filter(spans, lambda s: s.kind == F.lit("media"))
     return df.select(
         "doc_id",
         F.array_join(F.transform(text_spans, lambda s: s.text), "\n").alias("text"),
-        F.transform(media_spans, lambda s: s.media_ref).alias("media_refs"),
-    ).withColumn("n_chars", F.length("text"))
+    )
 
 
 def captured_error(exc: Exception, offset: int = 0):

@@ -17,12 +17,39 @@ joined back to media spans by (doc_id, media_ref) — operators.extract.resolve_
 from __future__ import annotations
 
 import hashlib
+import re
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+#: the one media-kind rule, read by ``media_kind_for``, the Column form
+#: ``media_kind`` and the oracle SQL ``media_kind_sql``: (kind, suffix regex
+#: valid in Python, Java and RE2) in match order; any other ref is a video.
+MEDIA_EXTENSIONS = (
+    ("image", r"(?i)\.(png|jpe?g|gif|bmp|webp|tiff?)$"),
+    ("audio", r"(?i)\.(wav|mp3|flac|ogg|m4a)$"),
+)
+
+
+def media_kind_for(media_ref: str) -> str:
+    return next((k for k, rx in MEDIA_EXTENSIONS if re.search(rx, media_ref)), "video")
+
+
+def media_kind(media_ref: Column) -> Column:
+    kind = F.lit("video")
+    for name, rx in reversed(MEDIA_EXTENSIONS):
+        kind = F.when(media_ref.rlike(rx), name).otherwise(kind)
+    return kind
+
+
+def media_kind_sql(media_ref: str) -> str:
+    """DuckDB ``CASE`` over the SQL expression ``media_ref``."""
+    whens = " ".join(f"WHEN regexp_matches({media_ref}, '{rx}') THEN '{k}'" for k, rx in MEDIA_EXTENSIONS)
+    return f"CASE {whens} ELSE 'video' END"
+
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -212,12 +239,7 @@ def synthetic_media_for(spans_input: DataFrame) -> DataFrame:
             F.filter("spans", lambda s: s.kind == F.lit("media"))
         ).alias("span"),
     ).select("doc_id", F.col("span.media_ref").alias("media_ref"))
-    kind = (
-        F.when(F.col("media_ref").rlike(r"(?i)\.(png|jpe?g|gif)$"), "image")
-        .when(F.col("media_ref").rlike(r"(?i)\.(wav|mp3|flac)$"), "audio")
-        .otherwise("video")
-    )
-    return refs.withColumn("media_kind", kind).withColumn(
+    return refs.withColumn("media_kind", media_kind(F.col("media_ref"))).withColumn(
         "data",
         F.sha2(F.concat_ws("|", "doc_id", "media_ref"), 256).cast("binary"),
     )

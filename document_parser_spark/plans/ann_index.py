@@ -190,6 +190,7 @@ def run_index_build_checkpointed(
         metrics_dir,
         run_id,
         resume.with_bucket(embeddings, "vec_id", num_buckets),
+        range(num_buckets),
         max_buckets_this_run,
     )
     if idle:

@@ -209,7 +209,7 @@ def run_curation_checkpointed(
     bucketed = with_content_bucket(docs.select("doc_id", "text"), num_buckets)
 
     done, keep, idle = resume.select_unfinished(
-        spark, metrics_dir, run_id, bucketed, max_buckets_this_run
+        spark, metrics_dir, run_id, bucketed, range(num_buckets), max_buckets_this_run
     )
     if idle:
         wall_ms = resume.elapsed_ms(t0)

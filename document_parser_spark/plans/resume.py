@@ -21,7 +21,8 @@ Batch-level idempotency without Structured Streaming:
     retries can never duplicate a row (MERGE-like exactly-once);
   * on restart, ``select_unfinished`` anti-joins away the buckets already
     in the manifest for this run_id: only unfinished work re-runs, and a
-    finished build returns before building any pipeline;
+    finished build returns before building any pipeline — from the manifest
+    alone once it holds every bucket;
     ``manifest_totals`` reads this run's counters back in one aggregate.
     Both read ``run_id`` and ``partition_key`` as the strings written, so
     any run id or bucket value a caller passes compares exactly.
@@ -91,6 +92,7 @@ def select_unfinished(
     metrics_dir: str,
     run_id: str,
     buckets: DataFrame,
+    bucket_values: range | list[str],
     max_buckets_this_run: int | None,
 ) -> tuple[set[str], Column, bool]:
     """The resume manifest's work selection, shared by every bucketed job:
@@ -99,17 +101,22 @@ def select_unfinished(
     is empty — a resumed run of a finished build then returns early
     instead of running its whole pipeline over zero rows.  The finished
     buckets are one scan of this run's rows, no ``distinct``:
-    overwrite-by-partition keeps one row per bucket.  Only a resumed run
-    probes for that (one ``isEmpty`` on ``buckets`` — any frame with a
-    ``bucket`` column — which stops at the first unfinished row).  ``max_buckets_this_run``
-    (crash simulation for resume tests) narrows the selection to the first
-    N unfinished buckets in order; only then is ``buckets`` collected."""
+    overwrite-by-partition keeps one row per bucket, and that scan is the
+    whole answer once it holds all ``bucket_values``, every value the
+    ``bucket`` column can take.  Otherwise a resumed run probes
+    ``buckets`` (any frame with a ``bucket`` column) with one ``isEmpty``,
+    which stops at the first unfinished row: an empty bucket never gets a
+    manifest row.  ``max_buckets_this_run`` (crash simulation for resume
+    tests) narrows the selection to the first N unfinished buckets in
+    order; only then is ``buckets`` collected."""
     m = _this_run(spark, metrics_dir, run_id)
     done = (
         set() if m is None
         else {r["bucket"] for r in m.select("bucket").collect()}
     )
     keep = ~F.col("bucket").cast("string").isin(sorted(done)) if done else F.lit(True)
+    if done >= {str(b) for b in bucket_values}:
+        return done, keep, True
     if max_buckets_this_run is not None:
         remaining = sorted(
             r["bucket"] for r in buckets.filter(keep).select("bucket").distinct().collect()
@@ -231,7 +238,9 @@ def run_extraction_checkpointed(
     t0 = time.monotonic()
     docs = with_bucket(assemble_document_text(df_input), "doc_id", num_buckets)
 
-    done, keep, idle = select_unfinished(spark, metrics_dir, run_id, docs, max_buckets_this_run)
+    done, keep, idle = select_unfinished(
+        spark, metrics_dir, run_id, docs, range(num_buckets), max_buckets_this_run
+    )
     if idle:
         return {
             "run_id": run_id,

@@ -19,25 +19,13 @@ a runnable skeleton with the marker call site marked.
 
 from __future__ import annotations
 
-import re
 from typing import Any, Dict, Iterable, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..corpus import media_refs
+from ..operators.multimodal import MEDIA_SCHEMA, media_kind_for
 from ..schemas import DOCUMENTS_INPUT
-
-_KIND_BY_EXT = (
-    (re.compile(r"(?i)\.(png|jpe?g|gif|bmp|webp|tiff?)$"), "image"),
-    (re.compile(r"(?i)\.(wav|mp3|flac|ogg|m4a)$"), "audio"),
-)
-
-
-def media_kind_for(media_ref: str) -> str:
-    for rx, kind in _KIND_BY_EXT:
-        if rx.search(media_ref):
-            return kind
-    return "video"
 
 
 def adapt_rendered(
@@ -107,8 +95,6 @@ def ingest_rendered(
     schema-enforced.  Suitable for driver-side ingestion of a render batch;
     at cluster scale run the renderer inside mapInPandas upstream and write
     the same two tables directly."""
-    from ..operators.multimodal import MEDIA_SCHEMA
-
     doc_rows, media_rows = [], []
     for doc_id, markdown, images in rendered:
         row, media = adapt_rendered(doc_id, markdown, images)

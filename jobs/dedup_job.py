@@ -119,9 +119,10 @@ def ingest(
     txt_path = os.path.join(state, "texts")
     manifest = os.path.join(state, "manifest")
 
-    # a literal bucket: the done check folds to a constant, no job
+    # a literal bucket, the shard's only value: the manifest answers for a
+    # finished shard, and the probe for a new one folds to a constant, no job
     this_shard = spark.range(1).select(F.lit(shard_id).alias("bucket"))
-    done, _, idle = resume.select_unfinished(spark, manifest, RUN_ID, this_shard, None)
+    done, _, idle = resume.select_unfinished(spark, manifest, RUN_ID, this_shard, [shard_id], None)
     if idle:
         return {"shard_id": shard_id, "resumed_noop": True, "docs": 0, "pairs": 0}
 

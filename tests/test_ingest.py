@@ -10,6 +10,7 @@ from document_parser_spark.operators.extract import (
     parse_documents,
     tables_output,
 )
+from document_parser_spark.schemas import DOCUMENTS_INPUT
 from document_parser_spark.sources.ingest import adapt_rendered, ingest_rendered
 
 _MD = """\
@@ -74,3 +75,26 @@ def test_ingested_docs_flow_through_engine(spark):
     spans = {r["doc_id"]: r["spans"] for r in parsed.select("doc_id", "spans").collect()}
     kinds = [s["kind"] for s in spans["d1"]]
     assert "table" in kinds and "media" in kinds and "heading" in kinds
+
+
+def test_media_kind_is_one_rule(spark):
+    """Ingest, the media operator and the oracle SQL classify a ref alike:
+    ``.webp`` is an image and ``.ogg`` audio on every path."""
+    import duckdb
+
+    from document_parser_spark.operators.multimodal import media_kind_sql, synthetic_media_for
+
+    refs = ["a.webp", "b.ogg", "c.JPEG", "d.m4a", "e.mp4"]
+    md = "\n\n".join(f"![]({r})" for r in refs)
+    row, media = adapt_rendered("d1", md)
+    at_ingest = {m["media_ref"]: m["media_kind"] for m in media}
+    docs = spark.createDataFrame([row], DOCUMENTS_INPUT)
+    in_operator = {
+        r["media_ref"]: r["media_kind"] for r in synthetic_media_for(docs).collect()
+    }
+    in_sql = {
+        r: duckdb.sql(f"SELECT {media_kind_sql(repr(r))}").fetchone()[0] for r in refs
+    }
+    expected = {"a.webp": "image", "b.ogg": "audio", "c.JPEG": "image",
+                "d.m4a": "audio", "e.mp4": "video"}
+    assert at_ingest == in_operator == in_sql == expected
