@@ -1,18 +1,25 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Contract surface: one flagship query plus 50 DuckDB-oracled queries.
 
 ``entry(spark)`` — flagship: full extraction pipeline over the fixture corpus
-plus the driver's sf0.001 documents, then the reference's own first example
-query (search_by_key_value 'Pathology', /root/reference/table_search.py:549-554).
+plus the sf0.001 documents, then the reference's own first example query
+(search_by_key_value 'Pathology', the reference's table_search.py:549-554).
 
-``queries()`` / ``oracle_sql()`` — one entry per implemented operator family
-(SURVEY.md §2 + the training-data-pipeline layer): 50 queries, EVERY one
+``queries()`` / ``oracle_sql()`` — two views of one ordered registry,
+``_CONTRACT``: (name, Spark query, DuckDB oracle) per operator family
+(SURVEY.md §2 + the training-data-pipeline layer), 50 queries, EVERY one
 with a DuckDB oracle.  Cross-engine arithmetic is engineered to be
 bit-identical (md5/sha256 string hashing, integer set/ratio/projection
 math, decimal-exact money sums, timezone-free NTZ microsecond gaps); the
 parse/search surface is oracled via golden parquet built by the pure kernel
 (scripts/build_golden.py — itself reference-parity-tested), with the oracle
 SQL re-implementing each query's relational logic over those tables.
-``scripts/compare_oracle.py`` dry-runs the whole contract locally.
+Each oracle composes the one SQL fragment of every shared operator stage it
+mirrors — k-word shingles (``_sql_shingles``), the MinHash chain
+(``_sql_minhash_pairs``), the connected-components fixpoint
+(``_SQL_CLUSTER_CTES``), the sign planes (``_sql_sign_planes``) and the
+exact cosine top-k tail (``_sql_exact_topk``) — so a stage is spelled once,
+as in the package.  ``scripts/compare_oracle.py`` dry-runs the whole
+contract locally.
 """
 
 from __future__ import annotations
@@ -47,6 +54,16 @@ SF0001 = "/root/testdata/sf0.001"
 
 # Shared DuckDB SQL fragment: whitespace word split matching operators.text.words.
 _SQL_WORDS = r"list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')"
+
+
+def _sql_shingles(k: int) -> str:
+    """CTE ``sh(doc_id, pos, shingle)``: every k-word window of CTE
+    ``w(doc_id, ws)`` at its 1-based word position — the DuckDB mirror of
+    ``text.word_shingles``."""
+    return f"""sh AS (
+  SELECT doc_id, CAST(i AS BIGINT) AS pos, array_to_string(ws[i:i+{k - 1}], ' ') AS shingle
+  FROM w, unnest(generate_series(1, greatest(len(ws) - {k - 1}, 0))) AS g(i)
+)"""
 
 
 # --------------------------------------------------------------------------
@@ -823,12 +840,14 @@ FROM documents GROUP BY 1 HAVING count(*) > 1 ORDER BY text_md5
 """
 
 
-_SQL_MINHASH_PAIRS = rf"""
-WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
-sh AS (
-  SELECT doc_id, array_to_string(ws[i:i+4], ' ') AS shingle
-  FROM w, unnest(generate_series(1, greatest(len(ws) - 4, 0))) AS g(i)
-),
+def _sql_minhash_pairs(cand_pred: str) -> str:
+    """The MinHash chain, k=5 shingles → 8 sha256 min-hashes → 4 band
+    signatures → band-equal candidates (``cand_pred`` filters them) →
+    exact shingle Jaccard ≥ 50%, ending in CTE ``pairs(doc_a, doc_b,
+    n_inter, n_union)`` — the mirror of ``dedup.minhash_signatures``,
+    ``minhash_candidate_pairs`` and ``_verify_jaccard``."""
+    return f"""w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
+{_sql_shingles(5)},
 hs AS (SELECT doc_id, sha256(shingle) AS s FROM sh),
 mins AS (
   SELECT doc_id, h, min(substr(s, 8 * h + 1, 8)) AS mh
@@ -842,6 +861,7 @@ sig AS (
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
+  WHERE {cand_pred}
 ),
 dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM dsh GROUP BY doc_id),
@@ -851,52 +871,27 @@ inter AS (
   JOIN dsh a ON a.doc_id = c.doc_a
   JOIN dsh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
   GROUP BY c.doc_a, c.doc_b
-)
-SELECT i.doc_a, i.doc_b, i.n_inter, sa.n_sh + sb.n_sh - i.n_inter AS n_union
-FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a JOIN sizes sb ON sb.doc_id = i.doc_b
-WHERE 100 * i.n_inter >= 50 * (sa.n_sh + sb.n_sh - i.n_inter)
-ORDER BY doc_a, doc_b
+),
+pairs AS (
+  SELECT i.doc_a, i.doc_b, i.n_inter, sa.n_sh + sb.n_sh - i.n_inter AS n_union
+  FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a JOIN sizes sb ON sb.doc_id = i.doc_b
+  WHERE 100 * i.n_inter >= 50 * (sa.n_sh + sb.n_sh - i.n_inter)
+)"""
+
+
+_SQL_MINHASH_PAIRS = f"""
+WITH {_sql_minhash_pairs("TRUE")}
+SELECT * FROM pairs ORDER BY doc_a, doc_b
 """
 
 
-# The full-corpus pair derivation (same CTEs as _SQL_MINHASH_PAIRS) filtered
+# Incremental ingest: the full-corpus derivation with candidates restricted
 # to pairs with at least one new-shard side: a sig-match pair has >=1 new
 # side iff the incremental new x (corpus u new) join generates it, so the
 # closed form is exact.
-_SQL_MINHASH_INCREMENTAL = rf"""
-WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
-sh AS (
-  SELECT doc_id, array_to_string(ws[i:i+4], ' ') AS shingle
-  FROM w, unnest(generate_series(1, greatest(len(ws) - 4, 0))) AS g(i)
-),
-hs AS (SELECT doc_id, sha256(shingle) AS s FROM sh),
-mins AS (
-  SELECT doc_id, h, min(substr(s, 8 * h + 1, 8)) AS mh
-  FROM hs, unnest(generate_series(0, 7)) AS t(h)
-  GROUP BY doc_id, h
-),
-sig AS (
-  SELECT doc_id, h // 2 AS band, md5(string_agg(mh, '|' ORDER BY h)) AS sig
-  FROM mins GROUP BY doc_id, h // 2
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-  WHERE a.doc_id % 5 = 0 OR b.doc_id % 5 = 0
-),
-dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM dsh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS n_inter
-  FROM cand c
-  JOIN dsh a ON a.doc_id = c.doc_a
-  JOIN dsh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-  GROUP BY c.doc_a, c.doc_b
-)
-SELECT i.doc_a, i.doc_b, i.n_inter, sa.n_sh + sb.n_sh - i.n_inter AS n_union
-FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a JOIN sizes sb ON sb.doc_id = i.doc_b
-WHERE 100 * i.n_inter >= 50 * (sa.n_sh + sb.n_sh - i.n_inter)
-ORDER BY doc_a, doc_b
+_SQL_MINHASH_INCREMENTAL = f"""
+WITH {_sql_minhash_pairs("a.doc_id % 5 = 0 OR b.doc_id % 5 = 0")}
+SELECT * FROM pairs ORDER BY doc_a, doc_b
 """
 
 
@@ -908,54 +903,26 @@ def _q_dedup_clusters(spark, sf_dir):
     return dedup.duplicate_clusters(pairs)
 
 
-# Same pair derivation as _SQL_MINHASH_PAIRS, then min-reachable-label per
-# node via a recursive CTE — the exact fixpoint the Spark large-star/
-# small-star loop converges to.
-_SQL_DEDUP_CLUSTERS = rf"""
-WITH RECURSIVE w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
-sh AS (
-  SELECT doc_id, array_to_string(ws[i:i+4], ' ') AS shingle
-  FROM w, unnest(generate_series(1, greatest(len(ws) - 4, 0))) AS g(i)
-),
-hs AS (SELECT doc_id, sha256(shingle) AS s FROM sh),
-mins AS (
-  SELECT doc_id, h, min(substr(s, 8 * h + 1, 8)) AS mh
-  FROM hs, unnest(generate_series(0, 7)) AS t(h)
-  GROUP BY doc_id, h
-),
-sig AS (
-  SELECT doc_id, h // 2 AS band, md5(string_agg(mh, '|' ORDER BY h)) AS sig
-  FROM mins GROUP BY doc_id, h // 2
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-),
-dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM dsh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS n_inter
-  FROM cand c
-  JOIN dsh a ON a.doc_id = c.doc_a
-  JOIN dsh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-  GROUP BY c.doc_a, c.doc_b
-),
-dup_pairs AS (
-  SELECT i.doc_a, i.doc_b
-  FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a JOIN sizes sb ON sb.doc_id = i.doc_b
-  WHERE 100 * i.n_inter >= 50 * (sa.n_sh + sb.n_sh - i.n_inter)
-),
+# Min-reachable label per node of the verified MinHash pairs via a recursive
+# CTE — the exact fixpoint the Spark large-star/small-star loop converges
+# to; CTE ``labels(doc_id, cluster_id)``.
+_SQL_CLUSTER_CTES = f"""
+WITH RECURSIVE {_sql_minhash_pairs("TRUE")},
 edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM dup_pairs
-  UNION SELECT doc_b, doc_a FROM dup_pairs
+  SELECT doc_a AS src, doc_b AS dst FROM pairs
+  UNION SELECT doc_b, doc_a FROM pairs
 ),
 reach(node, lab) AS (
   SELECT src, src FROM edges
   UNION
   SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
-)
-SELECT node AS doc_id, min(lab) AS cluster_id
-FROM reach GROUP BY node ORDER BY doc_id
+),
+labels AS (
+  SELECT node AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY node
+)"""
+
+_SQL_DEDUP_CLUSTERS = _SQL_CLUSTER_CTES + """
+SELECT doc_id, cluster_id FROM labels ORDER BY doc_id
 """
 
 
@@ -972,54 +939,9 @@ def _q_cluster_canonical(spark, sf_dir):
     return dedup.canonical_keep(clusters, docs)
 
 
-# _SQL_DEDUP_CLUSTERS' labeling fixpoint + the canonical election: per
-# cluster, row_number over (n_chars DESC, doc_id ASC) picks the keeper.
-_SQL_CLUSTER_CANONICAL = rf"""
-WITH RECURSIVE w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
-sh AS (
-  SELECT doc_id, array_to_string(ws[i:i+4], ' ') AS shingle
-  FROM w, unnest(generate_series(1, greatest(len(ws) - 4, 0))) AS g(i)
-),
-hs AS (SELECT doc_id, sha256(shingle) AS s FROM sh),
-mins AS (
-  SELECT doc_id, h, min(substr(s, 8 * h + 1, 8)) AS mh
-  FROM hs, unnest(generate_series(0, 7)) AS t(h)
-  GROUP BY doc_id, h
-),
-sig AS (
-  SELECT doc_id, h // 2 AS band, md5(string_agg(mh, '|' ORDER BY h)) AS sig
-  FROM mins GROUP BY doc_id, h // 2
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-),
-dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM dsh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS n_inter
-  FROM cand c
-  JOIN dsh a ON a.doc_id = c.doc_a
-  JOIN dsh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-  GROUP BY c.doc_a, c.doc_b
-),
-dup_pairs AS (
-  SELECT i.doc_a, i.doc_b
-  FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a JOIN sizes sb ON sb.doc_id = i.doc_b
-  WHERE 100 * i.n_inter >= 50 * (sa.n_sh + sb.n_sh - i.n_inter)
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM dup_pairs
-  UNION SELECT doc_b, doc_a FROM dup_pairs
-),
-reach(node, lab) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
-),
-labels AS (
-  SELECT node AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY node
-),
+# The cluster labels + the canonical election: per cluster, row_number over
+# (n_chars DESC, doc_id ASC) picks the keeper.
+_SQL_CLUSTER_CANONICAL = _SQL_CLUSTER_CTES + """,
 jn AS (
   SELECT l.cluster_id, l.doc_id, d.n_chars
   FROM labels l JOIN documents d ON d.doc_id = l.doc_id
@@ -1047,8 +969,8 @@ def _q_simhash(spark, sf_dir):
 
 
 # 60-bit mirror of operators/dedup.py simhash_arrow: 15 md5 hex chars → signed-safe
-# BIGINT word hash, one ± sum per bit.
-_SQL_SIMHASH = rf"""
+# BIGINT word hash, one ± sum per bit; CTE ``sim(doc_id, simhash)``.
+_SQL_SIMHASH_CTES = f"""
 WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
 wc AS (SELECT doc_id, u.w, count(*) AS cnt FROM w, unnest(ws) AS u(w) GROUP BY doc_id, u.w),
 wh AS (SELECT doc_id, cnt, ('0x' || substr(md5(w), 1, 15))::BIGINT AS h FROM wc),
@@ -1057,10 +979,15 @@ pb AS (
          sum(CASE WHEN (h >> bit) & 1 = 1 THEN cnt ELSE -cnt END) AS s
   FROM wh, unnest(generate_series(0, 59)) AS g(bit)
   GROUP BY doc_id, bit
-)
-SELECT doc_id,
-       CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT) AS simhash
-FROM pb GROUP BY doc_id ORDER BY doc_id
+),
+sim AS (
+  SELECT doc_id,
+         CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT) AS simhash
+  FROM pb GROUP BY doc_id
+)"""
+
+_SQL_SIMHASH = _SQL_SIMHASH_CTES + """
+SELECT doc_id, simhash FROM sim ORDER BY doc_id
 """
 
 
@@ -1099,6 +1026,13 @@ def _q_text_stats(spark, sf_dir):
     return text.text_stats(d)
 
 
+# The quality gate shared by text.text_stats and the curation pipeline, over
+# columns (text, ws): >= 5 words, >= 20 chars, under half ASCII punctuation.
+_SQL_PUNCT_CHARS = r"length(regexp_replace(text, '[^!-/:-@\[-`{-~]', '', 'g'))"
+_SQL_QUALITY_OK = (
+    f"(len(ws) >= 5 AND length(text) >= 20 AND {_SQL_PUNCT_CHARS} * 2 < greatest(length(text), 1))"
+)
+
 _SQL_TEXT_STATS = rf"""
 WITH w AS (SELECT doc_id, text, {_SQL_WORDS} AS ws FROM documents)
 SELECT doc_id,
@@ -1108,11 +1042,9 @@ SELECT doc_id,
        CAST(coalesce(list_sum(list_transform(ws, x -> length(x))), 0) AS BIGINT) AS sum_word_len,
        len(list_filter(ws, x -> lower(x) IN
            ('the','and','of','to','a','in','is','that','for','with'))) AS stopword_hits,
-       length(regexp_replace(text, '[^!-/:-@\[-`{{-~]', '', 'g')) AS punct_chars,
+       {_SQL_PUNCT_CHARS} AS punct_chars,
        length(regexp_replace(text, '[^0-9]', '', 'g')) AS digit_chars,
-       (len(ws) >= 5 AND length(text) >= 20
-        AND length(regexp_replace(text, '[^!-/:-@\[-`{{-~]', '', 'g')) * 2
-            < greatest(length(text), 1)) AS quality_ok
+       {_SQL_QUALITY_OK} AS quality_ok
 FROM w ORDER BY doc_id
 """
 
@@ -1122,33 +1054,32 @@ def _q_language_id(spark, sf_dir):
     return text.language_id(d)
 
 
-def _stop_sql(lang: str) -> str:
-    return ",".join(f"'{w}'" for w in text.STOPWORDS[lang])
-
-
-_SQL_LANGUAGE_ID = rf"""
-WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\s+'), x -> x <> '') AS ws
-           FROM documents),
+def _sql_lang(src: str) -> str:
+    """CTE ``lang(doc_id, lang_pred, lang_hits)`` over the ``text`` of
+    ``src``: the stopword-hit election of ``text.language_id`` (most hits,
+    ties to the greater language code, 'und' without a hit)."""
+    hits = "\n  UNION ALL ".join(
+        f"SELECT doc_id, '{lang}' AS lang, len(list_filter(ws, x -> x IN ("
+        + ",".join(f"'{w}'" for w in text.STOPWORDS[lang]) + "))) AS hits FROM lw"
+        for lang in sorted(text.STOPWORDS)
+    )
+    return rf"""lw AS (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\s+'), x -> x <> '') AS ws
+       FROM {src}),
 hits AS (
-  SELECT doc_id, lang, hits FROM (
-    SELECT doc_id, 'de' AS lang, len(list_filter(ws, x -> x IN ({_stop_sql('de')}))) AS hits FROM w
-    UNION ALL
-    SELECT doc_id, 'en', len(list_filter(ws, x -> x IN ({_stop_sql('en')}))) FROM w
-    UNION ALL
-    SELECT doc_id, 'es', len(list_filter(ws, x -> x IN ({_stop_sql('es')}))) FROM w
-    UNION ALL
-    SELECT doc_id, 'fr', len(list_filter(ws, x -> x IN ({_stop_sql('fr')}))) FROM w
-  )
+  {hits}
 ),
-best AS (
-  SELECT doc_id, lang, hits,
-         row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, lang DESC) AS rn
-  FROM hits
-)
-SELECT doc_id,
-       CASE WHEN hits > 0 THEN lang ELSE 'und' END AS lang_pred,
-       hits AS lang_hits
-FROM best WHERE rn = 1 ORDER BY doc_id
+lang AS (
+  SELECT doc_id, CASE WHEN hits > 0 THEN lang ELSE 'und' END AS lang_pred, hits AS lang_hits
+  FROM (SELECT doc_id, lang, hits,
+               row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, lang DESC) AS rn
+        FROM hits)
+  WHERE rn = 1
+)"""
+
+
+_SQL_LANGUAGE_ID = f"""
+WITH {_sql_lang("documents")}
+SELECT doc_id, lang_pred, lang_hits FROM lang ORDER BY doc_id
 """
 
 
@@ -1159,6 +1090,7 @@ def _q_repetition_stats(spark, sf_dir):
 
 _SQL_REPETITION_STATS = rf"""
 WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
+{_sql_shingles(2)},
 uni AS (
   SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_words,
          count(*) AS n_distinct_words, CAST(max(cnt) AS BIGINT) AS top_word_count
@@ -1168,11 +1100,7 @@ uni AS (
 bg AS (
   SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bigrams,
          CAST(max(cnt) AS BIGINT) AS top_bigram_count
-  FROM (
-    SELECT doc_id, array_to_string(ws[i:i+1], ' ') AS b, count(*) AS cnt
-    FROM w, unnest(generate_series(1, greatest(len(ws) - 1, 0))) AS g(i)
-    GROUP BY doc_id, array_to_string(ws[i:i+1], ' ')
-  )
+  FROM (SELECT doc_id, shingle, count(*) AS cnt FROM sh GROUP BY doc_id, shingle)
   GROUP BY doc_id
 )
 SELECT d.doc_id,
@@ -1249,19 +1177,11 @@ scrub AS (
   FROM probes
 ),
 w AS (SELECT doc_id, text, {_SQL_WORDS} AS ws FROM documents),
-sh AS (
-  SELECT doc_id,
-         CASE WHEN len(ws) < 5 THEN []
-              ELSE list_transform(generate_series(1, len(ws) - 4),
-                                  i -> array_to_string(ws[i:i+4], ' ')) END AS shingles,
-         text
-  FROM w
-),
+{_sql_shingles(5)},
 fp AS (
-  SELECT doc_id, md5(text) AS md5_full, substr(md5(text), 1, 8) AS fp8,
-         list_min(list_transform(shingles, s -> md5(s))) AS min_shingle_md5,
-         len(shingles) AS n_shingles
-  FROM sh
+  SELECT w.doc_id, md5(w.text) AS md5_full, substr(md5(w.text), 1, 8) AS fp8,
+         min(md5(sh.shingle)) AS min_shingle_md5, count(sh.shingle) AS n_shingles
+  FROM w LEFT JOIN sh ON sh.doc_id = w.doc_id GROUP BY w.doc_id, w.text
 )
 SELECT s.doc_id, s.n_urls, s.n_emails, s.scrubbed,
        f.md5_full, f.fp8, f.min_shingle_md5, f.n_shingles
@@ -1320,10 +1240,8 @@ def _q_quality_signals(spark, sf_dir):
 
 _SQL_QUALITY_SIGNALS = rf"""
 WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
-bg AS (
-  SELECT doc_id, array_to_string(ws[i:i+1], ' ') AS bigram
-  FROM w, unnest(generate_series(1, greatest(len(ws) - 1, 0))) AS g(i)
-),
+{_sql_shingles(2)},
+bg AS (SELECT doc_id, shingle AS bigram FROM sh),
 common AS (
   SELECT bigram FROM bg GROUP BY bigram HAVING count(DISTINCT doc_id) >= 3
 ),
@@ -1353,37 +1271,6 @@ clf AS (
 SELECT n.doc_id, n.n_bigrams, n.n_distinct, n.n_common, n.n_common_distinct,
        c.clf_score, c.n_feats, c.clf_score >= 0 AS clf_ok
 FROM nov n JOIN clf c USING (doc_id) ORDER BY n.doc_id
-"""
-
-
-# ---- similarity (oracled) ------------------------------------------------------
-
-_SQL_EMBEDDING_TOPK = """
-WITH ev AS (
-  SELECT vec_id, g.i AS pos,
-         CAST(floor(CAST(embedding[g.i + 1] AS DOUBLE) * 1e8) AS BIGINT) AS val
-  FROM embeddings, unnest(generate_series(0, len(embedding) - 1)) AS g(i)
-),
-qv AS (SELECT vec_id AS query_id, pos, val FROM ev WHERE vec_id < 5),
-dots AS (
-  SELECT qv.query_id, ev.vec_id, sum(ev.val * qv.val) AS dot
-  FROM ev JOIN qv ON ev.pos = qv.pos
-  GROUP BY qv.query_id, ev.vec_id
-),
-norms AS (SELECT vec_id, sum(val * val) AS nsq FROM ev GROUP BY vec_id),
-scored AS (
-  SELECT d.query_id, d.vec_id,
-         CAST(d.dot AS DOUBLE) / (sqrt(CAST(n1.nsq AS DOUBLE)) * sqrt(CAST(n2.nsq AS DOUBLE))) AS cos_sim
-  FROM dots d JOIN norms n1 ON n1.vec_id = d.vec_id JOIN norms n2 ON n2.vec_id = d.query_id
-  WHERE d.vec_id <> d.query_id
-),
-ranked AS (
-  SELECT query_id, vec_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cos_sim, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 10 ORDER BY query_id, rank
 """
 
 
@@ -1447,18 +1334,7 @@ def _q_simhash_near(spark, sf_dir):
     return dedup.simhash_near_pairs(dedup.simhash_arrow(d), max_hamming=3)
 
 
-_SQL_SIMHASH_NEAR = rf"""
-WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
-wc AS (SELECT doc_id, u.w, count(*) AS cnt FROM w, unnest(ws) AS u(w) GROUP BY doc_id, u.w),
-wh AS (SELECT doc_id, cnt, ('0x' || substr(md5(w), 1, 15))::BIGINT AS h FROM wc),
-pb AS (
-  SELECT doc_id, bit, sum(CASE WHEN (h >> bit) & 1 = 1 THEN cnt ELSE -cnt END) AS s
-  FROM wh, unnest(generate_series(0, 59)) AS g(bit) GROUP BY doc_id, bit
-),
-sim AS (
-  SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT) AS simhash
-  FROM pb GROUP BY doc_id
-),
+_SQL_SIMHASH_NEAR = _SQL_SIMHASH_CTES + """,
 keyed AS (
   SELECT doc_id, simhash, chunk, (simhash >> (chunk * 15)) & 32767 AS chunk_val
   FROM sim, unnest(generate_series(0, 3)) AS c(chunk)
@@ -1528,28 +1404,9 @@ w AS (SELECT doc_id, text, {_SQL_WORDS} AS ws FROM canon),
 quality AS (
   SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words
   FROM w
-  WHERE len(ws) >= 5 AND length(text) >= 20
-    AND length(regexp_replace(text, '[^!-/:-@\[-`{{-~]', '', 'g')) * 2
-        < greatest(length(text), 1)
+  WHERE {_SQL_QUALITY_OK}
 ),
-lw AS (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\s+'), x -> x <> '') AS ws
-       FROM canon),
-hits AS (
-  SELECT doc_id, lang, hits FROM (
-    SELECT doc_id, 'de' AS lang, len(list_filter(ws, x -> x IN ({_stop_sql('de')}))) AS hits FROM lw
-    UNION ALL SELECT doc_id, 'en', len(list_filter(ws, x -> x IN ({_stop_sql('en')}))) FROM lw
-    UNION ALL SELECT doc_id, 'es', len(list_filter(ws, x -> x IN ({_stop_sql('es')}))) FROM lw
-    UNION ALL SELECT doc_id, 'fr', len(list_filter(ws, x -> x IN ({_stop_sql('fr')}))) FROM lw
-  )
-),
-lang AS (
-  SELECT doc_id,
-         CASE WHEN hits > 0 THEN lang ELSE 'und' END AS lang_pred
-  FROM (SELECT doc_id, lang, hits,
-               row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, lang DESC) AS rn
-        FROM hits)
-  WHERE rn = 1
-)
+{_sql_lang("canon")}
 SELECT c.doc_id, q.n_words, l.lang_pred
 FROM canon c JOIN quality q ON q.doc_id = c.doc_id
 JOIN lang l ON l.doc_id = c.doc_id
@@ -1606,10 +1463,7 @@ def _q_decontaminate(spark, sf_dir):
 
 _SQL_DECONTAMINATE = rf"""
 WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
-sh AS (
-  SELECT doc_id, array_to_string(ws[i:i+2], ' ') AS shingle
-  FROM w, unnest(generate_series(1, greatest(len(ws) - 2, 0))) AS g(i)
-),
+{_sql_shingles(3)},
 dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
 bench AS (SELECT DISTINCT shingle FROM dsh WHERE doc_id % 23 = 0),
 train AS (SELECT * FROM dsh WHERE doc_id % 23 <> 0),
@@ -1636,20 +1490,23 @@ def _q_repeated_spans(spark, sf_dir):
     return repeated_ngram_spans(d, window_k=10, min_docs=2)
 
 
-_SQL_REPEATED_SPANS = rf"""
+# 10-word windows (by md5) that occur in >= 2 distinct docs: CTE
+# ``spans(doc_id, pos, window_md5)``.
+_SQL_REPEATED_WINDOWS = f"""
 WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
-sh AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         md5(array_to_string(ws[i:i+9], ' ')) AS window_md5
-  FROM w, unnest(generate_series(1, greatest(len(ws) - 9, 0))) AS g(i)
-),
+{_sql_shingles(10)},
+win AS (SELECT doc_id, pos, md5(shingle) AS window_md5 FROM sh),
 rep AS (
-  SELECT window_md5 FROM sh GROUP BY window_md5
+  SELECT window_md5 FROM win GROUP BY window_md5
   HAVING count(DISTINCT doc_id) >= 2
-)
-SELECT s.doc_id, s.pos, s.window_md5
-FROM sh s JOIN rep r ON r.window_md5 = s.window_md5
-ORDER BY s.doc_id, s.pos, s.window_md5
+),
+spans AS (
+  SELECT s.doc_id, s.pos, s.window_md5
+  FROM win s JOIN rep r ON r.window_md5 = s.window_md5
+)"""
+
+_SQL_REPEATED_SPANS = _SQL_REPEATED_WINDOWS + """
+SELECT doc_id, pos, window_md5 FROM spans ORDER BY doc_id, pos, window_md5
 """
 
 
@@ -1665,23 +1522,9 @@ def _q_repeated_passages(spark, sf_dir):
     return repeated_passage_intervals(d, window_k=10, min_docs=2)
 
 
-# Same repeated-window derivation as _SQL_REPEATED_SPANS, then classic
-# gaps-and-islands (pos - row_number() per doc) merged to maximal intervals.
-_SQL_REPEATED_PASSAGES = rf"""
-WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
-sh AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         md5(array_to_string(ws[i:i+9], ' ')) AS window_md5
-  FROM w, unnest(generate_series(1, greatest(len(ws) - 9, 0))) AS g(i)
-),
-rep AS (
-  SELECT window_md5 FROM sh GROUP BY window_md5
-  HAVING count(DISTINCT doc_id) >= 2
-),
-spans AS (
-  SELECT s.doc_id, s.pos
-  FROM sh s JOIN rep r ON r.window_md5 = s.window_md5
-),
+# The repeated windows, then classic gaps-and-islands (pos - row_number()
+# per doc) merged to maximal intervals.
+_SQL_REPEATED_PASSAGES = _SQL_REPEATED_WINDOWS + """,
 isl AS (
   SELECT doc_id, pos,
          pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS island
@@ -1750,56 +1593,63 @@ ORDER BY op, doc_id
 """
 
 
-# ---- banded sign-LSH (oracled: integer projections/buckets/cosine are exact) --
+# ---- similarity (oracled: integer projections/buckets/cosine are exact) -------
 
-def _q_embedding_near_dup(spark, sf_dir):
-    # 0.45 sits just under the corpus' top-pair cosine band (max ≈ 0.51 at
-    # sf0.01) so the query demonstrably returns rows; 0.8 returned nothing.
-    e = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_near_dup_pairs(e, threshold=0.45)
+# The integer embedding, the mirror of similarity._int_matrix: CTE
+# ``ev(vec_id, pos, ival)`` holds floor(x * 1e8) per component and
+# ``norms(vec_id, nsq)`` the int64 squared norms.
+_SQL_EMB = """ev AS (
+  SELECT vec_id, g.i AS pos,
+         CAST(floor(CAST(embedding[g.i + 1] AS DOUBLE) * 1e8) AS BIGINT) AS ival
+  FROM embeddings, unnest(generate_series(0, len(embedding) - 1)) AS g(i)
+),
+norms AS (SELECT vec_id, sum(ival * ival) AS nsq FROM ev GROUP BY vec_id)"""
+
+# CTE ``qpairs(query_id, vec_id)``: every query (vec_id < 5) against every
+# other vector — the brute-force candidate set.
+_SQL_QUERY_PAIRS = """qpairs AS (
+  SELECT q.vec_id AS query_id, e.vec_id
+  FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
+  WHERE q.vec_id < 5
+)"""
 
 
-# Shared banded-LSH SQL scaffolding (mirrors operators/similarity.py exactly:
-# ±1 signs = md5-nibble parity, projections/dots/norms in int64, BANDS bands
-# of ROWS_PER_BAND planes — constants interpolated so SQL can't drift).
-_LSH_PLANES = similarity.BANDS * similarity.ROWS_PER_BAND
-_SQL_LSH_COMMON = f"""
-dims AS (SELECT max(len(embedding)) AS dim FROM embeddings),
+def _sql_sign_planes(planes: int) -> str:
+    """CTEs ``signs``/``proj``: ``planes`` ±1 hyperplanes (md5-nibble parity
+    of "plane:pos", the mirror of ``similarity.plane_signs``) and every
+    vector's int64 projection onto each of them."""
+    return f"""dims AS (SELECT max(len(embedding)) AS dim FROM embeddings),
 signs AS (
   SELECT p.plane, g.pos,
          CASE WHEN ('0x' || substr(md5(CAST(p.plane AS VARCHAR) || ':' || CAST(g.pos AS VARCHAR)), 1, 1))::INT % 2 = 1
               THEN 1 ELSE -1 END AS sign
-  FROM unnest(generate_series(0, {_LSH_PLANES - 1})) AS p(plane),
+  FROM unnest(generate_series(0, {planes - 1})) AS p(plane),
        dims, unnest(generate_series(0, dim - 1)) AS g(pos)
-),
-ev AS (
-  SELECT vec_id, g.i AS pos,
-         CAST(floor(CAST(embedding[g.i + 1] AS DOUBLE) * 1e8) AS BIGINT) AS ival
-  FROM embeddings, unnest(generate_series(0, len(embedding) - 1)) AS g(i)
 ),
 proj AS (
   SELECT ev.vec_id, s.plane, sum(ev.ival * s.sign) AS proj
   FROM ev JOIN signs s ON s.pos = ev.pos
   GROUP BY ev.vec_id, s.plane
-),
-bb AS (
-  SELECT vec_id, plane // {similarity.ROWS_PER_BAND} AS band,
-         sum(CASE WHEN proj > 0 THEN 1 << (plane % {similarity.ROWS_PER_BAND}) ELSE 0 END) AS bucket
-  FROM proj GROUP BY vec_id, plane // {similarity.ROWS_PER_BAND}
-),
-norms AS (SELECT vec_id, sum(ival * ival) AS nsq FROM ev GROUP BY vec_id)
-"""
+)"""
 
-_SQL_ANN_LSH = f"""
-WITH {_SQL_LSH_COMMON},
-cand AS (
-  SELECT DISTINCT q.vec_id AS query_id, e.vec_id
-  FROM bb e JOIN bb q ON e.band = q.band AND e.bucket = q.bucket
-  WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id
-),
-dots AS (
+
+# The 512-plane sign sketch, the mirror of similarity._sketch_udf: CTE
+# ``sk(vec_id, word, w)`` packs the projection signs into 32-bit words.
+_SQL_SKETCH = f"""{_sql_sign_planes(similarity.SKETCH_PLANES)},
+sk AS (
+  SELECT vec_id, plane // {similarity.SKETCH_WORD_BITS} AS word,
+         sum(CASE WHEN proj > 0 THEN 1::BIGINT << (plane % {similarity.SKETCH_WORD_BITS}) ELSE 0 END) AS w
+  FROM proj GROUP BY vec_id, plane // {similarity.SKETCH_WORD_BITS}
+)"""
+
+
+def _sql_cosine(cand: str) -> str:
+    """CTE ``scored(query_id, vec_id, cos_sim)``: the exact cosine of every
+    pair of CTE ``cand(query_id, vec_id)`` — int64 dot, one IEEE divide by
+    the product of the norms' roots, as ``similarity.cosine_exact_arrow``."""
+    return f"""dots AS (
   SELECT c.query_id, c.vec_id, sum(ea.ival * eb.ival) AS dot
-  FROM cand c
+  FROM {cand} c
   JOIN ev ea ON ea.vec_id = c.vec_id
   JOIN ev eb ON eb.vec_id = c.query_id AND eb.pos = ea.pos
   GROUP BY c.query_id, c.vec_id
@@ -1808,15 +1658,75 @@ scored AS (
   SELECT d.query_id, d.vec_id,
          CAST(d.dot AS DOUBLE) / (sqrt(CAST(nv.nsq AS DOUBLE)) * sqrt(CAST(nq.nsq AS DOUBLE))) AS cos_sim
   FROM dots d JOIN norms nv ON nv.vec_id = d.vec_id JOIN norms nq ON nq.vec_id = d.query_id
-),
+)"""
+
+
+def _sql_exact_topk(cand: str, k: int) -> str:
+    """The exact-rerank tail, the mirror of ``similarity._exact_topk``:
+    score CTE ``cand`` and keep each query's ``k`` best."""
+    return f"""{_sql_cosine(cand)},
 ranked AS (
   SELECT query_id, vec_id, cos_sim,
          row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id ASC) AS rank
   FROM scored
 )
 SELECT query_id, vec_id, cos_sim, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 10 ORDER BY query_id, rank
+FROM ranked WHERE rank <= {k} ORDER BY query_id, rank"""
+
+
+def _sql_sketch_rerank(pairs: str, m: int, k: int) -> str:
+    """The sketch tail, the mirror of ``similarity._sketch_rerank``: hamming-
+    rank every pair of CTE ``pairs(query_id, vec_id)`` on ``sk``, keep each
+    query's ``m`` nearest, rerank those exactly."""
+    return f"""ham AS (
+  SELECT c.query_id, c.vec_id, sum(bit_count(xor(e.w, q.w))) AS hamming
+  FROM {pairs} c
+  JOIN sk e ON e.vec_id = c.vec_id
+  JOIN sk q ON q.vec_id = c.query_id AND q.word = e.word
+  GROUP BY c.query_id, c.vec_id
+),
+near AS (
+  SELECT query_id, vec_id FROM (
+    SELECT query_id, vec_id,
+           row_number() OVER (PARTITION BY query_id ORDER BY hamming ASC, vec_id ASC) AS rn
+    FROM ham
+  ) WHERE rn <= {m}
+),
+{_sql_exact_topk("near", k)}"""
+
+
+_SQL_EMBEDDING_TOPK = f"""
+WITH {_SQL_EMB},
+{_SQL_QUERY_PAIRS},
+{_sql_exact_topk("qpairs", 10)}
 """
+
+
+# Banded LSH (mirrors operators/similarity.py exactly: BANDS bands of
+# ROWS_PER_BAND planes — constants interpolated so SQL can't drift).
+_SQL_ANN_LSH = f"""
+WITH {_SQL_EMB},
+{_sql_sign_planes(similarity.BANDS * similarity.ROWS_PER_BAND)},
+bb AS (
+  SELECT vec_id, plane // {similarity.ROWS_PER_BAND} AS band,
+         sum(CASE WHEN proj > 0 THEN 1 << (plane % {similarity.ROWS_PER_BAND}) ELSE 0 END) AS bucket
+  FROM proj GROUP BY vec_id, plane // {similarity.ROWS_PER_BAND}
+),
+cand AS (
+  SELECT DISTINCT q.vec_id AS query_id, e.vec_id
+  FROM bb e JOIN bb q ON e.band = q.band AND e.bucket = q.bucket
+  WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id
+),
+{_sql_exact_topk("cand", 10)}
+"""
+
+
+def _q_embedding_near_dup(spark, sf_dir):
+    # 0.45 sits just under the corpus' top-pair cosine band (max ≈ 0.51 at
+    # sf0.01) so the query demonstrably returns rows; 0.8 returned nothing.
+    e = load_table(spark, sf_dir, "embeddings")
+    return similarity.cosine_near_dup_pairs(e, threshold=0.45)
+
 
 def _q_ann_sketch(spark, sf_dir):
     """Hamming-sketch ANN family in one tagged result (round-5 fold —
@@ -1899,68 +1809,11 @@ def _assert_oracle_corpus_size(e) -> None:
 
 _SKETCH_M = max(10, (_ORACLE_EMB_N * similarity.RERANK_FRAC_PCT + 99) // 100)
 
-# Shared 512-plane sign-sketch scaffolding (mirrors similarity._sketch_udf
-# exactly: int64 projections against md5-parity planes, 32-bit packed words)
-# — used by the sketch-ANN oracle and the sketch-candidate near-dup oracle.
-_SQL_SKETCH_COMMON = f"""dims AS (SELECT max(len(embedding)) AS dim FROM embeddings),
-signs AS (
-  SELECT p.plane, g.pos,
-         CASE WHEN ('0x' || substr(md5(CAST(p.plane AS VARCHAR) || ':' || CAST(g.pos AS VARCHAR)), 1, 1))::INT % 2 = 1
-              THEN 1 ELSE -1 END AS sign
-  FROM unnest(generate_series(0, {similarity.SKETCH_PLANES - 1})) AS p(plane),
-       dims, unnest(generate_series(0, dim - 1)) AS g(pos)
-),
-ev AS (
-  SELECT vec_id, g.i AS pos,
-         CAST(floor(CAST(embedding[g.i + 1] AS DOUBLE) * 1e8) AS BIGINT) AS ival
-  FROM embeddings, unnest(generate_series(0, len(embedding) - 1)) AS g(i)
-),
-norms AS (SELECT vec_id, sum(ival * ival) AS nsq FROM ev GROUP BY vec_id),
-proj AS (
-  SELECT ev.vec_id, s.plane, sum(ev.ival * s.sign) AS proj
-  FROM ev JOIN signs s ON s.pos = ev.pos
-  GROUP BY ev.vec_id, s.plane
-),
-sk AS (
-  SELECT vec_id, plane // {similarity.SKETCH_WORD_BITS} AS word,
-         sum(CASE WHEN proj > 0 THEN 1::BIGINT << (plane % {similarity.SKETCH_WORD_BITS}) ELSE 0 END) AS w
-  FROM proj GROUP BY vec_id, plane // {similarity.SKETCH_WORD_BITS}
-)"""
-
 _SQL_ANN_SKETCH = f"""
-WITH {_SQL_SKETCH_COMMON},
-ham AS (
-  SELECT q.vec_id AS query_id, e.vec_id, sum(bit_count(xor(e.w, q.w))) AS hamming
-  FROM sk e JOIN sk q ON q.word = e.word
-  WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id
-  GROUP BY q.vec_id, e.vec_id
-),
-cand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY hamming ASC, vec_id ASC) AS rn
-    FROM ham
-  ) WHERE rn <= {_SKETCH_M}
-),
-dots AS (
-  SELECT c.query_id, c.vec_id, sum(ea.ival * eb.ival) AS dot
-  FROM cand c
-  JOIN ev ea ON ea.vec_id = c.vec_id
-  JOIN ev eb ON eb.vec_id = c.query_id AND eb.pos = ea.pos
-  GROUP BY c.query_id, c.vec_id
-),
-scored AS (
-  SELECT d.query_id, d.vec_id,
-         CAST(d.dot AS DOUBLE) / (sqrt(CAST(nv.nsq AS DOUBLE)) * sqrt(CAST(nq.nsq AS DOUBLE))) AS cos_sim
-  FROM dots d JOIN norms nv ON nv.vec_id = d.vec_id JOIN norms nq ON nq.vec_id = d.query_id
-),
-ranked AS (
-  SELECT query_id, vec_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cos_sim, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 10 ORDER BY query_id, rank
+WITH {_SQL_EMB},
+{_SQL_SKETCH},
+{_SQL_QUERY_PAIRS},
+{_sql_sketch_rerank("qpairs", _SKETCH_M, 10)}
 """
 
 
@@ -1983,13 +1836,14 @@ def _ivf_prefix_sql(nlist: int, nprobe: int, iters: int) -> str:
     (subtract canonical mod, then integer-divide — truncating and flooring
     division agree on an exact multiple)."""
     fdiv = "(s - (((s % c) + c) % c)) // c"
-    sql = [f"""WITH {_SQL_LSH_COMMON},
+    sql = [f"""WITH {_SQL_EMB},
 cents AS (
   SELECT vec_id AS cid FROM embeddings
   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {nlist}
 ),
 cv0 AS (SELECT c.cid, e.pos, e.ival AS cval FROM cents c JOIN ev e ON e.vec_id = c.cid)"""]
-    for i in range(iters):
+    for i in range(iters + 1):
+        # round i ranks every list for every vector against centroids cv{i}
         sql.append(f""",
 cn{i} AS (SELECT cid, sum(cval * cval) AS cnsq FROM cv{i} GROUP BY cid),
 sc{i} AS (
@@ -1997,18 +1851,18 @@ sc{i} AS (
   FROM ev e JOIN cv{i} c ON c.pos = e.pos
   GROUP BY e.vec_id, c.cid
 ),
-asg{i} AS (
-  SELECT vec_id, cid FROM (
-    SELECT s.vec_id, s.cid,
-           row_number() OVER (PARTITION BY s.vec_id
-             ORDER BY CAST(s.dot AS DOUBLE) / sqrt(CAST(n.cnsq AS DOUBLE)) DESC,
-                      s.cid ASC) AS rn
-    FROM sc{i} s JOIN cn{i} n ON n.cid = s.cid
-  ) WHERE rn = 1
-),
+rk{i} AS (
+  SELECT s.vec_id, s.cid,
+         row_number() OVER (PARTITION BY s.vec_id
+           ORDER BY CAST(s.dot AS DOUBLE) / sqrt(CAST(n.cnsq AS DOUBLE)) DESC,
+                    s.cid ASC) AS rn
+  FROM sc{i} s JOIN cn{i} n ON n.cid = s.cid
+)""")
+        if i < iters:
+            sql.append(f""",
 sm{i} AS (
   SELECT a.cid, e.pos, sum(e.ival) AS s, count(*) AS c
-  FROM asg{i} a JOIN ev e ON e.vec_id = a.vec_id GROUP BY a.cid, e.pos
+  FROM rk{i} a JOIN ev e ON e.vec_id = a.vec_id WHERE a.rn = 1 GROUP BY a.cid, e.pos
 ),
 cv{i + 1} AS (
   SELECT cid, pos, {fdiv} AS cval FROM sm{i}
@@ -2016,117 +1870,37 @@ cv{i + 1} AS (
   SELECT cid, pos, cval FROM cv{i} WHERE cid NOT IN (SELECT cid FROM sm{i})
 )""")
     sql.append(f""",
-cnF AS (SELECT cid, sum(cval * cval) AS cnsq FROM cv{iters} GROUP BY cid),
-scF AS (
-  SELECT e.vec_id, c.cid, sum(e.ival * c.cval) AS dot
-  FROM ev e JOIN cv{iters} c ON c.pos = e.pos
-  GROUP BY e.vec_id, c.cid
-),
-rk AS (
-  SELECT s.vec_id, s.cid,
-         row_number() OVER (PARTITION BY s.vec_id
-           ORDER BY CAST(s.dot AS DOUBLE) / sqrt(CAST(n.cnsq AS DOUBLE)) DESC,
-                    s.cid ASC) AS rn
-  FROM scF s JOIN cnF n ON n.cid = s.cid
-),
-assign AS (SELECT vec_id, cid FROM rk WHERE rn = 1),
-probe AS (SELECT vec_id AS query_id, cid FROM rk WHERE vec_id < 5 AND rn <= {nprobe})""")
+assign AS (SELECT vec_id, cid FROM rk{iters} WHERE rn = 1),
+probe AS (SELECT vec_id AS query_id, cid FROM rk{iters} WHERE vec_id < 5 AND rn <= {nprobe})""")
     return "".join(sql)
 
 
 def _ivf_sql(nlist: int, nprobe: int, iters: int) -> str:
     """DuckDB mirror of similarity.ivf_topk: probe the ``nprobe`` nearest
     refined lists, exactly score every probed member, top-k."""
-    return _ivf_prefix_sql(nlist, nprobe, iters) + """,
+    return _ivf_prefix_sql(nlist, nprobe, iters) + f""",
 cand AS (
   SELECT DISTINCT p.query_id, a.vec_id
   FROM probe p JOIN assign a ON a.cid = p.cid
   WHERE a.vec_id <> p.query_id
 ),
-dots AS (
-  SELECT c.query_id, c.vec_id, sum(ea.ival * eb.ival) AS dot
-  FROM cand c
-  JOIN ev ea ON ea.vec_id = c.vec_id
-  JOIN ev eb ON eb.vec_id = c.query_id AND eb.pos = ea.pos
-  GROUP BY c.query_id, c.vec_id
-),
-scored AS (
-  SELECT d.query_id, d.vec_id,
-         CAST(d.dot AS DOUBLE) / (sqrt(CAST(nv.nsq AS DOUBLE)) * sqrt(CAST(nq.nsq AS DOUBLE))) AS cos_sim
-  FROM dots d JOIN norms nv ON nv.vec_id = d.vec_id JOIN norms nq ON nq.vec_id = d.query_id
-),
-ranked AS (
-  SELECT query_id, vec_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cos_sim, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 10 ORDER BY query_id, rank"""
+{_sql_exact_topk("cand", 10)}"""
 
 
 def _ivf_sketch_sql(nlist: int, nprobe: int, iters: int, m: int, k: int) -> str:
     """DuckDB mirror of similarity.ivf_sketch_topk (the IVF→sketch→exact
     composition): the IVF prefix supplies the refined quantizer, per-vector
-    list assignment, and per-query probes; the probed slice is then
-    hamming-ranked on the 512-bit sign sketch (renamed CTEs — the LSH
-    prefix already owns ``signs``/``proj`` for its 32 planes) and only the
-    ``m`` hamming-nearest probed members are exactly re-scored."""
+    list assignment, and per-query probes; the probed slice then runs the
+    sketch tail, so only the ``m`` hamming-nearest probed members are
+    exactly re-scored."""
     return _ivf_prefix_sql(nlist, nprobe, iters) + f""",
-sksigns AS (
-  SELECT p.plane, g.pos,
-         CASE WHEN ('0x' || substr(md5(CAST(p.plane AS VARCHAR) || ':' || CAST(g.pos AS VARCHAR)), 1, 1))::INT % 2 = 1
-              THEN 1 ELSE -1 END AS sign
-  FROM unnest(generate_series(0, {similarity.SKETCH_PLANES - 1})) AS p(plane),
-       dims, unnest(generate_series(0, dim - 1)) AS g(pos)
-),
-skproj AS (
-  SELECT ev.vec_id, s.plane, sum(ev.ival * s.sign) AS proj
-  FROM ev JOIN sksigns s ON s.pos = ev.pos
-  GROUP BY ev.vec_id, s.plane
-),
-sk AS (
-  SELECT vec_id, plane // {similarity.SKETCH_WORD_BITS} AS word,
-         sum(CASE WHEN proj > 0 THEN 1::BIGINT << (plane % {similarity.SKETCH_WORD_BITS}) ELSE 0 END) AS w
-  FROM skproj GROUP BY vec_id, plane // {similarity.SKETCH_WORD_BITS}
-),
+{_SQL_SKETCH},
 probed AS (
   SELECT p.query_id, a.vec_id
   FROM probe p JOIN assign a ON a.cid = p.cid
   WHERE a.vec_id <> p.query_id
 ),
-skham AS (
-  SELECT c.query_id, c.vec_id, sum(bit_count(xor(e.w, q.w))) AS hamming
-  FROM probed c
-  JOIN sk e ON e.vec_id = c.vec_id
-  JOIN sk q ON q.vec_id = c.query_id AND q.word = e.word
-  GROUP BY c.query_id, c.vec_id
-),
-skcand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY hamming ASC, vec_id ASC) AS rn
-    FROM skham
-  ) WHERE rn <= {m}
-),
-skdots AS (
-  SELECT c.query_id, c.vec_id, sum(ea.ival * eb.ival) AS dot
-  FROM skcand c
-  JOIN ev ea ON ea.vec_id = c.vec_id
-  JOIN ev eb ON eb.vec_id = c.query_id AND eb.pos = ea.pos
-  GROUP BY c.query_id, c.vec_id
-),
-skscored AS (
-  SELECT d.query_id, d.vec_id,
-         CAST(d.dot AS DOUBLE) / (sqrt(CAST(nv.nsq AS DOUBLE)) * sqrt(CAST(nq.nsq AS DOUBLE))) AS cos_sim
-  FROM skdots d JOIN norms nv ON nv.vec_id = d.vec_id JOIN norms nq ON nq.vec_id = d.query_id
-),
-skranked AS (
-  SELECT query_id, vec_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id ASC) AS rank
-  FROM skscored
-)
-SELECT query_id, vec_id, cos_sim, CAST(rank AS INT) AS rank
-FROM skranked WHERE rank <= {k} ORDER BY query_id, rank"""
+{_sql_sketch_rerank("probed", m, k)}"""
 
 
 # Dials pinned to the driver's comparison corpus (sf0.01: 500 vectors →
@@ -2159,31 +1933,26 @@ UNION ALL
 SELECT 'ivf_sketch' AS branch, * FROM ({_SQL_IVF_SKETCH})
 ORDER BY branch, query_id, rank
 """
+
 # Sketch-candidate near-dup (VERDICT r04 item 4): candidates are pairs whose
 # 512-bit sketch hamming ≤ the threshold-derived cutoff (217 for cos 0.45 —
 # the SAME integer the Spark side derives), exact integer-cosine verify.
 # The Spark side's block-pair join is a plan detail: every unordered pair
 # meets exactly once there too, so a plain hamming self-join mirrors it.
+# The pair's lower id rides in ``query_id`` through the shared cosine.
 _NEAR_DUP_MAX_HAMMING = similarity.sketch_near_dup_max_hamming(0.45)
 _SQL_EMBEDDING_NEAR_DUP = f"""
-WITH {_SQL_SKETCH_COMMON},
+WITH {_SQL_EMB},
+{_SQL_SKETCH},
 cand AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+  SELECT a.vec_id AS query_id, b.vec_id
   FROM sk a JOIN sk b ON a.word = b.word AND a.vec_id < b.vec_id
   GROUP BY a.vec_id, b.vec_id
   HAVING sum(bit_count(xor(a.w, b.w))) <= {_NEAR_DUP_MAX_HAMMING}
 ),
-dots AS (
-  SELECT c.id_a, c.id_b, sum(ea.ival * eb.ival) AS dot
-  FROM cand c
-  JOIN ev ea ON ea.vec_id = c.id_a
-  JOIN ev eb ON eb.vec_id = c.id_b AND eb.pos = ea.pos
-  GROUP BY c.id_a, c.id_b
-)
-SELECT d.id_a, d.id_b,
-       CAST(d.dot AS DOUBLE) / (sqrt(CAST(na.nsq AS DOUBLE)) * sqrt(CAST(nb.nsq AS DOUBLE))) AS cos_sim
-FROM dots d JOIN norms na ON na.vec_id = d.id_a JOIN norms nb ON nb.vec_id = d.id_b
-WHERE CAST(d.dot AS DOUBLE) / (sqrt(CAST(na.nsq AS DOUBLE)) * sqrt(CAST(nb.nsq AS DOUBLE))) >= 0.45
+{_sql_cosine("cand")}
+SELECT query_id AS id_a, vec_id AS id_b, cos_sim
+FROM scored WHERE cos_sim >= 0.45
 ORDER BY id_a, id_b
 """
 
@@ -2270,7 +2039,7 @@ ORDER BY doc_id, "offset", owner_row, owner_col
 """
 
 
-# ---- round-4 additions: containment dedup + tf-idf salience ----------------
+# ---- containment dedup + tf-idf salience ------------------------------------
 
 def _q_doc_containment(spark, sf_dir):
     """Document-containment detection: (inner, outer) pairs where ≥80% of
@@ -2284,10 +2053,8 @@ def _q_doc_containment(spark, sf_dir):
 
 _SQL_DOC_CONTAINMENT = rf"""
 WITH w AS (SELECT doc_id, {_SQL_WORDS} AS ws FROM documents),
-win AS (
-  SELECT DISTINCT doc_id, md5(array_to_string(ws[i:i+9], ' ')) AS wmd5
-  FROM w, unnest(generate_series(1, greatest(len(ws) - 9, 0))) AS g(i)
-),
+{_sql_shingles(10)},
+win AS (SELECT DISTINCT doc_id, md5(shingle) AS wmd5 FROM sh),
 tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS inner_windows FROM win GROUP BY doc_id),
 shared AS (
   SELECT a.doc_id AS inner_id, b.doc_id AS outer_id, CAST(count(*) AS BIGINT) AS shared_windows
@@ -2332,7 +2099,7 @@ FROM ranked WHERE rank <= 5 ORDER BY doc_id, rank
 """
 
 
-# ---- round-4 registry folds (50-row driver CORRECTNESS window) --------------
+# ---- tagged-union folds of same-grain queries ---------------------------------
 
 def _q_ann_baselines(spark, sf_dir):
     """Brute-force exact top-k + banded-LSH top-k in one tagged result
@@ -2408,147 +2175,67 @@ ORDER BY branch, doc_a, doc_b
 # contract surface
 # --------------------------------------------------------------------------
 
+#: The contract registry: (name, Spark query, DuckDB oracle), in contract
+#: order.  The correctness harness records at most 50 rows, so the registry
+#: holds exactly 50 queries, every one oracled; the queries that harness
+#: has never recorded lead.
+_CONTRACT: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str], ...] = (
+    ("doc_chunks", _q_doc_chunks, _SQL_DOC_CHUNKS),
+    ("quality_signals", _q_quality_signals, _SQL_QUALITY_SIGNALS),
+    ("scrub_fingerprints", _q_scrub_fingerprints, _SQL_SCRUB_FINGERPRINTS),
+    ("doc_containment", _q_doc_containment, _SQL_DOC_CONTAINMENT),
+    ("tfidf_topk", _q_tfidf_topk, _SQL_TFIDF_TOPK),
+    ("ann_baselines", _q_ann_baselines, _SQL_ANN_BASELINES),
+    ("minhash_family", _q_minhash_family, _SQL_MINHASH_FAMILY),
+    ("repeated_passages", _q_repeated_passages, _SQL_REPEATED_PASSAGES),
+    ("cluster_canonical", _q_cluster_canonical, _SQL_CLUSTER_CANONICAL),
+    ("corpus_profile", _q_corpus_profile, _SQL_CORPUS_PROFILE),
+    ("agg_rollup_ops", _q_agg_rollup_ops, _SQL_AGG_ROLLUP_OPS),
+    ("curation_assign", _q_curation_assign, _SQL_CURATION_ASSIGN),
+    ("ann_sketch_topk", _q_ann_sketch, _SQL_ANN_SKETCH_FOLD),
+    ("media_features", _q_media_features, _SQL_MEDIA_FEATURES),
+    ("merged_cell_spans", _q_merged_cell_spans, _SQL_MERGED_CELL_SPANS),
+    ("extract_spans", _q_extract_spans, _SQL_EXTRACT_SPANS),
+    ("extract_tables_meta", _q_extract_tables_meta, _SQL_EXTRACT_TABLES_META),
+    ("search_key_value_pathology", _q_search_key_value, _SQL_SEARCH_KEY_VALUE),
+    ("search_anywhere_topk", _q_search_anywhere, _SQL_SEARCH_ANYWHERE),
+    ("row_assembly_group2", _q_row_assembly, _SQL_ROW_ASSEMBLY),
+    ("search_by_column", _q_search_by_column, _SQL_SEARCH_BY_COLUMN),
+    ("table_by_title", _q_table_by_title, _SQL_TABLE_BY_TITLE),
+    ("extract_html_spans", _q_extract_html_spans, _SQL_EXTRACT_HTML_SPANS),
+    ("filter_modes", _q_filter_modes, _SQL_FILTER_MODES),
+    ("fuzzy_pairs", _q_fuzzy_pairs, _SQL_FUZZY_PAIRS),
+    ("numeric_predicate", _q_numeric_predicate, _SQL_NUMERIC_PREDICATE),
+    ("units_predicate", _q_units_predicate, _SQL_UNITS_PREDICATE),
+    ("tpch_q1", _q_tpch_q1, _SQL_TPCH_Q1),
+    ("pivot_returnflag", _q_pivot_returnflag, _SQL_PIVOT),
+    ("key_value_join", _q_key_value_join, _SQL_KEY_VALUE_JOIN),
+    ("semi_join_rows", _q_semi_join_rows, _SQL_SEMI_JOIN),
+    ("asof_join", _q_asof_join, _SQL_ASOF_JOIN),
+    ("topk_per_group", _q_topk_per_group, _SQL_TOPK_PER_GROUP),
+    ("sessionize_events", _q_sessionize, _SQL_SESSIONIZE),
+    ("window_ops", _q_window_ops, _SQL_WINDOW_OPS),
+    ("set_ops", _q_set_ops, _SQL_SET_OPS),
+    ("dedup_exact", _q_dedup_exact, _SQL_DEDUP_EXACT),
+    ("dedup_clusters", _q_dedup_clusters, _SQL_DEDUP_CLUSTERS),
+    ("simhash_docs", _q_simhash, _SQL_SIMHASH),
+    ("ngram_jaccard", _q_ngram_jaccard, _SQL_NGRAM_JACCARD),
+    ("curate_corpus", _q_curate, _SQL_CURATE),
+    ("text_stats", _q_text_stats, _SQL_TEXT_STATS),
+    ("language_id", _q_language_id, _SQL_LANGUAGE_ID),
+    ("repetition_stats", _q_repetition_stats, _SQL_REPETITION_STATS),
+    ("gopher_gate", _q_gopher_gate, _SQL_GOPHER_GATE),
+    ("decontaminate", _q_decontaminate, _SQL_DECONTAMINATE),
+    ("repeated_spans", _q_repeated_spans, _SQL_REPEATED_SPANS),
+    ("simhash_near_pairs", _q_simhash_near, _SQL_SIMHASH_NEAR),
+    ("embedding_near_dup", _q_embedding_near_dup, _SQL_EMBEDDING_NEAR_DUP),
+    ("ivf_topk", _q_ivf_topk, _SQL_IVF_TOPK),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registry is EXACTLY 50 entries and ordered newest-attestation-first:
-    # the driver's CORRECTNESS harness records at most 50 rows (r01-r03 row
-    # counts 39/46/50 vs registry sizes 39/46/53), so the three queries that
-    # had never received a driver row (ann_sketch_topk — the flagship ANN
-    # path — media_features, merged_cell_spans) lead, and three redundant
-    # same-grain sibling pairs were folded (VERDICT r03 item 1):
-    #   token_stats + quality_scores   -> text_stats   (one projection)
-    #   forward_fill + running_sum     -> window_ops   (one window frame)
-    #   anti_join    + union_distinct  -> set_ops      (tagged union)
-    # and two more round-4 folds made room for the two new curation/dedup
-    # deliverables (repeated_passages, cluster_canonical):
-    #   distinct_ratio + shape_agg     -> agg_shapes   (tagged union)
-    #   dim_rollup     + rollup_agg    -> rollup_ops   (tagged union)
-    # round-4 session 5: agg_shapes + rollup_ops -> agg_rollup_ops (one
-    # 4-branch tagged union) made room for corpus_profile.
-    # round-4 continuation: two more same-grain folds made room for
-    # doc_containment + tfidf_topk:
-    #   embedding_topk + ann_lsh_topk          -> ann_baselines  (tagged union)
-    #   minhash_pairs  + minhash_incremental   -> minhash_family (tagged union)
-    # round-4 session 3: scrub_pii + fingerprints -> scrub_fingerprints
-    # (doc_id join) made room for doc_chunks; bigram_novelty widened into
-    # quality_signals (same slot, + the hash-classifier score).
-    # round-4 session-3: scrub_pii + fingerprints fold into scrub_fingerprints
-    # (both per-doc map passes, joined on doc_id) to make room for doc_chunks.
-    return {
-        # never-driver-attested — keep first
-        "doc_chunks": _q_doc_chunks,
-        "quality_signals": _q_quality_signals,
-        "scrub_fingerprints": _q_scrub_fingerprints,
-        "doc_containment": _q_doc_containment,
-        "tfidf_topk": _q_tfidf_topk,
-        "ann_baselines": _q_ann_baselines,
-        "minhash_family": _q_minhash_family,
-        "repeated_passages": _q_repeated_passages,
-        "cluster_canonical": _q_cluster_canonical,
-        "corpus_profile": _q_corpus_profile,
-        "agg_rollup_ops": _q_agg_rollup_ops,
-        "curation_assign": _q_curation_assign,
-        "ann_sketch_topk": _q_ann_sketch,
-        "media_features": _q_media_features,
-        "merged_cell_spans": _q_merged_cell_spans,
-        # extraction / search (golden-parquet oracles)
-        "extract_spans": _q_extract_spans,
-        "extract_tables_meta": _q_extract_tables_meta,
-        "search_key_value_pathology": _q_search_key_value,
-        "search_anywhere_topk": _q_search_anywhere,
-        "row_assembly_group2": _q_row_assembly,
-        "search_by_column": _q_search_by_column,
-        "table_by_title": _q_table_by_title,
-        "extract_html_spans": _q_extract_html_spans,
-        # F-family predicates
-        "filter_modes": _q_filter_modes,
-        "fuzzy_pairs": _q_fuzzy_pairs,
-        "numeric_predicate": _q_numeric_predicate,
-        "units_predicate": _q_units_predicate,
-        # A-family aggregations
-        "tpch_q1": _q_tpch_q1,
-        "pivot_returnflag": _q_pivot_returnflag,
-        # J-family joins
-        "key_value_join": _q_key_value_join,
-        "semi_join_rows": _q_semi_join_rows,
-        "asof_join": _q_asof_join,
-        # W-family windows
-        "topk_per_group": _q_topk_per_group,
-        "sessionize_events": _q_sessionize,
-        "window_ops": _q_window_ops,
-        # set operations
-        "set_ops": _q_set_ops,
-        # dedup family
-        "dedup_exact": _q_dedup_exact,
-        "dedup_clusters": _q_dedup_clusters,
-        "simhash_docs": _q_simhash,
-        "ngram_jaccard": _q_ngram_jaccard,
-        # text analysis + composed curation pipeline
-        "curate_corpus": _q_curate,
-        "text_stats": _q_text_stats,
-        "language_id": _q_language_id,
-        "repetition_stats": _q_repetition_stats,
-        "gopher_gate": _q_gopher_gate,
-        "decontaminate": _q_decontaminate,
-        "repeated_spans": _q_repeated_spans,
-        # dedup (near-pair variants)
-        "simhash_near_pairs": _q_simhash_near,
-        "embedding_near_dup": _q_embedding_near_dup,
-        # similarity
-        "ivf_topk": _q_ivf_topk,
-    }
+    return {name: q for name, q, _ in _CONTRACT}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "doc_containment": _SQL_DOC_CONTAINMENT,
-        "tfidf_topk": _SQL_TFIDF_TOPK,
-        "ann_baselines": _SQL_ANN_BASELINES,
-        "minhash_family": _SQL_MINHASH_FAMILY,
-        "repeated_passages": _SQL_REPEATED_PASSAGES,
-        "cluster_canonical": _SQL_CLUSTER_CANONICAL,
-        "quality_signals": _SQL_QUALITY_SIGNALS,
-        "corpus_profile": _SQL_CORPUS_PROFILE,
-        "agg_rollup_ops": _SQL_AGG_ROLLUP_OPS,
-        "curation_assign": _SQL_CURATION_ASSIGN,
-        "ann_sketch_topk": _SQL_ANN_SKETCH_FOLD,
-        "media_features": _SQL_MEDIA_FEATURES,
-        "merged_cell_spans": _SQL_MERGED_CELL_SPANS,
-        "filter_modes": _SQL_FILTER_MODES,
-        "fuzzy_pairs": _SQL_FUZZY_PAIRS,
-        "doc_chunks": _SQL_DOC_CHUNKS,
-        "scrub_fingerprints": _SQL_SCRUB_FINGERPRINTS,
-        "numeric_predicate": _SQL_NUMERIC_PREDICATE,
-        "units_predicate": _SQL_UNITS_PREDICATE,
-        "tpch_q1": _SQL_TPCH_Q1,
-        "pivot_returnflag": _SQL_PIVOT,
-        "key_value_join": _SQL_KEY_VALUE_JOIN,
-        "semi_join_rows": _SQL_SEMI_JOIN,
-        "asof_join": _SQL_ASOF_JOIN,
-        "topk_per_group": _SQL_TOPK_PER_GROUP,
-        "sessionize_events": _SQL_SESSIONIZE,
-        "window_ops": _SQL_WINDOW_OPS,
-        "set_ops": _SQL_SET_OPS,
-        "simhash_near_pairs": _SQL_SIMHASH_NEAR,
-        "dedup_exact": _SQL_DEDUP_EXACT,
-        "dedup_clusters": _SQL_DEDUP_CLUSTERS,
-        "simhash_docs": _SQL_SIMHASH,
-        "ngram_jaccard": _SQL_NGRAM_JACCARD,
-        "curate_corpus": _SQL_CURATE,
-        "text_stats": _SQL_TEXT_STATS,
-        "language_id": _SQL_LANGUAGE_ID,
-        "repetition_stats": _SQL_REPETITION_STATS,
-        "gopher_gate": _SQL_GOPHER_GATE,
-        "decontaminate": _SQL_DECONTAMINATE,
-        "repeated_spans": _SQL_REPEATED_SPANS,
-        "ivf_topk": _SQL_IVF_TOPK,
-        "embedding_near_dup": _SQL_EMBEDDING_NEAR_DUP,
-        # parse surface vs golden-parquet kernel oracle (scripts/build_golden.py)
-        "extract_spans": _SQL_EXTRACT_SPANS,
-        "extract_tables_meta": _SQL_EXTRACT_TABLES_META,
-        "search_key_value_pathology": _SQL_SEARCH_KEY_VALUE,
-        "search_anywhere_topk": _SQL_SEARCH_ANYWHERE,
-        "row_assembly_group2": _SQL_ROW_ASSEMBLY,
-        "search_by_column": _SQL_SEARCH_BY_COLUMN,
-        "table_by_title": _SQL_TABLE_BY_TITLE,
-        "extract_html_spans": _SQL_EXTRACT_HTML_SPANS,
-    }
+    return {name: sql for name, _, sql in _CONTRACT}

@@ -18,7 +18,7 @@ family at n and 10n.
 --explain [A ...] [--out PATH]: the plan audit — plan-quality properties and
 the formatted plan of each named contract query (every one by default),
 written to EXPLAIN.md unless --out says otherwise.
---make-sf1like [--docs N]: build the sf1-like tier under .bench_data/sf1like.
+--make-sf1like [--docs N]: build the sf1-like tier under .bench_data/sf1like_<N>.
 """
 
 from __future__ import annotations
@@ -688,8 +688,9 @@ SF1LIKE_DOCS = 50_000
 
 
 def make_sf1like(spark, n_docs: int) -> str:
-    """The sf1-like tier, ``.bench_data/sf1like``: a statistically matched
-    stand-in for an sf1 tier (10× the sf0.1 row counts).
+    """The sf1-like tier, ``.bench_data/sf1like_<n_docs>`` (one directory
+    per size, read as sf1 by ``sf_of``): a statistically matched stand-in
+    for an sf1 tier (10× the sf0.1 row counts).
     ``n_docs`` documents draw 17–60 words (mean ≈ sf0.1's 38) from the real
     sf0.1 vocabulary and cycle through its (lang, source) blocks;
     ``n_docs·2/5`` embeddings (sf0.1's ratio) come from ``_embeddings``; the
@@ -720,8 +721,9 @@ def make_sf1like(spark, n_docs: int) -> str:
         pdf["n_chars"] = pdf["text"].str.len().astype("int64")
         return spark.createDataFrame(pdf).repartition(64)
 
-    _cached("sf1like", "documents", documents)
-    path = _cached("sf1like", "embeddings", lambda: _embeddings(spark, n_docs * 2 // 5))
+    name = f"sf1like_{n_docs}"
+    _cached(name, "documents", documents)
+    path = _cached(name, "embeddings", lambda: _embeddings(spark, n_docs * 2 // 5))
     for table in os.listdir(SF01_DIR):
         link = os.path.join(path, table)
         if not os.path.exists(link):

@@ -235,16 +235,13 @@ def minhash_incremental_pairs(
     side — double-counts that doc's shingles in the unioned texts frame and
     silently corrupts the exact-Jaccard sizes.  jobs/dedup_job.py enforces
     this structurally via the manifest (a completed shard re-run is a no-op
-    before any frame is built); direct callers own the precondition.  Set
-    ``SPARK_GRAFT_DEBUG_CHECKS=1`` to pay one semi-join for an explicit
-    error instead."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_DEBUG_CHECKS"):
-        overlap = new_docs.select("doc_id").join(
-            corpus_docs.select("doc_id"), "doc_id", "left_semi"
-        )
-        assert overlap.isEmpty(), (
+    before any frame is built); this function pays one semi-join to raise
+    ``ValueError`` on an overlap."""
+    overlap = new_docs.select("doc_id").join(
+        corpus_docs.select("doc_id"), "doc_id", "left_semi"
+    )
+    if not overlap.isEmpty():
+        raise ValueError(
             "minhash_incremental_pairs: new_docs and corpus_docs share "
             "doc_ids — Jaccard sizes would double-count shingles"
         )
@@ -358,7 +355,7 @@ def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     so the driver moves no data.
 
     Oracle: a recursive CTE enumerating reachable labels (exact same
-    fixpoint) — see _SQL_DEDUP_CLUSTERS in __spark_entry__.py."""
+    fixpoint) — see _SQL_CLUSTER_CTES in __spark_entry__.py."""
     # orient (a=greater, b=smaller) — the orientation _small_star emits, so
     # the fixpoint edge-set comparison is apples-to-apples from round 1.
     # localCheckpoint (not persist): each round's plan must be TRUNCATED, or

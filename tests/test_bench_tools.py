@@ -24,3 +24,15 @@ def test_time_queries_median_best_runs(spark):
     row = stats["tpch_q1"]
     assert sorted(row) == ["best", "median", "runs"]
     assert len(row["runs"]) == 2 and row["best"] == min(row["runs"])
+
+
+def test_make_sf1like_keys_the_tier_by_size(spark, tmp_path, monkeypatch):
+    """Each --docs N builds its own tier: a second size is not served the
+    first size's cached tables."""
+    monkeypatch.setattr(bench, "BENCH_DATA", str(tmp_path))
+    small = bench.make_sf1like(spark, 20)
+    large = bench.make_sf1like(spark, 30)
+    assert small != large
+    assert bench.sf_of(small) == bench.sf_of(large) == 1.0
+    for path, n in ((small, 20), (large, 30)):
+        assert spark.read.parquet(f"{path}/documents.parquet").count() == n

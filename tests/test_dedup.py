@@ -411,14 +411,21 @@ def test_minhash_incremental_equals_filtered_full(spark):
     assert any(30 in p for p in inc)  # the new near-dup IS found
 
 
-def test_minhash_incremental_debug_overlap_check(spark, monkeypatch):
-    """SPARK_GRAFT_DEBUG_CHECKS turns the disjoint-doc_id contract into an
-    explicit error on overlap, and changes nothing on disjoint inputs."""
+def test_minhash_incremental_debug_overlap_check(spark):
+    """The disjoint-doc_id contract is always checked: an overlap raises
+    ``ValueError``, and disjoint inputs get the unchecked core's pairs."""
     new, corpus = _incremental_frames(spark)
-    unchecked = _incremental_pairs(new, corpus)
-    monkeypatch.setenv("SPARK_GRAFT_DEBUG_CHECKS", "1")
+    sig_new = dedup.minhash_signatures(new, shingle_k=3)
+    sig_all = dedup.minhash_signatures(corpus, shingle_k=3).unionByName(sig_new)
+    texts = new.unionByName(corpus)
+    unchecked = {
+        (r["doc_a"], r["doc_b"]): (r["n_inter"], r["n_union"])
+        for r in dedup.minhash_pairs_from_signatures(
+            sig_new, sig_all, texts, shingle_k=3, threshold_pct=50
+        ).collect()
+    }
     assert _incremental_pairs(new, corpus) == unchecked and unchecked
-    with pytest.raises(AssertionError, match="share doc_ids"):
+    with pytest.raises(ValueError, match="share doc_ids"):
         dedup.minhash_incremental_pairs(
             new.unionByName(corpus.filter(F.col("doc_id") == 20)), corpus,
             shingle_k=3, threshold_pct=50,

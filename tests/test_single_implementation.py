@@ -90,6 +90,21 @@ def test_exact_election_lives_in_dedup():
     assert spelled == ["operators/dedup.py"]
 
 
+def test_oracle_stages_spelled_once():
+    """Each DuckDB mirror of a shared operator stage is one SQL fragment in
+    ``__spark_entry__.py`` that every oracle composes: the MinHash chain,
+    the connected-components fixpoint, the exact cosine top-k tail and the
+    sign planes each spell their marker exactly once."""
+    text = (ROOT / "__spark_entry__.py").read_text(encoding="utf-8")
+    markers = (
+        "sha256(shingle)",
+        "reach(node, lab)",
+        "ORDER BY cos_sim DESC, vec_id ASC",
+        "substr(md5(CAST(p.plane",
+    )
+    assert {m: text.count(m) for m in markers} == dict.fromkeys(markers, 1)
+
+
 def test_engine_settings_live_in_session():
     """Every spark-submit job applies ``session.ENGINE_CONF``: no job spells
     a ``spark.sql.`` setting of its own, so their sessions cannot drift."""
